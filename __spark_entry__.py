@@ -189,8 +189,6 @@ def _cust_validated(spark: SparkSession, sf_dir: str) -> DataFrame:
     consumer does (validate once, slice the report many ways).  Only the
     unexecuted DataFrame is cached: every query still executes from the
     scratch parquet, so bench reps and oracle checks measure real work."""
-    from shacl_validator_spark.operators.validate import ensure_validate_caches
-
     v = _VALIDATE_CACHE.get(sf_dir)
     if v is not None and v.sparkSession is not spark:
         v = None  # stale plan from a stopped session — rebuild
@@ -202,10 +200,6 @@ def _cust_validated(spark: SparkSession, sf_dir: str) -> DataFrame:
             broadcast_rows=_SMALL,
         )
         _VALIDATE_CACHE[sf_dir] = v
-    # a bench-rep clearCache() drops the plan's internal persisted
-    # relations; re-register them so this rep re-materializes (and pays
-    # for) its own caches instead of silently running the uncached plan
-    ensure_validate_caches()
     return v
 
 
@@ -623,14 +617,9 @@ def q_shacl_dcat_ap_es_report(spark, sf_dir):
     full profile suite costs ~5 s of driver/py4j time, paid once per
     process exactly as a real consumer pays it (validate once, slice the
     report many ways).  Every execution still runs from the scratch table."""
-    from shacl_validator_spark.shapes.custom_rules import (
-        apply_custom_rules,
-        dir3_organism_rule,
-    )
-    from shacl_validator_spark.shapes.profiles import compiled_profile
+    from shacl_validator_spark.shapes.compiler import compile_shape_files
+    from shacl_validator_spark.shapes.suites import DIR3_ORGANISM_RULE_TTL, suite_ttls
     from shacl_validator_spark.sources.synthetic import nation_dcat_es_triples
-
-    from shacl_validator_spark.operators.validate import ensure_validate_caches
 
     v = _DCAT_CACHE.get(sf_dir)
     if v is not None and v.sparkSession is not spark:
@@ -639,11 +628,9 @@ def q_shacl_dcat_ap_es_report(spark, sf_dir):
         t = _scratch_table(
             spark, sf_dir, "dcat", lambda: nation_dcat_es_triples(spark, sf_dir)
         )
-        v = validate(
-            spark, t, compiled_profile("dcat_ap_es"), broadcast_rows=_SMALL
-        ).unionByName(apply_custom_rules(spark, t, [dir3_organism_rule()]))
+        rows = compile_shape_files([*suite_ttls("dcat_ap_es"), DIR3_ORGANISM_RULE_TTL])
+        v = validate(spark, t, rows, broadcast_rows=_SMALL)
         _DCAT_CACHE[sf_dir] = v
-    ensure_validate_caches()  # see _cust_validated
     return v.groupBy(
         F.col("sourceConstraintComponent").alias("component"),
         F.col("resultSeverity").alias("severity"),

@@ -28,7 +28,6 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
 from ..local_df import local_df
 from ..model import (
@@ -268,9 +267,11 @@ def _lexically_valid(dt: F.Column | None = None) -> F.Column:
 # Above this many targeted focus nodes the validator stops broadcasting
 # data-derived relations (targets, typed_set) and plans hint-free shuffle
 # joins instead — AQE then picks broadcast/shuffle per runtime size and
-# applies skew-join splitting on hub focus nodes.  Overridable per session
-# via spark.conf "spark.kg.validate.broadcastRows" or per call.
+# applies skew-join splitting on hub focus nodes.  Overridable per call.
 DEFAULT_BROADCAST_ROWS = 4_000_000
+
+# Bounded unroll of sh:zeroOrMorePath / sh:oneOrMorePath (see _closure).
+PATH_DEPTH = 4
 
 
 def _parse_alt(alt: str) -> tuple[str, str]:
@@ -370,8 +371,8 @@ def _closure(
     dimension-sized relation, orders of magnitude smaller than the
     corpus-wide frontier the previous formulation shuffled once per hop.
     AQE picks broadcast vs shuffle per squaring at runtime; reachable-pair
-    growth is bounded by the same fixed ``depth``
-    (spark.kg.validate.pathDepth, default 4) as the hop-iterated form.
+    growth is bounded by the same fixed ``depth`` (``PATH_DEPTH``) as the
+    hop-iterated form.
 
     Path-length semantics: lengths 1..depth (depth rounding UP to a power
     of two — squaring doubles the bound per round; extra reach only brings
@@ -425,15 +426,6 @@ def _closure(
         reach = reach.unionByName(nxt).dropDuplicates()
         length *= 2
     if reach_cache is not None:
-        # the squared-closure tree references `edges` 3^⌈log₂ depth⌉ times;
-        # persisting collapses it to one InMemoryRelation per (dir, pred,
-        # depth) — closure predicates are hierarchy edges (dimension-sized,
-        # see docstring), so the cache is bounded at any corpus scale
-        if (
-            frontier.sparkSession.conf.get("spark.kg.validate.cacheRelations", "false")
-            == "true"
-        ):
-            reach = _persist_tracked(reach)
         reach_cache[key] = reach
     return _apply_reach(frontier, reach, mods)
 
@@ -614,9 +606,9 @@ def validate(
     spark: SparkSession,
     triples: DataFrame,
     constraint_rows: list[dict],
-    broadcast_rows: int | None = None,
+    broadcast_rows: int = DEFAULT_BROADCAST_ROWS,
     input_rows: int | None = None,
-    entailment: str | None = None,
+    entailment: str = "rdfs",
 ) -> DataFrame:
     """Run every compiled constraint against the triples table.
 
@@ -636,7 +628,7 @@ def validate(
     short-circuits once K+1 rows exist — it never scans a big graph fully);
     at or below K the classic broadcast plan is kept, above K every
     data-derived join is left hint-free for AQE.  Pass ``0`` to force the
-    shuffle path (used by tests), ``None`` to read the session conf.
+    shuffle path (used by tests).
 
     ``triples`` should be a materialized relation (parquet/Iceberg-backed,
     as the pipeline's scratch tables are): the target set is recomputed by
@@ -653,10 +645,7 @@ def validate(
 
     # ``entailment``: "rdfs" (default) applies the rdfs:subClassOf* closure
     # to class targeting and sh:class (SHACL-instance semantics); "none"
-    # skips the subclass scan — see _typed_with_entailment.  None reads the
-    # session conf.
-    if entailment is None:
-        entailment = spark.conf.get("spark.kg.validate.entailment", "rdfs")
+    # skips the subclass scan — see _typed_with_entailment.
 
     # Scan-fanout note: the plan re-reads the triples relation once per
     # constraint-family branch (value facets share a scan, but each path
@@ -672,10 +661,6 @@ def validate(
     types = _typed_with_entailment(spark, triples, entailment)
     targets = _targets_of(spark, triples, top, types)
 
-    if broadcast_rows is None:
-        broadcast_rows = int(
-            spark.conf.get("spark.kg.validate.broadcastRows", str(DEFAULT_BROADCAST_ROWS))
-        )
     # LIMIT takes an int32 — clamp; a threshold past 2^31 rows means
     # "always broadcast" anyway (no probe needed)
     probe_n = min(broadcast_rows + 1, 2**31 - 1) if broadcast_rows > 0 else 0
@@ -744,89 +729,6 @@ def _level_classes(rows: list[dict]) -> set[str]:
                 if b.get("class_iri"):
                     out.add(b["class_iri"])
     return out
-
-
-# Every relation validate() persists, in registration order — persisted
-# relations live until unpersisted or session end, so loop-shaped callers
-# (streaming foreachBatch revalidating per micro-batch) must release them
-# between iterations or leak storage blocks without bound.
-_PERSISTED: list[DataFrame] = []
-
-
-def _persist_tracked(df: DataFrame) -> DataFrame:
-    df = df.persist(StorageLevel.MEMORY_AND_DISK)
-    _PERSISTED.append(df)
-    return df
-
-
-def ensure_validate_caches() -> int:
-    """Re-register any tracked relation whose persist was dropped by an
-    external ``spark.catalog.clearCache()`` (the bench does this before
-    every rep).  persist() is lazy — re-registering costs nothing until a
-    consumer executes, at which point the rep pays the materialization it
-    is supposed to pay.  Callers memoizing a validate() plan across
-    clearCache boundaries should call this when handing the plan back out;
-    returns how many relations were re-registered."""
-    n = 0
-    for df in _PERSISTED:
-        try:
-            lvl = df.storageLevel
-            if lvl.useMemory or lvl.useDisk:
-                continue
-            df.persist(StorageLevel.MEMORY_AND_DISK)
-            n += 1
-        except Exception:  # stopped session — skip
-            pass
-    return n
-
-
-def release_validate_caches(blocking: bool = False) -> int:
-    """Unpersist every relation validate() has cached so far; returns how
-    many were released.  Safe while memoized validate() plans are still
-    alive — their next action simply recomputes the subtree."""
-    n = 0
-    while _PERSISTED:
-        df = _PERSISTED.pop()
-        try:
-            df.unpersist(blocking)
-            n += 1
-        except Exception:  # session already stopped — nothing to release
-            pass
-    return n
-
-
-def _cache_gate(spark: SparkSession, small: bool) -> bool:
-    """Should bounded intermediate relations be persisted?
-
-    The validate() plan references ``targets`` (and, transitively, the
-    node→classes lookup, closure reach sets, and the per-value dedup) from
-    many branches — value-stream semi-join, per-focus left join, pair
-    joins, closed check, sparql target slices, nested passes.  Without a
-    persist each reference INLINES the whole subtree (scans + its dedup
-    shuffle) into the plan, so a 35-constraint suite re-derives the target
-    set ~10× per action and Catalyst re-optimizes every copy — the r3
-    scan-fanout regression (VERDICT r3 #1).  Persisting collapses each
-    subtree to one InMemoryRelation: built once per action, read by every
-    consumer.
-
-    Gated on ``small`` — the same probe that authorizes broadcasting
-    already proved the relation ≤ broadcastRows (default 4M rows), so the
-    cache is bounded; on the huge-graph path (small=False) nothing is
-    persisted and the hint-free AQE plan is unchanged.
-
-    Default OFF: after the literal-check compilation landed, an A/B at
-    sf0.1 measured every persisted variant SLOWER on cache-cold runs
-    (8.3 s vs 10.6 s for the 35-constraint report; 1.0 s vs 1.6 s for the
-    DCAT-AP-ES suite) — the block-store materialization barrier costs more
-    than recomputing the handful of pushed-down scans each reference
-    plans to.  Opt-in via spark.kg.validate.cacheRelations=true for
-    workloads that re-execute one compiled plan against hot data many
-    times per process."""
-    return small and (
-        spark.conf.get("spark.kg.validate.cacheRelations", "false") == "true"
-    )
-
-
 
 
 # ---------------------------------------------------------------------------
@@ -1481,9 +1383,6 @@ def _eval(
     def _gate(df: DataFrame) -> DataFrame:
         return F.broadcast(df) if small else df
 
-    if _cache_gate(spark, small):
-        targets = _persist_tracked(targets)
-
     # --- path value lookup ---------------------------------------------------
     # Fast path: plain single-step paths (the overwhelming majority) — one
     # scan of the triples table with a literal predicate → constraints map;
@@ -1521,7 +1420,6 @@ def _eval(
         if r.get("path_steps") is not None and not _is_plain_single(r["path_steps"]):
             sig = tuple(tuple(s) for s in r["path_steps"])
             sig_groups.setdefault(sig, []).append(r["constraint_id"])
-    path_depth = int(spark.conf.get("spark.kg.validate.pathDepth", "4"))
     reach_cache: dict = {}
     for sig, ids in sig_groups.items():
         frontier = targets.filter(F.col("constraint_id").isin(ids)).select(
@@ -1545,7 +1443,7 @@ def _eval(
                 parts.append(_hop(triples, frontier, plain))
             for mods, pred in closures:
                 parts.append(
-                    _closure(triples, frontier, mods, pred, path_depth, reach_cache)
+                    _closure(triples, frontier, mods, pred, PATH_DEPTH, reach_cache)
                 )
             stepped = parts[0]
             for p in parts[1:]:
@@ -1633,10 +1531,6 @@ def _eval(
             .groupBy(F.col("subject").alias("t_node"))
             .agg(F.collect_set("cls").alias("t_classes"))
         )
-        if types_small and _cache_gate(spark, small):
-            # several branches (value stream, nested passes sharing `types`)
-            # re-derive this lookup; bounded by the types_small probe
-            node_classes = _persist_tracked(node_classes)
         gated_nc = F.broadcast(node_classes) if types_small else node_classes
         values = values.join(
             gated_nc, values["object_value"] == gated_nc["t_node"], "left"
@@ -1742,11 +1636,7 @@ def _eval(
                         .select("object_value")
                         .dropDuplicates()
                     )
-                fast_ok = _nested_fast_ok(sub_rows) and (
-                    spark.conf.get("spark.kg.validate.nestedFastPath", "true")
-                    == "true"
-                )
-                if fast_ok:
+                if _nested_fast_ok(sub_rows):
                     # existence-only conformance: skip the full violation
                     # assembly (r5 — see _nested_bad_fast)
                     bad = _nested_bad_fast(
@@ -1775,13 +1665,6 @@ def _eval(
                     f"_badnode_{i}"
                 )
             ref_flag[ref] = flag
-
-    # Persist the narrow assembled stream once under the bounded-size gate;
-    # both consumers (hit explode, per-value dedup cascade) read the cache.
-    if _cache_gate(spark, small) and (
-        spark.conf.get("spark.kg.validate.cacheValues", "true") == "true"
-    ):
-        values = _persist_tracked(values)
 
     arts = _compiled_checks_cached(rows, ref_flag)
     check_cols = arts["check_cols"]
@@ -1866,12 +1749,6 @@ def _eval(
             F.first("_q").alias("_q"),
         )
     )
-    if _cache_gate(spark, small):
-        # consumed by per_focus, uniqueLang, and both pair components —
-        # persisting saves each consumer the full value-stream re-assembly;
-        # bounded: distinct (constraint, focus, term), i.e. graph-set-sized
-        # on the already-probed-small target slice
-        per_value = _persist_tracked(per_value)
     # The value stream is recomputed per consumer branch rather than
     # persisted: Catalyst prunes each recomputation to what its branch
     # needs (this counting branch evaluates no check expressions at all),
@@ -2040,9 +1917,8 @@ def _eval(
     # scans chained on shared-variable equi-joins, FILTERs as column
     # predicates, NOT EXISTS as left-anti); every solution whose $this is
     # in the constraint's target set is one violation (SHACL §5.3).  The
-    # general subset replaces nothing: hand-tuned profile rules
-    # (shapes/custom_rules.py) remain the fast path for the bundled
-    # profiles; this covers UNMODIFIED published shape files.
+    # bundled profile rules (shapes/suites.py PROFILE_RULES) and published
+    # shape files alike run through this one evaluator.
     # eval_select is target-independent: a shape with several target kinds
     # compiles to several rows sharing one query text — evaluate each
     # distinct (query, prefixes) once and semi-join per target slice
@@ -2133,7 +2009,6 @@ def validate_report(
     spark: SparkSession,
     triples: DataFrame,
     constraint_rows: list[dict],
-    custom_rules: list | None = None,
 ) -> ValidationReport:
     """Full report path: sentinels + rules + conforms flag.
 
@@ -2141,8 +2016,8 @@ def validate_report(
     (reference SHACLValidationService.ts:339-424): empty-shapes and
     empty-data sentinels first, then engine run, then severity partition.
     ``conforms`` is true iff there are no Violation-severity results
-    (SURVEY.md §2.4 A10).  ``custom_rules`` are profile-specific DataFrame
-    rules (the SPARQLConstraintComponent surface, shapes/custom_rules.py).
+    (SURVEY.md §2.4 A10).  Profile rules are sh:sparql shapes compiled into
+    ``constraint_rows`` (shapes/suites.py ``PROFILE_RULES``).
     """
     if not constraint_rows:
         results = _sentinel(spark, SENTINEL_NO_SHAPES, "No SHACL shapes available")
@@ -2151,10 +2026,6 @@ def validate_report(
         results = _sentinel(spark, SENTINEL_EMPTY_CONTENT, "Empty RDF content")
         return ValidationReport(False, results, 1)
     results = validate(spark, triples, constraint_rows)
-    if custom_rules:
-        from ..shapes.custom_rules import apply_custom_rules
-
-        results = results.unionByName(apply_custom_rules(spark, triples, custom_rules))
     n_viol = results.filter(F.col("resultSeverity") == SEVERITY_VIOLATION).count()
     return ValidationReport(n_viol == 0, results, n_viol)
 

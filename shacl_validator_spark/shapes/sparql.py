@@ -1,10 +1,10 @@
 r"""sh:sparql SELECT constraints compiled to DataFrame plans (BGP subset).
 
 The reference evaluates SPARQL-based constraints via ``shacl-engine/sparql``
-(reference src/services/SHACLValidationService.ts:4,10-13,405).  SURVEY §2.8
-scoped the hand-written profile rules (custom_rules.py); this module closes
-the *general* surface for the subset published DCAT-AP-family profiles
-actually use in their sh:sparql constraints:
+(reference src/services/SHACLValidationService.ts:4,10-13,405).  This module
+compiles the subset published DCAT-AP-family profiles actually use in their
+sh:sparql constraints — the bundled profile rules (shapes/suites.py
+``PROFILE_RULES``) are written in it too:
 
 - basic graph patterns — triple patterns with ``a``, ``;`` predicate lists
   and ``,`` object lists; terms are IRIs, prefixed names, literals
@@ -12,7 +12,8 @@ actually use in their sh:sparql constraints:
 - ``FILTER`` expressions — comparisons (``= != < > <= >=`` with SPARQL
   '<' domain dispatch), ``&& || !``, and the builtins ``regex`` / ``str``
   / ``lang`` / ``datatype`` / ``bound`` / ``isIRI`` / ``isBlank`` /
-  ``isLiteral``;
+  ``isLiteral``, and the ``xsd:date(…)`` cast (a failed cast is unbound,
+  so a comparison on it is false);
 - ``FILTER NOT EXISTS { … }`` — the absent-pattern idiom (compiled to a
   left-anti join on the shared variables);
 - ``OPTIONAL { … }`` — a left outer join on the variables shared with the
@@ -29,15 +30,18 @@ actually use in their sh:sparql constraints:
   unbound-compatible join semantics);
 - ``MINUS { … }`` (r5) — a left-anti join on the shared variables; a
   MINUS sharing no variable with the outer pattern is a spec-correct
-  no-op (disjoint-domain solutions are never removed);
+  no-op (disjoint-domain solutions are never removed).  A shared variable
+  bound only inside OPTIONAL on either side raises: an unbound value is
+  compatible with anything in SPARQL, but never equal in the join;
 - ``$this`` pre-binding (SHACL §5.3.1): the result is intersected with the
   shape's target set per constraint.
 
 Anything outside the subset (subqueries, property paths, aggregates,
 GRAPH, VALUES UNDEF, outer-scope FILTER variables inside
-OPTIONAL/UNION/MINUS groups) raises ``SparqlUnsupported`` at compile
-time — an unsupported published constraint is SURFACED, never silently
-dropped (the round-2 ADVICE lesson on vanishing sh:or branches).
+OPTIONAL/UNION/MINUS groups, MINUS on an optionally-bound variable)
+raises ``SparqlUnsupported`` at compile time — an unsupported published
+constraint is SURFACED, never silently dropped (the round-2 ADVICE lesson
+on vanishing sh:or branches).
 
 Spark-first shape: every triple pattern is one predicate-pushed scan of
 the triples relation, the BGP is a chain of equi-joins on shared variable
@@ -408,7 +412,16 @@ class _P:
                 args.append(self.expr())
             self.expect(")")
             return ("call", name, args)
-        return ("term", self.term())
+        term = self.term()
+        if term[0] == "iri" and self.at("("):
+            # function call by IRI: only the xsd:date constructor cast
+            if term[1] != XSD + "date":
+                raise SparqlUnsupported(f"sparql: function <{term[1]}> is outside the subset")
+            self.next()
+            arg = self.expr()
+            self.expect(")")
+            return ("call", "xsd:date", [arg])
+        return ("term", term)
 
 
 def _unescape_sparql(s: str) -> str:
@@ -768,6 +781,10 @@ def _expr_col(e, cols: set[str] | None = None) -> Column:
             return _expr_col(args[0], cols).rlike(pat)
         if name == "str":
             return _expr_col(args[0], cols)
+        if name == "xsd:date":
+            # a value that does not parse is a cast error: NULL, so any
+            # FILTER comparing it drops the solution
+            return F.try_to_timestamp(_expr_col(args[0], cols), F.lit("yyyy-MM-dd"))
         if name in ("lang", "datatype", "bound", "isiri", "isuri", "isblank", "isliteral"):
             t = args[0]
             if t[0] != "term" or t[1][0] != "var":
@@ -859,6 +876,14 @@ def _group_bound_vars(g: Group) -> set[str]:
     for vars_, _rows in g.values_blocks:
         vs |= set(vars_)
     return vs
+
+
+def _optional_only_vars(g: Group) -> set[str]:
+    """Variables a group binds only inside OPTIONAL — possibly unbound."""
+    certain = _group_bound_vars(
+        Group(g.patterns, unions=g.unions, binds=g.binds, values_blocks=g.values_blocks)
+    )
+    return set().union(*(_group_bound_vars(og) for og in g.optionals)) - certain
 
 
 def _check_standalone_filters(g: Group, where: str) -> None:
@@ -1019,6 +1044,14 @@ def _group_df(triples: DataFrame, g: Group) -> DataFrame:
             # SPARQL Minus(A, B): solutions with disjoint domains are NOT
             # removed — a MINUS sharing no variable is a spec-correct no-op
             continue
+        # an unbound shared variable is compatible in Minus(A, B) but never
+        # equal in the anti-join, which would keep solutions the spec removes
+        risky = sorted(set(shared) & (_optional_only_vars(g) | _optional_only_vars(mg)))
+        if risky:
+            raise SparqlUnsupported(
+                f"sparql: MINUS shares variable(s) {risky} bound only inside "
+                "OPTIONAL (unbound-compatible MINUS is outside the subset)"
+            )
         acc = _join_on_vars(acc, md, shared, how="left_anti")
     return acc
 

@@ -566,6 +566,105 @@ ap:DistributionShape a sh:NodeShape ;
     ] .
 """
 
+# --- profile SPARQL rules (sh:sparql SELECT constraints) --------------------
+# Cross-property and cross-node rules no single-property shape can express;
+# the reference evaluates such rules through shacl-engine/sparql
+# (SHACLValidationService.ts:4,10-13,405).  Each binds ?path, so its results
+# name the property the rule is about.
+
+_RULE_PREFIXES = _PREFIXES + """
+@prefix rules:  <http://example.org/rules#> .
+"""
+
+# DIR3 restriction: a dataset's dct:publisher must be an IRI under the DIR3
+# organism registry (the rule the reference's debug helper targets,
+# SHACLValidationService.ts:38-52)
+DIR3_ORGANISM_RULE_TTL = _RULE_PREFIXES + '''
+rules:DIR3OrganismRestriction a sh:NodeShape ;
+    sh:targetClass dcat:Dataset ;
+    sh:severity sh:Violation ;
+    sh:sparql [
+        sh:message "dct:publisher must be a DIR3 organism IRI"@en ;
+        sh:select """
+            SELECT $this ?value ?path WHERE {
+                $this dct:publisher ?value .
+                FILTER(!isIRI(?value) || !regex(str(?value),
+                    "^http://datos[.]gob[.]es/recurso/sector-publico/org/Organismo/"))
+                BIND(dct:publisher AS ?path)
+            }
+        """ ;
+    ] .
+'''
+
+# HVD dependency: a dataset carrying dcatap:hvdCategory must also reference
+# the HVD implementing regulation via dcatap:applicableLegislation
+HVD_LEGISLATION_RULE_TTL = _RULE_PREFIXES + '''
+rules:HVDLegislationRequired a sh:NodeShape ;
+    sh:targetSubjectsOf dcatap:hvdCategory ;
+    sh:severity sh:Violation ;
+    sh:sparql [
+        sh:message "hvdCategory requires applicableLegislation = HVD regulation 2023/138"@en ;
+        sh:select """
+            SELECT $this ?path WHERE {
+                $this dcatap:hvdCategory ?category .
+                FILTER NOT EXISTS {
+                    $this dcatap:applicableLegislation <http://data.europa.eu/eli/reg_impl/2023/138/oj>
+                }
+                BIND(dcatap:applicableLegislation AS ?path)
+            }
+        """ ;
+    ] .
+'''
+
+# catalog-level uniqueness: one result per dataset whose dct:identifier
+# another dataset also claims
+UNIQUE_IDENTIFIER_RULE_TTL = _RULE_PREFIXES + '''
+rules:UniqueDatasetIdentifier a sh:NodeShape ;
+    sh:targetClass dcat:Dataset ;
+    sh:severity sh:Violation ;
+    sh:sparql [
+        sh:message "dct:identifier must be unique across datasets"@en ;
+        sh:select """
+            SELECT $this ?value ?path WHERE {
+                $this dct:identifier ?value .
+                ?other a dcat:Dataset ;
+                    dct:identifier ?value .
+                FILTER(?other != $this)
+                BIND(dct:identifier AS ?path)
+            }
+        """ ;
+    ] .
+'''
+
+# period sanity: dcat:startDate must not exceed dcat:endDate; values that
+# are not yyyy-MM-dd dates are not compared
+TEMPORAL_ORDER_RULE_TTL = _RULE_PREFIXES + '''
+rules:TemporalOrder a sh:NodeShape ;
+    sh:targetSubjectsOf dcat:startDate ;
+    sh:severity sh:Warning ;
+    sh:sparql [
+        sh:message "dcat:startDate must not be after dcat:endDate"@en ;
+        sh:select """
+            SELECT $this ?value ?path WHERE {
+                $this dcat:startDate ?value ;
+                    dcat:endDate ?end .
+                FILTER(xsd:date(?value) > xsd:date(?end))
+                BIND(dcat:startDate AS ?path)
+            }
+        """ ;
+    ] .
+'''
+
+_ES_RULES = [DIR3_ORGANISM_RULE_TTL, UNIQUE_IDENTIFIER_RULE_TTL, TEMPORAL_ORDER_RULE_TTL]
+
+# profile → rule shape files validated alongside its suite (the analog of
+# the reference's sparqlValidations wiring per shapes graph)
+PROFILE_RULES: dict[str, list[str]] = {
+    "dcat_ap_es": _ES_RULES,
+    "dcat_ap_es_hvd": [*_ES_RULES, HVD_LEGISLATION_RULE_TTL],
+    "nti_risp": _ES_RULES,
+}
+
 # --- sample catalogs (the sampleUrl analog, mqa-config.json:50,76,106,126) --
 # conforming fixtures per profile, mirroring the official example catalogs
 

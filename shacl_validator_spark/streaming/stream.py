@@ -80,7 +80,7 @@ def validated_triples_stream_writer(
     constraint_rows: list[dict],
     checkpoint_dir: str | None = None,
     n_buckets: int = 32,
-    entailment: str | None = None,
+    entailment: str = "rdfs",
 ):
     """Per-micro-batch validate → conformant-filter → idempotent MERGE for
     a streaming TRIPLE source (pair with ``ntriples_stream``): the
@@ -98,12 +98,12 @@ def validated_triples_stream_writer(
     validate()'s expression cache (operators/validate.py) memoizes every
     input-independent driver-side artifact (literal check chains, facet
     LocalRelation, focus-check arrays) keyed by the constraint rows, so
-    the per-epoch rebuild costs a fraction of the first build.
-    ``release_validate_caches`` drops any relations validate() persisted
-    so a long-running stream never accumulates storage blocks.  The
-    returned writer exposes ``writer.stats`` for observability/tests."""
+    the per-epoch rebuild costs a fraction of the first build.  validate()
+    persists nothing, so a long-running stream accumulates no storage
+    blocks.  The returned writer exposes ``writer.stats`` for
+    observability/tests."""
     from ..model import SEVERITY_VIOLATION, TRIPLE_SCHEMA
-    from ..operators.validate import release_validate_caches, validate
+    from ..operators.validate import validate
     from ..plans.merge import merge_triples
 
     from pyspark.sql import functions as F
@@ -140,9 +140,6 @@ def validated_triples_stream_writer(
             n_buckets=n_buckets,
         )
         _fs_rm(scratch)
-        # loop-shaped caller contract (operators/validate.py): release any
-        # relations the validate plan persisted during this epoch
-        release_validate_caches()
         stats["epochs"] += 1
 
     def _fs_rm(path: str) -> None:

@@ -1,5 +1,5 @@
 """Sequence/alternative path evaluation, shapes-union, parse-error sentinel,
-custom profile rules, foafPage enrichment."""
+sh:sparql profile rules, foafPage enrichment."""
 
 from __future__ import annotations
 
@@ -11,11 +11,16 @@ from shacl_validator_spark.operators.validate import (
 )
 from shacl_validator_spark.shapes import compile_shapes
 from shacl_validator_spark.shapes.compiler import compile_shape_files, render_path
-from shacl_validator_spark.shapes.custom_rules import (
-    SPARQL_COMPONENT,
-    dir3_organism_rule,
+from shacl_validator_spark.shapes.suites import (
+    DIR3_ORGANISM_RULE_TTL,
+    HVD_LEGISLATION_RULE_TTL,
+    TEMPORAL_ORDER_RULE_TTL,
+    UNIQUE_IDENTIFIER_RULE_TTL,
 )
 from shacl_validator_spark.sources.rdf_io import triples_from_turtle
+
+SPARQL_COMPONENT = SH + "SPARQLConstraintComponent"
+RULES = "http://example.org/rules#"
 
 PREFIX = """
 @prefix sh:   <http://www.w3.org/ns/shacl#> .
@@ -102,6 +107,16 @@ def test_parse_error_sentinel(spark):
     assert rows[0].sourceConstraintComponent == SENTINEL_PARSE_ERROR
 
 
+def _rule_hits(spark, triples, *rule_ttls):
+    """SPARQL-component results of SEQ_SHAPE plus the given profile rule
+    shapes, compiled as one union (the way profiles run them)."""
+    warnings: list[str] = []
+    rows = compile_shape_files([SEQ_SHAPE, *rule_ttls], warnings)
+    assert warnings == []
+    rep = validate_report(spark, triples, rows)
+    return [r for r in rep.results.collect() if r.sourceConstraintComponent == SPARQL_COMPONENT]
+
+
 def test_custom_rule_dir3(spark):
     data = PREFIX + """
 @prefix dcat: <http://www.w3.org/ns/dcat#> .
@@ -110,18 +125,20 @@ d:ds1 a dcat:Dataset ; dct:publisher <http://datos.gob.es/recurso/sector-publico
 d:ds2 a dcat:Dataset ; dct:publisher <http://other.org/agency> .
 d:ds3 a dcat:Dataset ; dct:publisher "just a string" .
 """
-    triples = triples_from_turtle(spark, data)
-    rep = validate_report(spark, triples, compile_shapes(SEQ_SHAPE), custom_rules=[dir3_organism_rule()])
-    hits = [r for r in rep.results.collect() if r.sourceConstraintComponent == SPARQL_COMPONENT]
+    hits = _rule_hits(spark, triples_from_turtle(spark, data), DIR3_ORGANISM_RULE_TTL)
     assert {h.focusNode for h in hits} == {
         "http://example.org/d#ds2",
         "http://example.org/d#ds3",
     }
+    assert all(
+        h.resultPath == "http://purl.org/dc/terms/publisher"
+        and h.sourceShape == RULES + "DIR3OrganismRestriction"
+        and h.message[0].lang == "en"
+        for h in hits
+    )
 
 
 def test_custom_rule_hvd_legislation(spark):
-    from shacl_validator_spark.shapes.custom_rules import hvd_legislation_rule
-
     data = PREFIX + """
 @prefix dcat:   <http://www.w3.org/ns/dcat#> .
 @prefix dcatap: <http://data.europa.eu/r5r/> .
@@ -131,20 +148,15 @@ d:ok a dcat:Dataset ;
 d:bad a dcat:Dataset ;
     dcatap:hvdCategory <http://data.europa.eu/bna/c_164e0bf5> .
 """
-    rule = hvd_legislation_rule()
-    rep = validate_report(
-        spark, triples_from_turtle(spark, data), compile_shapes(SEQ_SHAPE),
-        custom_rules=[rule],
-    )
-    hits = [r for r in rep.results.collect() if r.sourceConstraintComponent == SPARQL_COMPONENT]
+    hits = _rule_hits(spark, triples_from_turtle(spark, data), HVD_LEGISLATION_RULE_TTL)
     assert len(hits) == 1
     assert hits[0].focusNode == "http://example.org/d#bad"
-    assert hits[0].sourceShape == rule.rule_iri
+    assert hits[0].sourceShape == RULES + "HVDLegislationRequired"
+    assert hits[0].resultPath == "http://data.europa.eu/r5r/applicableLegislation"
+    assert hits[0].value is None
 
 
 def test_custom_rule_duplicate_identifier(spark):
-    from shacl_validator_spark.shapes.custom_rules import duplicate_identifier_rule
-
     data = PREFIX + """
 @prefix dcat: <http://www.w3.org/ns/dcat#> .
 @prefix dct:  <http://purl.org/dc/terms/> .
@@ -152,37 +164,33 @@ d:a a dcat:Dataset ; dct:identifier "ds-001" .
 d:b a dcat:Dataset ; dct:identifier "ds-001" .
 d:c a dcat:Dataset ; dct:identifier "ds-002" .
 """
-    rule = duplicate_identifier_rule()
-    rep = validate_report(
-        spark, triples_from_turtle(spark, data), compile_shapes(SEQ_SHAPE),
-        custom_rules=[rule],
-    )
-    hits = [r for r in rep.results.collect() if r.sourceConstraintComponent == SPARQL_COMPONENT]
+    hits = _rule_hits(spark, triples_from_turtle(spark, data), UNIQUE_IDENTIFIER_RULE_TTL)
     assert {h.focusNode for h in hits} == {
         "http://example.org/d#a",
         "http://example.org/d#b",
     }
-    assert all(h.value == "ds-001" and h.sourceShape == rule.rule_iri for h in hits)
+    assert all(
+        h.value == "ds-001" and h.sourceShape == RULES + "UniqueDatasetIdentifier"
+        for h in hits
+    )
 
 
 def test_custom_rule_temporal_order(spark):
-    from shacl_validator_spark.shapes.custom_rules import temporal_order_rule
-
+    # d:junk's start is no yyyy-MM-dd date (month 13): not compared, even
+    # though it sorts after its end date as a string
     data = PREFIX + """
 @prefix dcat: <http://www.w3.org/ns/dcat#> .
 d:ok  dcat:startDate "2024-01-01" ; dcat:endDate "2024-12-31" .
 d:bad dcat:startDate "2024-12-31" ; dcat:endDate "2024-01-01" .
+d:junk dcat:startDate "2024-13-45" ; dcat:endDate "2024-01-01" .
 """
-    rule = temporal_order_rule()
-    rep = validate_report(
-        spark, triples_from_turtle(spark, data), compile_shapes(SEQ_SHAPE),
-        custom_rules=[rule],
-    )
-    hits = [r for r in rep.results.collect() if r.sourceConstraintComponent == SPARQL_COMPONENT]
+    hits = _rule_hits(spark, triples_from_turtle(spark, data), TEMPORAL_ORDER_RULE_TTL)
     assert len(hits) == 1
     assert hits[0].focusNode == "http://example.org/d#bad"
+    assert hits[0].value == "2024-12-31"
+    assert hits[0].resultPath == "http://www.w3.org/ns/dcat#startDate"
     assert hits[0].resultSeverity == "Warning"
-    assert hits[0].sourceShape == rule.rule_iri
+    assert hits[0].sourceShape == RULES + "TemporalOrder"
 
 
 def test_target_subjects_of_and_target_node(spark):
@@ -245,11 +253,6 @@ def test_custom_rules_dedupe_across_graphs(spark):
     """graph is part of quad identity: the same violating fact asserted by
     two source pages is ONE value node and must yield ONE result per rule
     (matching the compiled components' set semantics)."""
-    from shacl_validator_spark.shapes.custom_rules import (
-        dir3_organism_rule,
-        temporal_order_rule,
-    )
-
     data = PREFIX + """
 @prefix dcat: <http://www.w3.org/ns/dcat#> .
 @prefix dct:  <http://purl.org/dc/terms/> .
@@ -259,11 +262,7 @@ d:p dcat:startDate "2024-12-31" ; dcat:endDate "2024-01-01" .
     triples = triples_from_turtle(spark, data, graph="page1").unionByName(
         triples_from_turtle(spark, data, graph="page2")
     )
-    rep = validate_report(
-        spark, triples, compile_shapes(SEQ_SHAPE),
-        custom_rules=[dir3_organism_rule(), temporal_order_rule()],
-    )
-    hits = [r for r in rep.results.collect() if r.sourceConstraintComponent == SPARQL_COMPONENT]
+    hits = _rule_hits(spark, triples, DIR3_ORGANISM_RULE_TTL, TEMPORAL_ORDER_RULE_TTL)
     assert len(hits) == 2  # one DIR3 + one temporal, not doubled per graph
 
 

@@ -15,7 +15,7 @@ evaluator:
   both sides (MinCount fires iff n < 2, MaxCount iff n > 0).
 
 The closure bound mirrors the engine exactly: reach = path lengths
-1..2^ceil(log2(depth)) for spark.kg.validate.pathDepth (default 4), plus
+1..2^ceil(log2(depth)) for the engine's PATH_DEPTH (4), plus
 length 0 for ``*``.  Value metadata is a pure function of the node string
 in these graphs (each value string occurs with one term kind), so the
 set-of-node-strings mirror is exact.
@@ -48,7 +48,7 @@ OBJECTS = [
     ("hello", "literal", None, "en"),
 ]
 
-PATH_DEPTH = 4  # engine default (spark.kg.validate.pathDepth)
+PATH_DEPTH = 4  # engine constant (operators.validate.PATH_DEPTH)
 
 
 def _closure_reach(edges: set[tuple[str, str]], depth: int) -> set[tuple[str, str]]:

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import pytest
 
+from shacl_validator_spark.model import RDF_TYPE
 from shacl_validator_spark.operators.validate import validate
 from shacl_validator_spark.shapes.compiler import compile_shapes
 from shacl_validator_spark.shapes.sparql import (
@@ -175,6 +176,11 @@ def test_parser_rejections():
         eval_select(None, q)  # raises before touching the DataFrame
     with pytest.raises(SparqlUnsupported, match="undeclared prefix"):
         parse_select("SELECT $this WHERE { $this ex:p ?v }")
+    with pytest.raises(SparqlUnsupported, match="function"):
+        parse_select(
+            "SELECT $this WHERE { $this <http://p> ?v . "
+            "FILTER(<http://www.w3.org/2001/XMLSchema#integer>(?v) > 1) }"
+        )
 
 
 def test_review_findings_regressions(spark):
@@ -253,42 +259,31 @@ def test_bgp_join_ordering_and_builtins(spark):
 
 
 def test_dir3_rule_as_sh_sparql_parity(spark):
-    """The hand-written DIR3 profile rule (custom_rules.py — the bundled
-    fast path) and its sh:sparql expression through the general compiler
-    must flag the identical (focusNode, value) set on the synthetic
-    DCAT-AP-ES catalog."""
-    from shacl_validator_spark.shapes.custom_rules import (
-        apply_custom_rules,
-        dir3_organism_rule,
-    )
+    """The shipped DIR3 profile rule (an sh:sparql shape in
+    shapes/suites.py) must flag exactly the (focusNode, value) set a
+    plain-Python reading of the rule computes from the collected triples
+    of the synthetic DCAT-AP-ES catalog: publishers of a dcat:Dataset that
+    are not IRIs under the DIR3 organism prefix."""
+    from shacl_validator_spark.shapes.suites import DIR3_ORGANISM_RULE_TTL
     from shacl_validator_spark.sources.synthetic import nation_dcat_es_triples
 
     t = nation_dcat_es_triples(spark, "/root/testdata/sf0.001")
-    want = {
-        (r.focusNode, r.value)
-        for r in apply_custom_rules(spark, t, [dir3_organism_rule()]).collect()
+    quads = t.select("subject", "predicate", "object_value", "object_type").collect()
+    datasets = {
+        q.subject
+        for q in quads
+        if q.predicate == RDF_TYPE and q.object_value == "http://www.w3.org/ns/dcat#Dataset"
     }
-    shapes = """
-    @prefix sh:   <http://www.w3.org/ns/shacl#> .
-    @prefix dcat: <http://www.w3.org/ns/dcat#> .
-    @prefix dct:  <http://purl.org/dc/terms/> .
-    @prefix ex:   <http://ex.org/> .
-    ex:Dir3SparqlShape a sh:NodeShape ;
-      sh:targetClass dcat:Dataset ;
-      sh:sparql [
-        sh:message "publisher must be a DIR3 organism IRI" ;
-        sh:select \"\"\"
-          PREFIX dct: <http://purl.org/dc/terms/>
-          SELECT $this ?value WHERE {
-            $this dct:publisher ?value .
-            FILTER(!isIRI(?value) || !regex(str(?value),
-              "^http://datos\\\\.gob\\\\.es/recurso/sector-publico/org/Organismo/"))
-          }
-        \"\"\" ;
-      ] .
-    """
+    prefix = "http://datos.gob.es/recurso/sector-publico/org/Organismo/"
+    want = {
+        (q.subject, q.object_value)
+        for q in quads
+        if q.predicate == "http://purl.org/dc/terms/publisher"
+        and q.subject in datasets
+        and (q.object_type != "iri" or not q.object_value.startswith(prefix))
+    }
     warnings: list[str] = []
-    rows = compile_shapes(shapes, warnings)
+    rows = compile_shapes(DIR3_ORGANISM_RULE_TTL, warnings)
     assert warnings == []
     got = {
         (r.focusNode, r.value)
@@ -406,6 +401,21 @@ def test_minus_disjoint_domain_is_noop(spark):
     # no shared variable: SPARQL Minus removes nothing
     got = {r.this for r in eval_select(t, q).collect()}
     assert got == {"http://ex.org/c1", "http://ex.org/c2", "http://ex.org/c3"}
+
+
+def test_minus_on_optionally_bound_var_surfaces(spark):
+    """?n is bound only inside OPTIONAL, so c2 (no name) leaves it
+    unbound.  SPARQL Minus removes c2 (unbound ?n is compatible with the
+    MINUS solution {this: c2, n: 10}); the equality anti-join would keep
+    it — so the shape raises instead of answering wrongly."""
+    t = triples_from_turtle(spark, DATA)
+    q = parse_select(
+        "SELECT $this WHERE { $this a <http://ex.org/Cust> . "
+        "OPTIONAL { $this <http://ex.org/name> ?n } "
+        "MINUS { $this <http://ex.org/bal> ?n } }"
+    )
+    with pytest.raises(SparqlUnsupported, match="bound only inside OPTIONAL"):
+        eval_select(t, q)
 
 
 def test_optional_outer_filter_var_surfaces(spark):

@@ -236,23 +236,13 @@ def test_broadcast_gate_shuffle_path(spark, shapes):
     """Above the broadcast-row gate the validator must plan hint-free joins
     for the data-derived relations (targets, typed_set): no forced
     BroadcastExchange that would OOM at 10^9+ focus nodes.  broadcast_rows=0
-    forces that path; results must match the broadcast plan exactly.
-
-    Relation caching is disabled for the plan-string assertions: persisted
-    relations from earlier validate() calls register in the cache manager,
-    and Catalyst substitutes logically-equal subtrees with InMemoryRelation
-    (whose embedded cached physical plan contains its own join strategy
-    strings) — noise for an assertion about the freshly planned joins."""
+    forces that path; results must match the broadcast plan exactly."""
     triples = triples_from_turtle(spark, FX.PUBLISHER_UNTYPED, graph="test://fixture")
-    spark.conf.set("spark.kg.validate.cacheRelations", "false")
-    spark.catalog.clearCache()  # drop earlier tests' registered relations too
-    try:
-        small_df = validate(spark, triples, shapes, broadcast_rows=10**9)
-        big_df = validate(spark, triples, shapes, broadcast_rows=0)
-        opt_small = small_df._jdf.queryExecution().optimizedPlan().toString()
-        opt_big = big_df._jdf.queryExecution().optimizedPlan().toString()
-    finally:
-        spark.conf.unset("spark.kg.validate.cacheRelations")
+    spark.catalog.clearCache()  # earlier tests' cached relations would substitute subtrees
+    small_df = validate(spark, triples, shapes, broadcast_rows=10**9)
+    big_df = validate(spark, triples, shapes, broadcast_rows=0)
+    opt_small = small_df._jdf.queryExecution().optimizedPlan().toString()
+    opt_big = big_df._jdf.queryExecution().optimizedPlan().toString()
     # The KB-sized facet table stays broadcast on BOTH paths (by design);
     # the gate governs the DATA-DERIVED joins.  The targets semi-join is the
     # marker: hinted broadcast on the small path, hint-free above the gate.
@@ -411,11 +401,12 @@ def test_expr_caches_cleared_on_gateway_change(spark, monkeypatch):
     assert vmod._MESSAGE_COL == []
 
 
-def test_nested_fast_path_matches_full_eval(spark):
+def test_nested_fast_path_matches_full_eval(spark, monkeypatch):
     """r5 existence-only nested fast pass vs the full recursive _eval:
     bit-identical violation sets on the fixture suite (which exercises
     sh:node, sh:not, and all three qualifiedValueShape references)."""
     import sys
+    from importlib import import_module
 
     sys.path.insert(0, "/root/repo")
     import __spark_entry__ as m
@@ -432,11 +423,10 @@ def test_nested_fast_path_matches_full_eval(spark):
             for r in df.collect()
         }
 
-    spark.conf.set("spark.kg.validate.nestedFastPath", "true")
     fast = canon(validate(spark, t, rows, broadcast_rows=m._SMALL))
-    spark.conf.set("spark.kg.validate.nestedFastPath", "false")
-    try:
-        full = canon(validate(spark, t, rows, broadcast_rows=m._SMALL))
-    finally:
-        spark.conf.set("spark.kg.validate.nestedFastPath", "true")
+    # force every nested shape through the general recursive path (the
+    # package re-exports the validate FUNCTION under the module's name)
+    vmod = import_module("shacl_validator_spark.operators.validate")
+    monkeypatch.setattr(vmod, "_nested_fast_ok", lambda sub_rows: False)
+    full = canon(validate(spark, t, rows, broadcast_rows=m._SMALL))
     assert fast == full and len(fast) > 0

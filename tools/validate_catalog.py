@@ -22,9 +22,14 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from shacl_validator_spark.operators import analytics as ana  # noqa: E402
 from shacl_validator_spark.operators.validate import validate_report  # noqa: E402
 from shacl_validator_spark.session import get_spark  # noqa: E402
-from shacl_validator_spark.shapes.custom_rules import profile_custom_rules  # noqa: E402
-from shacl_validator_spark.shapes.profiles import PROFILES, compiled_profile  # noqa: E402
-from shacl_validator_spark.shapes.suites import SAMPLE_CATALOGS  # noqa: E402
+from shacl_validator_spark.shapes.compiler import compile_shape_files  # noqa: E402
+from shacl_validator_spark.shapes.profiles import PROFILES  # noqa: E402
+from shacl_validator_spark.shapes.suites import (  # noqa: E402
+    PROFILE_RULES,
+    SAMPLE_CATALOGS,
+    SUITE_FILES,
+    suite_ttls,
+)
 from shacl_validator_spark.sources.rdf_io import (  # noqa: E402
     detect_format,
     triples_from_jsonld,
@@ -66,12 +71,11 @@ def main() -> int:
         triples = triples_from_jsonld(spark, content, graph=graph)
     else:
         triples = triples_from_turtle(spark, content, graph=graph)
-    rep = validate_report(
-        spark,
-        triples,
-        compiled_profile(args.profile),
-        custom_rules=profile_custom_rules(args.profile),
-    )
+    # the profile's suite and its sh:sparql rules compile as one union, so
+    # constraint ids stay unique across both
+    ttls = suite_ttls(args.profile) if args.profile in SUITE_FILES else [PROFILES[args.profile]]
+    rows = compile_shape_files(ttls + PROFILE_RULES.get(args.profile, []))
+    rep = validate_report(spark, triples, rows)
     # the report is tiny and consumed by four downstream actions (summary,
     # groups, Turtle, CSV) — persist so the validation DAG runs once
     rep.results.persist()
