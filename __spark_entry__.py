@@ -171,12 +171,6 @@ def _scratch_table(spark, sf_dir: str, name: str, build) -> DataFrame:
     return df
 
 
-# oracle inputs are known-small → skip the validator's targets-size probe
-# job (broadcast_rows at the always-broadcast sentinel); the pipeline keeps
-# the default gated path
-_SMALL = 2**31 - 1
-
-
 _VALIDATE_CACHE: dict[str, DataFrame] = {}
 
 
@@ -193,12 +187,7 @@ def _cust_validated(spark: SparkSession, sf_dir: str) -> DataFrame:
     if v is not None and v.sparkSession is not spark:
         v = None  # stale plan from a stopped session — rebuild
     if v is None:
-        v = validate(
-            spark,
-            _cust_triples(spark, sf_dir),
-            customer_constraints(),
-            broadcast_rows=_SMALL,
-        )
+        v = validate(spark, _cust_triples(spark, sf_dir), customer_constraints())
         _VALIDATE_CACHE[sf_dir] = v
     return v
 
@@ -468,7 +457,7 @@ def q_shacl_sparql_select(spark, sf_dir):
     warnings: list[str] = []
     rows = compile_shapes(shapes, warnings)
     assert not warnings, warnings
-    v = validate(spark, _cust_triples(spark, sf_dir), rows, broadcast_rows=_SMALL)
+    v = validate(spark, _cust_triples(spark, sf_dir), rows)
     return v.select(
         "focusNode",
         F.col("value"),
@@ -503,7 +492,7 @@ def q_shacl_sparql_optional(spark, sf_dir):
     warnings: list[str] = []
     rows = compile_shapes(shapes, warnings)
     assert not warnings, warnings
-    v = validate(spark, _cust_triples(spark, sf_dir), rows, broadcast_rows=_SMALL)
+    v = validate(spark, _cust_triples(spark, sf_dir), rows)
     return v.select("focusNode", F.col("value"))
 
 
@@ -532,7 +521,7 @@ def q_shacl_sparql_union(spark, sf_dir):
     warnings: list[str] = []
     rows = compile_shapes(shapes, warnings)
     assert not warnings, warnings
-    v = validate(spark, _cust_triples(spark, sf_dir), rows, broadcast_rows=_SMALL)
+    v = validate(spark, _cust_triples(spark, sf_dir), rows)
     return v.select("focusNode", F.col("value"))
 
 
@@ -561,7 +550,7 @@ def q_shacl_sparql_values(spark, sf_dir):
     warnings: list[str] = []
     rows = compile_shapes(shapes, warnings)
     assert not warnings, warnings
-    v = validate(spark, _cust_triples(spark, sf_dir), rows, broadcast_rows=_SMALL)
+    v = validate(spark, _cust_triples(spark, sf_dir), rows)
     return v.select("focusNode", F.col("value"))
 
 
@@ -590,7 +579,7 @@ def q_shacl_sparql_minus(spark, sf_dir):
     warnings: list[str] = []
     rows = compile_shapes(shapes, warnings)
     assert not warnings, warnings
-    v = validate(spark, _cust_triples(spark, sf_dir), rows, broadcast_rows=_SMALL)
+    v = validate(spark, _cust_triples(spark, sf_dir), rows)
     return v.select("focusNode", F.col("value"))
 
 
@@ -629,7 +618,7 @@ def q_shacl_dcat_ap_es_report(spark, sf_dir):
             spark, sf_dir, "dcat", lambda: nation_dcat_es_triples(spark, sf_dir)
         )
         rows = compile_shape_files([*suite_ttls("dcat_ap_es"), DIR3_ORGANISM_RULE_TTL])
-        v = validate(spark, t, rows, broadcast_rows=_SMALL)
+        v = validate(spark, t, rows)
         _DCAT_CACHE[sf_dir] = v
     return v.groupBy(
         F.col("sourceConstraintComponent").alias("component"),

@@ -50,20 +50,19 @@ def connected_components(
     edges: DataFrame,
     max_iter: int = 10,
     checkpoint_every: int = 1,
-    small_graph_edges: int = SMALL_GRAPH_EDGES,
 ) -> DataFrame:
     """(src, dst) string edges → (node, component) with component = min node id.
 
     Deterministic: component ids are the lexicographic min member, so reruns
     and resumed jobs produce identical canonical ids (MERGE-key stability,
-    SURVEY.md §7.3).  Small graphs short-circuit to a driver-side union-find
-    (identical output); pass ``small_graph_edges=0`` to force the
-    distributed path.
+    SURVEY.md §7.3).  Graphs of at most ``SMALL_GRAPH_EDGES`` edges
+    short-circuit to a driver-side union-find (identical output); tests set
+    the constant to 0 to force the distributed path.
     """
     spark = edges.sparkSession
-    if small_graph_edges:
-        head = edges.limit(small_graph_edges + 1).collect()
-        if len(head) <= small_graph_edges:
+    if SMALL_GRAPH_EDGES:
+        head = edges.limit(SMALL_GRAPH_EDGES + 1).collect()
+        if len(head) <= SMALL_GRAPH_EDGES:
             rows = _driver_union_find([(r[0], r[1]) for r in head])
             return spark.createDataFrame(rows, "node string, component string")
     sym = (

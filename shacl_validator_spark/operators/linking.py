@@ -144,7 +144,6 @@ def link_mentions(
     mentions: DataFrame,
     alias_dict: DataFrame,
     lsh_threshold: float = 0.6,
-    small_surface_set: int = SMALL_SURFACE_SET,
 ) -> DataFrame:
     """Full linking: exact broadcast join, LSH fallback, surface fallback.
 
@@ -154,14 +153,14 @@ def link_mentions(
     (SURVEY.md §7.3 blank-node determinism).
     Returns the broadcastable map (surface, ent_class, canonical_id).
 
-    Small distinct-surface sets short-circuit to a driver-side linker with
-    exact Jaccard (a superset of the LSH candidate blocking — LSH only
-    approximates it); pass ``small_surface_set=0`` to force the distributed
-    path.
+    Sets of at most ``SMALL_SURFACE_SET`` distinct surfaces short-circuit
+    to a driver-side linker with exact Jaccard (a superset of the LSH
+    candidate blocking — LSH only approximates it); tests set the constant
+    to 0 to force the distributed path.
     """
-    if small_surface_set:
-        head = mentions.select("surface", "ent_class").limit(small_surface_set + 1).collect()
-        if len(head) <= small_surface_set:
+    if SMALL_SURFACE_SET:
+        head = mentions.select("surface", "ent_class").limit(SMALL_SURFACE_SET + 1).collect()
+        if len(head) <= SMALL_SURFACE_SET:
             arows = [(r[0], r[1]) for r in alias_dict.collect()]
             linked = _link_small([(r[0], r[1]) for r in head], arows, lsh_threshold)
             return spark.createDataFrame(

@@ -6,13 +6,17 @@ DataFrame operations — the central design decision of SURVEY.md §2.10:
 validation compiles to joins and aggregations, no per-row Python anywhere.
 
 Scale notes (the plan that must survive 100 TB):
-- the constraint table is always KBs → **every** join against it is an
-  explicit ``F.broadcast`` (no shuffle of the big side on those joins);
-- targeting (`sh:targetClass`) is one shuffle of the type sub-relation on
-  ``(constraint_id, focusNode)``; value lookup is one broadcast join of the
-  triples table on ``predicate`` (map-side); the single big-big shuffle is
-  targets ⟕ values on ``(constraint_id, focusNode)`` — AQE skew-join
-  handles hub focus nodes;
+- the constraint table is always KBs → it never becomes a join side: every
+  predicate/class → constraint lookup, check facet and result-metadata
+  field compiles to a literal map or when-chain evaluated map-side;
+- targeting (`sh:targetClass`) is one scan of the type sub-relation and one
+  dedup shuffle on ``(constraint_id, focusNode)``; value lookup is one scan
+  of the triples table exploded through the predicate map; the single
+  big-big join is values ⋉ targets on ``(constraint_id, focusNode)``;
+- every join against a data-derived relation (targets, node classes,
+  nested-shape offenders, lessThan minima) carries NO hint: Spark sizes it
+  from plan statistics (``autoBroadcastJoinThreshold``) and AQE from
+  runtime shuffle sizes, with skew-join splitting on hub focus nodes;
 - minCount uses the **targets-side left join** so focus nodes with zero
   values are detected (the classic join-SHACL bug, SURVEY.md §7.3);
 - counts use map-side partial aggregation (plain ``groupBy().agg``).
@@ -198,10 +202,9 @@ def _as_violations(
 ) -> DataFrame:
     """Project rule survivors into the sh:ValidationResult column set.
 
-    foafPage rides along from the broadcast constraint table — the Spark
+    foafPage rides along as a literal per-constraint lookup — the Spark
     form of the reference's violations ⟕ shapes foaf:page join (J4,
-    SHACLValidationService.ts:249-269): the join already happened when the
-    constraint table was broadcast, so no extra shuffle.
+    SHACLValidationService.ts:249-269) without a join or a shuffle.
     """
     return df.select(
         F.col("focusNode"),
@@ -263,12 +266,6 @@ def _lexically_valid(dt: F.Column | None = None) -> F.Column:
         .otherwise(F.lit(True))
     )
 
-
-# Above this many targeted focus nodes the validator stops broadcasting
-# data-derived relations (targets, typed_set) and plans hint-free shuffle
-# joins instead — AQE then picks broadcast/shuffle per runtime size and
-# applies skew-join splitting on hub focus nodes.  Overridable per call.
-DEFAULT_BROADCAST_ROWS = 4_000_000
 
 # Bounded unroll of sh:zeroOrMorePath / sh:oneOrMorePath (see _closure).
 PATH_DEPTH = 4
@@ -583,18 +580,27 @@ def _targets_of(
     return local_df(spark, [], "constraint_id long, focusNode string")
 
 
+def _branches(r: dict) -> list[dict]:
+    """Every branch of a constraint row's logical and qualified components
+    (sh:node, sh:not, sh:qualifiedValueShape, sh:or/and/xone members,
+    qualified siblings)."""
+    out = [r[k] for k in ("node_branch", "not_branch", "qvs_branch") if r.get(k)]
+    for key in ("or_branches", "and_branches", "xone_branches", "qvs_sibling_branches"):
+        out.extend(r.get(key) or [])
+    return out
+
+
 def _branch_refs(r: dict) -> list[str]:
     """Nested-shape ids referenced by a constraint row's branches."""
-    refs: list[str] = []
-    for key in ("node_branch", "not_branch", "qvs_branch"):
-        b = r.get(key)
-        if b and b.get("node_ref"):
-            refs.append(b["node_ref"])
-    for key in ("or_branches", "and_branches", "xone_branches", "qvs_sibling_branches"):
-        for b in r.get(key) or []:
-            if b.get("node_ref"):
-                refs.append(b["node_ref"])
-    return refs
+    return [b["node_ref"] for b in _branches(r) if b.get("node_ref")]
+
+
+def _level_classes(rows: list[dict]) -> set[str]:
+    """Every class IRI a check at this evaluation level can ask about —
+    plain sh:class facets plus class branches of the logical components."""
+    out = {r["class_iri"] for r in rows if r.get("class_iri")}
+    out.update(b["class_iri"] for r in rows for b in _branches(r) if b.get("class_iri"))
+    return out
 
 
 # nesting depth cap for sh:node recursion (cyclic shape graphs terminate
@@ -606,8 +612,6 @@ def validate(
     spark: SparkSession,
     triples: DataFrame,
     constraint_rows: list[dict],
-    broadcast_rows: int = DEFAULT_BROADCAST_ROWS,
-    input_rows: int | None = None,
     entailment: str = "rdfs",
 ) -> DataFrame:
     """Run every compiled constraint against the triples table.
@@ -620,15 +624,12 @@ def validate(
     nodes) — the Spark form of the reference engine's full-SHACL-core
     delegation (SHACLValidationService.ts:398-408).
 
-    ``broadcast_rows`` gates the data-derived broadcasts: ``targets``
-    (constraint × typed focus node) and the node→classes lookup both GROW
-    WITH THE CORPUS, so an unconditional broadcast dies at plan time past
-    the 8 GB broadcast ceiling (~10^9 canonical entities).  The gate probes
-    each relation with a bounded ``limit(K+1).count()`` (the probe
-    short-circuits once K+1 rows exist — it never scans a big graph fully);
-    at or below K the classic broadcast plan is kept, above K every
-    data-derived join is left hint-free for AQE.  Pass ``0`` to force the
-    shuffle path (used by tests).
+    Data-derived relations — ``targets`` (constraint × typed focus node),
+    the node→classes lookup, nested-shape offenders — GROW WITH THE CORPUS,
+    so no join against them carries a broadcast hint: Spark's planner
+    (``autoBroadcastJoinThreshold``) and AQE (runtime shuffle sizes) choose
+    broadcast or shuffle per join, and building the plan runs no job
+    beyond the schema-sized subclass collect of ``entailment="rdfs"``.
 
     ``triples`` should be a materialized relation (parquet/Iceberg-backed,
     as the pipeline's scratch tables are): the target set is recomputed by
@@ -660,75 +661,7 @@ def validate(
     # hand validate() a materialized table, not a long derived plan.
     types = _typed_with_entailment(spark, triples, entailment)
     targets = _targets_of(spark, triples, top, types)
-
-    # LIMIT takes an int32 — clamp; a threshold past 2^31 rows means
-    # "always broadcast" anyway (no probe needed)
-    probe_n = min(broadcast_rows + 1, 2**31 - 1) if broadcast_rows > 0 else 0
-
-    def _probe_small(df: DataFrame) -> bool:
-        return broadcast_rows > 0 and (
-            broadcast_rows >= 2**31 - 1 or df.limit(probe_n).count() <= broadcast_rows
-        )
-
-    # ``input_rows`` is a caller-supplied size hint (the pipeline already
-    # knows its typed-triple count from parquet footers): when the WORST
-    # CASE bound — every triple targeting every top constraint — fits under
-    # the gate, both probe jobs are provably unnecessary and skipped.
-    # Above the bound the probes run as usual; 0/None disables the hint.
-    if input_rows is not None and 0 < broadcast_rows < 2**31 - 1:
-        if input_rows * max(1, len(top)) <= broadcast_rows:
-            class_needed = any(
-                r.get("class_iri") or _has_branch_class(r) for r in constraint_rows
-            )
-            return _eval(
-                spark, triples, top, defs, targets, types,
-                small=True, types_small=class_needed, depth=0,
-            )
-
-    small = _probe_small(targets)
-    # the node→classes lookup is gated on ITS OWN size, not the target
-    # set's: shapes targeting a rare class can have tiny targets while the
-    # corpus-wide type set is huge — forcing its broadcast off the targets
-    # probe would blow the ceiling the gate exists to avoid (ADVICE r2 #2).
-    # Probed only when some constraint actually checks sh:class.
-    class_needed = any(
-        r.get("class_iri") or _has_branch_class(r) for r in constraint_rows
-    )
-    types_small = _probe_small(types) if class_needed else False
-    return _eval(
-        spark, triples, top, defs, targets, types,
-        small=small, types_small=types_small, depth=0,
-    )
-
-
-def _has_branch_class(r: dict) -> bool:
-    for key in ("node_branch", "not_branch", "qvs_branch"):
-        b = r.get(key)
-        if b and b.get("class_iri"):
-            return True
-    for key in ("or_branches", "and_branches", "xone_branches", "qvs_sibling_branches"):
-        if any(b.get("class_iri") for b in r.get(key) or []):
-            return True
-    return False
-
-
-def _level_classes(rows: list[dict]) -> set[str]:
-    """Every class IRI a check at this evaluation level can ask about —
-    plain sh:class facets plus class branches of the logical components
-    (the exact surface `_has_branch_class` detects)."""
-    out: set[str] = set()
-    for r in rows:
-        if r.get("class_iri"):
-            out.add(r["class_iri"])
-        for key in ("node_branch", "not_branch", "qvs_branch"):
-            b = r.get(key)
-            if b and b.get("class_iri"):
-                out.add(b["class_iri"])
-        for key in ("or_branches", "and_branches", "xone_branches", "qvs_sibling_branches"):
-            for b in r.get(key) or []:
-                if b.get("class_iri"):
-                    out.add(b["class_iri"])
-    return out
+    return _eval(spark, triples, top, defs, targets, types, depth=0)
 
 
 # ---------------------------------------------------------------------------
@@ -1251,8 +1184,6 @@ def _nested_bad_fast(
     sub_rows: list[dict],
     nodes: DataFrame,
     types: DataFrame,
-    small: bool,
-    types_small: bool,
 ) -> DataFrame:
     """Non-conforming value nodes of a simple nested shape WITHOUT the
     full violation assembly (r5): conformance is an EXISTENCE question —
@@ -1280,17 +1211,16 @@ def _nested_bad_fast(
         "object_datatype",
         "object_lang",
     )
-    if any(r.get("class_iri") or _has_branch_class(r) for r in sub_rows):
-        wanted = sorted(_level_classes(sub_rows))
+    wanted = sorted(_level_classes(sub_rows))
+    if wanted:
         nc = (
             types.filter(F.col("cls").isin(wanted))
             .groupBy(F.col("subject").alias("t_node"))
             .agg(F.collect_set("cls").alias("t_classes"))
         )
-        gated_nc = F.broadcast(nc) if types_small else nc
-        stream = stream.join(
-            gated_nc, stream["object_value"] == gated_nc["t_node"], "left"
-        ).drop("t_node")
+        stream = stream.join(nc, stream["object_value"] == nc["t_node"], "left").drop(
+            "t_node"
+        )
     arts = _compiled_checks_cached(sub_rows, {})
     parts: list[DataFrame] = []
     if arts["check_cols"]:
@@ -1371,17 +1301,12 @@ def _eval(
     defs: list[dict],
     targets: DataFrame,
     types: DataFrame,
-    small: bool,
-    types_small: bool,
     depth: int,
 ) -> DataFrame:
     """Core rule evaluation over an explicit target set.
 
     Called once for the top-level targets and recursively for nested node
     shapes (targets = the referencing constraints' value nodes)."""
-
-    def _gate(df: DataFrame) -> DataFrame:
-        return F.broadcast(df) if small else df
 
     # --- path value lookup ---------------------------------------------------
     # Fast path: plain single-step paths (the overwhelming majority) — one
@@ -1488,9 +1413,9 @@ def _eval(
     # =======================================================================
     # Single-scan rule evaluation.  The value stream (every value occurrence
     # × constraint) is the only big relation; everything it needs — targets,
-    # facets, the distinct (node, class) type set — is broadcast onto it,
-    # every per-row component contributes one nullable slot to a hit array,
-    # and a two-level cascaded aggregation on (constraint, focus[, value])
+    # the distinct (node, class) type set — is joined onto it (facets are
+    # literal expressions), every per-row component contributes one
+    # nullable slot to a hit array, and a two-level cascaded aggregation on (constraint, focus[, value])
     # produces BOTH the distinct-value counts for the cardinality rules AND
     # the deduplicated per-value hits.  Net plan: ONE pass over the stream +
     # one small shuffle whose map-side combine collapses per-graph
@@ -1510,30 +1435,26 @@ def _eval(
     # regexes once and fold the datatype-validity dispatch per constraint.
     # Result metadata (path/severity/messages/shape) joins onto the
     # violation-sized exploded stream, never the corpus-sized one.
-    values = vals.join(_gate(targets), ["constraint_id", "focusNode"], "left_semi")
+    values = vals.join(targets, ["constraint_id", "focusNode"], "left_semi")
 
     # sh:class (plain facet or inside logical branches) needs a type lookup
     # per value node: ONE aggregated node→classes relation serves every
     # class check uniformly via array_contains.  It is joined only when some
-    # constraint actually checks a class (ADVICE r2 #2 — previously the
-    # corpus-wide type set was force-broadcast off the TARGETS probe and
-    # joined unconditionally), and gated on its own probed size.
-    class_needed = any(r.get("class_iri") or _has_branch_class(r) for r in rows)
-    if class_needed:
+    # constraint actually checks a class.
+    wanted = sorted(_level_classes(rows))
+    if wanted:
         # Shapes reference a FIXED set of classes — pruning the type relation
         # to them before the aggregation turns a corpus-wide (every typed
         # node) groupBy into one over only instances of the checked classes,
         # and the filter pushes down to the type scan.  array_contains on the
         # pruned sets is unchanged for every class a check can ask about.
-        wanted = sorted(_level_classes(rows))
         node_classes = (
             types.filter(F.col("cls").isin(wanted))
             .groupBy(F.col("subject").alias("t_node"))
             .agg(F.collect_set("cls").alias("t_classes"))
         )
-        gated_nc = F.broadcast(node_classes) if types_small else node_classes
         values = values.join(
-            gated_nc, values["object_value"] == gated_nc["t_node"], "left"
+            node_classes, values["object_value"] == node_classes["t_node"], "left"
         ).drop("t_node")
     # (no null t_classes column when nothing checks a class — every class
     # check below is built only for constraints that carry one)
@@ -1546,7 +1467,7 @@ def _eval(
     # false-positived the date startDate/endDate idiom); mixed or
     # non-comparable domains are a comparison failure → violation.  The
     # compare relation aggregates to one row per (constraint, focus) —
-    # target-set-sized — and rides the same broadcast gate as targets.
+    # target-set-sized.
     # sh:lessThanOrEquals rides the same sibling-min aggregation — only the
     # final comparison differs (strict vs non-strict).  The compiler slots
     # the two facets onto separate rows, so a constraint id never mixes the
@@ -1585,7 +1506,7 @@ def _eval(
                 F.count(F.lit(1)).alias("_lt_n"),
             )
         )
-        values = values.join(_gate(lt_agg), ["constraint_id", "focusNode"], "left")
+        values = values.join(lt_agg, ["constraint_id", "focusNode"], "left")
     # (no null _lt_* columns when no pair-comparison facet exists — the
     # LessThan checks below are gated on lt_by_pred)
 
@@ -1640,8 +1561,7 @@ def _eval(
                     # existence-only conformance: skip the full violation
                     # assembly (r5 — see _nested_bad_fast)
                     bad = _nested_bad_fast(
-                        spark, triples, sub_rows, nodes, types,
-                        small=small, types_small=types_small,
+                        spark, triples, sub_rows, nodes, types
                     ).select(F.col("focusNode").alias(f"_badnode_{i}"))
                 else:
                     sub_targets = nodes.select(
@@ -1652,13 +1572,13 @@ def _eval(
                     )
                     sub_vios = _eval(
                         spark, triples, sub_rows, defs, sub_targets, types,
-                        small=small, types_small=types_small, depth=depth + 1,
+                        depth=depth + 1,
                     )
                     bad = sub_vios.select(
                         F.col("focusNode").alias(f"_badnode_{i}")
                     ).dropDuplicates()
                 values = values.join(
-                    _gate(bad),
+                    bad,
                     values["object_value"] == F.col(f"_badnode_{i}"),
                     "left",
                 ).withColumn(flag, F.col(f"_badnode_{i}").isNotNull()).drop(
@@ -1854,7 +1774,7 @@ def _eval(
                 "object_datatype",
                 "object_lang",
             )
-            .join(_gate(targets), ["constraint_id", "focusNode"], "left_semi")
+            .join(targets, ["constraint_id", "focusNode"], "left_semi")
             .select("constraint_id", "focusNode", "object_value", _term_key().alias("_k"))
             .dropDuplicates(["constraint_id", "focusNode", "_k"])
         )
@@ -1900,7 +1820,7 @@ def _eval(
         closed_vals = triples.select(
             "subject", "predicate", "object_value"
         ).join(
-            _gate(ct.select("constraint_id", F.col("focusNode"))),
+            ct.select("constraint_id", F.col("focusNode")),
             F.col("subject") == F.col("focusNode"),
         )
         cl = (
@@ -1937,7 +1857,7 @@ def _eval(
         tgt = targets.filter(F.col("constraint_id") == r["constraint_id"]).select(
             F.col("focusNode").alias("this")
         )
-        res = res.join(_gate(tgt), "this", "left_semi")
+        res = res.join(tgt, "this", "left_semi")
         value_col = (
             F.col("value").cast("string")
             if "value" in res.columns

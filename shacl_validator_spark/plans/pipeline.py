@@ -38,7 +38,7 @@ from pyspark.sql import functions as F
 _OBS_IDS = _it_count()
 
 from ..model import RDF_TYPE, SEVERITY_VIOLATION, TRIPLE_SCHEMA, VIOLATION_SCHEMA
-from ..operators.components import connected_components
+from ..operators import components
 from ..operators.linking import alias_dict_df, link_mentions
 from ..operators.validate import validate
 from ..shapes import compile_shapes, profile_shapes_ttl
@@ -66,10 +66,7 @@ class PipelineResult:
     stage_seconds: dict[str, float] = field(default_factory=dict)
 
 
-def canonicalize(
-    spark: SparkSession, linked: DataFrame, max_iter: int = 6,
-    small_map: int = 100_000,
-) -> DataFrame:
+def canonicalize(spark: SparkSession, linked: DataFrame, max_iter: int = 6) -> DataFrame:
     """Merge surfaces that share a canonical id (or are chained by LSH)
     into components; canonical id := min member id.
 
@@ -77,17 +74,17 @@ def canonicalize(
     (surface, canonical_id, ent_class) map.
 
     When the linked surface map is small (it is the distinct-surface set,
-    already collapsed by linking) the whole computation runs driver-side —
-    union-find plus a dict join — instead of ~10 tiny Spark jobs; pass
-    ``small_map=0`` to force the distributed path.
+    already collapsed by linking; the bound is the connected-components
+    ``SMALL_GRAPH_EDGES``, one edge per surface) the whole computation runs
+    driver-side — union-find plus a dict join — instead of ~10 tiny Spark
+    jobs.
     """
-    if small_map:
-        head = linked.limit(small_map + 1).collect()
-        if len(head) <= small_map:
-            from ..operators.components import _driver_union_find
-
+    cap = components.SMALL_GRAPH_EDGES
+    if cap:
+        head = linked.limit(cap + 1).collect()
+        if len(head) <= cap:
             pairs = [("s|" + r.surface, "c|" + r.canonical_id) for r in head]
-            comp = dict(_driver_union_find(pairs))
+            comp = dict(components._driver_union_find(pairs))
             # every surface has an edge to a c| node and 'c|' < 's|', so the
             # min-label component is always c|-prefixed (same argument as the
             # distributed path's coalesce fallback)
@@ -111,7 +108,7 @@ def canonicalize(
         F.concat(F.lit("s|"), F.col("surface")).alias("src"),
         F.concat(F.lit("c|"), F.col("canonical_id")).alias("dst"),
     )
-    comps = connected_components(edges, max_iter=max_iter)
+    comps = components.connected_components(edges, max_iter=max_iter)
     # component label is min over 'c|...' and 's|...' — 'c|' sorts before 's|',
     # so canonical ids win whenever one is in the component
     surf = (
@@ -400,16 +397,14 @@ def run_pipeline(
         # body per partition group), not scratch — they live under
         # out_dir/reports and survive the scratch cleanup below
         report_path = os.path.join(out_dir, "reports", key)
-        # parquet-footer count (metadata read) doubles as the validator's
-        # size hint — under the broadcast gate's worst-case bound it skips
-        # both bounded probe jobs the validator would otherwise run
+        # parquet-footer count (metadata read) for the lineage record
         n_in = triples.count()
         # entailment="none": the extractor vocabulary cannot emit
-        # rdfs:subClassOf, so the subclass probe job is provably useless
-        # here — this keeps the hinted validate call fully probe-free
-        validate(
-            spark, triples, shapes, input_rows=n_in, entailment="none"
-        ).write.mode("overwrite").parquet(report_path)
+        # rdfs:subClassOf, so the subclass collect job is provably useless
+        # here — this keeps the validate call free of driver-side jobs
+        validate(spark, triples, shapes, entailment="none").write.mode(
+            "overwrite"
+        ).parquet(report_path)
         violations = spark.read.schema(VIOLATION_SCHEMA).parquet(report_path)
         t0 = _bump("validate", t0)
 

@@ -381,13 +381,15 @@ def extract_raw_triples_from_html(
 
     The JVM candidate gate adapts to html: ``extract_text`` yields either
     a byte-substring of the html (main-span path) or a tags→spaces
-    rewrite, so a text containing the full infix literal implies the html
-    contains the literal's space-TRIMMED core (the surrounding spaces may
-    come from stripped tags).  Gating html on the trimmed literals is
-    therefore a sound superset filter: never drops a true candidate,
-    keeps at most a few false ones for the Python kernel to reject.
-    Differential equality with the two-pass path is pinned by
-    tests/test_extract.py."""
+    rewrite, so any space-free run of the text is a contiguous run of the
+    html, while a run that spans a space may span a stripped tag
+    (``is<b>located in`` reads as ``is located in``).  A text containing
+    an infix literal therefore implies the html contains each of the
+    literal's single (ASCII) words, though not necessarily adjacent.
+    Gating html on that conjunction, per literal, is a sound superset
+    filter: never drops a true candidate, keeps at most a few false ones
+    for the Python kernel to reject.  Differential equality with the
+    two-pass path is pinned by tests/test_extract.py."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -402,7 +404,10 @@ def extract_raw_triples_from_html(
     if gate and PATTERN_GATE_LITERALS:
         keep = None
         for lit in PATTERN_GATE_LITERALS:
-            c = F.contains(F.col("html"), F.lit(lit.strip().encode()))
+            c = None
+            for word in lit.split():
+                w = F.contains(F.col("html"), F.lit(word.encode()))
+                c = w if c is None else c & w
             keep = c if keep is None else keep | c
         cand = cand.filter(keep)
     return cand.mapInPandas(run, schema=RAW_TRIPLE_SCHEMA)

@@ -19,9 +19,11 @@ partitioning question.  Two shapes:
   JSON-LD layout Spark can split WITHIN a file (line boundaries are
   record boundaries, so a single 100 GB dump parallelizes across all
   executors with no chunker machinery at all).  Generated bnode ids are
-  scoped per line via ``monotonically_increasing_id`` (two identical
-  ``@id``-less node objects are distinct RDF nodes); labeled ``_:x`` ids
-  stay file-scoped so cross-line references within one file still meet.
+  scoped per line by the line's content hash plus its occurrence index
+  among identical lines of the same file (two identical ``@id``-less node
+  objects are distinct RDF nodes), so ids — and MERGE keys — do not depend
+  on how the file was split; labeled ``_:x`` ids stay file-scoped so
+  cross-line references within one file still meet.
 
 At 100 TB prefer JSON-Lines: the array form forces per-file granularity
 (a whole file must be in one task's memory), while NDJSON splits on
@@ -59,7 +61,7 @@ def _parse_jsonld_files(batches) -> Iterator:
 
 def _parse_jsonld_lines(batches) -> Iterator:
     """mapInPandas kernel: (value, rid, tag, graph) one-node-per-line rows.
-    Generated bnode ids are scoped by the line's global row id (distinct
+    Generated bnode ids are scoped by the line id ``rid`` (distinct
     anonymous nodes per line); labeled ``_:x`` ids get only the per-FILE
     tag so references across lines of one file stay connected."""
     import json
@@ -83,7 +85,7 @@ def _parse_jsonld_lines(batches) -> Iterator:
                 jsonld_rows(
                     [node],
                     graph,
-                    bnode_prefix=f"{file_pfx}r{int(rid)}",
+                    bnode_prefix=f"{file_pfx}r{rid}",
                     label_prefix=file_pfx,
                 )
             )
@@ -112,11 +114,30 @@ def read_jsonld(
         F.lit(graph) if graph is not None else F.input_file_name()
     ).cast("string")
     if lines:
-        src = spark.read.text(path).select(
-            "value",
-            F.monotonically_increasing_id().alias("rid"),
-            F.sha2(F.input_file_name(), 256).substr(1, 10).alias("tag"),
-            graph_col.alias("graph"),
+        # line id = content hash + occurrence index among identical lines
+        # of the same file: identical lines collapse to one counted row
+        # and explode back, so the id never depends on the split layout
+        src = (
+            spark.read.text(path)
+            .select(
+                "value",
+                F.sha2(F.input_file_name(), 256).substr(1, 10).alias("tag"),
+                graph_col.alias("graph"),
+            )
+            .groupBy("tag", "graph", "value")
+            .count()
+            .select(
+                "value", "tag", "graph",
+                F.explode(F.sequence(F.lit(1), F.col("count"))).alias("occ"),
+            )
+            .select(
+                "value", "tag", "graph",
+                F.concat(
+                    F.sha2(F.col("value"), 256).substr(1, 32),
+                    F.lit("n"),
+                    F.col("occ").cast("string"),
+                ).alias("rid"),
+            )
         )
         out = src.mapInPandas(_parse_jsonld_lines, TRIPLE_SCHEMA)
     else:

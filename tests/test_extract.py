@@ -354,9 +354,10 @@ def test_fused_html_extraction_equals_two_pass(spark):
 
 
 def test_fused_html_gate_is_sound_across_tags(spark):
-    """The html gate uses space-TRIMMED infix literals: an infix whose
-    surrounding spaces come from stripped tags (no main-content span, so
-    the tags→spaces fallback builds the text) must still be extracted."""
+    """The html gate tests each infix literal's single words: an infix
+    whose spaces come from stripped tags — around it or inside it (no
+    main-content span, so the tags→spaces fallback builds the text) — must
+    still be extracted."""
     from pyspark.sql import types as T
 
     from shacl_validator_spark.sources.extract import (
@@ -367,6 +368,9 @@ def test_fused_html_gate_is_sound_across_tags(spark):
     rows = [
         # literal split by tags: text gets " is located in " via tag→space
         ("u1", b"Acme Corp<b>is located in</b>Berlin. trailing"),
+        # tag INSIDE the infix: text gets " is located in " only after
+        # the tag→space rewrite, so no multi-word infix is in the html
+        ("u4", b"Acme Corp is<b>located in Berlin. trailing"),
         # plain literal inside body, no main template
         ("u2", b"Initech publishes Weekly Data. x"),
         # no relation at all — gate must drop it (and results agree)
@@ -386,3 +390,4 @@ def test_fused_html_gate_is_sound_across_tags(spark):
     b = {tuple(r) for r in fused.collect()}
     assert a == b
     assert any(r[0] == "u1" for r in a), a  # the tag-split case extracted
+    assert any(r[0] == "u4" for r in a), a  # the interior-tag case extracted

@@ -7,6 +7,7 @@ from __future__ import annotations
 import json
 import os
 import tempfile
+from collections import Counter
 
 from shacl_validator_spark.sources.jsonld import read_jsonld
 from shacl_validator_spark.sources.rdf_io import triples_from_jsonld
@@ -118,6 +119,44 @@ def test_jsonlines_bnode_scoping(spark):
     assert len(hubs) == 1 and hubs == hub_subj
     anon_subjects = {r.subject for r in rows if r.predicate == "http://ex.org/anon"}
     assert len(anon_subjects) == 2, anon_subjects
+
+
+def test_jsonlines_ids_independent_of_split_layout(spark):
+    """JSON-Lines: generated bnode ids (and so MERGE keys) must not depend
+    on how the file is split — one file read whole and read in many
+    ``maxPartitionBytes`` splits yields the identical relation, with
+    byte-identical anonymous lines still distinct."""
+    d = tempfile.mkdtemp(prefix="jld_split_")
+    p = os.path.join(d, "dump.jsonl")
+    anon = {"http://ex.org/anon": [{"@value": "v"}]}
+    with open(p, "w") as f:
+        for i in range(30):
+            node = {
+                "@id": f"http://ex.org/s{i}",
+                "http://ex.org/addr": [{"http://ex.org/n": [{"@value": str(i)}]}],
+            }
+            f.write(json.dumps(node) + "\n")
+            if i % 10 == 0:
+                f.write(json.dumps(anon) + "\n")
+    key = "spark.sql.files.maxPartitionBytes"
+    old = spark.conf.get(key)
+
+    def read():
+        df = read_jsonld(spark, p, graph="g", distinct=False, lines=True)
+        return Counter(tuple(r) for r in df.collect())
+
+    try:
+        spark.conf.set(key, str(os.path.getsize(p) * 2))
+        assert spark.read.text(p).rdd.getNumPartitions() == 1
+        whole = read()
+        spark.conf.set(key, "256")
+        assert spark.read.text(p).rdd.getNumPartitions() > 4
+        split = read()
+    finally:
+        spark.conf.set(key, old)
+    assert whole == split
+    anon_subjects = {r[0] for r in whole if r[1] == "http://ex.org/anon"}
+    assert len(anon_subjects) == 3, anon_subjects
 
 
 def test_array_wrapped_jsonlines(spark):

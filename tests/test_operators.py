@@ -152,7 +152,9 @@ def test_multimodal_features(spark):
     assert [f.ts_ms for f in frames] == [0, 1000, 2000, 3000]
 
 
-def test_connected_components_small_path_matches_distributed(spark):
+def test_connected_components_small_path_matches_distributed(spark, monkeypatch):
+    from shacl_validator_spark.operators import components
+
     edges = spark.createDataFrame(
         [("a", "b"), ("b", "c"), ("d", "e"), ("f", "f"), ("c", "g")],
         "src string, dst string",
@@ -160,14 +162,13 @@ def test_connected_components_small_path_matches_distributed(spark):
     small = {
         r.node: r.component for r in connected_components(edges).collect()
     }
-    dist = {
-        r.node: r.component
-        for r in connected_components(edges, small_graph_edges=0).collect()
-    }
+    monkeypatch.setattr(components, "SMALL_GRAPH_EDGES", 0)
+    dist = {r.node: r.component for r in connected_components(edges).collect()}
     assert small == dist
 
 
-def test_link_mentions_small_path_matches_distributed(spark):
+def test_link_mentions_small_path_matches_distributed(spark, monkeypatch):
+    from shacl_validator_spark.operators import linking
     from shacl_validator_spark.operators.linking import alias_dict_df, link_mentions
     from shacl_validator_spark.sources.pages import alias_rows
 
@@ -185,9 +186,10 @@ def test_link_mentions_small_path_matches_distributed(spark):
         (r.surface, r.ent_class): r.canonical_id
         for r in link_mentions(spark, mentions, adict).collect()
     }
+    monkeypatch.setattr(linking, "SMALL_SURFACE_SET", 0)
     dist = {
         (r.surface, r.ent_class): r.canonical_id
-        for r in link_mentions(spark, mentions, adict, small_surface_set=0).collect()
+        for r in link_mentions(spark, mentions, adict).collect()
     }
     # exact-Jaccard small path must agree with the LSH path on resolved
     # surfaces; LSH may only MISS candidates (approximate blocking)

@@ -9,6 +9,8 @@ reference guide documents as worked examples
 
 from __future__ import annotations
 
+from contextlib import contextmanager
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -232,32 +234,56 @@ def test_extended_components_violating(spark):
     assert len(hv) == 1 and hv[0].focusNode.endswith("t2") and hv[0].value is None
 
 
-def test_broadcast_gate_shuffle_path(spark, shapes):
-    """Above the broadcast-row gate the validator must plan hint-free joins
-    for the data-derived relations (targets, typed_set): no forced
-    BroadcastExchange that would OOM at 10^9+ focus nodes.  broadcast_rows=0
-    forces that path; results must match the broadcast plan exactly."""
+_BROADCAST_THRESHOLDS = (
+    "spark.sql.autoBroadcastJoinThreshold",
+    "spark.sql.adaptive.autoBroadcastJoinThreshold",
+)
+
+
+@contextmanager
+def no_auto_broadcast(spark):
+    """Disable Spark's own size-based broadcast choice (planner and AQE),
+    restoring the previous settings afterwards: every join the validator
+    leaves unhinted then runs as a shuffle join."""
+    old = {k: spark.conf.get(k, None) for k in _BROADCAST_THRESHOLDS}
+    for k in _BROADCAST_THRESHOLDS:
+        spark.conf.set(k, "-1")
+    try:
+        yield
+    finally:
+        for k, v in old.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
+def test_data_joins_unhinted_and_threshold_invariant(spark, shapes):
+    """Joins against data-derived relations (targets, node classes) carry
+    no broadcast hint — Spark's planner and AQE size them, so no relation
+    that grows with the corpus is ever forced into a BroadcastExchange.
+    Results must not depend on Spark's broadcast thresholds: the all-shuffle
+    plan (thresholds disabled) and the default plan agree exactly."""
+    before = [spark.conf.get(k, None) for k in _BROADCAST_THRESHOLDS]
     triples = triples_from_turtle(spark, FX.PUBLISHER_UNTYPED, graph="test://fixture")
     spark.catalog.clearCache()  # earlier tests' cached relations would substitute subtrees
-    small_df = validate(spark, triples, shapes, broadcast_rows=10**9)
-    big_df = validate(spark, triples, shapes, broadcast_rows=0)
-    opt_small = small_df._jdf.queryExecution().optimizedPlan().toString()
-    opt_big = big_df._jdf.queryExecution().optimizedPlan().toString()
-    # The KB-sized facet table stays broadcast on BOTH paths (by design);
-    # the gate governs the DATA-DERIVED joins.  The targets semi-join is the
-    # marker: hinted broadcast on the small path, hint-free above the gate.
-    semi_small = [ln for ln in opt_small.splitlines() if "leftsemi" in ln.lower()]
-    semi_big = [ln for ln in opt_big.splitlines() if "leftsemi" in ln.lower()]
-    assert semi_small and any("broadcast" in ln.lower() for ln in semi_small)
-    assert semi_big and all("broadcast" not in ln.lower() for ln in semi_big)
-    # and the gate strictly reduces the number of broadcast hints overall
-    assert opt_big.lower().count("strategy=broadcast") < opt_small.lower().count(
-        "strategy=broadcast"
-    )
+    df = validate(spark, triples, shapes)
+    opt = df._jdf.queryExecution().optimizedPlan().toString().lower()
+    semi = [ln for ln in opt.splitlines() if "leftsemi" in ln]
+    assert semi and all("broadcast" not in ln for ln in semi)
+    assert "strategy=broadcast" not in opt
+
     key = lambda r: (  # noqa: E731
         r.focusNode, r.resultPath, r.value, r.resultSeverity, r.sourceConstraintComponent
     )
-    assert sorted(map(key, small_df.collect())) == sorted(map(key, big_df.collect()))
+    default_rows = sorted(map(key, df.collect()))
+    with no_auto_broadcast(spark):
+        shuffled = validate(spark, triples, shapes)
+        shuffle_rows = sorted(map(key, shuffled.collect()))
+        executed = shuffled._jdf.queryExecution().executedPlan().toString()
+    assert "BroadcastHashJoin" not in executed
+    assert shuffle_rows == default_rows and default_rows
+    assert [spark.conf.get(k, None) for k in _BROADCAST_THRESHOLDS] == before
 
 
 def test_many_constraints_literal_maps(spark):
@@ -340,8 +366,9 @@ def test_hub_focus_node_bounded_rows(spark):
             "severity": "Violation",
         }
     ]
-    out = validate(spark, triples, rows, broadcast_rows=0)
-    assert out.count() == n
+    with no_auto_broadcast(spark):
+        out = validate(spark, triples, rows)
+        assert out.count() == n
 
 
 def test_plan_build_expression_cache(spark, shapes):
@@ -423,10 +450,10 @@ def test_nested_fast_path_matches_full_eval(spark, monkeypatch):
             for r in df.collect()
         }
 
-    fast = canon(validate(spark, t, rows, broadcast_rows=m._SMALL))
+    fast = canon(validate(spark, t, rows))
     # force every nested shape through the general recursive path (the
     # package re-exports the validate FUNCTION under the module's name)
     vmod = import_module("shacl_validator_spark.operators.validate")
     monkeypatch.setattr(vmod, "_nested_fast_ok", lambda sub_rows: False)
-    full = canon(validate(spark, t, rows, broadcast_rows=m._SMALL))
+    full = canon(validate(spark, t, rows))
     assert fast == full and len(fast) > 0
