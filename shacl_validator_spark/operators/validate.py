@@ -227,7 +227,10 @@ class ValidationReport:
     (SURVEY.md §1.3)."""
 
     conforms: bool
-    results: DataFrame  # all severities; filter on resultSeverity
+    # all severities; filter on resultSeverity.  Materialized once by
+    # validate_report (localCheckpoint), so every consumer reads the pinned
+    # rows; executor loss invalidates them — re-run validate_report then.
+    results: DataFrame
     total_violations: int
 
 
@@ -635,14 +638,16 @@ def validate(
     as the pipeline's scratch tables are): the target set is recomputed by
     its consumers as a pushed-down ``predicate == rdf:type`` scan instead of
     being pinned with localCheckpoint, which does not survive executor loss
-    and measurably collapses under memory pressure on wide streams.
+    and measurably collapses under memory pressure on wide streams.  That
+    reasoning is about the input triples relation; the violation-sized
+    output is small, and ``validate_report`` does pin it.
     """
     if not constraint_rows:
-        return spark.createDataFrame([], VIOLATION_SCHEMA)
+        return local_df(spark, [], VIOLATION_SCHEMA)
     top = [r for r in constraint_rows if not r.get("nested_under")]
     defs = [r for r in constraint_rows if r.get("nested_under")]
     if not top:
-        return spark.createDataFrame([], VIOLATION_SCHEMA)
+        return local_df(spark, [], VIOLATION_SCHEMA)
 
     # ``entailment``: "rdfs" (default) applies the rdfs:subClassOf* closure
     # to class targeting and sh:class (SHACL-instance semantics); "none"
@@ -1922,7 +1927,7 @@ def _sentinel(spark: SparkSession, component: str, text: str) -> DataFrame:
         None,
         None,
     )
-    return spark.createDataFrame([row], VIOLATION_SCHEMA)
+    return local_df(spark, [row], VIOLATION_SCHEMA)
 
 
 def validate_report(
@@ -1938,6 +1943,12 @@ def validate_report(
     ``conforms`` is true iff there are no Violation-severity results
     (SURVEY.md §2.4 A10).  Profile rules are sh:sparql shapes compiled into
     ``constraint_rows`` (shapes/suites.py ``PROFILE_RULES``).
+
+    The validation plan runs exactly once: ``results`` is materialized with
+    ``localCheckpoint`` and the violation count, the Turtle/CSV sinks and the
+    analytics all read those pinned rows.  The rows stay distributed in
+    executor storage, so executor loss invalidates them; they are not
+    registered in the CacheManager, so nothing has to unpersist them.
     """
     if not constraint_rows:
         results = _sentinel(spark, SENTINEL_NO_SHAPES, "No SHACL shapes available")
@@ -1945,7 +1956,7 @@ def validate_report(
     if triples.isEmpty():
         results = _sentinel(spark, SENTINEL_EMPTY_CONTENT, "Empty RDF content")
         return ValidationReport(False, results, 1)
-    results = validate(spark, triples, constraint_rows)
+    results = validate(spark, triples, constraint_rows).localCheckpoint(eager=True)
     n_viol = results.filter(F.col("resultSeverity") == SEVERITY_VIOLATION).count()
     return ValidationReport(n_viol == 0, results, n_viol)
 

@@ -22,6 +22,7 @@ import re
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..local_df import local_df
 from ..model import SH, VIOLATION_SCHEMA
 
 _PREFIXES = """@prefix sh: <http://www.w3.org/ns/shacl#> .
@@ -69,8 +70,17 @@ def report_to_turtle(
 ) -> str:
     """Serialize results → sh:ValidationReport Turtle (driver-side assembly;
     ``timestamp`` is injected for determinism — tests pass a fixed value,
-    production passes job start time)."""
-    rows = results.limit(max_rows).collect()
+    production passes job start time).
+
+    Raises ``ValueError`` when ``results`` has more than ``max_rows`` rows
+    rather than writing a report that silently drops results; write large
+    reports with ``write_report_csv``."""
+    rows = results.limit(max_rows + 1).collect()
+    if len(rows) > max_rows:
+        raise ValueError(
+            f"report has more than max_rows={max_rows} results; "
+            "write it with write_report_csv"
+        )
     out = [_PREFIXES]
     out.append("[] a sh:ValidationReport ;")
     out.append(f"    sh:conforms {'true' if conforms else 'false'} ;")
@@ -173,12 +183,7 @@ def parse_report_turtle(spark: SparkSession, ttl: str) -> tuple[bool, DataFrame]
                 page.value if page else None,
             )
         )
-    df = (
-        spark.createDataFrame(rows, VIOLATION_SCHEMA)
-        if rows
-        else spark.createDataFrame([], VIOLATION_SCHEMA)
-    )
-    return conforms, df
+    return conforms, local_df(spark, rows, VIOLATION_SCHEMA)
 
 
 def flatten_for_csv(results: DataFrame, preferred_lang: str = "en") -> DataFrame:

@@ -3,6 +3,7 @@ segments, Turtle escaping, format sniffing."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from shacl_validator_spark.model import VIOLATION_SCHEMA
@@ -89,6 +90,15 @@ def test_turtle_escaping_round_trip(spark):
     conforms, back = parse_report_turtle(spark, ttl)
     vals = {r.value for r in back.collect()}
     assert 'va"l\\ue' in vals
+
+
+def test_turtle_refuses_to_truncate(spark):
+    """A report larger than max_rows raises instead of writing a
+    complete-looking sh:ValidationReport with results dropped."""
+    df = _results(spark)
+    with pytest.raises(ValueError, match="write_report_csv"):
+        report_to_turtle(df, conforms=False, max_rows=2)
+    assert report_to_turtle(df, conforms=False, max_rows=3).count("a sh:ValidationResult") == 3
 
 
 def test_detect_format():

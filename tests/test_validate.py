@@ -18,6 +18,7 @@ from shacl_validator_spark.model import (
     SENTINEL_EMPTY_CONTENT,
     SENTINEL_NO_SHAPES,
     SH,
+    VIOLATION_SCHEMA,
 )
 from shacl_validator_spark.operators.validate import validate, validate_report
 from shacl_validator_spark.shapes import compile_shapes, profile_shapes_ttl
@@ -138,6 +139,38 @@ def test_empty_data_sentinel(spark, shapes):
     rows = report.results.collect()
     assert len(rows) == 1
     assert rows[0].sourceConstraintComponent == SENTINEL_EMPTY_CONTENT
+
+
+def test_sentinels_are_local_relations(spark, shapes):
+    """Driver-side sentinel reports plan as a JVM LocalRelation (no
+    pickled-RDD scan starting Python workers on every action)."""
+    triples = triples_from_turtle(spark, "")
+    for results in (
+        validate_report(spark, triples, []).results,
+        validate_report(spark, triples, shapes).results,
+        validate(spark, triples, []),
+    ):
+        assert results.schema == VIOLATION_SCHEMA
+        assert "LocalRelation" in results._jdf.queryExecution().optimizedPlan().toString()
+
+
+def test_report_results_materialized_once(spark, shapes):
+    """validate_report runs the validation plan once: its results are a
+    pinned localCheckpoint scan, so the Turtle, summary and CSV consumers
+    never re-plan the validation joins.  Rows, conforms and the violation
+    count equal those of the lazy validate() plan."""
+    triples = triples_from_turtle(spark, FX.MISSING_DATASET, graph="test://fixture")
+    report = validate_report(spark, triples, shapes)
+    assert "Join" not in report.results._jdf.queryExecution().optimizedPlan().toString()
+
+    def key(r):
+        return (*r[:3], tuple(r.message or ()), *r[4:])
+
+    lazy = validate(spark, triples, shapes)
+    assert set(map(key, report.results.collect())) == set(map(key, lazy.collect()))
+    n_viol = lazy.filter(F.col("resultSeverity") == "Violation").count()
+    assert report.total_violations == n_viol == 1
+    assert report.conforms is False
 
 
 def test_default_message_fallback(spark, shapes):

@@ -76,9 +76,6 @@ def main() -> int:
     ttls = suite_ttls(args.profile) if args.profile in SUITE_FILES else [PROFILES[args.profile]]
     rows = compile_shape_files(ttls + PROFILE_RULES.get(args.profile, []))
     rep = validate_report(spark, triples, rows)
-    # the report is tiny and consumed by four downstream actions (summary,
-    # groups, Turtle, CSV) — persist so the validation DAG runs once
-    rep.results.persist()
 
     print(f"\nprofile: {args.profile}   format: {fmt}")
     print(f"conforms: {rep.conforms}")
