@@ -1,12 +1,13 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
 ``entry`` runs the flagship KG-construction pipeline end-to-end on
-sf0.001; ``queries()``/``oracle_sql()`` register every SQL-expressible
-operator from SURVEY.md §2 (validation rules, report analytics, discovery
-joins, dedup, text analysis, similarity, relational core) for the DuckDB
-cross-check at sf0.01.  Non-SQL-expressible ops (LSH blocking, extraction
-UDFs) are registered without oracles → rows-only checks; their strong
-correctness checks live in tests/ (P/R vs generated expected triples).
+sf0.001; ``queries()``/``oracle_sql()`` register the KG/SHACL operators
+from SURVEY.md §2 (SHACL validation rules and full-suite reports, report
+analytics, dataset discovery and format mapping, RDF round-trips, the
+reference's message/file-size helpers) for the DuckDB cross-check at
+sf0.01.  The one non-SQL-expressible op (the extraction UDF) is
+registered without an oracle → rows-only check; its strong correctness
+checks live in tests/ (P/R vs generated expected triples).
 """
 
 from __future__ import annotations
@@ -18,18 +19,10 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from shacl_validator_spark.functions.text import (
-    doc_fingerprint,
-    language_id,
-    quality_score,
-    token_count,
-)
 from shacl_validator_spark.model import SH
 from shacl_validator_spark.operators import analytics as ana
-from shacl_validator_spark.operators.dedup import exact_duplicates, minhash_lsh_pairs, simhash
 from shacl_validator_spark.operators.discovery import extract_datasets, search_datasets
 from shacl_validator_spark.operators.linking import salted_count
-from shacl_validator_spark.operators.similarity import brute_force_topk, lsh_topk
 from shacl_validator_spark.operators.validate import validate
 from shacl_validator_spark.sources.extract import extract_raw_triples, extract_text
 from shacl_validator_spark.sources.pages import documents_as_pages
@@ -89,25 +82,6 @@ def entry(spark: SparkSession) -> DataFrame:
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/documents.parquet")
-
-
-def _docs_doubled(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """documents ∪ shifted-copy — deterministic exact-duplicate corpus."""
-    d = _docs(spark, sf_dir).select("doc_id", "text")
-    return d.unionByName(d.select((F.col("doc_id") + 1000000).alias("doc_id"), "text"))
-
-
-# PII patterns shared verbatim between the Spark operator and the DuckDB
-# oracle (deliberately RE2-and-Java compatible — operators/quality.py)
-from shacl_validator_spark.operators.quality import (  # noqa: E402
-    EMAIL_RE as _PII_EMAIL_RE,
-    IPV4_RE as _PII_IPV4_RE,
-)
-
-_DOCS_DOUBLED_SQL = (
-    "(SELECT doc_id, text FROM documents "
-    "UNION ALL SELECT doc_id + 1000000 AS doc_id, text FROM documents)"
-)
 
 
 _CUST_CACHE: dict[str, DataFrame] = {}
@@ -207,10 +181,6 @@ def _violations_of(
 
 
 _CUST_SHAPE = "ex:CustomerShape"
-
-
-def _shacl_oracle(select: str) -> str:
-    return select
 
 
 # ---------------------------------------------------------------------------
@@ -627,579 +597,6 @@ def q_shacl_dcat_ap_es_report(spark, sf_dir):
     ).agg(F.count("*").alias("n"))
 
 
-def q_tpch_q1(spark, sf_dir):
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    dec = lambda c: F.col(c).cast("decimal(18,4)")  # noqa: E731
-    return (
-        li.filter(F.col("l_shipdate") <= "1998-09-02")
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            F.sum(dec("l_quantity")).cast("double").alias("sum_qty"),
-            F.sum(dec("l_extendedprice")).cast("double").alias("sum_base_price"),
-            F.round(
-                F.sum(dec("l_extendedprice") * (F.lit(1).cast("decimal(18,4)") - dec("l_discount"))), 2
-            )
-            .cast("double")
-            .alias("sum_disc_price"),
-            F.count("*").alias("count_order"),
-        )
-    )
-
-
-def q_tpch_q3(spark, sf_dir):
-    """TPC-H Q3-style shipping priority (adapted to the driver's reduced
-    lineitem/orders schema): 3-way join + agg + top-10."""
-    c = spark.read.parquet(f"{sf_dir}/customer.parquet").filter(
-        F.col("c_mktsegment") == "BUILDING"
-    )
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet").filter(
-        F.col("o_orderdate") < "1996-03-15"
-    )
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").filter(
-        F.col("l_shipdate") > "1996-03-15"
-    )
-    dec = lambda c_: F.col(c_).cast("decimal(18,4)")  # noqa: E731
-    return (
-        li.join(o, li["l_orderkey"] == o["o_orderkey"])
-        .join(c, o["o_custkey"] == c["c_custkey"])
-        .groupBy("l_orderkey", "o_orderdate")
-        .agg(
-            F.round(F.sum(dec("l_extendedprice") * (F.lit(1).cast("decimal(18,4)") - dec("l_discount"))), 2)
-            .cast("double")
-            .alias("revenue")
-        )
-        .orderBy(F.desc("revenue"), "o_orderdate", "l_orderkey")
-        .limit(10)
-    )
-
-
-def q_tpch_q12(spark, sf_dir):
-    """TPC-H Q12-style priority classification (adapted): join + conditional
-    agg by return flag."""
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").filter(
-        (F.col("l_shipdate") >= "1996-01-01") & (F.col("l_shipdate") < "1997-01-01")
-    )
-    high = F.col("o_orderpriority").isin("1-URGENT", "2-HIGH")
-    return (
-        li.join(o, li["l_orderkey"] == o["o_orderkey"])
-        .groupBy("l_returnflag")
-        .agg(
-            F.sum(F.when(high, 1).otherwise(0)).alias("high_line_count"),
-            F.sum(F.when(high, 0).otherwise(1)).alias("low_line_count"),
-        )
-    )
-
-
-def q_revenue_by_nation(spark, sf_dir):
-    c = spark.read.parquet(f"{sf_dir}/customer.parquet")
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    n = spark.read.parquet(f"{sf_dir}/nation.parquet")
-    return (
-        o.join(c, o["o_custkey"] == c["c_custkey"])
-        .join(F.broadcast(n), c["c_nationkey"] == n["n_nationkey"])
-        .groupBy(F.col("n_name").alias("nation"))
-        .agg(
-            F.sum(F.col("o_totalprice").cast("decimal(18,4)")).cast("double").alias("revenue"),
-            F.count("*").alias("n_orders"),
-        )
-    )
-
-
-def q_top_parts(spark, sf_dir):
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    return (
-        li.groupBy("l_partkey")
-        .agg(F.count("*").alias("n"), F.sum(F.col("l_quantity").cast("decimal(18,4)")).cast("double").alias("qty"))
-        .orderBy(F.desc("n"), "l_partkey")
-        .limit(8)
-    )
-
-
-def q_distinct_users_by_type(spark, sf_dir):
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    return ev.groupBy("event_type").agg(
-        F.countDistinct("user_id").alias("users"), F.count("*").alias("n")
-    )
-
-
-def q_user_event_rank(spark, sf_dir):
-    from pyspark.sql.window import Window
-
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    return ev.select(
-        "event_id", "user_id", F.row_number().over(w).alias("rn")
-    )
-
-
-def q_sessionize(spark, sf_dir):
-    from pyspark.sql.window import Window
-
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    gap = F.unix_timestamp("ts") - F.unix_timestamp(F.lag("ts").over(w))
-    new_sess = F.when(gap.isNull() | (gap > 1800), 1).otherwise(0)
-    return (
-        ev.select("user_id", new_sess.alias("ns"))
-        .groupBy("user_id")
-        .agg(F.sum("ns").cast("long").alias("n_sessions"))
-    )
-
-
-def q_orders_no_lineitems(spark, sf_dir):
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    return (
-        o.join(li, o["o_orderkey"] == li["l_orderkey"], "left_anti")
-        .groupBy("o_orderstatus")
-        .agg(F.count("*").alias("n"))
-    )
-
-
-def q_hourly_event_pivot(spark, sf_dir):
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    types = ["click", "view", "purchase", "signup", "error"]
-    return (
-        ev.groupBy(F.date_format("ts", "yyyy-MM-dd HH").alias("hour"))
-        .pivot("event_type", types)
-        .count()
-        .na.fill(0, types)
-    )
-
-
-def q_dedup_exact(spark, sf_dir):
-    return exact_duplicates(_docs_doubled(spark, sf_dir)).select(
-        "content_hash", "n_docs", "keeper"
-    )
-
-
-def q_minhash_dup_pairs(spark, sf_dir):
-    return minhash_lsh_pairs(
-        _docs_doubled(spark, sf_dir), jaccard_threshold=0.999
-    ).select("id_a", "id_b")
-
-
-def _docs_neardup(spark, sf_dir):
-    """documents ∪ truncated copies — deterministic near-duplicate corpus."""
-    d = _docs(spark, sf_dir).filter(F.col("doc_id") < 200).select("doc_id", "text")
-    trunc = d.select(
-        (F.col("doc_id") + 1000000).alias("doc_id"),
-        F.expr("substring(text, 1, greatest(length(text)-120, 60))").alias("text"),
-    )
-    return d.unionByName(trunc)
-
-
-def q_ngram_jaccard(spark, sf_dir):
-    from shacl_validator_spark.operators.dedup import ngram_jaccard_pairs
-
-    return ngram_jaccard_pairs(_docs_neardup(spark, sf_dir), threshold=0.5).select(
-        "id_a", "id_b", "jaccard"
-    )
-
-
-def q_embedding_near_dup(spark, sf_dir):
-    from shacl_validator_spark.operators.similarity import cosine_near_dup_pairs
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
-        "vec_id", "embedding"
-    )
-    doubled = emb.unionByName(
-        emb.select((F.col("vec_id") + 1000000).alias("vec_id"), "embedding")
-    )
-    return cosine_near_dup_pairs(doubled, threshold=0.9, exact=True)
-
-
-def q_multimodal_features(spark, sf_dir):
-    from shacl_validator_spark.sources.multimodal import (
-        extract_features,
-        synthesize_media,
-    )
-
-    feats = extract_features(synthesize_media(spark, sf_dir))
-    return feats.select(
-        "media_id", "kind", "n_bytes", F.size("feature").alias("n_dims")
-    )
-
-
-def q_frame_sample(spark, sf_dir):
-    from shacl_validator_spark.sources.multimodal import sample_frames, synthesize_media
-
-    return sample_frames(synthesize_media(spark, sf_dir)).select(
-        "media_id", "frame_idx", "ts_ms"
-    )
-
-
-def q_doc_length_stats(spark, sf_dir):
-    """Per-language document-length distribution: exact p50/p90 + mean —
-    the corpus-profiling statistics pass of a training-data pipeline."""
-    d = _docs(spark, sf_dir)
-    ln = F.length("text").cast("double")
-    return d.groupBy("lang").agg(
-        F.count("*").alias("n_docs"),
-        F.round(F.avg(ln), 4).alias("mean_len"),
-        F.percentile(ln, F.lit(0.5)).alias("p50"),
-        F.percentile(ln, F.lit(0.9)).alias("p90"),
-    )
-
-
-def q_clean_corpus(spark, sf_dir):
-    """Corpus-hygiene gate: exact-dedup keepers ∩ quality floor ∩ language
-    allowlist in one job (the standard pre-training filter chain)."""
-    from shacl_validator_spark.operators.dedup import clean_corpus
-
-    return clean_corpus(
-        _docs_doubled(spark, sf_dir), min_quality=0.5, langs=["en", "es", "de", "fr"]
-    ).select("doc_id", "content_hash", "quality", "pred_lang")
-
-
-def q_token_stats(spark, sf_dir):
-    d = _docs(spark, sf_dir)
-    return d.groupBy("lang").agg(
-        F.count("*").alias("n_docs"),
-        F.sum(token_count(F.col("text"))).alias("tokens"),
-        F.sum(F.length("text")).alias("chars"),
-    )
-
-
-def q_quality_by_lang(spark, sf_dir):
-    d = _docs(spark, sf_dir)
-    return d.groupBy("lang").agg(
-        F.round(F.sum(quality_score(F.col("text"))), 4).alias("quality_sum")
-    )
-
-
-def q_language_id(spark, sf_dir):
-    d = _docs(spark, sf_dir)
-    return d.groupBy(language_id(F.col("text")).alias("pred_lang")).agg(
-        F.count("*").alias("n")
-    )
-
-
-def q_fingerprint_distinct(spark, sf_dir):
-    d = _docs(spark, sf_dir)
-    return d.agg(F.countDistinct(doc_fingerprint(F.col("text"))).alias("n_fingerprints"))
-
-
-def _docs_tripled(spark, sf_dir):
-    """documents ∪ two shifted copies — every doc is a 3-member exact-dup
-    cluster, so cluster composition is analytically known."""
-    d = _docs(spark, sf_dir).select("doc_id", "text")
-    return d.unionByName(
-        d.select((F.col("doc_id") + 1000000).alias("doc_id"), "text")
-    ).unionByName(d.select((F.col("doc_id") + 2000000).alias("doc_id"), "text"))
-
-
-def q_dedup_clusters(spark, sf_dir):
-    """Near-dup consolidation: MinHash pairs → connected components →
-    per-cluster keeper + member list (transitive dedup, not pairwise).
-
-    The member list is serialized '|'-joined ascending (VERDICT r4 #1a:
-    the driver's pandas canonicalizer cannot hash list cells)."""
-    from shacl_validator_spark.operators.dedup import near_dup_clusters
-
-    out = near_dup_clusters(_docs_tripled(spark, sf_dir), jaccard_threshold=0.999)
-    return out.select(
-        "cluster_id",
-        "n_members",
-        F.concat_ws("|", F.array_sort("members").cast("array<string>")).alias("members"),
-    )
-
-
-def q_repetition_stats(spark, sf_dir):
-    """Gopher-style repetition signals aggregated per language: mean
-    distinct-word ratio and mean top-word fraction."""
-    from shacl_validator_spark.operators.quality import repetition_profile
-
-    per = repetition_profile(_docs(spark, sf_dir), extra_cols=["lang"])
-    return per.groupBy("lang").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum("n_words").alias("total_words"),
-        F.round(F.avg("distinct_ratio"), 4).alias("distinct_ratio"),
-        F.round(F.avg("top_frac"), 4).alias("top_frac"),
-    )
-
-
-def q_pii_scrub(spark, sf_dir):
-    """PII detection + redaction audit: deterministic synthetic PII is
-    appended per doc (corpus text itself carries none), then the scrub must
-    find and remove exactly it."""
-    from shacl_validator_spark.operators.quality import pii_scrub
-
-    d = _docs(spark, sf_dir).select(
-        "doc_id",
-        "lang",
-        F.concat(
-            F.col("text"),
-            F.lit(" contact user"),
-            F.col("doc_id").cast("string"),
-            F.lit("@example.com from 10.0."),
-            (F.col("doc_id") % 256).cast("string"),
-            F.lit(".1"),
-        ).alias("text"),
-    )
-    return pii_scrub(d).groupBy("lang").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum("n_emails").alias("emails"),
-        F.sum("n_ips").alias("ips"),
-        F.sum("chars_removed").alias("chars_removed"),
-    )
-
-
-def q_decontaminate(spark, sf_dir):
-    """Benchmark decontamination audit: every ~97th document plays the
-    role of an eval/benchmark probe; training docs sharing any word 8-gram
-    with a probe (the probes themselves, their exact/near copies) are
-    flagged.  Aggregated per language: corpus size, contaminated count,
-    total distinct probe-8-gram hits."""
-    from shacl_validator_spark.operators.quality import ngram_decontaminate
-
-    d = _docs(spark, sf_dir).select("doc_id", "lang", "text")
-    probes = d.filter(F.col("doc_id") % 97 == 0).select("text")
-    out = ngram_decontaminate(d, probes, n=8)
-    return out.groupBy("lang").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum((F.col("n_contaminated") > 0).cast("long")).alias("contaminated_docs"),
-        F.sum("n_contaminated").alias("total_hits"),
-    )
-
-
-# 16 tokens exactly — aligns on the chunk_dedup window boundary so the
-# injected boilerplate is ONE shared chunk per tagged doc
-_BOILERPLATE = (
-    "subscribe to our newsletter accept all cookies this site uses"
-    " tracking terms of service apply here"
-)
-
-
-def q_chunk_dedup(spark, sf_dir):
-    """Sub-document boilerplate removal (RefinedWeb-style line dedup over
-    fixed 16-token windows): every third document gets a deterministic
-    16-token boilerplate prefix (corpus texts themselves are unique, so
-    without injection nothing would be shared); the operator must drop
-    exactly that chunk from the tagged docs and leave everything else
-    byte-identical."""
-    from shacl_validator_spark.operators.dedup import chunk_dedup
-
-    d = _docs(spark, sf_dir).select(
-        "doc_id",
-        F.when(
-            F.col("doc_id") % 3 == 0,
-            F.concat(F.lit(_BOILERPLATE + " "), F.col("text")),
-        )
-        .otherwise(F.col("text"))
-        .alias("text"),
-    )
-    return chunk_dedup(d, window=16, max_docs=2).select(
-        "doc_id", "n_chunks", "n_kept", F.md5("clean_text").alias("clean_hash")
-    )
-
-
-def q_lm_logprob(spark, sf_dir):
-    """CCNet-style LM quality proxy: per-document average token log
-    probability under a corpus-fitted unigram model."""
-    from shacl_validator_spark.operators.quality import unigram_logprob
-
-    return unigram_logprob(_docs(spark, sf_dir))
-
-
-def q_knn_graph(spark, sf_dir):
-    """Exact kNN graph over the embedding table (k=5 cosine neighbors per
-    vector + mutual-edge flag) — the SemDeDup/HNSW construction input."""
-    from shacl_validator_spark.operators.similarity import knn_graph
-
-    return knn_graph(spark.read.parquet(f"{sf_dir}/embeddings.parquet"), k=5)
-
-
-def q_knn_graph_ivf_exact(spark, sf_dir):
-    """IVF-blocked kNN graph with nprobe=nlist (exhaustive probing) — must
-    equal the exact graph, so it shares knn_graph's oracle (the
-    embedding_ivf_exact pattern)."""
-    from shacl_validator_spark.operators.similarity import knn_graph_blocked
-
-    return knn_graph_blocked(
-        spark.read.parquet(f"{sf_dir}/embeddings.parquet"),
-        k=5,
-        nlist=8,
-        nprobe=8,
-        iters=2,
-    )
-
-
-def q_knn_arrow_topk(spark, sf_dir):
-    """BLAS/Arrow form of the kNN-graph kernel — rows-only (output proven
-    bit-identical to knn_graph in tests/test_corpus_ops3.py; registered
-    for the bench's JVM-expression vs vectorized-numpy comparison)."""
-    from shacl_validator_spark.operators.similarity import knn_topk_arrow
-
-    return knn_topk_arrow(
-        spark.read.parquet(f"{sf_dir}/embeddings.parquet"), k=5
-    )
-
-
-def q_semantic_dedup(spark, sf_dir):
-    """SemDeDup over embeddings ∪ an exact shifted copy of every vector:
-    cross-vector cosines top out well below the 0.95 threshold (max ≈0.6
-    in this corpus), so the clusters are analytically exactly the
-    (original, copy) pairs."""
-    from shacl_validator_spark.operators.similarity import semantic_dedup
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
-        "vec_id", "embedding"
-    )
-    doubled = emb.unionByName(
-        emb.select((F.col("vec_id") + 1000000).alias("vec_id"), "embedding")
-    )
-    # '|'-serialized members: the driver canonicalizer can't hash list cells
-    return semantic_dedup(doubled, threshold=0.95, k=5).select(
-        "cluster_id",
-        "n_members",
-        F.concat_ws("|", F.array_sort("members").cast("array<string>")).alias("members"),
-    )
-
-
-def q_stratified_sample(spark, sf_dir):
-    """Deterministic per-language quota sample (training-mix construction):
-    exactly 40 docs per lang, ranked by md5(doc_id) — reproducible in any
-    engine, no RNG."""
-    from shacl_validator_spark.operators.sampling import stratified_sample
-
-    d = _docs(spark, sf_dir).select("doc_id", "lang", "source")
-    return stratified_sample(d, ["lang"], 40)
-
-
-def q_hash_sample(spark, sf_dir):
-    """Deterministic ~25% corpus sample via md5(doc_id) thresholding —
-    narrow map, no shuffle; audited per language."""
-    from shacl_validator_spark.operators.sampling import hash_sample
-
-    d = _docs(spark, sf_dir).select("doc_id", "lang")
-    return hash_sample(d, 0.25).groupBy("lang").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum("doc_id").alias("sum_ids"),
-    )
-
-
-def q_mix_weights(spark, sf_dir):
-    """Training-mix reweighting: per-language sampling weights that turn
-    the corpus's natural language mix into a target mix (upsampling capped
-    at 3x), with absent languages dropped — operators/sampling.py
-    mix_weights.  One tiny aggregation keyed by lang; floats rounded so
-    the DuckDB oracle compares exactly."""
-    from shacl_validator_spark.operators.sampling import mix_weights
-
-    d = _docs(spark, sf_dir).select("doc_id", "lang")
-    w = mix_weights(d, "lang", {"en": 0.4, "es": 0.3, "de": 0.3}, weight_cap=3.0)
-    return w.select(
-        "lang",
-        "n_rows",
-        F.round("natural_frac", 6).alias("natural_frac"),
-        F.round("target_frac", 6).alias("target_frac"),
-        F.round("weight", 6).alias("weight"),
-        "capped",
-    )
-
-
-def q_dsir_weights(spark, sf_dir):
-    """DSIR importance resampling (hashed-n-gram importance weights): every
-    document scored by the log ratio of its unigram+bigram hashed-feature
-    likelihood under the English subset (the 'target' corpus) vs the whole
-    corpus (the 'raw' distribution) — operators/sampling.py dsir_weights.
-    Two map-side-combined bucket fits (≤256 rows each) + one broadcast of
-    the 256-row log-ratio relation; the only corpus-sized shuffle is the
-    per-doc bucket-count aggregation."""
-    from shacl_validator_spark.operators.sampling import dsir_weights
-
-    d = _docs(spark, sf_dir).select("doc_id", "lang", "text")
-    return dsir_weights(d, d.filter(F.col("lang") == "en"), n_buckets=256)
-
-
-# the pinned tokenizer artifact applied by bpe_encode / its oracle — a
-# fixed English-bigram merge table incl. a rank-dependent chain (th+e)
-_PIN_MERGES = [
-    ("t", "h"), ("th", "e"), ("i", "n"), ("a", "n"), ("o", "n"),
-    ("e", "r"), ("r", "e"), ("a", "t"), ("e", "n"), ("o", "r"),
-]
-
-
-def q_bpe_encode(spark, sf_dir):
-    """Corpus tokenization with a PINNED BPE merge table (the production
-    tokenizer-as-artifact shape): segmentation on the distinct-word
-    relation, one doc-keyed reassembly shuffle — operators/quality.py
-    bpe_encode.  Output is per-doc piece count + an md5 over the
-    order-preserved piece sequence, so the oracle checks byte-exact
-    segmentation AND reassembly order."""
-    from shacl_validator_spark.operators.quality import bpe_encode
-
-    enc = bpe_encode(_docs(spark, sf_dir).select("doc_id", "text"), _PIN_MERGES)
-    return enc.select(
-        "doc_id",
-        F.size("pieces").alias("n_pieces"),
-        F.md5(F.concat_ws(" ", "pieces")).alias("pieces_hash"),
-    )
-
-
-def q_range_join(spark, sf_dir):
-    """Bucketed point-in-interval join (operators/temporal.py range_join):
-    every event paired with the 45-minute maintenance windows that contain
-    it (windows anchored at every 97th event).  The naive BETWEEN
-    condition would plan as a nested loop; here both sides map onto
-    30-minute buckets and meet in a bucket-keyed EQUI-join + residual
-    filter — each qualifying pair meets exactly once (the point's bucket).
-    Oracle: DuckDB's native BETWEEN join."""
-    from shacl_validator_spark.operators.temporal import range_join
-
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").select("event_id", "ts")
-    wins = ev.filter(F.col("event_id") % 97 == 0).select(
-        F.col("event_id").alias("window_id"),
-        F.col("ts").alias("w_start"),
-        (F.col("ts") + F.expr("INTERVAL 45 MINUTES")).alias("w_end"),
-    )
-    out = range_join(ev, wins, "ts", "w_start", "w_end", bucket_seconds=1800)
-    return out.select("event_id", "window_id")
-
-
-def q_interval_join(spark, sf_dir):
-    """Interval-overlap join (operators/temporal.py interval_join): user
-    sessions (40-min windows anchored at every 89th event) × maintenance
-    windows (45-min at every 97th event).  Both sides explode onto
-    30-minute buckets; a pair survives ONLY in the bucket of
-    max(start, start) — exactly-once without dedup.  Oracle: DuckDB's
-    native overlap join."""
-    from shacl_validator_spark.operators.temporal import interval_join
-
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").select("event_id", "ts")
-    sess = ev.filter(F.col("event_id") % 89 == 0).select(
-        F.col("event_id").alias("session_id"),
-        F.col("ts").alias("s_start"),
-        (F.col("ts") + F.expr("INTERVAL 40 MINUTES")).alias("s_end"),
-    )
-    wins = ev.filter(F.col("event_id") % 97 == 0).select(
-        F.col("event_id").alias("window_id"),
-        F.col("ts").alias("w_start"),
-        (F.col("ts") + F.expr("INTERVAL 45 MINUTES")).alias("w_end"),
-    )
-    out = interval_join(
-        sess, wins, ("s_start", "s_end"), ("w_start", "w_end"), bucket_seconds=1800
-    )
-    return out.select("session_id", "window_id")
-
-
-def q_bm25_rank(spark, sf_dir):
-    """Ranked retrieval (Okapi BM25, Lucene idf) for a fixed 3-term query
-    over the documents corpus — operators/index.py bm25_rank: the scored
-    upgrade of the reference's substring search (P7).  The (doc, term)
-    stream is filtered to the query before aggregation; df/avgdl are
-    broadcast one-row/query-sized relations; top-15 by (score desc, doc)."""
-    from shacl_validator_spark.operators.index import bm25_rank
-
-    return bm25_rank(
-        _docs(spark, sf_dir).select("doc_id", "text"),
-        ["hash", "join", "window"],
-        k=15,
-    )
-
-
 def q_markdown_preprocess(spark, sf_dir):
     """F9 (ValidationResults.tsx:131-149): message markdown preprocessing —
     tables pass through, pipe-less text passes through, otherwise pipes
@@ -1249,376 +646,6 @@ def q_file_size_report(spark, sf_dir):
         format_file_size(F.col("n_chars")).alias("size_str"),
         estimate_validation_minutes(F.col("n_chars") * 1024).alias("est_minutes"),
     )
-
-
-def q_apply_mix(spark, sf_dir):
-    """Mix realization: temperature weights (τ=2) over the language mix,
-    REALIZED as concrete rows — floor(w) guaranteed copies per doc plus a
-    deterministic md5-fraction extra (operators/sampling.py apply_mix).
-    The oracle replays the whole chain (fit → weight → copy fan-out) in
-    SQL, so the exact multiset of (doc, copy) rows is hash-checked."""
-    from shacl_validator_spark.operators.sampling import (
-        apply_mix,
-        temperature_weights,
-    )
-
-    d = _docs(spark, sf_dir).select("doc_id", "lang")
-    w = temperature_weights(d, "lang", tau=2.0).select("lang", "weight")
-    out = apply_mix(d, w, "lang")
-    return out.select("doc_id", "lang", F.col("copy_idx").cast("long").alias("copy_idx"))
-
-
-def q_shard_manifest(spark, sf_dir):
-    """Training-shard delivery manifest: deterministic md5 shard
-    assignment (8 shards) + per-shard doc/token/byte counts and the
-    order-insensitive content-XOR checksum — sources/shards.py
-    shard_manifest.  One map-side-combined aggregation keyed by shard."""
-    from shacl_validator_spark.sources.shards import shard_manifest
-
-    return shard_manifest(_docs(spark, sf_dir).select("doc_id", "text"), 8)
-
-
-def q_key_skew_profile(spark, sf_dir):
-    """Heavy-hitter skew report (operators/quality.py key_skew_profile)
-    for events.user_id — the diagnostic run before shuffling on a key:
-    top-10 hottest users with count/share/rank plus relation-wide
-    key/row totals.  One map-side-combined agg + one-row broadcast +
-    TakeOrdered."""
-    from shacl_validator_spark.operators.quality import key_skew_profile
-
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    return key_skew_profile(ev, "user_id", k=10)
-
-
-def q_corpus_datasheet(spark, sf_dir):
-    """Per-source delivery datasheet (operators/quality.py
-    corpus_datasheet): docs/tokens/bytes, distinct languages, exact-dup
-    docs under the dedup normalization contract, and quality mass — one
-    corpus scan, Expand + two-phase agg for the two distincts.  The corpus
-    is documents ∪ a shifted copy of every 5th doc (same lang/source) so
-    the dup columns are exercised, not constant zero."""
-    from shacl_validator_spark.operators.quality import corpus_datasheet
-
-    d = _docs(spark, sf_dir).select("doc_id", "text", "lang", "source")
-    dd = d.unionByName(
-        d.filter(F.col("doc_id") % 5 == 0).select(
-            (F.col("doc_id") + 1000000).alias("doc_id"), "text", "lang", "source"
-        )
-    )
-    return corpus_datasheet(dd)
-
-
-def q_temperature_weights(spark, sf_dir):
-    """XLM-R-style temperature sampling (τ=2): per-language resampling
-    weights that flatten the natural language mix toward uniform —
-    operators/sampling.py temperature_weights.  Same one-tiny-agg plan
-    shape as mix_weights; floats rounded so the DuckDB oracle compares
-    exactly."""
-    from shacl_validator_spark.operators.sampling import temperature_weights
-
-    w = temperature_weights(_docs(spark, sf_dir).select("doc_id", "lang"), "lang", tau=2.0)
-    return w.select(
-        "lang",
-        "n_rows",
-        F.round("natural_frac", 6).alias("natural_frac"),
-        F.round("sampled_frac", 6).alias("sampled_frac"),
-        F.round("weight", 6).alias("weight"),
-    )
-
-
-def q_vocab_topk(spark, sf_dir):
-    """Tokenizer-vocabulary counting pass: corpus-wide token frequencies,
-    top 25 by (count desc, token asc) — operators/quality.py vocab_top_k.
-    Map-side-combined hash aggregate + TakeOrderedAndProject."""
-    from shacl_validator_spark.operators.quality import vocab_top_k
-
-    return vocab_top_k(_docs(spark, sf_dir), k=25)
-
-
-def q_bpe_pair_stats(spark, sf_dir):
-    """BPE training iteration zero: adjacent character-pair counts over the
-    corpus word vocabulary, top 40 by (n desc, lhs, rhs) —
-    operators/quality.py bpe_pair_counts.  The corpus is touched once (the
-    word-count aggregation); pair explosion runs over VOCABULARY rows only,
-    so the audit costs the same at 10^6 and 10^12 documents."""
-    from shacl_validator_spark.operators.quality import bpe_pair_counts
-
-    return bpe_pair_counts(_docs(spark, sf_dir), k=40)
-
-
-def q_bpe_merges(spark, sf_dir):
-    """Sequential BPE training (12 merge rules) over the documents corpus —
-    operators/quality.py bpe_train: one corpus pass builds the vocabulary,
-    then every merge is two vocabulary-sized jobs (pair-stats argmax +
-    column-fold apply) with scratch-parquet lineage truncation.  SQL cannot
-    iterate, so this entry is rows-only; the merge-for-merge differential
-    against a pure-Python sequential reference is
-    tests/test_quality.py::test_bpe_train_differential_and_segment."""
-    from shacl_validator_spark.operators.quality import bpe_train
-
-    m = bpe_train(_docs(spark, sf_dir), 12)
-    return spark.createDataFrame(m, "rank int, lhs string, rhs string, n long")
-
-
-def _snapshot_docs(spark, sf_dir):
-    """The 'new crawl snapshot' fixture for incremental dedup: 100 exact
-    copies of reference docs, 100 tail-truncated near variants, 50 novel
-    documents — all derived deterministically from the documents table so
-    the DuckDB oracle can rebuild the identical snapshot."""
-    d = _docs(spark, sf_dir)
-    exact = d.filter(F.col("doc_id") < 100).select(
-        (F.col("doc_id") + 2000000).alias("doc_id"), "text"
-    )
-    trunc = d.filter((F.col("doc_id") >= 100) & (F.col("doc_id") < 200)).select(
-        (F.col("doc_id") + 2000000).alias("doc_id"),
-        F.expr("substr(text, 1, greatest(length(text) - 120, 60))").alias("text"),
-    )
-    novel = d.filter(F.col("doc_id") < 50).select(
-        (F.col("doc_id") + 3000000).alias("doc_id"),
-        F.concat(
-            F.lit("novel zebra "), F.col("doc_id").cast("string"),
-            F.lit(" quixotic "), (F.col("doc_id") * 7).cast("string"),
-            F.lit(" fjord "), (F.col("doc_id") * 13).cast("string"),
-        ).alias("text"),
-    )
-    return exact.unionByName(trunc).unionByName(novel)
-
-
-def q_incremental_dedup(spark, sf_dir):
-    """Incremental (cross-corpus) dedup — operators/dedup.py dedup_against:
-    label every snapshot doc 'exact' (normalized text already in the
-    reference corpus), 'near' (3-gram Jaccard >= 0.5 vs some reference doc)
-    or NULL (keep).  method='jaccard' is the deterministic posting-join
-    path the oracle reproduces; the banded-LSH scale path is the rows-only
-    twin below plus tests/test_corpus_ops3.py's subset/equality checks."""
-    from shacl_validator_spark.operators.dedup import dedup_against
-
-    return dedup_against(
-        _snapshot_docs(spark, sf_dir), _docs(spark, sf_dir),
-        method="jaccard", jaccard_threshold=0.5,
-    )
-
-
-def q_incremental_dedup_lsh(spark, sf_dir):
-    """The banded-MinHash scale path of incremental dedup (same contract as
-    q_incremental_dedup; candidates from the cross-corpus (band, band_hash)
-    equi-join instead of the exhaustive posting join).  Rows-only by design:
-    LSH recall is probabilistic, so hash-equality vs the exhaustive oracle
-    is not a sound contract — the subset relation is asserted in
-    tests/test_corpus_ops3.py::test_dedup_against_lsh_subset_of_jaccard."""
-    from shacl_validator_spark.operators.dedup import dedup_against
-
-    return dedup_against(
-        _snapshot_docs(spark, sf_dir), _docs(spark, sf_dir),
-        method="lsh", jaccard_threshold=0.5,
-    )
-
-
-def q_asof_view_click(spark, sf_dir):
-    """As-of join (the operator Spark lacks natively, built as union +
-    window carry-forward — operators/temporal.py): each click event gets
-    the user's most recent view at-or-before it; audited per user bucket
-    against DuckDB's native ASOF LEFT JOIN."""
-    from shacl_validator_spark.operators.temporal import asof_join
-
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    clicks = ev.filter(F.col("event_type") == "click").select("user_id", "ts", "event_id")
-    views = ev.filter(F.col("event_type") == "view").select("user_id", "ts")
-    j = asof_join(clicks, views, on=["user_id"], ts_col="ts", right_cols=[])
-    # events.ts is TIMESTAMP_NTZ; unix_micros wants TIMESTAMP — the cast
-    # applies the session UTC offset to both sides, so the DIFFERENCE is
-    # offset-free and matches DuckDB's epoch_us subtraction exactly
-    gap = F.unix_micros(F.col("ts").cast("timestamp")) - F.unix_micros(
-        F.col("asof_ts").cast("timestamp")
-    )
-    return j.groupBy((F.col("user_id") % 10).alias("user_bucket")).agg(
-        F.count(F.lit(1)).alias("n_clicks"),
-        F.sum(F.col("asof_ts").isNotNull().cast("long")).alias("matched"),
-        F.sum(F.coalesce(gap, F.lit(0))).alias("gap_us"),
-    )
-
-
-def q_embedding_quantize(spark, sf_dir):
-    """Int8 scalar quantization audit: per label, the exact integer sums
-    of the quantized components — pins scale computation and rounding
-    bit-for-bit against the DuckDB oracle."""
-    from shacl_validator_spark.operators.similarity import quantize_embeddings
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    q = quantize_embeddings(emb)
-    zero = F.lit(0).cast("long")
-    return q.groupBy("label").agg(
-        F.count(F.lit(1)).alias("n_vecs"),
-        F.sum(F.aggregate("q_vec", zero, lambda a, x: a + x)).alias("sum_q"),
-        F.sum(F.aggregate("q_vec", zero, lambda a, x: a + F.abs(x))).alias("sum_abs_q"),
-    )
-
-
-# decomposed suffix appended per doc for the NFC query: e + combining
-# acute (2 cp -> 1), A + combining ring (2 cp -> 1); the corpus itself is
-# already NFC, so the delta is exactly 2 codepoints per document
-_NFC_SUFFIX = " cafe\u0301 A\u030A"
-
-
-def q_unicode_nfc(spark, sf_dir):
-    """Unicode NFC normalization audit (mapInPandas kernel vs DuckDB's
-    native nfc_normalize): deterministic decomposed suffixes are appended
-    per doc, then per language we pin doc counts, codepoint lengths before
-    and after, and how many docs changed (all of them)."""
-    from shacl_validator_spark.operators.quality import normalize_unicode
-
-    d = _docs(spark, sf_dir).select(
-        "doc_id", "lang", F.concat("text", F.lit(_NFC_SUFFIX)).alias("text")
-    )
-    n = normalize_unicode(d)
-    return n.groupBy("lang").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum(F.length("text")).alias("cp_before"),
-        F.sum(F.length("normalized")).alias("cp_after"),
-        F.sum((F.col("text") != F.col("normalized")).cast("long")).alias("n_changed"),
-    )
-
-
-def q_pack_windows(spark, sf_dir):
-    """GPT-style sequence packing audit: documents concatenated into 8
-    md5-bucketed shard streams and chunked into 2048-token windows; per
-    shard we pin doc/token totals, the window count, boundary straddlers,
-    and the last window index."""
-    from shacl_validator_spark.operators.packing import pack_windows
-
-    p = pack_windows(_docs(spark, sf_dir).select("doc_id", "text"), 2048, buckets=8)
-    return p.groupBy("bucket").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum("n_tokens").alias("total_tokens"),
-        (F.floor((F.sum("n_tokens") - 1) / 2048) + 1).alias("n_windows"),
-        F.sum((F.col("first_window") != F.col("last_window")).cast("long")).alias(
-            "n_straddlers"
-        ),
-        F.max("last_window").alias("max_window"),
-    )
-
-
-def q_length_quantile_gate(spark, sf_dir):
-    """Per-language histogram-quantile gate (drop the bottom 20% by
-    n_chars within each language): per lang, the doc count, the integer
-    threshold the histogram picked, and how many docs clear it."""
-    from shacl_validator_spark.operators.quality import quantile_thresholds
-
-    d = _docs(spark, sf_dir)
-    thr = quantile_thresholds(d, "n_chars", 20, ["lang"], bin_width=64)
-    kept = (
-        d.join(F.broadcast(thr.select("lang", "threshold")), "lang")
-        .filter(F.col("n_chars") >= F.col("threshold"))
-        .groupBy("lang")
-        .agg(F.count(F.lit(1)).alias("kept"))
-    )
-    return thr.join(kept, "lang").select(
-        "lang", "n_rows", "threshold", "kept"
-    )
-
-
-def q_chunk_windows(spark, sf_dir):
-    """Sliding-window chunking (32-word windows, stride 24): every chunk
-    with its index, word offsets, and an md5 over the chunk text so the
-    oracle pins the exact chunk contents."""
-    from shacl_validator_spark.operators.packing import chunk_sliding
-
-    c = chunk_sliding(
-        _docs(spark, sf_dir).select("doc_id", "text"), 32, 24
-    )
-    return c.select(
-        "doc_id",
-        "chunk_idx",
-        "start_word",
-        "n_words",
-        F.md5(F.col("chunk")).alias("chunk_md5"),
-    )
-
-
-def q_embedding_hygiene(spark, sf_dir):
-    """Vector-hygiene gate over the embeddings table plus five synthetic
-    poison rows (null / wrong-dim / NaN / zero / exploded-norm): per flag,
-    the row count and the min/max rounded norm (order-independent float
-    aggregates, so the hash is partitioning-stable)."""
-    from shacl_validator_spark.operators.similarity import embedding_hygiene
-
-    e = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
-        "vec_id", "embedding"
-    )
-    bad = spark.createDataFrame(
-        [
-            (10**9 + 1, None),
-            (10**9 + 2, [1.0, 2.0]),
-            (10**9 + 3, [float("nan")] + [0.5] * 63),
-            (10**9 + 4, [0.0] * 64),
-            (10**9 + 5, [1e20] * 64),
-        ],
-        "vec_id long, embedding array<float>",
-    )
-    h = embedding_hygiene(e.unionByName(bad), expect_dim=64)
-    return h.groupBy("flag").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.min("norm").alias("lo_norm"),
-        F.max("norm").alias("hi_norm"),
-    )
-
-
-def q_json_props_stats(spark, sf_dir):
-    """Semi-structured extraction: JSON property pulled out of the raw
-    event payload column, typed, and aggregated per event type."""
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    k = F.get_json_object("props", "$.k").cast("long")
-    return ev.groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("n_events"),
-        F.sum(k).alias("sum_k"),
-        F.round(F.avg(k), 4).alias("avg_k"),
-    )
-
-
-def q_embedding_topk(spark, sf_dir):
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    queries = emb.filter(F.col("vec_id") < 3).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    return brute_force_topk(emb.filter(F.col("vec_id") >= 3), queries, k=5).select(
-        "query_id", "vec_id", "cos", "rank"
-    )
-
-
-def q_embedding_ivf_exact(spark, sf_dir):
-    """IVF probing with nprobe == nlist — every cell probed, so the result
-    must equal exact brute force (full oracle on the approximate path's
-    machinery: codebook, assignment, probing, scoring)."""
-    from shacl_validator_spark.operators.similarity import ivf_topk
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    queries = emb.filter(F.col("vec_id") < 3).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    return ivf_topk(
-        emb.filter(F.col("vec_id") >= 3), queries, k=5, nlist=4, nprobe=4, iters=1
-    ).select("query_id", "vec_id", "cos", "rank")
-
-
-def q_embedding_ivf_topk(spark, sf_dir):
-    """IVF with nprobe < nlist — the pruned scale path; rows-only check."""
-    from shacl_validator_spark.operators.similarity import ivf_topk
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    queries = emb.filter(F.col("vec_id") < 3).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    return ivf_topk(
-        emb.filter(F.col("vec_id") >= 3), queries, k=5, nlist=8, nprobe=2, iters=2
-    )
-
-
-def q_embedding_lsh_topk(spark, sf_dir):
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    queries = emb.filter(F.col("vec_id") < 3).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    return lsh_topk(emb.filter(F.col("vec_id") >= 3), queries, k=5)
 
 
 def q_discovery_datasets(spark, sf_dir):
@@ -1941,142 +968,9 @@ def q_byte_identity_failures(spark, sf_dir):
     ).select("url")
 
 
-def q_simhash_sample(spark, sf_dir):
-    # md5_60 token hash: engine-portable bit math, so the DuckDB oracle
-    # hash-checks the full SimHash vote (VERDICT r4 #1b); the production
-    # xxhash64 default is differential-tested in tests/
-    return simhash(_docs(spark, sf_dir), token_hash="md5_60").orderBy("doc_id").limit(100)
-
-
-def _supply_edges(spark, sf_dir):
-    """Directed supplier→part edges from lineitem, namespaced into one
-    bigint node space (supplier = 2k, part = 2k+1)."""
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    return li.select(
-        (F.col("l_suppkey") * 2).cast("long").alias("src"),
-        (F.col("l_partkey") * 2 + 1).cast("long").alias("dst"),
-    ).dropDuplicates()
-
-
-def _coorder_part_edges(spark, sf_dir):
-    from shacl_validator_spark.operators.graph import cooccurrence_edges
-
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    return cooccurrence_edges(li, "l_orderkey", "l_partkey")
-
-
-def q_graph_pagerank(spark, sf_dir):
-    from shacl_validator_spark.operators.graph import pagerank
-
-    return pagerank(_supply_edges(spark, sf_dir), iters=3)
-
-
-def q_graph_triangles(spark, sf_dir):
-    from shacl_validator_spark.operators.graph import triangle_count
-
-    return triangle_count(_coorder_part_edges(spark, sf_dir))
-
-
-def q_graph_kcore(spark, sf_dir):
-    from shacl_validator_spark.operators.graph import kcore
-
-    return kcore(_coorder_part_edges(spark, sf_dir), k=2, iters=3)
-
-
-def q_inverted_index(spark, sf_dir):
-    # postings serialized '|'-joined (already ascending by contract): the
-    # driver canonicalizer can't hash list cells (VERDICT r4 #1a)
-    from shacl_validator_spark.operators.index import inverted_index
-
-    return inverted_index(_docs(spark, sf_dir), max_postings=10).select(
-        "term",
-        "df",
-        F.concat_ws("|", F.col("postings").cast("array<string>")).alias("postings"),
-    )
-
-
-def q_tfidf_topk(spark, sf_dir):
-    from shacl_validator_spark.operators.index import tfidf_topk
-
-    return tfidf_topk(_docs(spark, sf_dir), k=3)
-
-
-# Deterministic noisy-URL synthesis for the URL/host operators: page_num
-# collapses each (10m, 10m+1) doc pair onto one logical page, while the
-# crawl-noise axes (scheme/host case, default port, trailing slash,
-# utm parameter, fragment) vary by doc_id — so normalization MUST undo
-# every noise axis for the pair to collide.  Kept as portable SQL so the
-# DuckDB oracle can synthesize the identical column.
-_RAW_URL_SQL = """
-    (CASE WHEN doc_id % 2 = 0 THEN 'https://' ELSE 'HttpS://' END)
-    || (CASE WHEN doc_id % 3 = 0
-             THEN upper('src' || CAST(_page_num % 20 AS STRING) || '.Example.COM')
-             ELSE 'src' || CAST(_page_num % 20 AS STRING) || '.Example.COM' END)
-    || (CASE WHEN doc_id % 5 = 0 THEN ':443' ELSE '' END)
-    || '/docs/' || CAST(_page_num % 7 AS STRING) || '/page' || CAST(_page_num AS STRING)
-    || (CASE WHEN doc_id % 4 = 0 THEN '/' ELSE '' END)
-    || (CASE WHEN doc_id % 2 = 0 AND _page_num % 2 = 0
-             THEN '?utm_source=feed&b=2&a=1&id=' || CAST(_page_num AS STRING)
-             WHEN doc_id % 2 = 0 THEN '?utm_source=feed'
-             WHEN _page_num % 2 = 0 THEN '?b=2&a=1&id=' || CAST(_page_num AS STRING)
-             ELSE '' END)
-    || (CASE WHEN doc_id % 6 = 0 THEN '#sec-2' ELSE '' END)
-"""
-
-
-def _docs_urls(spark, sf_dir):
-    from shacl_validator_spark.operators.web import host_of, normalize_url
-
-    d = _docs(spark, sf_dir).select("doc_id").withColumn(
-        "_page_num",
-        F.col("doc_id") - F.when(F.col("doc_id") % 10 == 1, 1).otherwise(0),
-    )
-    d = d.withColumn("raw_url", F.expr(_RAW_URL_SQL)).drop("_page_num")
-    d = d.withColumn("norm_url", normalize_url(F.col("raw_url")))
-    return d.withColumn("host", host_of(F.col("norm_url")))
-
-
-def q_url_normalize(spark, sf_dir):
-    """URL canonicalization (operators/web.py): scheme/host lowercasing,
-    default-port and fragment stripping, tracking-param removal,
-    query-param sort, trailing-slash strip — pure column expressions,
-    narrow map, independently re-implemented by the DuckDB oracle."""
-    return _docs_urls(spark, sf_dir).select("doc_id", "raw_url", "norm_url", "host")
-
-
-def q_url_dedup(spark, sf_dir):
-    """C4-style URL dedup: one keeper (smallest doc_id) per canonical
-    URL — the synthesis guarantees each (10m, 10m+1) doc pair collides
-    after normalization, so the group count is corpus/10 below the doc
-    count.  One hash-groupBy with map-side combine."""
-    from shacl_validator_spark.operators.web import url_dedup
-
-    return url_dedup(_docs_urls(spark, sf_dir))
-
-
-def q_host_cap(spark, sf_dir):
-    """RefinedWeb-style per-host document cap (keep the 5 smallest
-    doc_ids per host) via the two-phase salted top-cap in
-    operators/web.py — output provably identical to the oracle's plain
-    per-host window."""
-    from shacl_validator_spark.operators.web import host_cap
-
-    d = _docs_urls(spark, sf_dir).select("doc_id", "host")
-    return host_cap(d, cap=5, n_salts=4)
-
-
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    # VERDICT r4 #1b: rows-only entries (no oracle_sql, by design — RNG/
-    # engine-specific bit math the driver records as "err: no_oracle") go
-    # LAST so a fixed-size driver sample hits oracle-backed entries first.
-    q = _all_queries()
-    rows_only = set(q) - set(oracle_sql())
-    ordered = {k: v for k, v in q.items() if k not in rows_only}
-    ordered.update({k: v for k, v in q.items() if k in rows_only})
-    return ordered
-
-
-def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
+    # rows-only entries (no oracle_sql) go LAST so a fixed-size driver
+    # sample hits oracle-backed entries first
     return {
         "severity_summary": q_severity_summary,
         "grouped_findings": q_grouped_findings,
@@ -2128,66 +1022,8 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "shacl_sparql_minus": q_shacl_sparql_minus,
         "shacl_report_summary": q_shacl_report_summary,
         "shacl_dcat_ap_es_report": q_shacl_dcat_ap_es_report,
-        "tpch_q1": q_tpch_q1,
-        "tpch_q3": q_tpch_q3,
-        "tpch_q12": q_tpch_q12,
-        "revenue_by_nation": q_revenue_by_nation,
-        "top_parts": q_top_parts,
-        "distinct_users_by_type": q_distinct_users_by_type,
-        "user_event_rank": q_user_event_rank,
-        "sessionize": q_sessionize,
-        "orders_no_lineitems": q_orders_no_lineitems,
-        "hourly_event_pivot": q_hourly_event_pivot,
-        "dedup_exact": q_dedup_exact,
-        "minhash_dup_pairs": q_minhash_dup_pairs,
-        "ngram_jaccard": q_ngram_jaccard,
-        "embedding_near_dup": q_embedding_near_dup,
-        "multimodal_features": q_multimodal_features,
-        "frame_sample": q_frame_sample,
-        "doc_length_stats": q_doc_length_stats,
-        "clean_corpus": q_clean_corpus,
-        "dedup_clusters": q_dedup_clusters,
-        "chunk_dedup": q_chunk_dedup,
-        "lm_logprob": q_lm_logprob,
-        "knn_graph": q_knn_graph,
-        "semantic_dedup": q_semantic_dedup,
-        "knn_graph_ivf_exact": q_knn_graph_ivf_exact,
-        "knn_arrow_topk": q_knn_arrow_topk,
-        "repetition_stats": q_repetition_stats,
-        "pii_scrub": q_pii_scrub,
-        "decontaminate": q_decontaminate,
-        "stratified_sample": q_stratified_sample,
-        "hash_sample": q_hash_sample,
-        "dsir_weights": q_dsir_weights,
-        "temperature_weights": q_temperature_weights,
-        "shard_manifest": q_shard_manifest,
-        "corpus_datasheet": q_corpus_datasheet,
-        "key_skew_profile": q_key_skew_profile,
-        "bpe_encode": q_bpe_encode,
         "markdown_preprocess": q_markdown_preprocess,
-        "bm25_rank": q_bm25_rank,
-        "range_join": q_range_join,
-        "interval_join": q_interval_join,
-        "apply_mix": q_apply_mix,
         "file_size_report": q_file_size_report,
-        "mix_weights": q_mix_weights,
-        "vocab_topk": q_vocab_topk,
-        "asof_view_click": q_asof_view_click,
-        "embedding_quantize": q_embedding_quantize,
-        "unicode_nfc": q_unicode_nfc,
-        "pack_windows": q_pack_windows,
-        "length_quantile_gate": q_length_quantile_gate,
-        "chunk_windows": q_chunk_windows,
-        "embedding_hygiene": q_embedding_hygiene,
-        "json_props_stats": q_json_props_stats,
-        "token_stats": q_token_stats,
-        "quality_by_lang": q_quality_by_lang,
-        "language_id": q_language_id,
-        "fingerprint_distinct": q_fingerprint_distinct,
-        "embedding_topk": q_embedding_topk,
-        "embedding_ivf_exact": q_embedding_ivf_exact,
-        "embedding_ivf_topk": q_embedding_ivf_topk,
-        "embedding_lsh_topk": q_embedding_lsh_topk,
         "discovery_datasets": q_discovery_datasets,
         "discovery_search": q_discovery_search,
         "discovery_distributions": q_discovery_distributions,
@@ -2203,21 +1039,8 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "compact_predicates": q_compact_predicates,
         "flatten_report": q_flatten_report,
         "salted_degree": q_salted_degree,
-        "extract_relations": q_extract_relations,
         "byte_identity_failures": q_byte_identity_failures,
-        "simhash_sample": q_simhash_sample,
-        "graph_pagerank": q_graph_pagerank,
-        "graph_triangles": q_graph_triangles,
-        "graph_kcore": q_graph_kcore,
-        "inverted_index": q_inverted_index,
-        "tfidf_topk": q_tfidf_topk,
-        "url_normalize": q_url_normalize,
-        "url_dedup": q_url_dedup,
-        "host_cap": q_host_cap,
-        "bpe_pair_stats": q_bpe_pair_stats,
-        "bpe_merges": q_bpe_merges,
-        "incremental_dedup": q_incremental_dedup,
-        "incremental_dedup_lsh": q_incremental_dedup_lsh,
+        "extract_relations": q_extract_relations,
     }
 
 
@@ -2226,12 +1049,6 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 # ---------------------------------------------------------------------------
 
 _V = f"({SYNTHETIC_VIOLATIONS_SQL})"
-
-_CUSTOMER_TARGETS = "SELECT 'cust:' || CAST(c_custkey AS VARCHAR) AS focusNode, c_custkey FROM customer"
-
-_TOKEN_RE_SQL = "'[A-Za-z0-9]+(?:''[a-z]+)?'"
-
-_NORM_TEXT = "trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))"
 
 
 def oracle_sql() -> dict[str, str]:
@@ -2856,513 +1673,6 @@ def oracle_sql() -> dict[str, str]:
         WHERE k % 11 = 0 AND k % 4 != 0
     """
 
-    sql["tpch_q1"] = """
-        SELECT l_returnflag, l_linestatus,
-               CAST(SUM(CAST(l_quantity AS DECIMAL(18,4))) AS DOUBLE) AS sum_qty,
-               CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,4))) AS DOUBLE) AS sum_base_price,
-               CAST(ROUND(SUM(CAST(l_extendedprice AS DECIMAL(18,4)) *
-                   (CAST(1 AS DECIMAL(18,4)) - CAST(l_discount AS DECIMAL(18,4)))), 2) AS DOUBLE) AS sum_disc_price,
-               COUNT(*) AS count_order
-        FROM lineitem WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
-        GROUP BY l_returnflag, l_linestatus
-    """
-
-    sql["tpch_q3"] = """
-        SELECT l_orderkey, o_orderdate,
-               CAST(ROUND(SUM(CAST(l_extendedprice AS DECIMAL(18,4)) *
-                   (CAST(1 AS DECIMAL(18,4)) - CAST(l_discount AS DECIMAL(18,4)))), 2) AS DOUBLE) AS revenue
-        FROM lineitem
-        JOIN orders ON l_orderkey = o_orderkey
-        JOIN customer ON o_custkey = c_custkey
-        WHERE c_mktsegment = 'BUILDING'
-          AND o_orderdate < TIMESTAMP '1996-03-15 00:00:00'
-          AND l_shipdate > TIMESTAMP '1996-03-15 00:00:00'
-        GROUP BY l_orderkey, o_orderdate
-        ORDER BY revenue DESC, o_orderdate, l_orderkey LIMIT 10
-    """
-
-    sql["tpch_q12"] = """
-        SELECT l_returnflag,
-               CAST(SUM(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')
-                             THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count,
-               CAST(SUM(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')
-                             THEN 0 ELSE 1 END) AS BIGINT) AS low_line_count
-        FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        WHERE l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
-          AND l_shipdate < TIMESTAMP '1997-01-01 00:00:00'
-        GROUP BY l_returnflag
-    """
-
-    sql["revenue_by_nation"] = """
-        SELECT n_name AS nation,
-               CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS revenue,
-               COUNT(*) AS n_orders
-        FROM orders JOIN customer ON o_custkey = c_custkey
-        JOIN nation ON c_nationkey = n_nationkey
-        GROUP BY n_name
-    """
-
-    sql["top_parts"] = """
-        SELECT l_partkey, COUNT(*) AS n,
-               CAST(SUM(CAST(l_quantity AS DECIMAL(18,4))) AS DOUBLE) AS qty
-        FROM lineitem GROUP BY l_partkey ORDER BY n DESC, l_partkey LIMIT 8
-    """
-
-    sql["distinct_users_by_type"] = """
-        SELECT event_type, COUNT(DISTINCT user_id) AS users, COUNT(*) AS n
-        FROM events GROUP BY event_type
-    """
-
-    sql["user_event_rank"] = """
-        SELECT event_id, user_id,
-               ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY ts, event_id) AS rn
-        FROM events
-    """
-
-    sql["sessionize"] = """
-        SELECT user_id, CAST(SUM(ns) AS BIGINT) AS n_sessions FROM (
-          SELECT user_id,
-                 CASE WHEN prev_ts IS NULL
-                      OR date_diff('second', prev_ts, ts) > 1800 THEN 1 ELSE 0 END AS ns
-          FROM (
-            SELECT user_id, ts,
-                   LAG(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_ts
-            FROM events
-          )
-        ) GROUP BY user_id
-    """
-
-    sql["orders_no_lineitems"] = """
-        SELECT o_orderstatus, COUNT(*) AS n FROM orders
-        WHERE o_orderkey NOT IN (SELECT l_orderkey FROM lineitem)
-        GROUP BY o_orderstatus
-    """
-
-    sql["hourly_event_pivot"] = """
-        SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H') AS hour,
-               COUNT(*) FILTER (event_type = 'click') AS "click",
-               COUNT(*) FILTER (event_type = 'view') AS "view",
-               COUNT(*) FILTER (event_type = 'purchase') AS "purchase",
-               COUNT(*) FILTER (event_type = 'signup') AS "signup",
-               COUNT(*) FILTER (event_type = 'error') AS "error"
-        FROM events GROUP BY 1
-    """
-
-    sql["dedup_exact"] = f"""
-        SELECT md5({_NORM_TEXT}) AS content_hash,
-               COUNT(*) AS n_docs, MIN(doc_id) AS keeper
-        FROM {_DOCS_DOUBLED_SQL} d
-        GROUP BY 1 HAVING COUNT(*) > 1
-    """
-
-    sql["minhash_dup_pairs"] = f"""
-        SELECT a.doc_id AS id_a, b.doc_id AS id_b
-        FROM {_DOCS_DOUBLED_SQL} a JOIN {_DOCS_DOUBLED_SQL} b
-          ON trim(regexp_replace(lower(a.text), '\\s+', ' ', 'g'))
-           = trim(regexp_replace(lower(b.text), '\\s+', ' ', 'g'))
-         AND a.doc_id < b.doc_id
-    """
-
-    sql["ngram_jaccard"] = f"""
-        WITH docs AS (
-          SELECT doc_id, text FROM documents WHERE doc_id < 200
-          UNION ALL
-          SELECT doc_id + 1000000, substr(text, 1, greatest(length(text)-120, 60))
-          FROM documents WHERE doc_id < 200
-        ),
-        norm AS (SELECT doc_id, trim(regexp_replace(lower(text), '\\s+', ' ', 'g')) AS t FROM docs),
-        toks AS (SELECT doc_id, regexp_extract_all(t, {_TOKEN_RE_SQL}) AS tk FROM norm),
-        sh AS (
-          SELECT doc_id,
-                 CASE WHEN len(tk) >= 3
-                      THEN list_distinct([array_to_string(tk[i:i+2], ' ')
-                                          for i in generate_series(1, len(tk)-2)])
-                      ELSE [array_to_string(tk, ' ')] END AS s
-          FROM toks
-        )
-        SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-               ROUND(CAST(len(list_intersect(a.s, b.s)) AS DOUBLE)
-                     / len(list_distinct(list_concat(a.s, b.s))), 6) AS jaccard
-        FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-        WHERE CAST(len(list_intersect(a.s, b.s)) AS DOUBLE)
-              / len(list_distinct(list_concat(a.s, b.s))) >= 0.5
-    """
-
-    sql["embedding_near_dup"] = """
-        WITH e AS (
-          SELECT vec_id, embedding FROM embeddings
-          UNION ALL SELECT vec_id + 1000000, embedding FROM embeddings
-        )
-        SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-               ROUND(list_cosine_similarity(CAST(a.embedding AS DOUBLE[]),
-                                            CAST(b.embedding AS DOUBLE[])), 6) AS cos
-        FROM e a JOIN e b ON a.vec_id < b.vec_id
-        WHERE ROUND(list_cosine_similarity(CAST(a.embedding AS DOUBLE[]),
-                                           CAST(b.embedding AS DOUBLE[])), 6) >= 0.9
-    """
-
-    sql["multimodal_features"] = """
-        SELECT doc_id AS media_id,
-               CASE WHEN doc_id % 3 = 0 THEN 'image'
-                    WHEN doc_id % 3 = 1 THEN 'audio'
-                    ELSE 'video' END AS kind,
-               CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes,
-               16 AS n_dims
-        FROM documents
-    """
-
-    sql["frame_sample"] = """
-        SELECT doc_id AS media_id, CAST(i AS INT) AS frame_idx,
-               CAST(i * 1000 AS BIGINT) AS ts_ms
-        FROM documents, (SELECT UNNEST(generate_series(0, 9)) AS i)
-        WHERE doc_id % 3 = 2 AND i <= doc_id % 10
-    """
-
-    sql["doc_length_stats"] = """
-        SELECT lang, COUNT(*) AS n_docs,
-               ROUND(AVG(CAST(length(text) AS DOUBLE)), 4) AS mean_len,
-               quantile_cont(CAST(length(text) AS DOUBLE), 0.5) AS p50,
-               quantile_cont(CAST(length(text) AS DOUBLE), 0.9) AS p90
-        FROM documents GROUP BY lang
-    """
-
-    sql["clean_corpus"] = f"""
-        WITH d AS (SELECT doc_id, text FROM {_DOCS_DOUBLED_SQL} dd),
-        keep AS (
-          SELECT doc_id, text, md5({_NORM_TEXT}) AS content_hash,
-                 ROW_NUMBER() OVER (PARTITION BY md5({_NORM_TEXT}) ORDER BY doc_id) AS rn
-          FROM d
-        ),
-        scored AS (
-          SELECT doc_id, content_hash,
-            ROUND(
-              (CASE WHEN length(text) BETWEEN 64 AND 100000 THEN 1.0 ELSE 0.0 END) * 0.25 +
-              (CASE WHEN length(text) > 0 THEN
-                 1.0 - LEAST(CAST(len(regexp_extract_all(text, '[^\\w\\s]')) AS DOUBLE) / length(text) * 5, 1.0)
-               ELSE 0.0 END) * 0.25 +
-              (CASE WHEN len(regexp_extract_all(' ' || lower(text) || ' ',
-                 '\\s(the|and|of|to|is|in|el|la|de|que|der|die|und)\\s')) > 0 THEN 1.0 ELSE 0.0 END) * 0.25 +
-              (CASE WHEN len(regexp_extract_all(text, {_TOKEN_RE_SQL})) > 0
-                     AND CAST(length(text) AS DOUBLE) / len(regexp_extract_all(text, {_TOKEN_RE_SQL})) BETWEEN 3 AND 12
-                    THEN 1.0 ELSE 0.0 END) * 0.25
-            , 4) AS quality,
-            len(regexp_extract_all(' ' || lower(text) || ' ', '\\sthe\\s|\\sand\\s|\\sof\\s|\\sto\\s|\\sis\\s|\\sin\\s')) AS h_en,
-            len(regexp_extract_all(' ' || lower(text) || ' ', '\\sel\\s|\\sla\\s|\\sde\\s|\\sque\\s|\\slos\\s|\\ses\\s')) AS h_es,
-            len(regexp_extract_all(' ' || lower(text) || ' ', '\\sder\\s|\\sdie\\s|\\sund\\s|\\sdas\\s|\\sist\\s|\\sein\\s')) AS h_de,
-            len(regexp_extract_all(' ' || lower(text) || ' ', '\\sle\\s|\\sla\\s|\\set\\s|\\sles\\s|\\sdes\\s|\\sest\\s')) AS h_fr
-          FROM keep WHERE rn = 1
-        )
-        SELECT doc_id, content_hash, quality,
-               CASE WHEN GREATEST(h_en, h_es, h_de, h_fr) = 0 THEN 'und'
-                    WHEN h_fr = GREATEST(h_en, h_es, h_de, h_fr) THEN 'fr'
-                    WHEN h_es = GREATEST(h_en, h_es, h_de, h_fr) THEN 'es'
-                    WHEN h_en = GREATEST(h_en, h_es, h_de, h_fr) THEN 'en'
-                    ELSE 'de' END AS pred_lang
-        FROM scored
-        WHERE quality >= 0.5
-          AND (CASE WHEN GREATEST(h_en, h_es, h_de, h_fr) = 0 THEN 'und'
-                    WHEN h_fr = GREATEST(h_en, h_es, h_de, h_fr) THEN 'fr'
-                    WHEN h_es = GREATEST(h_en, h_es, h_de, h_fr) THEN 'es'
-                    WHEN h_en = GREATEST(h_en, h_es, h_de, h_fr) THEN 'en'
-                    ELSE 'de' END) IN ('en', 'es', 'de', 'fr')
-    """
-
-    # tripled corpus: each doc is an exact-duplicate triple, LSH banding
-    # co-buckets identical signatures, Jaccard 1 ≥ 0.999, and CC closes the
-    # triangle — so every cluster is exactly {doc, doc+1M, doc+2M}
-    sql["dedup_clusters"] = """
-        SELECT doc_id AS cluster_id,
-               CAST(3 AS BIGINT) AS n_members,
-               CAST(doc_id AS VARCHAR) || '|' ||
-               CAST(doc_id + 1000000 AS VARCHAR) || '|' ||
-               CAST(doc_id + 2000000 AS VARCHAR) AS members
-        FROM documents
-    """
-
-    sql["chunk_dedup"] = f"""
-        WITH tagged AS (
-          SELECT doc_id,
-                 CASE WHEN doc_id % 3 = 0 THEN '{_BOILERPLATE} ' || text
-                      ELSE text END AS text
-          FROM documents
-        ),
-        norm AS (
-          SELECT doc_id,
-                 string_split(trim(regexp_replace(text, '\\s+', ' ', 'g')), ' ') AS t
-          FROM tagged
-        ),
-        chunks AS (
-          SELECT doc_id, g.i AS pos,
-                 array_to_string(t[g.i*16+1 : g.i*16+16], ' ') AS chunk
-          FROM norm, LATERAL (
-            SELECT unnest(generate_series(0, CAST(floor((len(t)-1)/16.0) AS BIGINT))) AS i
-          ) g
-        ),
-        counts AS (SELECT lower(chunk) AS ck, count(DISTINCT doc_id) AS nd
-                   FROM chunks GROUP BY 1),
-        kept AS (
-          SELECT c.doc_id, count(*) AS n_kept,
-                 string_agg(c.chunk, ' ' ORDER BY c.pos) AS clean_text
-          FROM chunks c JOIN counts ON lower(c.chunk) = counts.ck
-          WHERE counts.nd < 2
-          GROUP BY c.doc_id
-        ),
-        stats AS (SELECT doc_id, count(*) AS n_chunks FROM chunks GROUP BY 1)
-        SELECT s.doc_id,
-               CAST(s.n_chunks AS BIGINT) AS n_chunks,
-               CAST(COALESCE(k.n_kept, 0) AS BIGINT) AS n_kept,
-               md5(COALESCE(k.clean_text, '')) AS clean_hash
-        FROM stats s LEFT JOIN kept k USING (doc_id)
-    """
-
-    sql["lm_logprob"] = f"""
-        WITH toks AS (
-          SELECT doc_id,
-                 unnest(regexp_extract_all(lower(text), {_TOKEN_RE_SQL})) AS t
-          FROM documents
-        ),
-        dt AS (SELECT doc_id, t, count(*) AS c FROM toks GROUP BY 1, 2),
-        vocab AS (SELECT t, sum(c) AS n FROM dt GROUP BY 1),
-        tot AS (SELECT sum(n) AS ntot FROM vocab)
-        SELECT dt.doc_id,
-               CAST(sum(dt.c) AS BIGINT) AS n_tokens,
-               ROUND(sum(dt.c * ln(vocab.n / tot.ntot)) / sum(dt.c), 6) AS logprob
-        FROM dt JOIN vocab USING (t), tot
-        GROUP BY dt.doc_id
-    """
-
-    sql["knn_graph"] = """
-        WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
-        scored AS (
-          SELECT a.vec_id AS src, b.vec_id AS dst,
-                 ROUND(list_cosine_similarity(a.e, b.e), 6) AS cos
-          FROM v a JOIN v b ON a.vec_id <> b.vec_id
-        ),
-        edges AS (
-          SELECT * FROM (
-            SELECT *, ROW_NUMBER() OVER (PARTITION BY src ORDER BY cos DESC, dst) AS rank
-            FROM scored
-          ) WHERE rank <= 5
-        )
-        SELECT e.src, e.dst, e.cos, CAST(e.rank AS INT) AS rank,
-               CASE WHEN r.src IS NOT NULL THEN 1 ELSE 0 END AS mutual
-        FROM edges e LEFT JOIN edges r ON e.src = r.dst AND e.dst = r.src
-    """
-
-    sql["knn_graph_ivf_exact"] = sql["knn_graph"]
-
-    sql["semantic_dedup"] = """
-        SELECT vec_id AS cluster_id,
-               CAST(2 AS BIGINT) AS n_members,
-               CAST(vec_id AS VARCHAR) || '|' ||
-               CAST(vec_id + 1000000 AS VARCHAR) AS members
-        FROM embeddings
-    """
-
-    sql["repetition_stats"] = """
-        WITH w AS (
-          SELECT doc_id, lang,
-                 unnest(regexp_split_to_array(lower(trim(text)), '\\s+')) AS w
-          FROM documents
-        ),
-        wc AS (
-          SELECT doc_id, lang, w, COUNT(*) AS c FROM w WHERE w <> ''
-          GROUP BY 1, 2, 3
-        ),
-        agg AS (
-          SELECT doc_id, lang, SUM(c) AS nw, COUNT(*) AS nd, MAX(c) AS tf
-          FROM wc GROUP BY 1, 2
-        ),
-        -- spine: every document gets a row (empty text -> 0 words, NULL
-        -- ratios), mirroring repetition_profile's contract
-        per AS (
-          SELECT d.doc_id, d.lang, COALESCE(a.nw, 0) AS nw0, a.nw, a.nd, a.tf
-          FROM documents d LEFT JOIN agg a USING (doc_id, lang)
-        )
-        SELECT lang, CAST(COUNT(*) AS BIGINT) AS n_docs,
-               CAST(SUM(nw0) AS BIGINT) AS total_words,
-               ROUND(AVG(nd * 1.0 / nw), 4) AS distinct_ratio,
-               ROUND(AVG(tf * 1.0 / nw), 4) AS top_frac
-        FROM per GROUP BY lang
-    """
-
-    sql["pii_scrub"] = f"""
-        WITH d AS (
-          SELECT doc_id, lang,
-                 text || ' contact user' || CAST(doc_id AS VARCHAR)
-                      || '@example.com from 10.0.'
-                      || CAST(doc_id % 256 AS VARCHAR) || '.1' AS t
-          FROM documents
-        ),
-        s AS (
-          SELECT lang,
-                 len(regexp_extract_all(t, '{_PII_EMAIL_RE}')) AS ne,
-                 len(regexp_extract_all(t, '{_PII_IPV4_RE}')) AS ni,
-                 length(t) - length(
-                   regexp_replace(
-                     regexp_replace(t, '{_PII_EMAIL_RE}', '<EMAIL>', 'g'),
-                     '{_PII_IPV4_RE}', '<IP>', 'g')) AS cr
-          FROM d
-        )
-        SELECT lang, CAST(COUNT(*) AS BIGINT) AS n_docs,
-               CAST(SUM(ne) AS BIGINT) AS emails,
-               CAST(SUM(ni) AS BIGINT) AS ips,
-               CAST(SUM(cr) AS BIGINT) AS chars_removed
-        FROM s GROUP BY lang
-    """
-
-    sql["decontaminate"] = f"""
-        WITH toks AS (
-          SELECT doc_id, lang,
-                 regexp_extract_all(lower(text), {_TOKEN_RE_SQL}) AS tk
-          FROM documents
-        ),
-        dg AS (
-          SELECT doc_id, lang,
-                 unnest([array_to_string(tk[i:i+7], ' ')
-                         FOR i IN range(1, len(tk) - 8 + 2)]) AS ng
-          FROM toks
-        ),
-        pg AS (SELECT DISTINCT ng FROM dg WHERE doc_id % 97 = 0),
-        hits AS (
-          SELECT dg.doc_id, COUNT(DISTINCT dg.ng) AS nc
-          FROM dg JOIN pg USING (ng) GROUP BY dg.doc_id
-        )
-        SELECT d.lang, CAST(COUNT(*) AS BIGINT) AS n_docs,
-               CAST(SUM(CASE WHEN h.nc > 0 THEN 1 ELSE 0 END) AS BIGINT)
-                 AS contaminated_docs,
-               CAST(SUM(COALESCE(h.nc, 0)) AS BIGINT) AS total_hits
-        FROM documents d LEFT JOIN hits h USING (doc_id)
-        GROUP BY d.lang
-    """
-
-    sql["stratified_sample"] = """
-        SELECT doc_id, lang, source FROM (
-          SELECT doc_id, lang, source,
-                 row_number() OVER (
-                   PARTITION BY lang
-                   ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id) AS rk
-          FROM documents)
-        WHERE rk <= 40
-    """
-
-    sql["hash_sample"] = """
-        SELECT lang, CAST(COUNT(*) AS BIGINT) AS n_docs,
-               CAST(SUM(doc_id) AS BIGINT) AS sum_ids
-        FROM documents
-        WHERE CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8) AS UBIGINT)
-              < CAST(0.25 * 4294967296 AS UBIGINT)
-        GROUP BY lang
-    """
-
-    # DSIR: same tokenizer, same md5-prefix bucket hash, same add-1
-    # smoothed ln-ratio — DuckDB rebuilds the two distribution fits and the
-    # per-doc score end-to-end (bigrams via a 1-based list_transform over
-    # adjacent token pairs).
-    sql["dsir_weights"] = f"""
-        WITH g AS (
-          SELECT doc_id, lang, unnest(gs) AS g
-          FROM (
-            SELECT doc_id, lang,
-                   list_concat(
-                     w,
-                     list_transform(range(1, len(w)),
-                                    i -> w[i] || ' ' || w[i + 1])
-                   ) AS gs
-            FROM (SELECT doc_id, lang,
-                         regexp_extract_all(lower(text), {_TOKEN_RE_SQL}) AS w
-                  FROM documents)
-          )
-        ),
-        f AS (
-          SELECT doc_id, lang,
-                 CAST(CAST('0x' || substr(md5(g), 1, 8) AS UBIGINT) % 256
-                      AS BIGINT) AS b
-          FROM g
-        ),
-        spine AS (SELECT CAST(range AS BIGINT) AS b FROM range(256)),
-        tc AS (SELECT b, COUNT(*) AS tc FROM f WHERE lang = 'en' GROUP BY b),
-        rc AS (SELECT b, COUNT(*) AS rc FROM f GROUP BY b),
-        tab AS (
-          SELECT spine.b, COALESCE(tc.tc, 0) AS tc, COALESCE(rc.rc, 0) AS rc
-          FROM spine LEFT JOIN tc USING (b) LEFT JOIN rc USING (b)
-        ),
-        tot AS (SELECT SUM(tc) AS t_tot, SUM(rc) AS r_tot FROM tab),
-        lr AS (
-          SELECT b, ln((tc + 1.0) / (t_tot + 256.0))
-                    - ln((rc + 1.0) / (r_tot + 256.0)) AS lr
-          FROM tab, tot
-        ),
-        pd AS (SELECT doc_id, b, COUNT(*) AS c FROM f GROUP BY doc_id, b)
-        SELECT pd.doc_id, CAST(SUM(c) AS BIGINT) AS n_feats,
-               ROUND(SUM(c * lr), 6) AS log_weight
-        FROM pd JOIN lr USING (b)
-        GROUP BY pd.doc_id
-    """
-
-    sql["range_join"] = """
-        WITH wins AS (
-          SELECT event_id AS window_id, ts AS w_start,
-                 ts + INTERVAL 45 MINUTE AS w_end
-          FROM events WHERE event_id % 97 = 0
-        )
-        SELECT e.event_id, w.window_id
-        FROM events e JOIN wins w
-          ON e.ts BETWEEN w.w_start AND w.w_end
-    """
-
-    sql["interval_join"] = """
-        WITH sess AS (
-          SELECT event_id AS session_id, ts AS s_start,
-                 ts + INTERVAL 40 MINUTE AS s_end
-          FROM events WHERE event_id % 89 = 0
-        ),
-        wins AS (
-          SELECT event_id AS window_id, ts AS w_start,
-                 ts + INTERVAL 45 MINUTE AS w_end
-          FROM events WHERE event_id % 97 = 0
-        )
-        SELECT s.session_id, w.window_id
-        FROM sess s JOIN wins w
-          ON s.s_start <= w.w_end AND w.w_start <= s.s_end
-    """
-
-    sql["bm25_rank"] = f"""
-        WITH toks AS (
-          SELECT doc_id,
-                 unnest(regexp_extract_all(lower(text), {_TOKEN_RE_SQL})) AS term
-          FROM documents
-        ),
-        dl AS (
-          SELECT doc_id,
-                 len(regexp_extract_all(lower(text), {_TOKEN_RE_SQL})) AS dl
-          FROM documents
-        ),
-        stats AS (SELECT COUNT(*) AS n_docs, AVG(dl) AS avgdl FROM dl),
-        qtf AS (
-          SELECT doc_id, term, COUNT(*) AS tf FROM toks
-          WHERE term IN ('hash', 'join', 'window')
-          GROUP BY doc_id, term
-        ),
-        dft AS (SELECT term, COUNT(*) AS df FROM qtf GROUP BY term),
-        scored AS (
-          SELECT qtf.doc_id,
-                 ROUND(SUM(
-                   ln(1.0 + (stats.n_docs - dft.df + 0.5) / (dft.df + 0.5))
-                   * (qtf.tf * 2.2)
-                   / (qtf.tf + 1.2 * (0.25 + 0.75 * dl.dl / stats.avgdl))
-                 ), 6) AS score
-          FROM qtf
-          JOIN dft USING (term)
-          JOIN dl ON qtf.doc_id = dl.doc_id, stats
-          GROUP BY qtf.doc_id
-        )
-        SELECT doc_id, score, CAST(rank AS INT) AS rank FROM (
-          SELECT doc_id, score,
-                 ROW_NUMBER() OVER (ORDER BY score DESC, doc_id) AS rank
-          FROM scored
-        ) WHERE rank <= 15
-    """
 
     sql["markdown_preprocess"] = """
         WITH m AS (
@@ -3414,388 +1724,6 @@ def oracle_sql() -> dict[str, str]:
                                 AS BIGINT)) AS est_minutes
         FROM documents
     """
-
-    # bpe_encode: the greedy non-overlapping merge fold is reproduced with
-    # sentinel-wrapped symbols (chr(31) sym chr(30)) + left-to-right
-    # replace() — one unrolled replace per pinned merge, so partial-symbol
-    # matches are impossible and replace's scan order IS the fold order
-    _seg = (
-        "chr(31) || array_to_string(regexp_extract_all(w, '.'),"
-        " chr(30) || chr(31)) || chr(30)"
-    )
-    for _l, _r in _PIN_MERGES:
-        _seg = (
-            f"replace({_seg}, chr(31)||'{_l}'||chr(30)||chr(31)||'{_r}'||chr(30),"
-            f" chr(31)||'{_l}{_r}'||chr(30))"
-        )
-    _seg = f"replace(trim({_seg}, chr(31)||chr(30)), chr(30)||chr(31), ' ')"
-    sql["bpe_encode"] = f"""
-        WITH enc AS (
-          SELECT doc_id,
-                 array_to_string(
-                   list_transform(
-                     regexp_extract_all(lower(text), {_TOKEN_RE_SQL}),
-                     w -> {_seg}),
-                   ' ') AS pieces_str
-          FROM documents
-        )
-        SELECT doc_id,
-               CAST(CASE WHEN pieces_str = '' THEN 0
-                         ELSE len(string_split(pieces_str, ' ')) END
-                    AS INT) AS n_pieces,
-               md5(pieces_str) AS pieces_hash
-        FROM enc
-    """
-
-    sql["shard_manifest"] = f"""
-        WITH s AS (
-          SELECT CAST(CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8)
-                           AS UBIGINT) % 8 AS INT) AS shard,
-                 text
-          FROM documents
-        )
-        SELECT shard,
-               CAST(COUNT(*) AS BIGINT) AS n_docs,
-               CAST(SUM(len(regexp_extract_all(text, {_TOKEN_RE_SQL})))
-                    AS BIGINT) AS n_tokens,
-               CAST(SUM(strlen(text)) AS BIGINT) AS text_bytes,
-               CAST(BIT_XOR(CAST(CAST('0x' || substr(md5(text), 1, 15)
-                                      AS UBIGINT) AS BIGINT)) AS BIGINT)
-                   AS content_xor
-        FROM s GROUP BY shard
-    """
-
-    sql["key_skew_profile"] = """
-        WITH c AS (SELECT user_id, COUNT(*) AS n FROM events GROUP BY user_id),
-        t AS (SELECT COUNT(*) AS n_keys, SUM(n) AS n_rows FROM c)
-        SELECT user_id, CAST(n AS BIGINT) AS n,
-               ROUND(n * 1.0 / n_rows, 6) AS frac,
-               CAST(ROW_NUMBER() OVER (ORDER BY n DESC, user_id) AS INT) AS rank,
-               CAST(n_keys AS BIGINT) AS n_keys,
-               CAST(n_rows AS BIGINT) AS n_rows
-        FROM c, t
-        ORDER BY n DESC, user_id LIMIT 10
-    """
-
-    sql["corpus_datasheet"] = f"""
-        WITH d AS (
-          SELECT doc_id, text, lang, source FROM documents
-          UNION ALL
-          SELECT doc_id + 1000000, text, lang, source FROM documents
-          WHERE doc_id % 5 = 0
-        )
-        SELECT source,
-               CAST(COUNT(*) AS BIGINT) AS n_docs,
-               CAST(SUM(len(regexp_extract_all(text, {_TOKEN_RE_SQL})))
-                    AS BIGINT) AS n_tokens,
-               CAST(SUM(strlen(text)) AS BIGINT) AS text_bytes,
-               CAST(COUNT(DISTINCT lang) AS BIGINT) AS n_langs,
-               CAST(COUNT(DISTINCT md5({_NORM_TEXT})) AS BIGINT)
-                   AS n_unique_texts,
-               ROUND(SUM(
-                 (CASE WHEN length(text) BETWEEN 64 AND 100000 THEN 1.0 ELSE 0.0 END) * 0.25 +
-                 (CASE WHEN length(text) > 0 THEN
-                    1.0 - LEAST(CAST(len(regexp_extract_all(text, '[^\\w\\s]')) AS DOUBLE) / length(text) * 5, 1.0)
-                  ELSE 0.0 END) * 0.25 +
-                 (CASE WHEN len(regexp_extract_all(' ' || lower(text) || ' ',
-                    '\\s(the|and|of|to|is|in|el|la|de|que|der|die|und)\\s')) > 0 THEN 1.0 ELSE 0.0 END) * 0.25 +
-                 (CASE WHEN len(regexp_extract_all(text, {_TOKEN_RE_SQL})) > 0
-                        AND CAST(length(text) AS DOUBLE) / len(regexp_extract_all(text, {_TOKEN_RE_SQL})) BETWEEN 3 AND 12
-                       THEN 1.0 ELSE 0.0 END) * 0.25
-               ), 4) AS quality_sum,
-               CAST(COUNT(*) - COUNT(DISTINCT md5({_NORM_TEXT})) AS BIGINT)
-                   AS dup_docs
-        FROM d GROUP BY source
-    """
-
-    sql["apply_mix"] = """
-        WITH per AS (
-          SELECT lang, CAST(COUNT(*) AS DOUBLE) / SUM(COUNT(*)) OVER () AS nat
-          FROM documents GROUP BY lang
-        ),
-        z AS (SELECT SUM(POW(nat, 0.5)) AS ps FROM per),
-        w AS (SELECT lang, POW(nat, 0.5) / ps / nat AS weight FROM per, z),
-        r AS (
-          SELECT d.doc_id, d.lang,
-                 CAST(FLOOR(w.weight) AS BIGINT)
-                 + CASE WHEN CAST(CAST('0x' || substr(md5(CAST(d.doc_id AS VARCHAR)), 1, 8)
-                                       AS UBIGINT) AS DOUBLE) / 4294967296.0
-                             < w.weight - FLOOR(w.weight)
-                        THEN 1 ELSE 0 END AS n
-          FROM documents d JOIN w USING (lang)
-        )
-        SELECT doc_id, lang, CAST(unnest(range(n)) AS BIGINT) AS copy_idx
-        FROM r WHERE n > 0
-    """
-
-    sql["temperature_weights"] = """
-        WITH per AS (
-          SELECT lang, CAST(COUNT(*) AS BIGINT) AS n_rows,
-                 CAST(COUNT(*) AS DOUBLE) / SUM(COUNT(*)) OVER () AS nat
-          FROM documents GROUP BY lang
-        ),
-        z AS (SELECT SUM(POW(nat, 0.5)) AS ps FROM per)
-        SELECT lang, n_rows,
-               ROUND(nat, 6) AS natural_frac,
-               ROUND(POW(nat, 0.5) / ps, 6) AS sampled_frac,
-               ROUND(POW(nat, 0.5) / ps / nat, 6) AS weight
-        FROM per, z
-    """
-
-    sql["mix_weights"] = """
-        WITH per AS (
-          SELECT lang, CAST(COUNT(*) AS BIGINT) AS n_rows,
-                 CAST(COUNT(*) AS DOUBLE) / SUM(COUNT(*)) OVER () AS nat,
-                 CAST(CASE lang WHEN 'en' THEN 0.4 WHEN 'es' THEN 0.3
-                           WHEN 'de' THEN 0.3 ELSE 0.0 END AS DOUBLE) AS tgt
-          FROM documents GROUP BY lang
-        )
-        SELECT lang, n_rows,
-               ROUND(nat, 6) AS natural_frac,
-               ROUND(tgt, 6) AS target_frac,
-               ROUND(LEAST(tgt / nat, 3.0), 6) AS weight,
-               (tgt / nat) > 3.0 AS capped
-        FROM per
-    """
-
-    sql["vocab_topk"] = f"""
-        SELECT token, CAST(COUNT(*) AS BIGINT) AS n FROM (
-          SELECT unnest(regexp_extract_all(lower(text), {_TOKEN_RE_SQL})) AS token
-          FROM documents)
-        GROUP BY token ORDER BY n DESC, token ASC LIMIT 25
-    """
-
-    sql["asof_view_click"] = """
-        WITH clicks AS (
-          SELECT user_id, ts, event_id FROM events WHERE event_type = 'click'
-        ),
-        views AS (SELECT user_id, ts FROM events WHERE event_type = 'view'),
-        j AS (
-          SELECT c.user_id, c.ts, v.ts AS vts
-          FROM clicks c ASOF LEFT JOIN views v
-            ON c.user_id = v.user_id AND v.ts <= c.ts
-        )
-        SELECT user_id % 10 AS user_bucket,
-               CAST(COUNT(*) AS BIGINT) AS n_clicks,
-               CAST(SUM(CASE WHEN vts IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
-                 AS matched,
-               CAST(SUM(COALESCE(epoch_us(ts) - epoch_us(vts), 0)) AS BIGINT)
-                 AS gap_us
-        FROM j GROUP BY 1
-    """
-
-    sql["embedding_quantize"] = """
-        WITH q AS (
-          SELECT label,
-                 list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v,
-                 list_max(list_transform(embedding,
-                                         x -> abs(CAST(x AS DOUBLE)))) / 127.0 AS s
-          FROM embeddings
-        ),
-        qq AS (
-          SELECT label,
-                 list_transform(v, x -> CASE WHEN s = 0 THEN 0
-                   ELSE greatest(-127, least(127,
-                        CAST(floor(x / s + 0.5) AS BIGINT))) END) AS qv
-          FROM q
-        )
-        SELECT label, CAST(COUNT(*) AS BIGINT) AS n_vecs,
-               CAST(SUM(list_sum(qv)) AS BIGINT) AS sum_q,
-               CAST(SUM(list_sum(list_transform(qv, x -> abs(x)))) AS BIGINT)
-                 AS sum_abs_q
-        FROM qq GROUP BY label
-    """
-
-    sql["unicode_nfc"] = f"""
-        WITH d AS (
-          SELECT doc_id, lang, text || '{_NFC_SUFFIX}' AS t FROM documents
-        )
-        SELECT lang, CAST(COUNT(*) AS BIGINT) AS n_docs,
-               CAST(SUM(length(t)) AS BIGINT) AS cp_before,
-               CAST(SUM(length(nfc_normalize(t))) AS BIGINT) AS cp_after,
-               CAST(SUM(CASE WHEN t <> nfc_normalize(t) THEN 1 ELSE 0 END)
-                    AS BIGINT) AS n_changed
-        FROM d GROUP BY lang
-    """
-
-    sql["pack_windows"] = f"""
-        WITH t AS (
-          SELECT doc_id,
-                 CAST(CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8)
-                      AS UBIGINT) % 8 AS BIGINT) AS bucket,
-                 md5(CAST(doc_id AS VARCHAR)) AS k,
-                 len(regexp_extract_all(text, {_TOKEN_RE_SQL})) AS n_tokens
-          FROM documents
-        ),
-        p AS (
-          SELECT bucket, n_tokens,
-                 COALESCE(SUM(n_tokens) OVER (
-                   PARTITION BY bucket ORDER BY k, doc_id
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS s
-          FROM t
-        )
-        SELECT bucket, CAST(COUNT(*) AS BIGINT) AS n_docs,
-               CAST(SUM(n_tokens) AS BIGINT) AS total_tokens,
-               CAST(floor((SUM(n_tokens) - 1) / 2048) + 1 AS BIGINT) AS n_windows,
-               CAST(SUM(CASE WHEN floor(s / 2048) <>
-                    floor((s + greatest(n_tokens, 1) - 1) / 2048)
-                    THEN 1 ELSE 0 END) AS BIGINT) AS n_straddlers,
-               CAST(MAX(floor((s + greatest(n_tokens, 1) - 1) / 2048)) AS BIGINT)
-                 AS max_window
-        FROM p GROUP BY bucket
-    """
-
-    sql["length_quantile_gate"] = """
-        WITH h AS (
-          SELECT lang, greatest(n_chars, 0) // 64 AS bin, COUNT(*) AS c
-          FROM documents GROUP BY 1, 2
-        ),
-        cum AS (
-          SELECT lang, bin,
-                 SUM(c) OVER (PARTITION BY lang ORDER BY bin
-                              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cumc,
-                 SUM(c) OVER (PARTITION BY lang) AS n
-          FROM h
-        ),
-        thr AS (
-          SELECT lang, MIN(bin) AS thr_bin, MAX(n) AS n_rows
-          FROM cum WHERE cumc * 100 >= n * 20 GROUP BY lang
-        )
-        SELECT d.lang, CAST(t.n_rows AS BIGINT) AS n_rows,
-               CAST(t.thr_bin * 64 AS BIGINT) AS threshold,
-               CAST(SUM(CASE WHEN d.n_chars >= t.thr_bin * 64 THEN 1 ELSE 0 END)
-                    AS BIGINT) AS kept
-        FROM documents d JOIN thr t USING (lang)
-        GROUP BY 1, 2, 3
-    """
-
-    sql["chunk_windows"] = r"""
-        WITH w AS (
-          SELECT doc_id,
-                 list_filter(regexp_split_to_array(trim(text), '\s+'),
-                             x -> x <> '') AS ws
-          FROM documents
-        ),
-        s AS (
-          SELECT doc_id, ws, unnest(range(0, len(ws), 24)) AS st
-          FROM w WHERE len(ws) > 0
-        )
-        SELECT doc_id,
-               CAST(st // 24 AS INTEGER) AS chunk_idx,
-               CAST(st AS INTEGER) AS start_word,
-               CAST(least(len(ws) - st, 32) AS INTEGER) AS n_words,
-               md5(array_to_string(list_slice(ws, st + 1, st + 32), ' '))
-                 AS chunk_md5
-        FROM s
-    """
-
-    sql["embedding_hygiene"] = """
-        WITH base AS (
-          SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-          UNION ALL SELECT 1000000001, NULL
-          UNION ALL SELECT 1000000002, [1.0, 2.0]
-          UNION ALL SELECT 1000000003,
-            list_prepend(CAST('nan' AS DOUBLE),
-                         list_transform(range(63), x -> CAST(CAST(0.5 AS FLOAT) AS DOUBLE)))
-          UNION ALL SELECT 1000000004,
-            list_transform(range(64), x -> CAST(0.0 AS DOUBLE))
-          UNION ALL SELECT 1000000005,
-            list_transform(range(64), x -> CAST(CAST(1e20 AS FLOAT) AS DOUBLE))
-        ),
-        g AS (
-          SELECT vec_id, v,
-                 CASE WHEN v IS NOT NULL THEN
-                   sqrt(list_sum(list_transform(v, x -> x * x))) END AS nrm,
-                 CASE WHEN v IS NOT NULL THEN
-                   len(list_filter(v, x -> isnan(x) OR abs(x) > 1e308)) > 0
-                 END AS nonfinite
-          FROM base
-        ),
-        f AS (
-          SELECT CASE
-                   WHEN v IS NULL THEN 'null_vec'
-                   WHEN len(v) <> 64 THEN 'bad_dim'
-                   WHEN nonfinite THEN 'non_finite'
-                   WHEN nrm < 1e-6 THEN 'zero_norm'
-                   WHEN nrm > 1e6 THEN 'big_norm'
-                   ELSE 'ok'
-                 END AS flag,
-                 CASE WHEN v IS NOT NULL AND NOT nonfinite
-                      THEN ROUND(nrm, 6) END AS norm
-          FROM g
-        )
-        SELECT flag, CAST(COUNT(*) AS BIGINT) AS n,
-               MIN(norm) AS lo_norm, MAX(norm) AS hi_norm
-        FROM f GROUP BY flag
-    """
-
-    sql["json_props_stats"] = """
-        SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n_events,
-               CAST(SUM(CAST(props->>'$.k' AS BIGINT)) AS BIGINT) AS sum_k,
-               ROUND(AVG(CAST(props->>'$.k' AS BIGINT)), 4) AS avg_k
-        FROM events GROUP BY event_type
-    """
-
-    sql["token_stats"] = f"""
-        SELECT lang, COUNT(*) AS n_docs,
-               CAST(SUM(len(regexp_extract_all(text, {_TOKEN_RE_SQL}))) AS BIGINT) AS tokens,
-               CAST(SUM(length(text)) AS BIGINT) AS chars
-        FROM documents GROUP BY lang
-    """
-
-    sql["quality_by_lang"] = f"""
-        SELECT lang, ROUND(SUM(
-          (CASE WHEN length(text) BETWEEN 64 AND 100000 THEN 1.0 ELSE 0.0 END) * 0.25 +
-          (CASE WHEN length(text) > 0 THEN
-             1.0 - LEAST(CAST(len(regexp_extract_all(text, '[^\\w\\s]')) AS DOUBLE) / length(text) * 5, 1.0)
-           ELSE 0.0 END) * 0.25 +
-          (CASE WHEN len(regexp_extract_all(' ' || lower(text) || ' ',
-             '\\s(the|and|of|to|is|in|el|la|de|que|der|die|und)\\s')) > 0 THEN 1.0 ELSE 0.0 END) * 0.25 +
-          (CASE WHEN len(regexp_extract_all(text, {_TOKEN_RE_SQL})) > 0
-                 AND CAST(length(text) AS DOUBLE) / len(regexp_extract_all(text, {_TOKEN_RE_SQL})) BETWEEN 3 AND 12
-                THEN 1.0 ELSE 0.0 END) * 0.25
-        ), 4) AS quality_sum
-        FROM documents GROUP BY lang
-    """
-
-    sql["language_id"] = """
-        WITH hits AS (
-          SELECT
-            len(regexp_extract_all(' ' || lower(text) || ' ', '\\sthe\\s|\\sand\\s|\\sof\\s|\\sto\\s|\\sis\\s|\\sin\\s')) AS h_en,
-            len(regexp_extract_all(' ' || lower(text) || ' ', '\\sel\\s|\\sla\\s|\\sde\\s|\\sque\\s|\\slos\\s|\\ses\\s')) AS h_es,
-            len(regexp_extract_all(' ' || lower(text) || ' ', '\\sder\\s|\\sdie\\s|\\sund\\s|\\sdas\\s|\\sist\\s|\\sein\\s')) AS h_de,
-            len(regexp_extract_all(' ' || lower(text) || ' ', '\\sle\\s|\\sla\\s|\\set\\s|\\sles\\s|\\sdes\\s|\\sest\\s')) AS h_fr
-          FROM documents
-        )
-        SELECT CASE WHEN GREATEST(h_en, h_es, h_de, h_fr) = 0 THEN 'und'
-                    WHEN h_fr = GREATEST(h_en, h_es, h_de, h_fr) THEN 'fr'
-                    WHEN h_es = GREATEST(h_en, h_es, h_de, h_fr) THEN 'es'
-                    WHEN h_en = GREATEST(h_en, h_es, h_de, h_fr) THEN 'en'
-                    ELSE 'de' END AS pred_lang,
-               COUNT(*) AS n
-        FROM hits GROUP BY 1
-    """
-
-    sql["fingerprint_distinct"] = f"""
-        SELECT COUNT(DISTINCT {_NORM_TEXT}) AS n_fingerprints FROM documents
-    """
-
-    sql["embedding_topk"] = """
-        WITH q AS (SELECT vec_id AS query_id, embedding AS qvec FROM embeddings WHERE vec_id < 3),
-        scored AS (
-          SELECT q.query_id, e.vec_id,
-                 ROUND(list_cosine_similarity(CAST(e.embedding AS DOUBLE[]),
-                                              CAST(q.qvec AS DOUBLE[])), 6) AS cos
-          FROM embeddings e CROSS JOIN q WHERE e.vec_id >= 3
-        )
-        SELECT query_id, vec_id, cos, rank FROM (
-          SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY cos DESC, vec_id) AS rank
-          FROM scored
-        ) WHERE rank <= 5
-    """
-
-    # nprobe == nlist probes every cell → identical to exact brute force
-    sql["embedding_ivf_exact"] = sql["embedding_topk"]
 
     sql["discovery_datasets"] = """
         SELECT 'n:' || CAST(n_nationkey AS VARCHAR) AS id,
@@ -4109,352 +2037,7 @@ def oracle_sql() -> dict[str, str]:
 
     sql["byte_identity_failures"] = "SELECT CAST(NULL AS VARCHAR) AS url WHERE 1 = 0"
 
-    # graph analytics: the PageRank recurrence is FIXED-POINT INTEGER
-    # (operators/graph.py) precisely so this oracle is exact — every
-    # quantity is a bigint from integer division/sums, immune to the
-    # float-reduction-order drift a double PageRank would show between
-    # engines.  3 unrolled iterations, damping 85/100, no dangling
-    # redistribution (documented in pagerank()).
-    _pr_edges = (
-        "SELECT DISTINCT l_suppkey * 2 AS src, l_partkey * 2 + 1 AS dst FROM lineitem"
-    )
-    sql["graph_pagerank"] = f"""
-        WITH e AS ({_pr_edges}),
-        nodes AS (
-          SELECT DISTINCT node FROM (
-            SELECT src AS node FROM e UNION ALL SELECT dst FROM e
-          )
-        ),
-        p AS (SELECT COUNT(*) AS n FROM nodes),
-        outdeg AS (SELECT src AS node, COUNT(*) AS outdeg FROM e GROUP BY src),
-        r0 AS (
-          SELECT node, CAST(1000000000000 // (SELECT n FROM p) AS BIGINT) AS pr
-          FROM nodes
-        ),
-        c1 AS (
-          SELECT e.dst AS node, SUM(r0.pr // o.outdeg) AS s
-          FROM r0 JOIN outdeg o USING (node) JOIN e ON e.src = r0.node
-          GROUP BY e.dst
-        ),
-        r1 AS (
-          SELECT nodes.node,
-                 CAST(15000000000000 // (100 * (SELECT n FROM p))
-                      + (85 * COALESCE(c1.s, 0)) // 100 AS BIGINT) AS pr
-          FROM nodes LEFT JOIN c1 USING (node)
-        ),
-        c2 AS (
-          SELECT e.dst AS node, SUM(r1.pr // o.outdeg) AS s
-          FROM r1 JOIN outdeg o USING (node) JOIN e ON e.src = r1.node
-          GROUP BY e.dst
-        ),
-        r2 AS (
-          SELECT nodes.node,
-                 CAST(15000000000000 // (100 * (SELECT n FROM p))
-                      + (85 * COALESCE(c2.s, 0)) // 100 AS BIGINT) AS pr
-          FROM nodes LEFT JOIN c2 USING (node)
-        ),
-        c3 AS (
-          SELECT e.dst AS node, SUM(r2.pr // o.outdeg) AS s
-          FROM r2 JOIN outdeg o USING (node) JOIN e ON e.src = r2.node
-          GROUP BY e.dst
-        ),
-        r3 AS (
-          SELECT nodes.node,
-                 CAST(15000000000000 // (100 * (SELECT n FROM p))
-                      + (85 * COALESCE(c3.s, 0)) // 100 AS BIGINT) AS pr
-          FROM nodes LEFT JOIN c3 USING (node)
-        )
-        SELECT node, pr FROM r3
-    """
-
-    # undirected co-order part graph shared by triangles and k-core; the
-    # ≤1000 group guard mirrors cooccurrence_edges' hot-group drop
-    _co_edges = """
-        grp AS (SELECT DISTINCT l_orderkey AS g, l_partkey AS i FROM lineitem),
-        ok AS (SELECT g FROM grp GROUP BY g HAVING COUNT(*) <= 1000),
-        e AS (
-          SELECT DISTINCT a.i AS src, b.i AS dst
-          FROM grp a JOIN ok USING (g) JOIN grp b
-            ON a.g = b.g AND a.i < b.i
-        )
-    """
-
-    sql["graph_triangles"] = f"""
-        WITH {_co_edges},
-        tri AS (
-          SELECT e1.src AS a, e1.dst AS b, e2.dst AS c
-          FROM e e1
-          JOIN e e2 ON e1.dst = e2.src
-          JOIN e e3 ON e3.src = e1.src AND e3.dst = e2.dst
-        )
-        SELECT node, COUNT(*) AS triangles FROM (
-          SELECT a AS node FROM tri
-          UNION ALL SELECT b FROM tri
-          UNION ALL SELECT c FROM tri
-        ) GROUP BY node
-    """
-
-    sql["graph_kcore"] = f"""
-        WITH {_co_edges},
-        d0 AS (
-          SELECT node, COUNT(*) AS degree FROM (
-            SELECT src AS node FROM e UNION ALL SELECT dst AS node FROM e
-          ) GROUP BY node
-        ),
-        k0 AS (SELECT node FROM d0 WHERE degree >= 2),
-        e1 AS (
-          SELECT src, dst FROM e
-          WHERE src IN (SELECT node FROM k0) AND dst IN (SELECT node FROM k0)
-        ),
-        d1 AS (
-          SELECT node, COUNT(*) AS degree FROM (
-            SELECT src AS node FROM e1 UNION ALL SELECT dst AS node FROM e1
-          ) GROUP BY node
-        ),
-        k1 AS (SELECT node FROM d1 WHERE degree >= 2),
-        e2 AS (
-          SELECT src, dst FROM e1
-          WHERE src IN (SELECT node FROM k1) AND dst IN (SELECT node FROM k1)
-        ),
-        d2 AS (
-          SELECT node, COUNT(*) AS degree FROM (
-            SELECT src AS node FROM e2 UNION ALL SELECT dst AS node FROM e2
-          ) GROUP BY node
-        ),
-        k2 AS (SELECT node FROM d2 WHERE degree >= 2),
-        e3 AS (
-          SELECT src, dst FROM e2
-          WHERE src IN (SELECT node FROM k2) AND dst IN (SELECT node FROM k2)
-        )
-        SELECT node, COUNT(*) AS degree FROM (
-          SELECT src AS node FROM e3 UNION ALL SELECT dst AS node FROM e3
-        ) GROUP BY node
-    """
-
-    # retrieval-index construction: same TOKEN_PATTERN contract as
-    # vocab_topk; tfidf uses the fixed-point rational idf documented in
-    # operators/index.py (exact bigints, no float log)
-    _doc_terms = f"""
-        dt AS (
-          SELECT doc, term, COUNT(*) AS tf FROM (
-            SELECT doc_id AS doc,
-                   unnest(regexp_extract_all(lower(text), {_TOKEN_RE_SQL})) AS term
-            FROM documents
-          ) GROUP BY doc, term
-        )
-    """
-
-    sql["inverted_index"] = f"""
-        WITH {_doc_terms}
-        SELECT term, CAST(COUNT(*) AS BIGINT) AS df,
-               array_to_string((list_sort(list(doc)))[1:10], '|') AS postings
-        FROM dt GROUP BY term
-    """
-
-    sql["tfidf_topk"] = f"""
-        WITH {_doc_terms},
-        dfs AS (SELECT term, COUNT(*) AS df FROM dt GROUP BY term),
-        nn AS (SELECT COUNT(*) AS n FROM documents),
-        scored AS (
-          SELECT doc, term,
-                 CAST(tf * (((SELECT n FROM nn) * 1000000) // df) AS BIGINT) AS score
-          FROM dt JOIN dfs USING (term)
-        ),
-        r AS (
-          SELECT doc, term, score,
-                 ROW_NUMBER() OVER (
-                   PARTITION BY doc ORDER BY score DESC, term ASC
-                 ) AS rank
-          FROM scored
-        )
-        SELECT doc, term, score, CAST(rank AS INT) AS rank FROM r WHERE rank <= 3
-    """
-
-    # URL canonicalization + host shaping: the oracle re-implements BOTH
-    # the noisy synthesis and the full normalization independently in
-    # DuckDB SQL (list_filter/list_sort for the query-param pass).
-    _raw_url_duck = _RAW_URL_SQL.replace("AS STRING", "AS VARCHAR")
-    _URLS_CTE = f"""
-        WITH pg AS (
-          SELECT doc_id,
-                 doc_id - CASE WHEN doc_id % 10 = 1 THEN 1 ELSE 0 END AS _page_num
-          FROM documents
-        ),
-        raw AS (SELECT doc_id, {_raw_url_duck} AS raw_url FROM pg),
-        defrag AS (
-          SELECT doc_id, raw_url, split_part(trim(raw_url), '#', 1) AS u FROM raw
-        ),
-        parts AS (
-          SELECT doc_id, raw_url, u,
-                 regexp_extract(u, '^([a-zA-Z][a-zA-Z0-9+.\\-]*://[^/?#]*)', 1) AS head0
-          FROM defrag
-        ),
-        split2 AS (
-          SELECT doc_id, raw_url,
-                 regexp_replace(
-                   regexp_replace(lower(head0), '^(http://[^:/]+):80$', '\\1'),
-                   '^(https://[^:/]+):443$', '\\1') AS head,
-                 substr(u, length(head0) + 1) AS tail
-          FROM parts
-        ),
-        pq AS (
-          SELECT doc_id, raw_url, head,
-                 regexp_replace(split_part(tail, '?', 1), '/$', '') AS path,
-                 CASE WHEN strpos(tail, '?') > 0
-                      THEN substr(tail, strpos(tail, '?') + 1) ELSE '' END AS query
-          FROM split2
-        ),
-        norm AS (
-          SELECT doc_id, raw_url,
-                 head || path ||
-                 CASE WHEN qs = '' THEN '' ELSE '?' || qs END AS norm_url
-          FROM (
-            SELECT doc_id, raw_url, head, path,
-                   COALESCE(array_to_string(
-                     list_sort(list_filter(string_split(query, '&'),
-                       x -> x <> '' AND NOT regexp_matches(x, '^(utm_[^=]*|fbclid|gclid)(=|$)'))),
-                     '&'), '') AS qs
-            FROM pq
-          )
-        ),
-        urls AS (
-          SELECT doc_id, raw_url, norm_url,
-                 -- mirrors host_of: optional userinfo consumed before the
-                 -- host capture, '#' excluded from the class
-                 regexp_extract(norm_url,
-                   '^[a-z][a-z0-9+.\\-]*://(?:[^/?#@]*@)?([^/:?@#]+)', 1) AS host
-          FROM norm
-        )
-    """
-
-    sql["url_normalize"] = _URLS_CTE + """
-        SELECT doc_id, raw_url, norm_url, host FROM urls
-    """
-
-    sql["url_dedup"] = _URLS_CTE + """
-        SELECT norm_url, CAST(MIN(doc_id) AS BIGINT) AS keeper_id,
-               CAST(COUNT(*) AS BIGINT) AS n_docs
-        FROM urls GROUP BY norm_url
-    """
-
-    sql["host_cap"] = _URLS_CTE + """
-        SELECT doc_id, host FROM urls
-        QUALIFY ROW_NUMBER() OVER (PARTITION BY host ORDER BY doc_id) <= 5
-    """
-
-    sql["bpe_pair_stats"] = f"""
-        WITH words AS (
-          SELECT unnest(regexp_extract_all(lower(text), {_TOKEN_RE_SQL})) AS w
-          FROM documents
-        ),
-        vocab AS (SELECT w, count(*) AS n FROM words GROUP BY w),
-        pairs AS (
-          SELECT unnest([{{'lhs': w[i:i], 'rhs': w[i+1:i+1]}}
-                         for i in generate_series(1, length(w)-1)]) AS p, n
-          FROM vocab
-        )
-        SELECT p.lhs AS lhs, p.rhs AS rhs, CAST(sum(n) AS BIGINT) AS n
-        FROM pairs GROUP BY p.lhs, p.rhs
-        ORDER BY n DESC, lhs, rhs LIMIT 40
-    """
-
-    _SNAPSHOT_SQL = """(
-        SELECT doc_id + 2000000 AS doc_id, text FROM documents WHERE doc_id < 100
-        UNION ALL
-        SELECT doc_id + 2000000, substr(text, 1, greatest(length(text) - 120, 60))
-        FROM documents WHERE doc_id >= 100 AND doc_id < 200
-        UNION ALL
-        SELECT doc_id + 3000000,
-               'novel zebra ' || CAST(doc_id AS VARCHAR)
-               || ' quixotic ' || CAST(doc_id * 7 AS VARCHAR)
-               || ' fjord ' || CAST(doc_id * 13 AS VARCHAR)
-        FROM documents WHERE doc_id < 50
-    )"""
-    sql["incremental_dedup"] = f"""
-        WITH newdocs AS (SELECT * FROM {_SNAPSHOT_SQL} n),
-        refnorm AS (SELECT DISTINCT {_NORM_TEXT} AS nt FROM documents),
-        flagged AS (
-          SELECT n.doc_id, n.text,
-                 EXISTS (SELECT 1 FROM refnorm r
-                         WHERE r.nt = trim(regexp_replace(lower(n.text), '\\s+', ' ', 'g'))) AS is_exact
-          FROM newdocs n
-        ),
-        shn AS (
-          SELECT doc_id,
-                 CASE WHEN len(tk) >= 3
-                      THEN list_distinct([array_to_string(tk[i:i+2], ' ')
-                                          for i in generate_series(1, len(tk)-2)])
-                      ELSE [array_to_string(tk, ' ')] END AS s
-          FROM (SELECT doc_id,
-                       regexp_extract_all(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')),
-                                          {_TOKEN_RE_SQL}) AS tk
-                FROM flagged WHERE NOT is_exact)
-        ),
-        shr AS (
-          SELECT CASE WHEN len(tk) >= 3
-                      THEN list_distinct([array_to_string(tk[i:i+2], ' ')
-                                          for i in generate_series(1, len(tk)-2)])
-                      ELSE [array_to_string(tk, ' ')] END AS s
-          FROM (SELECT regexp_extract_all(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')),
-                                          {_TOKEN_RE_SQL}) AS tk
-                FROM documents)
-        ),
-        near AS (
-          SELECT DISTINCT a.doc_id
-          FROM shn a, shr b
-          WHERE CAST(len(list_intersect(a.s, b.s)) AS DOUBLE)
-                / len(list_distinct(list_concat(a.s, b.s))) >= 0.5
-        )
-        SELECT f.doc_id,
-               CASE WHEN f.is_exact THEN 'exact'
-                    WHEN nr.doc_id IS NOT NULL THEN 'near' END AS drop_reason
-        FROM flagged f LEFT JOIN near nr USING (doc_id)
-    """
-
-    # knn_arrow_topk is proven bit-identical to knn_graph
-    # (tests/test_corpus_ops3.py), so it soundly reuses knn_graph's oracle
-    # verbatim (VERDICT r4 #1b).
-    sql["knn_arrow_topk"] = sql["knn_graph"]
-
-    # simhash_sample (md5_60 variant): DuckDB reproduces the 60-bit token
-    # hash by hex-digit arithmetic over md5, then the same per-bit
-    # majority vote.  Generated programmatically — 60 vote columns.
-    _votes = ",\n                 ".join(
-        f"SUM(CASE WHEN (hv >> {b}) & 1 = 1 THEN 1 ELSE -1 END) AS b{b}"
-        for b in range(60)
-    )
-    _bits = " + ".join(
-        f"CASE WHEN b{b} > 0 THEN CAST({1 << b} AS BIGINT) ELSE 0 END"
-        for b in range(60)
-    )
-    sql["simhash_sample"] = f"""
-        WITH toks AS (
-          SELECT doc_id,
-                 unnest(regexp_extract_all({_NORM_TEXT}, {_TOKEN_RE_SQL})) AS tok
-          FROM documents
-        ),
-        h AS (
-          SELECT doc_id,
-                 list_reduce(
-                   list_transform(
-                     regexp_extract_all(substr(md5(tok), 1, 15), '.'),
-                     c -> CAST(strpos('0123456789abcdef', c) - 1 AS BIGINT)
-                   ),
-                   (a, b) -> a * 16 + b
-                 ) AS hv
-          FROM toks
-        ),
-        votes AS (
-          SELECT doc_id,
-                 {_votes}
-          FROM h GROUP BY doc_id
-        )
-        SELECT doc_id, CAST({_bits} AS BIGINT) AS simhash
-        FROM votes ORDER BY doc_id LIMIT 100
-    """
-
-    # extract_relations / embedding_lsh_topk / embedding_ivf_topk /
-    # bpe_merges (iterative) / incremental_dedup_lsh (probabilistic
-    # recall): no sound SQL equivalent — rows-only checks (registered at
-    # the END of queries()); strong checks in tests/.
+    # extract_relations (regex/UDF extraction): no sound SQL equivalent —
+    # rows-only check (registered at the END of queries()); its strong
+    # checks (P/R vs generated expected triples) live in tests/.
     return sql

@@ -11,8 +11,10 @@ idiomatic Spark DataFrame pipeline designed for 10^12-document scale:
                      broadcastable constraint table (reference
                      src/services/SHACLValidationService.ts:101-158).
 - ``operators``    — the relational core: validation rule executor, report
-                     analytics, dataset discovery joins, dedup, similarity,
-                     entity linking, connected components.
+                     analytics, dataset discovery joins, entity linking,
+                     connected components, and the corpus operators
+                     (dedup, quality, sampling, index, web, temporal,
+                     graph) kept as a unit-tested library.
 - ``sources``      — pages synthesis, text/triple extraction (vectorized
                      Arrow UDFs), report Turtle/CSV sinks and parser.
 - ``plans``        — end-to-end pipeline: extract → link → canonicalize →

@@ -1,9 +1,5 @@
 from .text import (  # noqa: F401
-    doc_fingerprint,
-    language_id,
     local_name,
     normalize_lang,
-    quality_score,
     severity_from_iri,
-    token_count,
 )

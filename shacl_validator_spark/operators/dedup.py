@@ -28,6 +28,23 @@ def _normalized(text) -> F.Column:
     return F.trim(F.regexp_replace(F.lower(text), r"\s+", " "))
 
 
+def _drop_hot_buckets(df: DataFrame, keys: list[str], max_bucket: int) -> DataFrame:
+    """Bucket-size guard for LSH self-joins: buckets holding more than
+    ``max_bucket`` members are excluded from candidate generation — a
+    bucket of n members contributes n² candidate pairs, so one boilerplate
+    bucket (identical headers, zero vectors) turns the join quadratic while
+    everything else stays linear.  The count is a map-side-combined groupBy
+    on the band key — same shuffle shape as the join itself."""
+    if not max_bucket or max_bucket <= 0:
+        return df
+    sizes = df.groupBy(*keys).agg(F.count(F.lit(1)).alias("_bn"))
+    return (
+        df.join(sizes, keys)
+        .filter(F.col("_bn") <= max_bucket)
+        .drop("_bn")
+    )
+
+
 def exact_duplicates(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
     """Exact dedup via content-hash groupBy: returns (content_hash, n_docs,
     doc_ids sorted, keeper = min id). md5 used so the DuckDB oracle can
@@ -180,8 +197,6 @@ def minhash_lsh_pairs(
     # spark.catalog.clearCache() or session end.
     per_doc = _minhash_agg(docs, id_col, text_col, num_perm, shingle_n).persist()
     banded = _banded_sigs(per_doc, num_perm, bands)
-    from .similarity import _drop_hot_buckets
-
     banded = _drop_hot_buckets(banded, ["band", "band_hash"], max_bucket)
     cand = (
         banded.alias("a")
@@ -652,8 +667,6 @@ def dedup_against(
         else:  # lsh
             per_new = _minhash_agg(survivors, "_id", "_t", num_perm, shingle_n).persist()
             per_ref = _minhash_agg(ref_docs, id_col, text_col, num_perm, shingle_n).persist()
-            from .similarity import _drop_hot_buckets
-
             b_new = _drop_hot_buckets(
                 _banded_sigs(per_new, num_perm, bands), ["band", "band_hash"], max_bucket
             )

@@ -40,8 +40,7 @@ def md5_prefix32(col: F.Column) -> F.Column:
     """First 8 hex chars of md5(``col``), base-16-decoded: a deterministic
     uniform 32-bit value.  THE engine-portable hash contract every
     keep/assign/copy decision in the pipeline shares (``hash_sample``,
-    ``apply_mix``, ``hashed_gram_buckets``, ``shards.shard_assign``,
-    ``packing.pack_windows``, tools/build_corpus) — DuckDB reproduces it
+    ``apply_mix``, ``hashed_gram_buckets``) — DuckDB reproduces it
     verbatim as ``conv(substring(md5(x),1,8),16,10)``, so the sites must
     stay byte-identical; change it here or nowhere."""
     return F.conv(F.substring(F.md5(col), 1, 8), 16, 10).cast("bigint")

@@ -1,5 +1,5 @@
 """Round-3 corpus operators: chunk-level boilerplate dedup, unigram-LM
-quality scoring, and kNN-graph construction (exact baseline)."""
+quality scoring, and cross-corpus (incremental) dedup."""
 
 from __future__ import annotations
 
@@ -9,7 +9,6 @@ import pytest
 
 from shacl_validator_spark.operators.dedup import chunk_dedup
 from shacl_validator_spark.operators.quality import unigram_logprob
-from shacl_validator_spark.operators.similarity import knn_graph
 
 
 def test_chunk_dedup_drops_shared_chunks(spark):
@@ -67,119 +66,6 @@ def test_unigram_logprob_hand_computed(spark):
     assert out[2]["logprob"] == pytest.approx(exp2, abs=1e-6)
     # typical doc (common tokens) scores HIGHER than rare-token doc
     assert out[1]["logprob"] > out[2]["logprob"]
-
-
-def test_knn_graph_neighbors_and_mutual(spark):
-    # 2-d toy: v0/v1 nearly parallel (mutual rank-1), v2 orthogonal-ish
-    vecs = [
-        (0, [1.0, 0.0]),
-        (1, [0.99, 0.1]),
-        (2, [0.0, 1.0]),
-    ]
-    emb = spark.createDataFrame(vecs, "vec_id long, embedding array<float>")
-    edges = {(r["src"], r["dst"]): r for r in knn_graph(emb, k=1).collect()}
-    assert set(edges) == {(0, 1), (1, 0), (2, 1)}
-    assert edges[(0, 1)]["mutual"] == 1 and edges[(1, 0)]["mutual"] == 1
-    assert edges[(2, 1)]["mutual"] == 0
-    assert edges[(0, 1)]["rank"] == 1
-
-
-def test_knn_graph_blocked_exhaustive_equals_exact(spark):
-    """nprobe == nlist probes every cell, so the blocked plan must produce
-    the exact graph bit-for-bit."""
-    from shacl_validator_spark.operators.similarity import knn_graph_blocked
-
-    emb = (
-        spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-        .orderBy("vec_id")
-        .limit(60)
-    )
-    exact = {tuple(r) for r in knn_graph(emb, k=3).collect()}
-    blocked = {
-        tuple(r)
-        for r in knn_graph_blocked(emb, k=3, nlist=4, nprobe=4, iters=1).collect()
-    }
-    assert blocked == exact
-
-
-def test_knn_graph_blocked_recall(spark):
-    """nprobe < nlist still recovers almost all true edges on clustered
-    data (cell-boundary misses only)."""
-    import math
-
-    from shacl_validator_spark.operators.similarity import knn_graph_blocked
-
-    # 4 tight angular clusters of 8 vectors each
-    vecs = []
-    for c in range(4):
-        for j in range(8):
-            a = math.radians(c * 90 + j)
-            vecs.append((c * 8 + j, [math.cos(a), math.sin(a)]))
-    emb = spark.createDataFrame(vecs, "vec_id long, embedding array<float>")
-    exact = {(r["src"], r["dst"]) for r in knn_graph(emb, k=3).collect()}
-    blocked = {
-        (r["src"], r["dst"])
-        for r in knn_graph_blocked(emb, k=3, nlist=4, nprobe=2, iters=2).collect()
-    }
-    recall = len(blocked & exact) / len(exact)
-    assert recall >= 0.9
-
-
-def test_knn_topk_arrow_equals_exact(spark):
-    """The BLAS kernel must reproduce the JVM-expression graph exactly
-    (same rounding contract, same tie-break)."""
-    from shacl_validator_spark.operators.similarity import knn_topk_arrow
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    exact = {tuple(r) for r in knn_graph(emb, k=4).collect()}
-    arrow = {tuple(r) for r in knn_topk_arrow(emb, k=4).collect()}
-    assert arrow == exact
-
-
-def test_knn_topk_arrow_block_gate(spark):
-    from shacl_validator_spark.operators.similarity import knn_topk_arrow
-
-    import pytest as _pytest
-
-    emb = spark.createDataFrame(
-        [(i, [1.0, 0.0]) for i in range(10)], "vec_id long, embedding array<float>"
-    )
-    with _pytest.raises(ValueError, match="max_block"):
-        knn_topk_arrow(emb, k=2, max_block=5)
-
-
-def test_semantic_dedup_transitive_chain(spark):
-    """A≈B and B≈C cluster together even though cos(A,C) < threshold —
-    the closure is transitive, not pairwise."""
-    import math
-
-    from shacl_validator_spark.operators.similarity import semantic_dedup
-
-    def unit(deg):
-        r = math.radians(deg)
-        return [math.cos(r), math.sin(r)]
-
-    # τ = 0.966 ≈ cos 15°: A-B (14°) and B-C (14°) pass, A-C (28°) fails
-    vecs = [(0, unit(0.0)), (1, unit(14.0)), (2, unit(28.0)), (3, unit(90.0))]
-    emb = spark.createDataFrame(vecs, "vec_id long, embedding array<float>")
-    out = semantic_dedup(emb, threshold=0.966, k=3).collect()
-    assert len(out) == 1
-    row = out[0]
-    assert row["cluster_id"] == 0
-    assert row["n_members"] == 3 and row["members"] == [0, 1, 2]
-
-
-def test_knn_graph_rank_bound_and_degree(spark):
-    emb = spark.createDataFrame(
-        [(i, [float(i), 1.0]) for i in range(6)],
-        "vec_id long, embedding array<float>",
-    )
-    rows = knn_graph(emb, k=3).collect()
-    assert all(1 <= r["rank"] <= 3 for r in rows)
-    from collections import Counter
-
-    deg = Counter(r["src"] for r in rows)
-    assert all(v == 3 for v in deg.values()) and len(deg) == 6
 
 
 # --- cross-corpus (incremental) dedup ----------------------------------------

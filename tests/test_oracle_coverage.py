@@ -48,3 +48,19 @@ def test_unsampled_queries_pass_oracles():
     assert proc.returncode == 0, (
         f"check_oracles failed for {missing}:\n{proc.stdout[-4000:]}\n{proc.stderr[-2000:]}"
     )
+
+
+def test_registry_is_consistent():
+    """No Spark: every bench headline query is registered, every oracle
+    belongs to a registered query, and the rows-only entries (no oracle)
+    are registered last."""
+    sys.path.insert(0, REPO)
+    import __spark_entry__ as entrymod
+    import bench
+
+    names = list(entrymod.queries())
+    oracles = set(entrymod.oracle_sql())
+    assert set(bench.HEADLINE_QUERIES) <= set(names)
+    assert oracles <= set(names)
+    rows_only = [n for n in names if n not in oracles]
+    assert names[len(names) - len(rows_only):] == rows_only

@@ -4,8 +4,6 @@ validate+MERGE per micro-batch with exactly-once via MERGE idempotence
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
 from shacl_validator_spark.model import PAGES_SCHEMA
 from shacl_validator_spark.sources.pages import synthesize_pages
 from shacl_validator_spark.streaming import validated_stream_writer
@@ -36,105 +34,6 @@ def test_stream_foreachbatch(spark, tmp_path):
     )
     q2.awaitTermination(300)
     assert spark.read.parquet(f"{out}/triples").count() == n1
-
-
-def _violation_stream_source(spark, tmp_path):
-    rows = [
-        ("https://ex.org/dataset/1", "Violation", "2024-01-01 00:00:05"),
-        ("https://ex.org/dataset/1", "Warning", "2024-01-01 00:00:45"),
-        ("https://ex.org/dataset/2", "Violation", "2024-01-01 00:01:10"),
-        ("https://ex.org/dataset/2", "Violation", "2024-01-01 00:01:20"),
-        ("https://ex.org/dataset/3", "Info", "2024-01-01 00:02:30"),
-    ]
-    src = str(tmp_path / "viol_src")
-    df = spark.createDataFrame(
-        rows, "focusNode string, resultSeverity string, ts_s string"
-    ).select("focusNode", "resultSeverity", F.col("ts_s").cast("timestamp").alias("ts"))
-    df.write.mode("overwrite").parquet(src)
-    return spark.readStream.schema(
-        "focusNode string, resultSeverity string, ts timestamp"
-    ).parquet(src)
-
-
-def test_windowed_severity_counts(spark, tmp_path):
-    from shacl_validator_spark.streaming.windowed import windowed_severity_counts
-
-    stream = _violation_stream_source(spark, tmp_path)
-    out = windowed_severity_counts(stream, window="1 minute", watermark="2 minutes")
-    # complete mode: a single availableNow batch never advances the
-    # watermark past a window end, so append would emit nothing; complete
-    # surfaces every window while the watermark still bounds state/lateness
-    # in a long-running deployment
-    q = (
-        out.writeStream.format("memory")
-        .queryName("winsev")
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    got = {
-        (str(r.window_start), r.resultSeverity): r.n
-        for r in spark.table("winsev").collect()
-    }
-    assert got[("2024-01-01 00:00:00", "Violation")] == 1
-    assert got[("2024-01-01 00:00:00", "Warning")] == 1
-    assert got[("2024-01-01 00:01:00", "Violation")] == 2
-    assert got[("2024-01-01 00:02:00", "Info")] == 1
-
-
-def test_focus_sessions_stateful(spark, tmp_path):
-    from shacl_validator_spark.streaming.windowed import focus_sessions
-
-    stream = _violation_stream_source(spark, tmp_path)
-    out = focus_sessions(stream, timeout_ms=60_000)
-    q = (
-        out.writeStream.format("memory")
-        .queryName("sessions")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    rows = {r.focusNode: r for r in spark.table("sessions").collect()}
-    assert rows["https://ex.org/dataset/1"].n_results == 2
-    assert rows["https://ex.org/dataset/2"].n_results == 2
-    assert rows["https://ex.org/dataset/3"].n_results == 1
-
-
-def test_dedup_stream_first_seen_only(spark, tmp_path):
-    from shacl_validator_spark.streaming.dedup import dedup_stream
-
-    rows = [
-        (1, "the same page text", "2024-01-01 00:00:01"),
-        (2, "THE  same page text ", "2024-01-01 00:00:02"),  # normalized dup of 1
-        (3, "a different page", "2024-01-01 00:00:03"),
-        (4, "the same page text", "2024-01-01 00:00:04"),  # exact dup of 1
-    ]
-    src = str(tmp_path / "docs_src")
-    out = str(tmp_path / "dedup_out")
-    spark.createDataFrame(rows, "doc_id long, text string, ts_s string").select(
-        "doc_id", "text", F.col("ts_s").cast("timestamp").alias("ts")
-    ).write.mode("overwrite").parquet(src)
-
-    stream = spark.readStream.schema("doc_id long, text string, ts timestamp").parquet(src)
-    q = (
-        dedup_stream(stream)
-        .writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", str(tmp_path / "ck"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    got = spark.read.parquet(out).collect()
-    # one survivor per distinct normalized content; the survivor set is
-    # {one of 1/2/4} + {3}
-    assert len(got) == 2
-    hashes = {r["content_hash"] for r in got}
-    assert len(hashes) == 2
-    assert {r["doc_id"] for r in got} & {1, 2, 4}
-    assert 3 in {r["doc_id"] for r in got}
 
 
 def test_ntriples_stream_validate_merge(spark, tmp_path):

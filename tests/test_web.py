@@ -2,9 +2,7 @@
 
 Covers the hand-written normalization contract on adversarial URLs, the
 two-phase salted host_cap's equality with a plain per-host window, and
-url_dedup keeper semantics.  The engine-portability of the whole chain
-(synthesis + normalization re-implemented in DuckDB) is oracle-checked
-via the url_normalize / url_dedup / host_cap queries()."""
+url_dedup keeper semantics."""
 
 from __future__ import annotations
 

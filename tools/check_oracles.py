@@ -19,10 +19,7 @@ from __spark_entry__ import oracle_sql, queries  # noqa: E402
 
 from shacl_validator_spark.session import get_spark  # noqa: E402
 
-TABLES = [
-    "region", "nation", "customer", "supplier", "part", "orders",
-    "lineitem", "events", "documents", "embeddings",
-]
+TABLES = ["region", "nation", "customer", "supplier", "events", "documents"]
 
 
 def norm_cell(v) -> str:

@@ -2,9 +2,8 @@
 for the plan properties that matter at 100 TB (SURVEY.md §4):
 
 - broadcast joins on constraint/alias/prefix sides (no shuffle of the big side)
-- PushedFilters / ReadSchema pruning on parquet scans
 - no BatchEvalPython/ArrowEvalPython in the validation plan (pure JVM)
-- TakeOrderedAndProject for top-K queries
+- partial+final hash aggregation for the report analytics
 
 Writes plans to BENCH/plans/*.txt and prints a one-line verdict per check.
 """
@@ -58,27 +57,6 @@ def main() -> None:
         "validation uses broadcast joins, no Python in plan",
     )
     audit(
-        "tpch_q1",
-        lambda t: "PushedFilters: [IsNotNull(l_shipdate)" in t
-        or "PushedFilters: [" in t,
-        "filter pushed to parquet scan",
-    )
-    audit(
-        "tpch_q1",
-        lambda t: "l_comment" not in t,
-        "column pruning: unused columns not read",
-    )
-    audit(
-        "revenue_by_nation",
-        lambda t: "BroadcastHashJoin" in t,
-        "small dim (nation) broadcast",
-    )
-    audit(
-        "top_parts",
-        lambda t: "TakeOrderedAndProject" in t,
-        "top-K planned as TakeOrderedAndProject (no full sort)",
-    )
-    audit(
         "severity_summary",
         lambda t: "HashAggregate" in t,
         "partial+final hash aggregation",
@@ -88,134 +66,6 @@ def main() -> None:
         lambda t: "BroadcastHashJoin" in t and "BatchEvalPython" not in t
         and "ArrowEvalPython" not in t,
         "full-suite validation: broadcast joins, no Python in plan",
-    )
-    audit(
-        "minhash_dup_pairs",
-        lambda t: "InMemoryTableScan" in t and "BatchEvalPython" not in t,
-        "minhash: signature+shingle-set relation materialized once and reused",
-    )
-    audit(
-        "embedding_ivf_topk",
-        lambda t: ("BroadcastHashJoin" in t or "SortMergeJoin" in t)
-        and "BatchEvalPython" not in t and "ArrowEvalPython" not in t,
-        "IVF probe: cell equi-join, no Python in plan",
-    )
-    audit(
-        "tpch_q3",
-        lambda t: "TakeOrderedAndProject" in t,
-        "Q3 top-10 planned as TakeOrderedAndProject",
-    )
-    audit(
-        "asof_view_click",
-        lambda t: "Window" in t and "NestedLoop" not in t and "Cartesian" not in t,
-        "as-of join is union+window, never a range-join nested loop",
-    )
-    audit(
-        "decontaminate",
-        lambda t: "BroadcastHashJoin" in t and "BatchEvalPython" not in t
-        and "ArrowEvalPython" not in t,
-        "probe n-grams broadcast; corpus side never shuffles for the match",
-    )
-    audit(
-        "hash_sample",
-        lambda t: "Exchange" not in t.split("HashAggregate")[0]
-        and "BatchEvalPython" not in t,
-        "hash sampling is a narrow filter before the first aggregate",
-    )
-    audit(
-        "embedding_quantize",
-        lambda t: "BatchEvalPython" not in t and "ArrowEvalPython" not in t,
-        "quantization is pure JVM column expressions",
-    )
-    audit(
-        "dedup_clusters",
-        lambda t: "BatchEvalPython" not in t,
-        "cluster consolidation stays JVM-side (exact collapse + LSH + CC)",
-    )
-    audit(
-        "chunk_dedup",
-        lambda t: "BatchEvalPython" not in t and "ArrowEvalPython" not in t
-        and "md5" in t,
-        "chunk dedup groups by md5(chunk) (16-byte keys), pure JVM",
-    )
-    audit(
-        "lm_logprob",
-        lambda t: "BatchEvalPython" not in t and "ArrowEvalPython" not in t
-        and "BroadcastNestedLoopJoin" in t,
-        "LM scoring: one-row corpus total broadcast, pure JVM",
-    )
-    audit(
-        "knn_graph_ivf_exact",
-        lambda t: ("BroadcastHashJoin" in t or "SortMergeJoin" in t or "ShuffledHashJoin" in t)
-        and "CartesianProduct" not in t and "BatchEvalPython" not in t,
-        "blocked kNN graph: cell equi-join, never a cartesian product",
-    )
-    audit(
-        "bpe_pair_stats",
-        lambda t: "TakeOrderedAndProject" in t and "partial_sum" in t
-        and "BatchEvalPython" not in t and "ArrowEvalPython" not in t,
-        "BPE pair stats: map-side partial agg + TakeOrdered top-K, no Python",
-    )
-    audit(
-        "incremental_dedup",
-        lambda t: "CartesianProduct" not in t and "BatchEvalPython" not in t
-        and "ArrowEvalPython" not in t,
-        "cross-corpus dedup: equi-joins only, never a cartesian product, no Python",
-    )
-
-    audit(
-        "range_join",
-        lambda t: "BroadcastNestedLoopJoin" not in t and "CartesianProduct" not in t
-        and ("BroadcastHashJoin" in t or "SortMergeJoin" in t or "ShuffledHashJoin" in t),
-        "range join is a bucket-keyed equi-join, never a nested loop",
-    )
-    audit(
-        "bm25_rank",
-        lambda t: "TakeOrderedAndProject" in t and "BatchEvalPython" not in t
-        and "ArrowEvalPython" not in t,
-        "BM25 top-k planned as TakeOrderedAndProject, pure JVM",
-    )
-    audit(
-        "interval_join",
-        lambda t: "BroadcastNestedLoopJoin" not in t and "CartesianProduct" not in t
-        and ("BroadcastHashJoin" in t or "SortMergeJoin" in t or "ShuffledHashJoin" in t),
-        "interval overlap join is bucket-keyed equi-join, never a nested loop",
-    )
-    audit(
-        "shard_manifest",
-        lambda t: "BatchEvalPython" not in t and "ArrowEvalPython" not in t
-        and "partial_count" in t,
-        "shard manifest: map-side-combined aggregation, pure JVM",
-    )
-    audit(
-        "bpe_encode",
-        lambda t: "BatchEvalPython" not in t and "ArrowEvalPython" not in t,
-        "pinned-BPE corpus tokenization stays JVM-side",
-    )
-    audit(
-        "apply_mix",
-        lambda t: "BroadcastHashJoin" in t and "BatchEvalPython" not in t
-        and "ArrowEvalPython" not in t,
-        "mix realization: weights broadcast, narrow copy fan-out, pure JVM",
-    )
-    audit(
-        "dsir_weights",
-        lambda t: "BatchEvalPython" not in t and "ArrowEvalPython" not in t
-        and "CartesianProduct" not in t
-        and ("BroadcastHashJoin" in t or "BroadcastExchange" in t),
-        "DSIR: ratio relation broadcast onto per-doc counts, pure JVM",
-    )
-    audit(
-        "corpus_datasheet",
-        lambda t: "BatchEvalPython" not in t and "ArrowEvalPython" not in t
-        and "Expand" in t and t.count("Location: InMemoryFileIndex") <= 2,
-        "datasheet: one corpus scan per union branch, Expand two-phase distincts, pure JVM",
-    )
-    audit(
-        "temperature_weights",
-        lambda t: "BatchEvalPython" not in t and "ArrowEvalPython" not in t
-        and "Window" not in t,
-        "temperature mix: tiny-agg + broadcast scalars, no unpartitioned window",
     )
 
     n_fail = sum(1 for _, _, ok in checks if not ok)
