@@ -65,8 +65,6 @@ def run_bench(
     pipeline_only: bool = False,
 ) -> dict:
     sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-    from pyspark.sql import functions as F
-
     import __spark_entry__ as entrymod
     from shacl_validator_spark.plans.pipeline import run_pipeline
     from shacl_validator_spark.session import get_spark
@@ -88,8 +86,6 @@ def run_bench(
     # gotchas).  The mini-validate warms the validator's operator classes
     # (broadcast hash join, hash agg, explode) on 3 unrelated literal rows —
     # JMH-style code warmup, no measured data is touched or cached.
-    from pyspark.sql import functions as _F  # noqa: F401
-
     from shacl_validator_spark.operators.validate import validate as _validate
     from shacl_validator_spark.shapes import compile_shapes, profile_shapes_ttl
 
@@ -193,7 +189,6 @@ def run_bench(
     # emulation; in the jar-less sandbox this records the documented
     # fallback instead.  Untimed — it attributes the merge path, it is not
     # a headline number.
-    from shacl_validator_spark.model import TRIPLE_SCHEMA  # noqa: F401
     from shacl_validator_spark.plans.merge import bench_iceberg_merge
 
     ice_batch = (

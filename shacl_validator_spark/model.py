@@ -27,10 +27,6 @@ FOAF = "http://xmlns.com/foaf/0.1/"
 RDFS = "http://www.w3.org/2000/01/rdf-schema#"
 
 SEVERITY_VIOLATION = "Violation"
-SEVERITY_WARNING = "Warning"
-SEVERITY_INFO = "Info"
-# severity sort rank — reference ValidationResults.tsx:189-193
-SEVERITY_RANK = {SEVERITY_VIOLATION: 0, SEVERITY_WARNING: 1, SEVERITY_INFO: 2}
 
 # Sentinel constraint components emitted for degenerate inputs —
 # reference SHACLValidationService.ts:359-396 & AppRouter.tsx:46-59.
@@ -39,10 +35,6 @@ SENTINEL_EMPTY_CONTENT = "system:EmptyContent"
 SENTINEL_PARSE_ERROR = "system:ParseError"
 
 # --- Triples table (the data graph) ----------------------------------------
-
-OBJECT_IRI = "iri"
-OBJECT_BNODE = "bnode"
-OBJECT_LITERAL = "literal"
 
 TRIPLE_SCHEMA = T.StructType(
     [
@@ -218,26 +210,5 @@ CONSTRAINT_SCHEMA = T.StructType(
         T.StructField("severity", T.StringType(), False),
         T.StructField("messages", MESSAGE_SCHEMA, True),
         T.StructField("foaf_page", T.StringType(), True),
-    ]
-)
-
-# --- Lineage / checkpoint tables (BASELINE.json north_rule) ------------------
-
-LINEAGE_SCHEMA = T.StructType(
-    [
-        T.StructField("partition_key", T.StringType(), False),
-        T.StructField("src_url_count", T.LongType(), False),
-        T.StructField("triples_in", T.LongType(), False),
-        T.StructField("triples_valid", T.LongType(), False),
-        T.StructField("violations", T.LongType(), False),
-        T.StructField("started_at", T.StringType(), False),
-        T.StructField("finished_at", T.StringType(), False),
-    ]
-)
-
-CHECKPOINT_SCHEMA = T.StructType(
-    [
-        T.StructField("partition_key", T.StringType(), False),
-        T.StructField("status", T.StringType(), False),  # done
     ]
 )

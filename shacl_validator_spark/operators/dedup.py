@@ -139,24 +139,6 @@ def _banded_sigs(per_doc: DataFrame, num_perm: int, bands: int) -> DataFrame:
     )
 
 
-def minhash_signatures(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    num_perm: int = 32,
-    shingle_n: int = 3,
-) -> DataFrame:
-    """(id, sig: array<bigint>) MinHash signatures, pure column expressions.
-
-    signature[j] = min over shingles of the j-mixed shingle hash — one
-    explode + groupBy (map-side partial min)."""
-    sig = _minhash_agg(docs, id_col, text_col, num_perm, shingle_n)
-    return sig.select(
-        F.col("_id").alias(id_col),
-        F.array(*[f"h{j}" for j in range(num_perm)]).alias("sig"),
-    )
-
-
 def minhash_lsh_pairs(
     docs: DataFrame,
     id_col: str = "doc_id",
@@ -342,44 +324,6 @@ def ngram_jaccard_pairs(
         .filter(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
     )
-
-
-def clean_corpus(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    min_quality: float = 0.5,
-    langs: list[str] | None = None,
-) -> DataFrame:
-    """Corpus-hygiene gate for training-data pipelines: exact-dedup keepers
-    (min id per normalized content) ∩ quality floor ∩ language allowlist —
-    the standard pre-training filter chain as ONE job.
-
-    Plan shape: a window over the content-hash partition marks keepers (one
-    shuffle on the hash — equivalent work to the dedup groupBy, but keeps
-    every surviving row's columns without a self-join), and the
-    quality/language predicates are codegen'd column expressions evaluated
-    in the same stage.  Returns the surviving rows plus the audit columns
-    (content_hash, quality, pred_lang).
-    """
-    from pyspark.sql.window import Window
-
-    from ..functions.text import language_id, quality_score
-
-    h = F.md5(_normalized(F.col(text_col)))
-    w = Window.partitionBy("content_hash").orderBy(F.col(id_col))
-    out = (
-        docs.withColumn("content_hash", h)
-        .withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-        .withColumn("quality", F.round(quality_score(F.col(text_col)), 4))
-        .withColumn("pred_lang", language_id(F.col(text_col)))
-        .filter(F.col("quality") >= min_quality)
-    )
-    if langs:
-        out = out.filter(F.col("pred_lang").isin(langs))
-    return out
 
 
 def chunk_dedup(

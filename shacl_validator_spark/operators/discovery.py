@@ -255,32 +255,6 @@ def extract_format_from_url(col) -> F.Column:
     )
 
 
-def simple_format(format_col, media_col, url_col) -> F.Column:
-    """The reference's full fallback chain (extractDistributionInfo,
-    DataDiscoveryService.ts:234-244): format string → mediaType → URL."""
-    fmt = extract_simple_format(format_col)
-    med = normalize_format_value(media_col)
-    url = extract_format_from_url(url_col)
-    return F.when(fmt != "unknown", fmt).when(med != "unknown", med).otherwise(url)
-
-
-def normalize_rdf_mime(col) -> F.Column:
-    """RDF serialization mime aliasing (RDFService.ts:26-40): the column
-    form of ``sources.rdf_io.normalize_mime``, generated from the SAME
-    alias table so driver-side and column-side normalization cannot
-    drift; null → text/turtle; unrecognized values pass through."""
-    from ..sources.rdf_io import _MIME_ALIASES
-
-    lo = F.lower(col)
-    out = F.when(col.isNull(), F.lit("text/turtle"))
-    canon_to_aliases: dict[str, list[str]] = {}
-    for alias, canon in _MIME_ALIASES.items():
-        canon_to_aliases.setdefault(canon, []).append(alias)
-    for canon, aliases in canon_to_aliases.items():
-        out = out.when(lo.isin(*aliases), F.lit(canon))
-    return out.otherwise(col)
-
-
 def is_compatible(format_col, media_col, url_col):
     """P6: distribution kept iff format/mediaType/url indicates csv or json
     (DataDiscoveryService.ts:393-475) as one boolean column expression."""

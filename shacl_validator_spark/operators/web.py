@@ -30,8 +30,8 @@ unbounded shuffle is phase 1's, which is salted by construction.
 
 Reference scope note: the reference validator operates on catalog/RDF
 inputs, not crawls (see SURVEY.md §2.1); these operators are part of the
-training-data layer this repo adds on top (task brief), alongside
-operators/dedup.py and operators/sampling.py.
+training-data layer this repo adds on top, alongside
+operators/dedup.py and operators/quality.py.
 """
 
 from __future__ import annotations

@@ -241,6 +241,20 @@ def entity_triples(surface_map: DataFrame) -> DataFrame:
     return cls_rows.unionByName(name_rows)
 
 
+def conformant_triples(triples: DataFrame, violations: DataFrame) -> DataFrame:
+    """The triples that may be MERGE'd: every triple whose subject has no
+    Violation-severity result.  Warning and Info results do not reject.
+
+    Violating focus nodes are a tiny distinct set, so the anti join is
+    broadcast and the triple stream is never shuffled for this filter."""
+    bad_focus = F.broadcast(
+        violations.filter(F.col("resultSeverity") == SEVERITY_VIOLATION)
+        .select(F.col("focusNode").alias("subject"))
+        .dropDuplicates()
+    )
+    return triples.join(bad_focus, "subject", "left_anti")
+
+
 def run_pipeline(
     spark: SparkSession,
     pages: DataFrame,
@@ -408,13 +422,6 @@ def run_pipeline(
         violations = spark.read.schema(VIOLATION_SCHEMA).parquet(report_path)
         t0 = _bump("validate", t0)
 
-        # violating focus nodes are a tiny distinct set → broadcast the anti
-        # join so the conformant filter never shuffles the triple stream
-        bad_focus = F.broadcast(
-            violations.filter(F.col("resultSeverity") == SEVERITY_VIOLATION)
-            .select(F.col("focusNode").alias("subject"))
-            .dropDuplicates()
-        )
         # lineage's triples_valid rides the MERGE's own scan as an observed
         # metric instead of a second anti-join pass over the typed stream —
         # a separate conformant.count() re-ran the whole broadcast anti-join
@@ -422,7 +429,7 @@ def run_pipeline(
         # one): CollectMetrics counts the rows at this plan point during
         # whatever action merge_triples runs first
         obs = Observation(f"valid_{key}_{next(_OBS_IDS)}")
-        conformant = triples.join(bad_focus, "subject", "left_anti").observe(
+        conformant = conformant_triples(triples, violations).observe(
             obs, F.count(F.lit(1)).alias("n")
         )
 

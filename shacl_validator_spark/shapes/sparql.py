@@ -1068,6 +1068,3 @@ def eval_select(triples: DataFrame, q: SelectQuery) -> DataFrame:
     if missing:
         raise SparqlUnsupported(f"sparql: projected variables never bound: {missing}")
     return acc.select(*[F.col(f"v_{v}").alias(v) for v in q.project]).dropDuplicates()
-
-
-__all__ = ["parse_select", "eval_select", "SelectQuery", "Group", "SparqlUnsupported"]

@@ -105,6 +105,3 @@ def triples_from_url(
         return read_ntriples(spark, p, graph=url)
     # text/turtle (catalog-sized only)
     return triples_from_turtle(spark, text, graph=url)
-
-
-__all__ = ["fetch_document", "triples_from_url", "ACCEPT_RDF"]

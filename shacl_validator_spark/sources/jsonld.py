@@ -152,6 +152,3 @@ def read_jsonld(
         )
         out = whole.mapInPandas(_parse_jsonld_files, TRIPLE_SCHEMA)
     return out.dropDuplicates() if distinct else out
-
-
-__all__ = ["read_jsonld"]

@@ -325,6 +325,3 @@ def write_ntriples(df: DataFrame, path: str, quads: bool = False, mode: str = "e
     reference's driver-side Turtle report export (report_io.py keeps that
     path for catalog-sized reports)."""
     ntriples_lines(df, quads=quads).write.mode(mode).text(path)
-
-
-__all__ = ["read_ntriples", "parse_ntriples", "ntriples_lines", "write_ntriples"]

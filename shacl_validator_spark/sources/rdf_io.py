@@ -240,8 +240,7 @@ def triples_from_jsonld(
     return df.dropDuplicates()
 
 
-# RDF serialization mime aliasing — the driver-side twin of
-# operators.discovery.normalize_rdf_mime (reference RDFService.ts:26-40)
+# RDF serialization mime aliasing (reference RDFService.ts:26-40)
 _MIME_ALIASES = {
     "turtle": "text/turtle",
     "text/turtle": "text/turtle",

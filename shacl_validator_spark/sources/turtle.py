@@ -338,16 +338,3 @@ def _driver_parse(
     # distinct plumbed through so the fallback matches the distributed
     # paths' bag semantics when distinct=False (ADVICE r4)
     return triples_from_turtle(spark, text, graph=graph, distinct=distinct)
-
-
-def turtle_lines(df: DataFrame) -> DataFrame:
-    """Render a TRIPLE_SCHEMA relation to line-oriented Turtle (one
-    statement per line, full IRIs — the N-Triples-compatible Turtle
-    subset).  For richer synthetic dumps (prefixes, ``;`` continuations)
-    see sources/synthetic.py's Turtle generators."""
-    from .ntriples import ntriples_lines
-
-    return ntriples_lines(df, quads=False)
-
-
-__all__ = ["read_turtle", "turtle_lines"]

@@ -13,7 +13,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..plans.pipeline import run_pipeline
+from ..plans.pipeline import conformant_triples, run_pipeline
 
 
 def validated_stream_writer(
@@ -102,11 +102,9 @@ def validated_triples_stream_writer(
     persists nothing, so a long-running stream accumulates no storage
     blocks.  The returned writer exposes ``writer.stats`` for
     observability/tests."""
-    from ..model import SEVERITY_VIOLATION, TRIPLE_SCHEMA
+    from ..model import TRIPLE_SCHEMA
     from ..operators.validate import validate
     from ..plans.merge import merge_triples
-
-    from pyspark.sql import functions as F
 
     stats = {"epochs": 0}
 
@@ -126,17 +124,10 @@ def validated_triples_stream_writer(
         violations = validate(spark, batch, constraint_rows, entailment=entailment)
         report_path = f"{out_dir}/reports/epoch={epoch_id}"
         violations.write.mode("overwrite").parquet(report_path)
-        v = spark.read.parquet(report_path)
-        bad_focus = F.broadcast(
-            v.filter(F.col("resultSeverity") == SEVERITY_VIOLATION)
-            .select(F.col("focusNode").alias("subject"))
-            .dropDuplicates()
-        )
-        conformant = batch.join(bad_focus, "subject", "left_anti")
         merge_triples(
             spark,
             f"{out_dir}/triples",
-            conformant,
+            conformant_triples(batch, spark.read.parquet(report_path)),
             n_buckets=n_buckets,
         )
         _fs_rm(scratch)

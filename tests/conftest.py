@@ -12,10 +12,6 @@ def spark():
     yield s
 
 
-SF_DIR = "/root/testdata/sf0.001"
-SF_DIR_ORACLE = "/root/testdata/sf0.01"
-
-
 def pytest_configure(config):
     config.addinivalue_line(
         "markers",

@@ -1,10 +1,14 @@
 """No query can silently rot: every ``queries()`` entry absent from the
 latest driver CORRECTNESS file is oracle-checked here (VERDICT r2 #10 —
 the driver samples ~50 of the registered queries per round; round 2 left 5
-entries unverified in both rounds until the judge re-ran them by hand)."""
+entries unverified in both rounds until the judge re-ran them by hand).
+
+Two guards need no Spark: the query registry is consistent, and no
+top-level package name is left unreferenced."""
 
 from __future__ import annotations
 
+import ast
 import glob
 import json
 import os
@@ -64,3 +68,46 @@ def test_registry_is_consistent():
     assert oracles <= set(names)
     rows_only = [n for n in names if n not in oracles]
     assert names[len(names) - len(rows_only):] == rows_only
+
+
+def _py_files(root: str):
+    for d, dirs, files in os.walk(root):
+        dirs[:] = [x for x in dirs if not x.startswith((".", "__pycache__", "spark-warehouse"))]
+        yield from (os.path.join(d, f) for f in files if f.endswith(".py"))
+
+
+def test_no_unreferenced_package_names():
+    """No Spark: every top-level function, class or assigned name in the
+    package is read somewhere in the repo (tests count, its own module
+    counts).  A definition is not a read: names in a Load context,
+    attribute names and imported names are."""
+    read: set[str] = set()
+    for path in _py_files(REPO):
+        with open(path) as f:
+            tree = ast.parse(f.read(), path)
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Name) and not isinstance(node.ctx, ast.Store):
+                read.add(node.id)
+            elif isinstance(node, ast.Attribute):
+                read.add(node.attr)
+            elif isinstance(node, ast.alias):
+                read.add(node.name.rsplit(".", 1)[-1])
+    unread = []
+    for path in _py_files(os.path.join(REPO, "shacl_validator_spark")):
+        with open(path) as f:
+            tree = ast.parse(f.read(), path)
+        for node in tree.body:
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+                names = [node.name]
+            elif isinstance(node, ast.Assign):
+                names = [t.id for t in node.targets if isinstance(t, ast.Name)]
+            elif isinstance(node, ast.AnnAssign) and isinstance(node.target, ast.Name):
+                names = [node.target.id]
+            else:
+                names = []
+            unread += [
+                f"{os.path.relpath(path, REPO)}:{node.lineno} {n}"
+                for n in names
+                if n not in read and n != "__version__"
+            ]
+    assert not unread, "unreferenced package names:\n" + "\n".join(unread)

@@ -99,7 +99,7 @@ def test_unigram_logprob_matches_reference(spark, corpus):
         assert math.isclose(got[d][1], exp[d][1], abs_tol=2e-6)
 
 
-# --- round-3 late additions: bpe_encode and dsir_weights -----------------
+# --- round-3 late addition: bpe_encode -------------------------------------
 
 merge_st = st.lists(
     st.tuples(
@@ -151,62 +151,3 @@ def test_bpe_encode_matches_reference(spark, tmp_path_factory, corpus, merges, b
         ).collect()
     }
     assert got == {d: ref_bpe_encode(t, merges) for d, t in enumerate(corpus)}
-
-
-def ref_dsir(raw, tgt, n_buckets, smoothing=1.0):
-    import hashlib
-
-    def grams(text):
-        toks = re.findall(TOKEN_PATTERN, text.lower())
-        return toks + [f"{a} {b}" for a, b in zip(toks, toks[1:])]
-
-    def bucket(g):
-        return int(hashlib.md5(g.encode()).hexdigest()[:8], 16) % n_buckets
-
-    tc = [0] * n_buckets
-    rc = [0] * n_buckets
-    for t in tgt:
-        for g in grams(t):
-            tc[bucket(g)] += 1
-    for _, t in raw:
-        for g in grams(t):
-            rc[bucket(g)] += 1
-    T, R, s = sum(tc), sum(rc), smoothing
-    lr = [
-        math.log((tc[b] + s) / (T + s * n_buckets))
-        - math.log((rc[b] + s) / (R + s * n_buckets))
-        for b in range(n_buckets)
-    ]
-    return {
-        d: (len(grams(t)), sum(lr[bucket(g)] for g in grams(t)))
-        for d, t in raw
-        if grams(t)
-    }
-
-
-@given(
-    raw=st.lists(text_st, min_size=1, max_size=5),
-    tgt=st.lists(text_st, min_size=1, max_size=3),
-)
-@settings(
-    max_examples=int(os.environ.get("PROP_EXAMPLES", "15")),
-    deadline=None,
-    suppress_health_check=[HealthCheck.function_scoped_fixture, HealthCheck.too_slow],
-)
-def test_dsir_weights_matches_reference(spark, raw, tgt):
-    from shacl_validator_spark.operators.sampling import dsir_weights
-
-    raw_rows = list(enumerate(raw))
-    raw_df = spark.createDataFrame(raw_rows, "doc_id long, text string")
-    tgt_df = spark.createDataFrame(
-        [(100 + i, t) for i, t in enumerate(tgt)], "doc_id long, text string"
-    )
-    got = {
-        r["doc_id"]: (r["n_feats"], r["log_weight"])
-        for r in dsir_weights(raw_df, tgt_df, n_buckets=32).collect()
-    }
-    want = ref_dsir(raw_rows, tgt, 32)
-    assert set(got) == set(want)
-    for d, (n, lw) in want.items():
-        assert got[d][0] == n
-        assert abs(got[d][1] - round(lw, 6)) <= 2e-6

@@ -4,7 +4,6 @@ segments, Turtle escaping, format sniffing."""
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
 from shacl_validator_spark.model import VIOLATION_SCHEMA
 from shacl_validator_spark.sources.rdf_io import detect_format
@@ -13,6 +12,7 @@ from shacl_validator_spark.sources.report_io import (
     parse_report_turtle,
     report_to_turtle,
     severity_segment,
+    write_report_csv,
 )
 
 
@@ -92,13 +92,19 @@ def test_turtle_escaping_round_trip(spark):
     assert 'va"l\\ue' in vals
 
 
-def test_turtle_refuses_to_truncate(spark):
+def test_turtle_refuses_to_truncate(spark, tmp_path):
     """A report larger than max_rows raises instead of writing a
-    complete-looking sh:ValidationReport with results dropped."""
+    complete-looking sh:ValidationReport with results dropped, and the
+    sink the error names writes every result."""
     df = _results(spark)
     with pytest.raises(ValueError, match="write_report_csv"):
         report_to_turtle(df, conforms=False, max_rows=2)
     assert report_to_turtle(df, conforms=False, max_rows=3).count("a sh:ValidationResult") == 3
+    out = str(tmp_path / "report_csv")
+    write_report_csv(df, out)
+    back = spark.read.option("header", True).csv(out)
+    assert back.count() == 3
+    assert back.columns == flatten_for_csv(df).columns
 
 
 def test_detect_format():

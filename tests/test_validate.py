@@ -465,10 +465,11 @@ def test_nested_fast_path_matches_full_eval(spark, monkeypatch):
     """r5 existence-only nested fast pass vs the full recursive _eval:
     bit-identical violation sets on the fixture suite (which exercises
     sh:node, sh:not, and all three qualifiedValueShape references)."""
+    import os
     import sys
     from importlib import import_module
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     import __spark_entry__ as m
     from shacl_validator_spark.operators.validate import validate
 

@@ -13,7 +13,7 @@ the line scan only; hashing every output column forces the whole
 unescape/typing pipeline to execute while producing one scalar (no sink
 write time polluting the parse number).
 
-Usage: PYTHONPATH=/root/repo python tools/bench_ntriples.py [n_triples] [reps]
+Usage: PYTHONPATH=. python tools/bench_ntriples.py [n_triples] [reps]
 Writes BENCH/ntriples_scaling.json.
 """
 

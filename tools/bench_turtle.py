@@ -15,7 +15,7 @@ rationale as bench_ntriples: a bare count would let Catalyst prune the
 parse).  Hashes must agree between BOTH shapes and BOTH parallelism
 levels — one grammar, four independent executions, one answer.
 
-Usage: PYTHONPATH=/root/repo python tools/bench_turtle.py [n_statements] [reps]
+Usage: PYTHONPATH=. python tools/bench_turtle.py [n_statements] [reps]
 Writes BENCH/turtle_scaling.json.  ~3.3 M statements ≈ 1 GB.
 """
 

@@ -2,18 +2,23 @@
 ``queries()`` entry on Spark and its ``oracle_sql()`` in DuckDB at sf0.01,
 compare row count, column names, and an order-insensitive value hash.
 
-Usage: PYTHONPATH=/root/repo python tools/check_oracles.py [sf_dir] [names...]
+Usage: python tools/check_oracles.py [sf_dir] [names...]
        [--json OUT.json]   # also write a driver-format correctness artifact
 """
 
 from __future__ import annotations
 
 import hashlib
+import os
 import sys
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+# Spark's Python workers import the package too (the extraction and
+# parser UDFs): put this checkout first on their path as well
+os.environ["PYTHONPATH"] = os.pathsep.join(p for p in (ROOT, os.environ.get("PYTHONPATH")) if p)
 
 from __spark_entry__ import oracle_sql, queries  # noqa: E402
 

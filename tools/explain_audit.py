@@ -15,15 +15,14 @@ import os
 import sys
 from contextlib import redirect_stdout
 
-sys.path.insert(0, "/root/repo")
-
-from pyspark.sql import functions as F  # noqa: E402
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 import __spark_entry__ as entry  # noqa: E402
 
 from shacl_validator_spark.session import get_spark  # noqa: E402
 
-OUT = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "BENCH", "plans")
+OUT = os.path.join(ROOT, "BENCH", "plans")
 
 
 def plan_of(df) -> str:

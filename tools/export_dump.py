@@ -7,7 +7,7 @@ to one statement per line, fully distributed (each task writes its own
 part file; no driver collect at any size).
 
 Usage:
-  PYTHONPATH=/root/repo python tools/export_dump.py TRIPLES_PARQUET DEST_DIR \
+  PYTHONPATH=. python tools/export_dump.py TRIPLES_PARQUET DEST_DIR \
       [--quads] [--parts N] [--overwrite]
 
 ``--quads`` keeps per-graph provenance as N-Quads labels; ``--parts``

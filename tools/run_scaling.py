@@ -26,7 +26,7 @@ Protocol notes (what makes this measurement honest on this host):
 
 Writes BENCH/scaling.json.
 
-Usage: PYTHONPATH=/root/repo python tools/run_scaling.py [n_pages] [reps]
+Usage: PYTHONPATH=. python tools/run_scaling.py [n_pages] [reps]
 """
 
 from __future__ import annotations

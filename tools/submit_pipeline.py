@@ -2,7 +2,8 @@
 "run via spark-submit --py-files on a multi-executor cluster").
 
 Usage:
-    cd /root/repo && zip -qr /tmp/shacl_validator_spark.zip shacl_validator_spark
+    # from the repository root
+    zip -qr /tmp/shacl_validator_spark.zip shacl_validator_spark
     spark-submit --master 'local-cluster[2,1,4096]' \
         --conf spark.executor.memory=3g \
         --py-files /tmp/shacl_validator_spark.zip \

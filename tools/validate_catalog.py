@@ -4,7 +4,7 @@ suite + its SPARQL rules), print the severity summary and top findings,
 optionally export the sh:ValidationReport as Turtle/CSV.
 
 Usage:
-  PYTHONPATH=/root/repo python tools/validate_catalog.py CATALOG.ttl \
+  PYTHONPATH=. python tools/validate_catalog.py CATALOG.ttl \
       [--profile dcat_ap_es] [--out-dir DIR] [--lang es]
 
 With no file argument the profile's vendored sample catalog is validated
