@@ -18,6 +18,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..local_df import local_df
+
 # Below this edge count the whole graph collapses onto the driver: a pure
 # Python union-find beats ~2·max_iter distributed join jobs whose data would
 # fit in one task anyway.  This is the standard endgame of distributed CC —
@@ -64,7 +66,7 @@ def connected_components(
         head = edges.limit(SMALL_GRAPH_EDGES + 1).collect()
         if len(head) <= SMALL_GRAPH_EDGES:
             rows = _driver_union_find([(r[0], r[1]) for r in head])
-            return spark.createDataFrame(rows, "node string, component string")
+            return local_df(spark, rows, "node string, component string")
     sym = (
         edges.select(F.col("src"), F.col("dst"))
         .unionByName(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))

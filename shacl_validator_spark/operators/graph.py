@@ -32,6 +32,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..local_df import local_df
+
 # 1e12 fixed-point units per 1.0 of PageRank mass.  Large enough that the
 # floor-division error after a handful of rounds is < 1e-9 of mass, small
 # enough that N * SCALE never overflows bigint below ~9e6 nodes per unit
@@ -74,7 +76,7 @@ def pagerank(
     n_nodes = nodes.count()
     if n_nodes == 0:
         spark = edges.sparkSession
-        return spark.createDataFrame([], "node long, pr long")
+        return local_df(spark, [], "node long, pr long")
     base = (15 * PR_SCALE) // (100 * n_nodes)
     pr0 = PR_SCALE // n_nodes
 

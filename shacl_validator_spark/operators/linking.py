@@ -22,9 +22,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..local_df import local_df
+
 
 def alias_dict_df(spark: SparkSession, rows: list[tuple[str, str]]) -> DataFrame:
-    return spark.createDataFrame(rows, schema="alias string, canonical_id string")
+    return local_df(spark, rows, "alias string, canonical_id string")
 
 
 def link_exact(mentions: DataFrame, alias_dict: DataFrame) -> DataFrame:
@@ -65,7 +67,7 @@ def link_lsh(
     from pyspark.ml.feature import CountVectorizer, MinHashLSH
 
     if unresolved.isEmpty():
-        return spark.createDataFrame([], "surface string, canonical_id string")
+        return local_df(spark, [], "surface string, canonical_id string")
 
     cand = alias_dict.select(F.col("alias").alias("key"), "canonical_id").withColumn(
         "shingles", _shingle_col("key")
@@ -163,8 +165,8 @@ def link_mentions(
         if len(head) <= SMALL_SURFACE_SET:
             arows = [(r[0], r[1]) for r in alias_dict.collect()]
             linked = _link_small([(r[0], r[1]) for r in head], arows, lsh_threshold)
-            return spark.createDataFrame(
-                linked, "surface string, ent_class string, canonical_id string"
+            return local_df(
+                spark, linked, "surface string, ent_class string, canonical_id string"
             )
     # eager materialization: isEmpty() on the unresolved residue is a
     # limit-1 probe and would leave a plain cache only partially filled,

@@ -634,13 +634,17 @@ def validate(
     broadcast or shuffle per join, and building the plan runs no job
     beyond the schema-sized subclass collect of ``entailment="rdfs"``.
 
-    ``triples`` should be a materialized relation (parquet/Iceberg-backed,
-    as the pipeline's scratch tables are): the target set is recomputed by
-    its consumers as a pushed-down ``predicate == rdf:type`` scan instead of
-    being pinned with localCheckpoint, which does not survive executor loss
-    and measurably collapses under memory pressure on wide streams.  That
-    reasoning is about the input triples relation; the violation-sized
-    output is small, and ``validate_report`` does pin it.
+    ``triples`` should be a materialized relation: parquet/Iceberg-backed,
+    as the pipeline's scratch tables are, or a pinned driver-built one, as
+    ``sources/rdf_io.py``'s loaders return (an Arrow ``LocalRelation``
+    pinned once with ``localCheckpoint``; driver-sized, so the pin is
+    cheap).  Either way each scan below reads stored rows, not a pickled
+    Python RDD or a re-run dedup.  Inside the plan the target set is
+    recomputed by its consumers as a pushed-down ``predicate == rdf:type``
+    scan instead of being pinned, because a pin of a corpus-sized relation
+    does not survive executor loss and measurably collapses under memory
+    pressure on wide streams.  The violation-sized output is small, and
+    ``validate_report`` does pin it.
     """
     if not constraint_rows:
         return local_df(spark, [], VIOLATION_SCHEMA)
@@ -1949,6 +1953,11 @@ def validate_report(
     analytics all read those pinned rows.  The rows stay distributed in
     executor storage, so executor loss invalidates them; they are not
     registered in the CacheManager, so nothing has to unpersist them.
+
+    ``triples`` should already be materialized (see ``validate``): the
+    ``sources/rdf_io.py`` loaders return a pinned relation, so on the
+    parse → report path the emptiness probe and every scan of the plan read
+    pinned rows.
     """
     if not constraint_rows:
         results = _sentinel(spark, SENTINEL_NO_SHAPES, "No SHACL shapes available")

@@ -37,6 +37,7 @@ from pyspark.sql import functions as F
 # across groups, reps, and resumed runs in one process
 _OBS_IDS = _it_count()
 
+from ..local_df import local_df
 from ..model import RDF_TYPE, SEVERITY_VIOLATION, TRIPLE_SCHEMA, VIOLATION_SCHEMA
 from ..operators import components
 from ..operators.linking import alias_dict_df, link_mentions
@@ -101,8 +102,8 @@ def canonicalize(spark: SparkSession, linked: DataFrame, max_iter: int = 6) -> D
                 },
                 key=lambda t: (t[0], t[1] or "", t[2]),
             )
-            return spark.createDataFrame(
-                rows, "surface string, ent_class string, canonical_id string"
+            return local_df(
+                spark, rows, "surface string, ent_class string, canonical_id string"
             )
     edges = linked.select(
         F.concat(F.lit("s|"), F.col("surface")).alias("src"),
@@ -531,10 +532,10 @@ def run_pipeline(
             spark.conf.set(_init_key, _init_prev)
 
     if not ent_parts:
-        entities = spark.createDataFrame(
-            [], "canonical_id string, surface_forms array<string>, ent_class string"
+        entities = local_df(
+            spark, [], "canonical_id string, surface_forms array<string>, ent_class string"
         )
-        viol_all = spark.createDataFrame([], VIOLATION_SCHEMA)
+        viol_all = local_df(spark, [], VIOLATION_SCHEMA)
     else:
         entities = ent_parts[0]
         for e in ent_parts[1:]:

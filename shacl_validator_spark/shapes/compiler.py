@@ -29,6 +29,7 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..local_df import local_df
 from ..model import CONSTRAINT_SCHEMA, RDF_TYPE, SH
 
 RDF_FIRST = "http://www.w3.org/1999/02/22-rdf-syntax-ns#first"
@@ -1110,4 +1111,4 @@ def constraints_df(spark: SparkSession, ttl_or_rows: str | list[dict]) -> DataFr
             f"{sorted(extra)} — extend model.CONSTRAINT_SCHEMA (keep-in-sync "
             "contract, see _ROW_DEFAULTS)"
         )
-    return spark.createDataFrame(rows, schema=CONSTRAINT_SCHEMA)
+    return local_df(spark, rows, CONSTRAINT_SCHEMA)

@@ -59,6 +59,8 @@ from dataclasses import dataclass, field
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..local_df import local_df
+
 XSD = "http://www.w3.org/2001/XMLSchema#"
 RDF_TYPE = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
 
@@ -931,7 +933,8 @@ def _values_df(spark, vars_: list[str], rows: list[list[Term]]) -> DataFrame:
     for v in vars_:
         for suffix in ("", *_AUX):
             fields.append(T.StructField(f"v_{v}{suffix}", T.StringType(), True))
-    return spark.createDataFrame(data, T.StructType(fields)).dropDuplicates()
+    # VALUES is a bag; dedup on the driver (no shuffle in the plan)
+    return local_df(spark, list(dict.fromkeys(data)), T.StructType(fields))
 
 
 def _group_df(triples: DataFrame, g: Group) -> DataFrame:

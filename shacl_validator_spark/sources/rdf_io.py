@@ -3,16 +3,36 @@
 The reference parses whole catalogs in the browser
 (src/services/RDFService.ts:42-69).  In the rebuilt pipeline the hot path
 never parses RDF text — triples are *emitted* by the extraction UDFs — so
-Turtle parsing is only needed for shape files and test fixtures, both
-driver-side and tiny (SURVEY.md §2.1 S1-S3).
+Turtle parsing is only needed for shape files, test fixtures and the
+click-to-report path (``validate_turtle``, ``tools/validate_catalog.py``),
+all driver-side and small (SURVEY.md §2.1 S1-S3).
+
+Every loader here ends in ``_triples_relation``: the parsed rows become one
+Arrow-built ``LocalRelation`` pinned with ``localCheckpoint``, so the ~300
+scans ``validate()`` makes of its input read pinned blocks — no Python
+worker and no dedup shuffle (see ``local_df``'s docstring for the numbers).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..local_df import local_df
 from ..model import TRIPLE_SCHEMA
-from ..shapes.compiler import parse_turtle
+from .turtle import _rows_from_text
+
+
+def _triples_relation(
+    spark: SparkSession, rows: list[tuple], distinct: bool = True
+) -> DataFrame:
+    """TRIPLE_SCHEMA row tuples → one pinned JVM relation.
+
+    ``distinct`` dedups on the driver (``dict.fromkeys`` keeps first
+    occurrences in order — the same row set ``dropDuplicates`` yields,
+    without its shuffle); ``distinct=False`` keeps bag semantics."""
+    if distinct:
+        rows = list(dict.fromkeys(rows))
+    return local_df(spark, rows, TRIPLE_SCHEMA).localCheckpoint(eager=True)
 
 
 def triples_from_turtle(
@@ -23,32 +43,19 @@ def triples_from_turtle(
     SHACLValidationService.ts:133,174-176; ``distinct=False`` preserves
     duplicate statements so read_turtle's driver fallback matches the
     distributed paths' bag semantics)."""
-    g = parse_turtle(ttl)
-    rows = []
-    for s, p, o in g.triples:
-        rows.append(
-            (
-                s,
-                p,
-                o.value,
-                o.kind,
-                o.datatype,
-                # full BCP47 tag, lowercased (RDF 1.1 canonical form) —
-                # languageIn/uniqueLang need the subtags; the reference's
-                # primary-subtag normalization (F4) applies to analytics
-                # only (functions/text.py normalize_lang)
-                (o.lang.lower() if o.lang else None),
-                graph,
-            )
-        )
-    df = spark.createDataFrame(rows, schema=TRIPLE_SCHEMA) if rows else spark.createDataFrame([], TRIPLE_SCHEMA)
-    return df.dropDuplicates() if distinct else df
+    return _triples_relation(spark, list(_rows_from_text(ttl, "_:b", graph)), distinct)
 
 
 def triples_from_rdfxml(
     spark: SparkSession, xml_text: str, graph: str | None = None
 ) -> DataFrame:
-    """Minimal RDF/XML subset parser (S2 — reference RDFService.ts:60-69).
+    """Minimal RDF/XML subset loader (S2 — reference RDFService.ts:60-69);
+    set semantics, like ``triples_from_turtle``."""
+    return _triples_relation(spark, rdfxml_rows(xml_text, graph))
+
+
+def rdfxml_rows(xml_text: str, graph: str | None = None) -> list[tuple]:
+    """RDF/XML → TRIPLE_SCHEMA row tuples (pure Python).
 
     Supports the fixture-level subset: ``rdf:Description``/typed-node
     elements with ``rdf:about``/``rdf:nodeID``, property child elements with
@@ -114,12 +121,7 @@ def triples_from_rdfxml(
 
     for el in root:
         walk(el)
-    df = (
-        spark.createDataFrame(rows, schema=TRIPLE_SCHEMA)
-        if rows
-        else spark.createDataFrame([], TRIPLE_SCHEMA)
-    )
-    return df.dropDuplicates()
+    return rows
 
 
 def jsonld_rows(
@@ -231,13 +233,7 @@ def triples_from_jsonld(
     RDFService.ts:89-94) — the projection shape the reference itself
     produces at ValidatorInput.tsx:133-154 (F15 inverse).  Driver-side;
     for dumps see the distributed ``sources.jsonld.read_jsonld``."""
-    rows = jsonld_rows(doc, graph)
-    df = (
-        spark.createDataFrame(rows, schema=TRIPLE_SCHEMA)
-        if rows
-        else spark.createDataFrame([], TRIPLE_SCHEMA)
-    )
-    return df.dropDuplicates()
+    return _triples_relation(spark, jsonld_rows(doc, graph))
 
 
 # RDF serialization mime aliasing (reference RDFService.ts:26-40)

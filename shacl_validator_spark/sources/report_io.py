@@ -7,8 +7,10 @@
 - ``parse_report_turtle`` — S11: inverse parser back to the violations
   DataFrame (reference src/workers/reportWorker.ts:10-112), used to
   round-trip our own reports in tests.
-- ``report_to_csv_rows`` / ``write_report_csv`` — S9: RFC-4180 CSV via
-  Spark's writer (quoting equivalent to SHACLValidationService.ts:578-583).
+- ``flatten_for_csv`` + ``write_report_csv`` / ``write_report_csv_file`` —
+  S9: RFC-4180 CSV, every field quoted and inner quotes doubled (quoting
+  equivalent to SHACLValidationService.ts:578-583), as a Spark part-file
+  directory or as one driver-written file.
 
 Small reports collect to the driver for string assembly (the reference is
 driver-side too); at scale the violations table itself is written with
@@ -17,6 +19,7 @@ driver-side too); at scale the violations table itself is written with
 
 from __future__ import annotations
 
+import csv
 import re
 
 from pyspark.sql import DataFrame, SparkSession
@@ -217,10 +220,23 @@ def flatten_for_csv(results: DataFrame, preferred_lang: str = "en") -> DataFrame
 
 
 def write_report_csv(results: DataFrame, path: str, preferred_lang: str = "en") -> None:
-    """S9: CSV sink via Spark's RFC-4180 writer."""
+    """S9: distributed CSV sink — a Spark part-file directory in the
+    RFC-4180 dialect of ``write_report_csv_file`` (Spark escapes quotes with
+    a backslash unless ``escape`` is the quote itself)."""
     flatten_for_csv(results, preferred_lang).write.mode("overwrite").option(
         "header", True
-    ).option("quoteAll", True).csv(path)
+    ).option("quoteAll", True).option("escape", '"').csv(path)
+
+
+def write_report_csv_file(results: DataFrame, path: str, preferred_lang: str = "en") -> None:
+    """S9 as one downloadable file (the reference's export), written from
+    the driver for a driver-sized report; same dialect as
+    ``write_report_csv``, so either sink reads back to the same rows."""
+    flat = flatten_for_csv(results, preferred_lang)
+    with open(path, "w", encoding="utf-8", newline="") as f:
+        w = csv.writer(f, quoting=csv.QUOTE_ALL, lineterminator="\n")
+        w.writerow(flat.columns)
+        w.writerows(flat.collect())
 
 
 def severity_segment(results: DataFrame, severity: str) -> DataFrame:

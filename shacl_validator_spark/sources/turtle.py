@@ -81,6 +81,10 @@ def _rows_from_text(text: str, bnode_prefix: str, graph: str | None):
             o.value,
             o.kind,
             o.datatype,
+            # full BCP47 tag, lowercased (RDF 1.1 canonical form) —
+            # languageIn/uniqueLang need the subtags; the reference's
+            # primary-subtag normalization (F4) applies to analytics only
+            # (functions/text.py normalize_lang)
             (o.lang.lower() if o.lang else None),
             graph,
         )

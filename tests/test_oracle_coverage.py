@@ -111,3 +111,25 @@ def test_no_unreferenced_package_names():
                 if n not in read and n != "__version__"
             ]
     assert not unread, "unreferenced package names:\n" + "\n".join(unread)
+
+
+def test_no_pickled_create_dataframe_in_package():
+    """No Spark: every driver-built relation in the package goes through
+    ``local_df`` (Arrow → ``LocalRelation``).  A direct
+    ``spark.createDataFrame(rows, ...)`` is a pickled Python RDD that
+    starts Python workers on every scan of it."""
+    pkg = os.path.join(REPO, "shacl_validator_spark")
+    calls = []
+    for path in _py_files(pkg):
+        if os.path.basename(path) == "local_df.py":
+            continue
+        with open(path) as f:
+            tree = ast.parse(f.read(), path)
+        calls += [
+            f"{os.path.relpath(path, REPO)}:{node.lineno}"
+            for node in ast.walk(tree)
+            if isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr == "createDataFrame"
+        ]
+    assert not calls, "createDataFrame outside local_df.py:\n" + "\n".join(calls)

@@ -3,6 +3,10 @@ segments, Turtle escaping, format sniffing."""
 
 from __future__ import annotations
 
+import csv
+import glob
+import os
+
 import pytest
 
 from shacl_validator_spark.model import VIOLATION_SCHEMA
@@ -13,6 +17,7 @@ from shacl_validator_spark.sources.report_io import (
     report_to_turtle,
     severity_segment,
     write_report_csv,
+    write_report_csv_file,
 )
 
 
@@ -105,6 +110,51 @@ def test_turtle_refuses_to_truncate(spark, tmp_path):
     back = spark.read.option("header", True).csv(out)
     assert back.count() == 3
     assert back.columns == flatten_for_csv(df).columns
+
+
+def _csv_rows(paths):
+    """Header + data rows of RFC-4180 files (a part-file directory repeats
+    its header in every part)."""
+    header, rows = None, []
+    for path in paths:
+        with open(path, encoding="utf-8", newline="") as f:
+            recs = list(csv.reader(f))
+        if recs:
+            header = recs[0]
+            rows += recs[1:]
+    return header, sorted(rows)
+
+
+def test_csv_sinks_agree(spark, tmp_path):
+    """The single-file sink (tools/validate_catalog.py's report.csv) and the
+    distributed part-file sink write one dialect: a message holding a comma,
+    a quote and a newline reads back to the same rows from both."""
+    tricky = 'has, a comma "and a quote"\nand a newline'
+    df = _results(spark).union(
+        spark.createDataFrame(
+            [("http://ex.org/d4", None, 'x"y', [{"text": tricky, "lang": "en"}],
+              "Violation", "http://www.w3.org/ns/shacl#ClassConstraintComponent",
+              None, None)],
+            VIOLATION_SCHEMA,
+        )
+    )
+    one = str(tmp_path / "report.csv")
+    parts = str(tmp_path / "report_parts")
+    write_report_csv_file(df, one)
+    write_report_csv(df, parts)
+    h1, rows1 = _csv_rows([one])
+    h2, rows2 = _csv_rows(sorted(glob.glob(os.path.join(parts, "part-*.csv"))))
+    assert h1 == h2 == flatten_for_csv(df).columns
+    assert rows1 == rows2
+    assert len(rows1) == 4
+    assert [r for r in rows1 if r[1] == "http://ex.org/d4"][0][4] == tricky
+    # every field quoted, quotes doubled (RFC 4180), in both sinks
+    with open(one, encoding="utf-8") as f:
+        text = f.read()
+    assert '"x""y"' in text and '"severity","focusNode"' in text
+    for part in glob.glob(os.path.join(parts, "part-*.csv")):
+        with open(part, encoding="utf-8") as f:
+            assert "\\\"" not in f.read()
 
 
 def test_detect_format():

@@ -37,8 +37,8 @@ from shacl_validator_spark.sources.rdf_io import (  # noqa: E402
     triples_from_turtle,
 )
 from shacl_validator_spark.sources.report_io import (  # noqa: E402
-    flatten_for_csv,
     report_to_turtle,
+    write_report_csv_file,
 )
 
 
@@ -100,9 +100,7 @@ def main() -> int:
         # a single downloadable CSV FILE (like the reference's export), not
         # a Spark part-file directory — the report is driver-sized
         csv_path = os.path.join(args.out_dir, "report.csv")
-        flatten_for_csv(rep.results, preferred_lang=args.lang).toPandas().to_csv(
-            csv_path, index=False
-        )
+        write_report_csv_file(rep.results, csv_path, preferred_lang=args.lang)
         print(f"\nwrote {ttl_path} and {csv_path}")
 
     return 0 if rep.conforms else 1
