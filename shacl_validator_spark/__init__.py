@@ -13,7 +13,7 @@ idiomatic Spark DataFrame pipeline designed for 10^12-document scale:
 - ``operators``    — the relational core: validation rule executor, report
                      analytics, dataset discovery joins, entity linking,
                      connected components, and the corpus operators
-                     (dedup, quality, web, graph) kept as a unit-tested
+                     (dedup, web, graph) kept as a unit-tested
                      library.
 - ``sources``      — pages synthesis, text/triple extraction (vectorized
                      Arrow UDFs), report Turtle/CSV sinks and parser.

@@ -1,17 +1,13 @@
-"""Scalar column functions: text analysis + the reference's string helpers.
+"""Scalar column functions: the reference's string helpers.
 
 All pure ``pyspark.sql.functions`` compositions — JVM-side, whole-stage
-codegen, no UDFs (SURVEY.md §2.7).  The text-analysis family (language-ID,
-quality scoring, token counting, fingerprinting) is the training-data
-pipeline surface required on top of the reference's own operators.
+codegen, no UDFs (SURVEY.md §2.7).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-
-# --- reference string helpers (SURVEY.md §2.7) ------------------------------
 
 
 def normalize_lang(col: Column) -> Column:
@@ -73,74 +69,6 @@ def compact_iri(col: Column) -> Column:
         val = F.concat(F.lit(pfx + ":"), F.substring(col, len(ns) + 1, 10_000))
         out = F.when(cond, val) if out is None else out.when(cond, val)
     return out.otherwise(local_name(col))
-
-
-# --- training-data text analysis --------------------------------------------
-
-# Tiny stopword sets per language for the n-gram language-ID heuristic;
-# fixed vocab, deterministic.
-_LANG_MARKERS: dict[str, list[str]] = {
-    "en": [" the ", " and ", " of ", " to ", " is ", " in "],
-    "es": [" el ", " la ", " de ", " que ", " los ", " es "],
-    "de": [" der ", " die ", " und ", " das ", " ist ", " ein "],
-    "fr": [" le ", " la ", " et ", " les ", " des ", " est "],
-}
-
-TOKEN_PATTERN = r"[A-Za-z0-9]+(?:'[a-z]+)?"
-
-
-def language_id(text: Column) -> Column:
-    """Marker-word language-ID heuristic: the language with the most
-    stopword hits wins; zero hits → 'und'; equal-hit TIES break toward the
-    lexicographically-largest language code (the (hits, lang) struct
-    ordering under F.greatest — deterministic, and mirrored verbatim by
-    the DuckDB oracle's CASE precedence).
-
-    Pure column expression: per-language hit counts via regexp_count.
-    """
-    padded = F.concat(F.lit(" "), F.lower(text), F.lit(" "))
-    scores = []
-    for lang, markers in _LANG_MARKERS.items():
-        pat = "|".join(m.replace(" ", r"\s") for m in markers)
-        scores.append(F.struct(F.regexp_count(padded, F.lit(pat)).alias("hits"), F.lit(lang).alias("lang")))
-    best = F.greatest(*scores) if len(scores) > 1 else scores[0]
-    return F.when(best["hits"] > 0, best["lang"]).otherwise(F.lit("und"))
-
-
-def token_count(text: Column) -> Column:
-    """Whitespace/BPE-ish token count via a single regexp scan."""
-    return F.regexp_count(text, F.lit(TOKEN_PATTERN)).cast("long")
-
-
-def quality_score(text: Column) -> Column:
-    """Document quality heuristic in [0,1]: length band, punctuation ratio,
-    stopword presence, mean word length band.
-
-    Mirrors common web-corpus quality filters (C4-style) as one codegen'd
-    expression; used to gate training-data documents.
-    """
-    n_chars = F.length(text)
-    n_tokens = token_count(text)
-    n_punct = F.regexp_count(text, F.lit(r"[^\w\s]"))
-    n_stop = F.regexp_count(
-        F.concat(F.lit(" "), F.lower(text), F.lit(" ")),
-        F.lit(r"\s(the|and|of|to|is|in|el|la|de|que|der|die|und)\s"),
-    )
-    mean_word_len = F.when(n_tokens > 0, n_chars / n_tokens).otherwise(F.lit(0.0))
-    len_ok = F.when((n_chars >= 64) & (n_chars <= 100000), 1.0).otherwise(0.0)
-    punct_ok = F.when(n_chars > 0, 1.0 - F.least(n_punct / n_chars * 5, F.lit(1.0))).otherwise(
-        F.lit(0.0)
-    )
-    stop_ok = F.when(n_stop > 0, 1.0).otherwise(0.0)
-    wordlen_ok = F.when((mean_word_len >= 3) & (mean_word_len <= 12), 1.0).otherwise(0.0)
-    return (len_ok * 0.25 + punct_ok * 0.25 + stop_ok * 0.25 + wordlen_ok * 0.25).cast("double")
-
-
-def doc_fingerprint(text: Column) -> Column:
-    """Deterministic 64-bit document fingerprint (rolling-hash stand-in):
-    xxhash64 of the whitespace-normalized, lowercased text."""
-    normalized = F.trim(F.regexp_replace(F.lower(text), r"\s+", " "))
-    return F.xxhash64(normalized)
 
 
 def preprocess_markdown(text: Column) -> Column:

@@ -19,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.text import TOKEN_PATTERN
+TOKEN_PATTERN = r"[A-Za-z0-9]+(?:'[a-z]+)?"
 
 
 def _normalized(text) -> F.Column:

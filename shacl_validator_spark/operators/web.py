@@ -31,7 +31,7 @@ unbounded shuffle is phase 1's, which is salted by construction.
 Reference scope note: the reference validator operates on catalog/RDF
 inputs, not crawls (see SURVEY.md §2.1); these operators are part of the
 training-data layer this repo adds on top, alongside
-operators/dedup.py and operators/quality.py.
+operators/dedup.py.
 """
 
 from __future__ import annotations

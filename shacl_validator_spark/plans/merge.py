@@ -6,7 +6,7 @@ no Iceberg jars (SURVEY.md §7.3 environment note), so this module provides
 the same contract over partitioned parquet:
 
 - the table is hash-partitioned by ``partition_key =
-  pmod(xxhash64(subject), n_buckets)`` — subject-keyed layout so validation
+  pmod(xxhash64(subject), N_BUCKETS)`` — subject-keyed layout so validation
   targeting and downstream entity joins co-locate (SURVEY.md §4 "bucketed
   layout on subject");
 - MERGE = left-anti join of the incoming batch against existing keys in the
@@ -42,10 +42,14 @@ MERGE_KEY = [
     "graph",
 ]
 
+# Subject hash buckets of the merged table's ``partition_key``; the Iceberg
+# DDL's ``bucket(N_BUCKETS, subject)`` uses the same count.
+N_BUCKETS = 32
 
-def with_partition_key(df: DataFrame, n_buckets: int = 32) -> DataFrame:
+
+def with_partition_key(df: DataFrame) -> DataFrame:
     return df.withColumn(
-        "partition_key", F.pmod(F.xxhash64(F.col("subject")), n_buckets).cast("int")
+        "partition_key", F.pmod(F.xxhash64(F.col("subject")), N_BUCKETS).cast("int")
     )
 
 
@@ -53,7 +57,6 @@ def merge_triples(
     spark: SparkSession,
     table_path: str,
     batch: DataFrame,
-    n_buckets: int = 32,
     assume_unique: bool = False,
 ) -> int:
     """MERGE WHEN NOT MATCHED THEN INSERT; returns rows inserted.
@@ -70,7 +73,7 @@ def merge_triples(
     partition is written by many parallel tasks, each producing one file in
     the partition directory, instead of one straggler task per hot key.
     """
-    keyed = with_partition_key(batch, n_buckets)
+    keyed = with_partition_key(batch)
     if not assume_unique:
         keyed = keyed.dropDuplicates(MERGE_KEY)
     salt = F.pmod(F.xxhash64(F.col("graph")), 8).alias("_salt")
@@ -180,9 +183,7 @@ def iceberg_available(spark: SparkSession) -> bool:
         return False
 
 
-def bench_iceberg_merge(
-    spark: SparkSession, batch: DataFrame, warehouse_dir: str, n_buckets: int = 32
-) -> dict:
+def bench_iceberg_merge(spark: SparkSession, batch: DataFrame, warehouse_dir: str) -> dict:
     """Dual-path MERGE equivalence probe for the bench (VERDICT r3 #7).
 
     When the Iceberg runtime is present: configures a local hadoop catalog
@@ -212,13 +213,13 @@ def bench_iceberg_merge(
     cols = ", ".join(f"{c} STRING" for c in MERGE_KEY)
     spark.sql(
         f"CREATE TABLE {table} ({cols}) USING iceberg "
-        f"PARTITIONED BY (bucket({n_buckets}, subject))"
+        f"PARTITIONED BY (bucket({N_BUCKETS}, subject))"
     )
     inserted1 = merge_triples_iceberg(spark, table, batch)
     inserted2 = merge_triples_iceberg(spark, table, batch)  # replay → 0
     emu_dir = tempfile.mkdtemp(prefix="kg_merge_emu_")
-    emu1 = merge_triples(spark, os.path.join(emu_dir, "t"), batch, n_buckets=n_buckets)
-    emu2 = merge_triples(spark, os.path.join(emu_dir, "t"), batch, n_buckets=n_buckets)
+    emu1 = merge_triples(spark, os.path.join(emu_dir, "t"), batch)
+    emu2 = merge_triples(spark, os.path.join(emu_dir, "t"), batch)
     return {
         "status": "ran",
         "iceberg_inserted": inserted1,

@@ -262,9 +262,7 @@ def run_pipeline(
     out_dir: str,
     profile: str = "kg_extraction",
     n_groups: int = 4,
-    n_buckets: int = 32,
     resume: bool = True,
-    extra_alias_rows: list[tuple[str, str]] | None = None,
     parallel_groups: int = 1,
 ) -> PipelineResult:
     """Run extract → link → canonicalize → validate → MERGE over ``pages``.
@@ -297,7 +295,7 @@ def run_pipeline(
             done = {k for k, v in json.load(f).items() if v == "done"}
 
     shapes = compile_shapes(profile_shapes_ttl(profile))
-    adict = alias_dict_df(spark, alias_rows() + (extra_alias_rows or []))
+    adict = alias_dict_df(spark, alias_rows())
 
     totals = {"triples_in": 0, "triples_valid": 0, "violations": 0, "merged": 0}
     stage_seconds: dict[str, float] = {}
@@ -443,9 +441,7 @@ def run_pipeline(
         # observe an earlier one's inserts for the anti-join to be
         # exactly-once
         with commit_lock:
-            merged = merge_triples(
-                spark, table_path, conformant, n_buckets=n_buckets, assume_unique=True
-            )
+            merged = merge_triples(spark, table_path, conformant, assume_unique=True)
             # the merge has run an action over the observed plan by now, so
             # the metrics read normally returns immediately.  On a
             # statically-empty input AQE's empty-relation propagation

@@ -79,7 +79,6 @@ def validated_triples_stream_writer(
     out_dir: str,
     constraint_rows: list[dict],
     checkpoint_dir: str | None = None,
-    n_buckets: int = 32,
     entailment: str = "rdfs",
 ):
     """Per-micro-batch validate → conformant-filter → idempotent MERGE for
@@ -96,12 +95,12 @@ def validated_triples_stream_writer(
     file listing — measured stale even after refreshByPath, on plain paths
     and catalog tables alike), so each epoch builds a fresh plan — but
     validate()'s expression cache (operators/validate.py) memoizes every
-    input-independent driver-side artifact (literal check chains, facet
-    LocalRelation, focus-check arrays) keyed by the constraint rows, so
-    the per-epoch rebuild costs a fraction of the first build.  validate()
-    persists nothing, so a long-running stream accumulates no storage
-    blocks.  The returned writer exposes ``writer.stats`` for
-    observability/tests."""
+    input-independent driver-side artifact (literal check chains, the
+    result-metadata and facet when-chains, focus-check arrays) keyed by
+    the constraint rows, so the per-epoch rebuild costs a fraction of the
+    first build.  validate() persists nothing, so a long-running stream
+    accumulates no storage blocks.  The returned writer exposes
+    ``writer.stats`` for observability/tests."""
     from ..model import TRIPLE_SCHEMA
     from ..operators.validate import validate
     from ..plans.merge import merge_triples
@@ -128,7 +127,6 @@ def validated_triples_stream_writer(
             spark,
             f"{out_dir}/triples",
             conformant_triples(batch, spark.read.parquet(report_path)),
-            n_buckets=n_buckets,
         )
         _fs_rm(scratch)
         stats["epochs"] += 1

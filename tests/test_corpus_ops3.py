@@ -1,14 +1,9 @@
-"""Round-3 corpus operators: chunk-level boilerplate dedup, unigram-LM
-quality scoring, and cross-corpus (incremental) dedup."""
+"""Round-3 corpus operators: chunk-level boilerplate dedup and
+cross-corpus (incremental) dedup."""
 
 from __future__ import annotations
 
-import math
-
-import pytest
-
 from shacl_validator_spark.operators.dedup import chunk_dedup
-from shacl_validator_spark.operators.quality import unigram_logprob
 
 
 def test_chunk_dedup_drops_shared_chunks(spark):
@@ -49,23 +44,6 @@ def test_chunk_dedup_reassembles_in_order(spark):
     out = {r["doc_id"]: r for r in chunk_dedup(docs, window=2, max_docs=2).collect()}
     assert out[1]["clean_text"] == "aa bb cc dd"
     assert out[2]["clean_text"] == "xx yy zz ww"
-
-
-def test_unigram_logprob_hand_computed(spark):
-    # corpus: "a a b" + "b c" -> counts a=2 b=2 c=1, N=5
-    docs = spark.createDataFrame(
-        [(1, "a a b"), (2, "b c")], "doc_id long, text string"
-    )
-    out = {r["doc_id"]: r for r in unigram_logprob(docs).collect()}
-    lp = lambda n: math.log(n / 5)  # noqa: E731
-    exp1 = (2 * lp(2) + 1 * lp(2)) / 3
-    exp2 = (lp(2) + lp(1)) / 2
-    assert out[1]["n_tokens"] == 3
-    assert out[1]["logprob"] == pytest.approx(exp1, abs=1e-6)
-    assert out[2]["n_tokens"] == 2
-    assert out[2]["logprob"] == pytest.approx(exp2, abs=1e-6)
-    # typical doc (common tokens) scores HIGHER than rare-token doc
-    assert out[1]["logprob"] > out[2]["logprob"]
 
 
 # --- cross-corpus (incremental) dedup ----------------------------------------

@@ -1,5 +1,5 @@
-"""Scalar function tests: compaction, local names, language-ID, quality,
-tokens, fingerprints, severity mapping."""
+"""Scalar function tests: compaction, local names, language tags,
+severity mapping, markdown preprocessing, file-size formatting."""
 
 from __future__ import annotations
 
@@ -7,13 +7,9 @@ from pyspark.sql import functions as F
 
 from shacl_validator_spark.functions.text import (
     compact_iri,
-    doc_fingerprint,
-    language_id,
     local_name,
     normalize_lang,
-    quality_score,
     severity_from_iri,
-    token_count,
 )
 
 
@@ -43,34 +39,6 @@ def test_severity_from_iri(spark):
     assert _one(spark, severity_from_iri, "http://www.w3.org/ns/shacl#Info") == "Info"
     assert _one(spark, severity_from_iri, "http://www.w3.org/ns/shacl#Violation") == "Violation"
     assert _one(spark, severity_from_iri, "anything-else") == "Violation"
-
-
-def test_language_id(spark):
-    assert _one(spark, language_id, "the cat and the dog is in the house") == "en"
-    assert _one(spark, language_id, "el gato es de la casa que es grande") == "es"
-    assert _one(spark, language_id, "der Hund und die Katze ist ein Tier") == "de"
-    assert _one(spark, language_id, "xyzzy plugh") == "und"
-
-
-def test_token_count(spark):
-    assert _one(spark, token_count, "hello world it's fine") == 4
-    assert _one(spark, token_count, "") == 0
-
-
-def test_quality_score_bounds(spark):
-    good = "the quick brown fox jumps over the lazy dog and runs to the house in town"
-    bad = "!!! ??? ### $$$"
-    q_good = _one(spark, quality_score, good)
-    q_bad = _one(spark, quality_score, bad)
-    assert 0.0 <= q_bad < q_good <= 1.0
-
-
-def test_fingerprint_whitespace_invariant(spark):
-    a = _one(spark, doc_fingerprint, "Hello   World\n")
-    b = _one(spark, doc_fingerprint, "  hello world ")
-    c = _one(spark, doc_fingerprint, "hello worlds")
-    assert a == b
-    assert a != c
 
 
 def test_preprocess_markdown_reference_behavior(spark):

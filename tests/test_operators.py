@@ -10,6 +10,7 @@ from shacl_validator_spark.operators.components import connected_components
 from shacl_validator_spark.operators.dedup import (
     exact_duplicates,
     minhash_lsh_pairs,
+    near_dup_clusters,
     ngram_jaccard_pairs,
     simhash,
 )
@@ -118,6 +119,22 @@ def test_connected_components_small_path_matches_distributed(spark, monkeypatch)
     assert small == dist
 
 
+def test_connected_components_raises_when_unconverged(spark, monkeypatch):
+    """A chain longer than max_iter propagation rounds must raise, not
+    silently return split components (distributed path forced)."""
+    import pytest
+
+    from shacl_validator_spark.operators import components
+
+    monkeypatch.setattr(components, "SMALL_GRAPH_EDGES", 0)
+    chain = [(f"n{i:02d}", f"n{i+1:02d}") for i in range(15)]
+    edges = spark.createDataFrame(chain, "src string, dst string")
+    with pytest.raises(RuntimeError, match="did not converge"):
+        components.connected_components(edges, max_iter=3).collect()
+    ok = components.connected_components(edges, max_iter=20)
+    assert ok.select("component").distinct().count() == 1
+
+
 def test_link_mentions_small_path_matches_distributed(spark, monkeypatch):
     from shacl_validator_spark.operators import linking
     from shacl_validator_spark.operators.linking import alias_dict_df, link_mentions
@@ -189,3 +206,19 @@ def test_minhash_big_set_verify_path_equivalent(docs):
         ).collect()
     }
     assert small == forced_big and small
+
+
+def test_near_dup_clusters_transitive_and_pad_safe(spark):
+    # ids straddle a digit-length boundary: a lexicographic (unpadded) min
+    # would pick 1000005 over 999 — the operator must return the numeric min
+    base = "alpha beta gamma delta epsilon zeta eta theta iota kappa " * 6
+    docs = spark.createDataFrame(
+        [(999, base), (1000005, base), (2000005, base), (7, "totally unrelated words here " * 8)],
+        "doc_id long, text string",
+    )
+    out = near_dup_clusters(docs, jaccard_threshold=0.999).collect()
+    assert len(out) == 1  # the singleton doc 7 is implicitly kept, not listed
+    row = out[0]
+    assert row["cluster_id"] == 999
+    assert row["n_members"] == 3
+    assert row["members"] == [999, 1000005, 2000005]
