@@ -100,3 +100,19 @@ def test_cooccurrence_hot_group_guard(spark):
     got = {(r["src"], r["dst"]) for r in e.collect()}
     # the hot group is dropped entirely; g1 yields its 3 ordered pairs
     assert got == {(1, 2), (1, 3), (2, 3)}
+
+
+def test_connected_components_raises_when_unconverged(spark, monkeypatch):
+    """A chain longer than max_iter propagation rounds must raise, not
+    silently return split components (distributed path forced)."""
+    import pytest
+
+    from shacl_validator_spark.operators import components
+
+    monkeypatch.setattr(components, "SMALL_GRAPH_EDGES", 0)
+    chain = [(f"n{i:02d}", f"n{i+1:02d}") for i in range(15)]
+    edges = spark.createDataFrame(chain, "src string, dst string")
+    with pytest.raises(RuntimeError, match="did not converge"):
+        components.connected_components(edges, max_iter=3).collect()
+    ok = components.connected_components(edges, max_iter=20)
+    assert ok.select("component").distinct().count() == 1
