@@ -162,24 +162,6 @@ def run_bench(
         triples_per_sec = res.triples_in / wall if wall > 0 else 0.0
         valid_per_sec = res.triples_valid / wall if wall > 0 else 0.0
         pages_per_sec = n_pages / wall if wall > 0 else 0.0
-        # parallel-groups axis (VERDICT r2 #9): same corpus, 2 groups
-        # processed by the thread-pooled path — exercises the serialized
-        # MERGE commit under contention; merged count must match the
-        # sequential run (exactly-once invariant)
-        # reported as its own field, NOT in the summed headline: the
-        # headline metric's query set stays comparable round-over-round;
-        # min-of-reps like every other number (a single shot conflates
-        # host noise with the thread-pooled path's cost)
-        pg2_wall = None
-        for rep in range(reps):
-            out_dir2 = os.path.join(out_dir, f"pg2_{rep}")
-            t0 = time.time()
-            res2 = run_pipeline(
-                spark, pages, out_dir2, n_groups=2, parallel_groups=2, resume=False
-            )
-            w = round(time.time() - t0, 3)
-            pg2_wall = w if pg2_wall is None else min(pg2_wall, w)
-        pg2_merged_equal = res2.merged == res.merged
     finally:
         shutil.rmtree(out_dir, ignore_errors=True)
 
@@ -236,8 +218,6 @@ def run_bench(
         "extracted_triples_per_sec": round(triples_per_sec, 1),
         "pages_per_sec": round(pages_per_sec, 1),
         "bench_reps": reps,
-        "kg_pipeline_pg2_sec": pg2_wall,
-        "pg2_merged_equal": pg2_merged_equal,
         "iceberg_merge": iceberg_merge,
         "host_steal_pct": steal_pct,
     }

@@ -12,9 +12,8 @@ idiomatic Spark DataFrame pipeline designed for 10^12-document scale:
                      src/services/SHACLValidationService.ts:101-158).
 - ``operators``    — the relational core: validation rule executor, report
                      analytics, dataset discovery joins, entity linking,
-                     connected components, and the corpus operators
-                     (dedup, web, graph) kept as a unit-tested
-                     library.
+                     connected components, and the corpus dedup operators
+                     kept as a unit-tested library.
 - ``sources``      — pages synthesis, text/triple extraction (vectorized
                      Arrow UDFs), report Turtle/CSV sinks and parser.
 - ``plans``        — end-to-end pipeline: extract → link → canonicalize →

@@ -14,9 +14,11 @@ for a 1000-executor cluster:
 - the only Python on executors is the two vectorized extraction UDFs;
 - linking/canonicalization operate on the distinct-surface set and return
   broadcast maps — the triple stream is never shuffled for linking;
-- batches are processed per input partition-group with a checkpoint
-  manifest; a restart skips completed groups and the idempotent MERGE makes
-  replays of in-flight groups exactly-once (BASELINE.json north_rule).
+- input partition groups are the unit of resumable extraction: each one
+  stages its typed triples under a checkpoint manifest, then one validate
+  and one MERGE commit every staged group, so a restart re-extracts
+  nothing already staged and the idempotent MERGE makes a replayed commit
+  exactly-once (BASELINE.json north_rule).
 """
 
 from __future__ import annotations
@@ -27,14 +29,16 @@ import shutil
 import threading
 import time
 from dataclasses import dataclass, field
+from datetime import datetime, timezone
 
 from itertools import count as _it_count
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 # Observation names are registered per SparkSession — keep them unique
-# across groups, reps, and resumed runs in one process
+# across calls, reps, and resumed runs in one process
 _OBS_IDS = _it_count()
 
 from ..local_df import local_df
@@ -54,6 +58,10 @@ from ..sources.extract import (
 )
 from ..sources.pages import alias_rows
 from .merge import MERGE_KEY, merge_triples
+
+_ENTITIES_SCHEMA = "canonical_id string, surface_forms array<string>, ent_class string"
+# a staged typed triple and the partition group that staged it
+_STAGED_SCHEMA = T.StructType(TRIPLE_SCHEMA.fields + [T.StructField("grp", T.IntegerType())])
 
 
 @dataclass
@@ -263,46 +271,54 @@ def run_pipeline(
     profile: str = "kg_extraction",
     n_groups: int = 4,
     resume: bool = True,
-    parallel_groups: int = 1,
 ) -> PipelineResult:
     """Run extract → link → canonicalize → validate → MERGE over ``pages``.
 
-    ``n_groups`` splits the input into checkpointable partition groups
-    (grouped by url hash); each group is validated and merged independently
-    with a lineage row + manifest entry, so a killed job resumes where it
-    stopped (FIXTURES.md §8).
+    ``n_groups`` splits the input into partition groups (grouped by url
+    hash), the unit of resumable extraction.  Each group that is not yet
+    done stages its typed triples to scratch and is marked ``"staged"`` in
+    the checkpoint manifest.  Then ONE ``validate()`` runs over the union
+    of the staged groups and ONE conformant-only MERGE commits them; every
+    committed group gets a lineage row and is marked ``"done"``
+    (FIXTURES.md §8).  A killed call resumes without re-extracting its
+    staged groups, and the idempotent MERGE makes a replayed commit
+    exactly-once.
 
-    ``parallel_groups`` drives groups through a thread pool: Spark's
-    scheduler interleaves the per-group jobs, so one group's Python-side
-    extraction overlaps another's shuffle — the fix for the round-1 finding
-    that thousands of groups serialize on the driver loop.  The MERGE +
-    lineage + manifest commit runs under a single lock (it must: entity
-    support triples repeat across groups, and the anti-join is only
-    exactly-once if merges are ordered); everything before the commit is
-    group-local and runs concurrently.  With the default of 1 the behavior
-    is byte-identical to the sequential loop.
+    What holds across calls: the rows one call MERGEs conform to the
+    profile as a whole, so the table a single call builds does not depend
+    on ``n_groups``.  Each later call validates only its own triples — a
+    resume after a partial commit, a second run into the same
+    ``out_dir``, or a stream micro-batch — so a node whose triples arrive
+    in different calls can still break a shape in the table (four pages
+    naming one place in four calls land four ``kg:name`` values against
+    ``sh:maxCount 3``).
     """
-    from concurrent.futures import ThreadPoolExecutor
-
+    started_at = datetime.now(timezone.utc).isoformat()
     os.makedirs(out_dir, exist_ok=True)
     manifest_path = os.path.join(out_dir, "checkpoint_manifest.json")
     lineage_path = os.path.join(out_dir, "lineage.jsonl")
     table_path = os.path.join(out_dir, "triples")
+    scratch = os.path.join(out_dir, "_scratch")
+    typed_root = os.path.join(scratch, "typed")
 
-    done: set[str] = set()
+    manifest: dict[str, str] = {}
     if resume and os.path.exists(manifest_path):
         with open(manifest_path) as f:
-            done = {k for k, v in json.load(f).items() if v == "done"}
+            manifest = json.load(f)
+
+    def _save_manifest() -> None:
+        with open(manifest_path, "w") as f:
+            json.dump(dict(sorted(manifest.items())), f)
 
     shapes = compile_shapes(profile_shapes_ttl(profile))
     adict = alias_dict_df(spark, alias_rows())
 
-    totals = {"triples_in": 0, "triples_valid": 0, "violations": 0, "merged": 0}
     stage_seconds: dict[str, float] = {}
-    ent_parts: list[DataFrame] = []
-    viol_parts: list[DataFrame] = []
-    commit_lock = threading.Lock()
-    acc_lock = threading.Lock()
+
+    def _bump(stage: str, t0: float) -> float:
+        now = time.time()
+        stage_seconds[stage] = stage_seconds.get(stage, 0.0) + now - t0
+        return now
 
     pages_g = pages.withColumn("_grp", F.pmod(F.xxhash64(F.col("url")), n_groups))
     grp_sizes = {
@@ -310,16 +326,11 @@ def run_pipeline(
         for r in pages_g.groupBy("_grp").agg(F.count("*").alias("n")).collect()
     }
 
-    def _bump(stage: str, t0: float) -> float:
-        # wall-clock per stage; with parallel groups the sums measure
-        # aggregate in-flight time, not critical path
-        with acc_lock:
-            stage_seconds[stage] = stage_seconds.get(stage, 0.0) + time.time() - t0
-        return time.time()
-
-    def _process_group(grp: int) -> None:
-        key = f"grp={grp}"
-        started = "deterministic"  # timestamps recorded as opaque markers in tests
+    todo = [g for g in range(n_groups) if manifest.get(f"grp={g}") != "done"]
+    keys = [f"grp={g}" for g in todo]
+    for grp, key in zip(todo, keys):
+        if manifest.get(key) == "staged":
+            continue
         batch_pages = pages_g.filter(F.col("_grp") == grp).drop("_grp")
         # eager stage-boundary materialization: extraction runs once, the
         # linking map and typed triples are computed once, and the
@@ -331,7 +342,7 @@ def run_pipeline(
         # worst-scaling operation measured on this pipeline (and would not
         # survive executor loss on a real cluster).
         t0 = time.time()
-        scratch = os.path.join(out_dir, "_scratch", key)
+        raw_path = os.path.join(scratch, "raw", key)
         # text-carrying input uses the JVM-gated text kernel; html-only
         # input goes through the FUSED html→text→triples kernel (one Arrow
         # pass per page instead of extract_text materialize + re-scan —
@@ -341,11 +352,9 @@ def run_pipeline(
             if "text" in batch_pages.columns
             else extract_raw_triples_from_html
         )
-        extractor(batch_pages).write.mode("overwrite").parquet(
-            os.path.join(scratch, "raw")
-        )
+        extractor(batch_pages).write.mode("overwrite").parquet(raw_path)
         # explicit schema: skips inference and keeps zero-row batches valid
-        raw = spark.read.schema(RAW_TRIPLE_SCHEMA).parquet(os.path.join(scratch, "raw"))
+        raw = spark.read.schema(RAW_TRIPLE_SCHEMA).parquet(raw_path)
         t0 = _bump("extract", t0)
 
         # the distinct-surface set is tiny after dedup — materialize it so
@@ -360,8 +369,7 @@ def run_pipeline(
         # stages get proportionally fewer partitions.  One repartition+dedup
         # shuffle on the narrow canonical stream: the surface→canonical join
         # can collapse two surface forms on one page into identical triples,
-        # so MERGE-key uniqueness is only assertable HERE — this shuffle is
-        # what lets merge_triples run assume_unique.
+        # so MERGE-key uniqueness within the group is only assertable HERE.
         #
         # Partition count must grow with DATA, not just cores: a fixed
         # count made the dedup hash-agg hold millions of 7-string keys per
@@ -377,180 +385,164 @@ def run_pipeline(
             spark.sparkContext.defaultParallelism // 4,
             -(-n_raw // 1_000_000),
         )
-        # AQE can only coalesce DOWN from the initial shuffle partition
-        # count, so the MERGE's column repartition (partition_key + salt
-        # clustering, merge.py) is granularity-capped by it: with the
-        # count pinned to cores, each clustering task falls off a spill
-        # cliff at 10^7-page groups (typed stage measured 96.9 → 42.5 s at
-        # 24M pages / 4 one-core executors with a 128-way start).  Raising
-        # it SESSION-WIDE is the wrong tool — a high start doubled the
-        # sf0.1 MinHash bench queries (2.9 s → 8.3 s, A/B'd) because AQE
-        # coalescing is not free at small scale — so it is set HERE,
-        # scoped to the pipeline tail and sized from the measured row
-        # count (~250k clustering rows per partition), and restored when
-        # the pipeline finishes.  Under parallel_groups, threads may race
-        # on this session-global conf; group sizes are uniform by
-        # construction, so racing writes land within one partition-count
-        # step of each other — benign.
-        _INIT_KEY = "spark.sql.adaptive.coalescePartitions.initialPartitionNum"
-        init_parts = max(
-            spark.sparkContext.defaultParallelism,
-            min(4096, -(-n_raw // 250_000)),
-        )
-        spark.conf.set(_INIT_KEY, str(init_parts))
         typed_triples(raw, surface_map).unionByName(
             entity_triples(surface_map)
         ).repartition(tail_parts, *MERGE_KEY).dropDuplicates(MERGE_KEY).write.mode(
             "overwrite"
-        ).parquet(os.path.join(scratch, "typed"))
-        triples = spark.read.schema(TRIPLE_SCHEMA).parquet(os.path.join(scratch, "typed"))
-        t0 = _bump("typed_triples", t0)
+        ).parquet(os.path.join(typed_root, key))
+        # mentions and the surface map are pinned, so nothing reads raw again
+        shutil.rmtree(raw_path, ignore_errors=True)
+        _bump("typed_triples", t0)
+        manifest[key] = "staged"
+        _save_manifest()
 
+    if not todo:
+        entities = local_df(spark, [], _ENTITIES_SCHEMA)
+        entities.write.mode("overwrite").parquet(os.path.join(out_dir, "entities"))
+        return PipelineResult(0, 0, 0, 0, entities, local_df(spark, [], VIOLATION_SCHEMA))
+
+    t0 = time.time()
+    staged = (
+        spark.read.option("basePath", typed_root)
+        .schema(_STAGED_SCHEMA)
+        .parquet(*(os.path.join(typed_root, k) for k in keys))
+    )
+    # Relation triples carry their page url as graph and pages are grouped
+    # by url hash, so only the entity support triples repeat across groups.
+    # They are distinct-surface sized: dedup them once, attributing each to
+    # the lowest group that staged it, so the union below is unique on the
+    # MERGE key (merge_triples may assume_unique) with no shuffle over the
+    # relation stream.  Scratch parquet rather than a checkpoint keeps the
+    # file-size statistics validate()'s join planning reads.
+    is_entity = F.col("graph").eqNullSafe(ENTITY_GRAPH)
+    ent_path = os.path.join(scratch, "entities")
+    staged.filter(is_entity).groupBy(*MERGE_KEY).agg(
+        F.min("grp").alias("grp")
+    ).write.mode("overwrite").parquet(ent_path)
+    ent_rows = spark.read.schema(_STAGED_SCHEMA).parquet(ent_path)
+    triples = staged.filter(~is_entity).unionByName(ent_rows)
+    # parquet-footer count (metadata read) of everything this call staged
+    n_staged = staged.count()
+    t0 = _bump("typed_triples", t0)
+
+    # AQE can only coalesce DOWN from the initial shuffle partition
+    # count, so the MERGE's column repartition (partition_key + salt
+    # clustering, merge.py) is granularity-capped by it: with the
+    # count pinned to cores, each clustering task falls off a spill
+    # cliff at 10^7-page inputs (typed stage measured 96.9 → 42.5 s at
+    # 24M pages / 4 one-core executors with a 128-way start).  Raising
+    # it SESSION-WIDE is the wrong tool — a high start doubled the
+    # sf0.1 MinHash bench queries (2.9 s → 8.3 s, A/B'd) because AQE
+    # coalescing is not free at small scale — so it is set HERE, once,
+    # sized from the call's staged rows (~250k clustering rows per
+    # partition), and the caller's setting is restored on exit.
+    init_key = "spark.sql.adaptive.coalescePartitions.initialPartitionNum"
+    init_prev = spark.conf.get(init_key, None)
+    spark.conf.set(
+        init_key,
+        str(max(spark.sparkContext.defaultParallelism, min(4096, -(-n_staged // 250_000)))),
+    )
+    try:
         # violation reports are a pipeline OUTPUT (the sh:ValidationReport
-        # body per partition group), not scratch — they live under
-        # out_dir/reports and survive the scratch cleanup below
-        report_path = os.path.join(out_dir, "reports", key)
-        # parquet-footer count (metadata read) for the lineage record
-        n_in = triples.count()
+        # body of the call), not scratch: written once per call under the
+        # first group it commits, so a resumed call never overwrites the
+        # report of an earlier call that committed
+        report_path = os.path.join(out_dir, "reports", keys[0])
         # entailment="none": the extractor vocabulary cannot emit
         # rdfs:subClassOf, so the subclass collect job is provably useless
         # here — this keeps the validate call free of driver-side jobs
-        validate(spark, triples, shapes, entailment="none").write.mode(
+        validate(spark, triples.drop("grp"), shapes, entailment="none").write.mode(
             "overwrite"
         ).parquet(report_path)
         violations = spark.read.schema(VIOLATION_SCHEMA).parquet(report_path)
+        # parquet-footer count — metadata read, not a scan
+        n_viol = violations.count()
         t0 = _bump("validate", t0)
 
-        # lineage's triples_valid rides the MERGE's own scan as an observed
-        # metric instead of a second anti-join pass over the typed stream —
-        # a separate conformant.count() re-ran the whole broadcast anti-join
-        # (measured ~20 s at 12M pages / 4 executors, ~4x that serialized on
-        # one): CollectMetrics counts the rows at this plan point during
+        # lineage's per-group triples_in/triples_valid ride the MERGE's own
+        # scan as observed metrics instead of extra passes over the typed
+        # stream — a separate conformant.count() re-ran the whole broadcast
+        # anti-join (measured ~20 s at 12M pages / 4 executors):
+        # CollectMetrics counts the rows at these plan points during
         # whatever action merge_triples runs first
-        obs = Observation(f"valid_{key}_{next(_OBS_IDS)}")
-        conformant = conformant_triples(triples, violations).observe(
-            obs, F.count(F.lit(1)).alias("n")
-        )
-
-        t0 = time.time()
-        # parquet-footer count — metadata read, not a scan (n_in counted
-        # above, before validate)
-        n_viol = violations.count()
-        # the MERGE + lineage + manifest commit is the serialized section:
-        # entity support triples repeat across groups, so a later merge must
-        # observe an earlier one's inserts for the anti-join to be
-        # exactly-once
-        with commit_lock:
-            merged = merge_triples(spark, table_path, conformant, assume_unique=True)
-            # the merge has run an action over the observed plan by now, so
-            # the metrics read normally returns immediately.  On a
-            # statically-empty input AQE's empty-relation propagation
-            # eliminates the CollectMetrics node entirely (no metrics row to
-            # read) — n_in==0 implies conformant==0, so skip the read.  For
-            # any OTHER plan shape that dropped the node, Observation.get
-            # does not raise — it WAITS for a metrics row that will never
-            # be published — so the read runs on a daemon thread with a
-            # bounded join and falls back to count() on timeout (the
-            # abandoned reader thread parks harmlessly; daemon => it cannot
-            # block interpreter exit).
-            if n_in == 0:
-                n_valid = 0
-            else:
-                box: dict[str, int] = {}
-
-                def _read_obs(o=obs, b=box):
-                    try:
-                        b["n"] = int(o.get["n"])
-                    except Exception:  # noqa: BLE001 — metrics unavailable
-                        pass
-
-                reader = threading.Thread(target=_read_obs, daemon=True)
-                reader.start()
-                reader.join(timeout=60.0)
-                n_valid = box.get("n")
-                if n_valid is None:
-                    n_valid = conformant.count()
-            with open(lineage_path, "a") as f:
-                f.write(
-                    json.dumps(
-                        {
-                            "partition_key": key,
-                            "src_url_count": int(grp_sizes.get(grp, 0)),
-                            "triples_in": n_in,
-                            "triples_valid": n_valid,
-                            "violations": n_viol,
-                            "started_at": started,
-                            "finished_at": "deterministic",
-                        }
-                    )
-                    + "\n"
-                )
-            done.add(key)
-            with open(manifest_path, "w") as f:
-                json.dump({k: "done" for k in sorted(done)}, f)
-        _bump("merge", t0)
-
-        ent = surface_map.groupBy("canonical_id").agg(
-            F.sort_array(F.collect_set("surface")).alias("surface_forms"),
-            F.min("ent_class").alias("ent_class"),
-        ).localCheckpoint(eager=True)
-        # every consumer of the batch's raw/typed scratch has run its action
-        # (merge appended, counts taken); without this a multi-group or
-        # resumed run accumulates a full materialized copy of every batch's
-        # streams on disk for the lifetime of the output dir
-        shutil.rmtree(scratch, ignore_errors=True)
-        with acc_lock:
-            ent_parts.append(ent)
-            viol_parts.append(violations)
-            totals["triples_in"] += n_in
-            totals["triples_valid"] += n_valid
-            totals["violations"] += n_viol
-            totals["merged"] += merged
-
-    todo = [g for g in range(n_groups) if f"grp={g}" not in done]
-    # the per-group tail raises AQE's initialPartitionNum (data-sized, see
-    # _process_group); remember the caller's setting so the pipeline leaves
-    # the session exactly as it found it
-    _init_key = "spark.sql.adaptive.coalescePartitions.initialPartitionNum"
-    _init_prev = spark.conf.get(_init_key, None)
-    try:
-        if parallel_groups <= 1:
-            for grp in todo:
-                _process_group(grp)
-        else:
-            with ThreadPoolExecutor(max_workers=parallel_groups) as pool:
-                for fut in [pool.submit(_process_group, g) for g in todo]:
-                    fut.result()
+        per_group = [F.count(F.when(F.col("grp") == g, True)).alias(k) for g, k in zip(todo, keys)]
+        obs_in = Observation(f"in_{next(_OBS_IDS)}")
+        obs_valid = Observation(f"valid_{next(_OBS_IDS)}")
+        observed = triples.observe(obs_in, *per_group)
+        conformant = conformant_triples(observed, violations).observe(obs_valid, *per_group)
+        merged = merge_triples(spark, table_path, conformant.drop("grp"), assume_unique=True)
     finally:
-        if _init_prev is None:
-            spark.conf.unset(_init_key)
+        if init_prev is None:
+            spark.conf.unset(init_key)
         else:
-            spark.conf.set(_init_key, _init_prev)
+            spark.conf.set(init_key, init_prev)
+    # n_staged == 0 implies nothing to count, and AQE's empty-relation
+    # propagation may have dropped the CollectMetrics nodes
+    n_in = _group_counts(obs_in, triples, keys) if n_staged else dict.fromkeys(keys, 0)
+    n_valid = _group_counts(obs_valid, conformant, keys) if n_staged else dict.fromkeys(keys, 0)
+    finished_at = datetime.now(timezone.utc).isoformat()
+    with open(lineage_path, "a") as f:
+        for g, k in zip(todo, keys):
+            row = {
+                "partition_key": k,
+                "src_url_count": int(grp_sizes.get(g, 0)),
+                "triples_in": n_in[k],
+                "triples_valid": n_valid[k],
+                "violations": n_viol,
+                "started_at": started_at,
+                "finished_at": finished_at,
+            }
+            f.write(json.dumps(row) + "\n")
+    manifest.update(dict.fromkeys(keys, "done"))
+    _save_manifest()
 
-    if not ent_parts:
-        entities = local_df(
-            spark, [], "canonical_id string, surface_forms array<string>, ent_class string"
-        )
-        viol_all = local_df(spark, [], VIOLATION_SCHEMA)
-    else:
-        entities = ent_parts[0]
-        for e in ent_parts[1:]:
-            entities = entities.unionByName(e)
-        viol_all = viol_parts[0]
-        for v in viol_parts[1:]:
-            viol_all = viol_all.unionByName(v)
-    entities = entities.dropDuplicates(["canonical_id"])
-    entities.write.mode("overwrite").parquet(os.path.join(out_dir, "entities"))
+    ent_out = os.path.join(out_dir, "entities")
+    ent_rows.groupBy(F.col("subject").alias("canonical_id")).agg(
+        F.sort_array(
+            F.collect_set(F.when(F.col("predicate") == KG + "name", F.col("object_value")))
+        ).alias("surface_forms"),
+        F.min(F.when(F.col("predicate") == RDF_TYPE, F.col("object_value"))).alias("ent_class"),
+    ).write.mode("overwrite").parquet(ent_out)
+    entities = spark.read.schema(_ENTITIES_SCHEMA).parquet(ent_out)
+    # every consumer of the scratch tables has run its action; without
+    # this a resumed or repeated run keeps a full copy of its streams on
+    # disk for the lifetime of the output dir
+    shutil.rmtree(scratch, ignore_errors=True)
+    _bump("merge", t0)
 
     return PipelineResult(
-        triples_in=totals["triples_in"],
-        triples_valid=totals["triples_valid"],
-        violations=totals["violations"],
-        merged=totals["merged"],
+        triples_in=sum(n_in.values()),
+        triples_valid=sum(n_valid.values()),
+        violations=n_viol,
+        merged=merged,
         entities=entities,
-        violations_df=viol_all,
+        violations_df=violations,
         stage_seconds={k: round(v, 3) for k, v in stage_seconds.items()},
     )
+
+
+def _group_counts(obs: Observation, df: DataFrame, keys: list[str]) -> dict[str, int]:
+    """Per-group row counts from an observation ``merge_triples`` has
+    already triggered.  For a plan shape that dropped the CollectMetrics
+    node, ``Observation.get`` does not raise — it WAITS for a metrics row
+    that will never be published — so the read runs on a daemon thread
+    with a bounded join and falls back to counting ``df`` on timeout (the
+    abandoned reader parks harmlessly; daemon => it cannot block
+    interpreter exit)."""
+    box: dict[str, int] = {}
+
+    def _read() -> None:
+        try:
+            box.update(obs.get)
+        except Exception:  # noqa: BLE001 — metrics unavailable
+            pass
+
+    reader = threading.Thread(target=_read, daemon=True)
+    reader.start()
+    reader.join(timeout=60.0)
+    if not box:
+        box = {f"grp={r['grp']}": r["count"] for r in df.groupBy("grp").count().collect()}
+    return {k: int(box.get(k, 0)) for k in keys}
 
 
 def prune_lineage(out_dir: str, keep: int = 10) -> int:

@@ -29,6 +29,11 @@ def validated_stream_writer(
     the stream's own micro-batching replaces partition groups); Spark's
     streaming checkpoint tracks offsets while the MERGE keys guarantee
     replayed batches insert nothing.
+
+    Conformance holds per micro-batch, not across the stream: each epoch
+    is one ``run_pipeline`` call that validates only its own triples, so
+    a node whose triples arrive in different epochs can still break a
+    shape in the merged table (see ``run_pipeline``).
     """
 
     def per_batch(batch_df: DataFrame, epoch_id: int) -> None:
@@ -89,6 +94,10 @@ def validated_triples_stream_writer(
     appended per epoch as the report output.  ``out_dir`` may be any
     Hadoop-FS URI (scratch cleanup goes through the Hadoop FileSystem
     API, not the local OS).
+
+    Conformance holds per epoch, not across the stream: each epoch
+    validates only its own triples, so a node whose triples arrive in
+    different epochs can still break a shape in the merged table.
 
     Plan-build reuse (r4, VERDICT r3 #8): a compiled DataFrame CANNOT be
     re-executed over a mutated scratch path (the analyzed plan pins the

@@ -119,6 +119,21 @@ def test_connected_components_small_path_matches_distributed(spark, monkeypatch)
     assert small == dist
 
 
+def test_connected_components_raises_when_unconverged(spark, monkeypatch):
+    """A chain longer than max_iter propagation rounds must raise, not
+    silently return split components (distributed path forced)."""
+    import pytest
+
+    from shacl_validator_spark.operators import components
+
+    monkeypatch.setattr(components, "SMALL_GRAPH_EDGES", 0)
+    chain = [(f"n{i:02d}", f"n{i+1:02d}") for i in range(15)]
+    edges = spark.createDataFrame(chain, "src string, dst string")
+    with pytest.raises(RuntimeError, match="did not converge"):
+        components.connected_components(edges, max_iter=3).collect()
+    ok = components.connected_components(edges, max_iter=20)
+    assert ok.select("component").distinct().count() == 1
+
 def test_link_mentions_small_path_matches_distributed(spark, monkeypatch):
     from shacl_validator_spark.operators import linking
     from shacl_validator_spark.operators.linking import alias_dict_df, link_mentions

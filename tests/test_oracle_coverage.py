@@ -133,3 +133,23 @@ def test_no_pickled_create_dataframe_in_package():
             and node.func.attr == "createDataFrame"
         ]
     assert not calls, "createDataFrame outside local_df.py:\n" + "\n".join(calls)
+
+
+def test_traced_pipeline_names_exist():
+    """No Spark: every name the benchmark's tracer wraps
+    (``PIPELINE_LAYERS`` in ``kgbench/kg.py``, read here with ``ast``) is a
+    module-level name of ``plans.pipeline``.  A traced run swaps each one
+    with ``setattr`` and would crash on a missing name."""
+    from shacl_validator_spark.plans import pipeline
+
+    with open(os.path.join(REPO, "kgbench", "kg.py")) as f:
+        tree = ast.parse(f.read())
+    layers = [
+        ast.literal_eval(node.value)
+        for node in tree.body
+        if isinstance(node, ast.Assign)
+        and any(isinstance(t, ast.Name) and t.id == "PIPELINE_LAYERS" for t in node.targets)
+    ]
+    assert len(layers) == 1 and layers[0]
+    missing = [name for name in layers[0] if not hasattr(pipeline, name)]
+    assert not missing, f"PIPELINE_LAYERS names missing from plans.pipeline: {missing}"
