@@ -11,9 +11,8 @@ idiomatic Spark DataFrame pipeline designed for 10^12-document scale:
                      broadcastable constraint table (reference
                      src/services/SHACLValidationService.ts:101-158).
 - ``operators``    — the relational core: validation rule executor, report
-                     analytics, dataset discovery joins, entity linking,
-                     connected components, and the corpus dedup operators
-                     kept as a unit-tested library.
+                     analytics, dataset discovery joins, entity linking and
+                     connected components.
 - ``sources``      — pages synthesis, text/triple extraction (vectorized
                      Arrow UDFs), report Turtle/CSV sinks and parser.
 - ``plans``        — end-to-end pipeline: extract → link → canonicalize →

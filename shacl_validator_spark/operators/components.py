@@ -18,12 +18,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..local_df import local_df
-
-# Below this edge count the whole graph collapses onto the driver: a pure
-# Python union-find beats ~2·max_iter distributed join jobs whose data would
-# fit in one task anyway.  This is the standard endgame of distributed CC —
-# once iterative contraction shrinks the graph, finish it locally.
+# Below this edge count ``canonicalize`` collapses the whole graph onto the
+# driver: a pure Python union-find beats ~2·max_iter distributed join jobs
+# whose data would fit in one task anyway.  This is the standard endgame of
+# distributed CC — once the graph is small, finish it locally.
 SMALL_GRAPH_EDGES = 100_000
 
 
@@ -48,25 +46,15 @@ def _driver_union_find(pairs: list[tuple[str, str]]) -> list[tuple[str, str]]:
     return sorted((n, find(n)) for n in parent)
 
 
-def connected_components(
-    edges: DataFrame,
-    max_iter: int = 10,
-    checkpoint_every: int = 1,
-) -> DataFrame:
+def connected_components(edges: DataFrame, max_iter: int = 10) -> DataFrame:
     """(src, dst) string edges → (node, component) with component = min node id.
 
     Deterministic: component ids are the lexicographic min member, so reruns
     and resumed jobs produce identical canonical ids (MERGE-key stability,
-    SURVEY.md §7.3).  Graphs of at most ``SMALL_GRAPH_EDGES`` edges
-    short-circuit to a driver-side union-find (identical output); tests set
-    the constant to 0 to force the distributed path.
+    SURVEY.md §7.3).  Always distributed: callers that may hold a small
+    graph decide on the driver endgame themselves (``canonicalize`` runs
+    ``_driver_union_find`` below ``SMALL_GRAPH_EDGES``).
     """
-    spark = edges.sparkSession
-    if SMALL_GRAPH_EDGES:
-        head = edges.limit(SMALL_GRAPH_EDGES + 1).collect()
-        if len(head) <= SMALL_GRAPH_EDGES:
-            rows = _driver_union_find([(r[0], r[1]) for r in head])
-            return local_df(spark, rows, "node string, component string")
     sym = (
         edges.select(F.col("src"), F.col("dst"))
         .unionByName(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
@@ -78,7 +66,7 @@ def connected_components(
         .withColumn("component", F.col("node"))
     )
     converged = False
-    for i in range(max_iter):
+    for _ in range(max_iter):
         # min label over closed neighborhood
         neighbor = (
             sym.join(labels, sym["dst"] == labels["node"])
@@ -89,8 +77,7 @@ def connected_components(
             .groupBy("node")
             .agg(F.min("component").alias("component"))
         )
-        if checkpoint_every and (i + 1) % checkpoint_every == 0:
-            new_labels = new_labels.localCheckpoint(eager=True)
+        new_labels = new_labels.localCheckpoint(eager=True)
         converged = (
             new_labels.alias("n")
             .join(labels.alias("o"), "node")

@@ -98,15 +98,24 @@ FILLER_SENTENCES = [
 
 
 def filler_text(pid: Column, n_sentences: int, salt: str = "fill") -> Column:
-    """Deterministic hash-picked boilerplate (~60B/sentence) for a page id."""
-    parts = [
-        _pick(
-            F.pmod(F.xxhash64(pid, F.lit(f"{salt}{i}")), len(FILLER_SENTENCES)),
+    """Deterministic hash-picked boilerplate (~60B/sentence) for a page id.
+
+    Sentence i is picked by ``xxhash64(pid, salt || i)``.  One ``transform``
+    over the sentence indices keeps the expression the same size for any
+    ``n_sentences``, so the page projection stays within whole-stage
+    codegen's 64 KB method limit."""
+    if n_sentences <= 0:
+        return F.lit("")  # sequence(0, -1) would count down
+    picks = F.transform(
+        F.sequence(F.lit(0), F.lit(n_sentences - 1)),
+        lambda i: _pick(
+            F.pmod(
+                F.xxhash64(pid, F.concat(F.lit(salt), i.cast("string"))), len(FILLER_SENTENCES)
+            ),
             FILLER_SENTENCES,
-        )
-        for i in range(n_sentences)
-    ]
-    return F.concat_ws(" ", *parts)
+        ),
+    )
+    return F.array_join(picks, " ")
 
 N_SITES = 64  # Zipf-skewed: site 0 is the hub domain
 

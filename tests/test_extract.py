@@ -5,12 +5,16 @@ extract → link → canonicalize chain against the generated oracle
 
 from __future__ import annotations
 
+from functools import reduce
+from operator import or_
+
 from pyspark.sql import functions as F
 
 from shacl_validator_spark.operators.linking import alias_dict_df, link_mentions
 from shacl_validator_spark.plans.pipeline import canonicalize, typed_triples
 from shacl_validator_spark.sources.extract import (
     KG,
+    PATTERN_GATE_LITERALS,
     extract_raw_triples,
     extract_text,
     mentions_from_raw,
@@ -32,6 +36,33 @@ def test_byte_identity(spark):
         F.col("ext") != F.col("text")
     )
     assert mism.count() == 0
+
+
+def test_synthetic_pages_compile_without_codegen_fallback(spark):
+    """The page generator compiles under whole-stage codegen, also where the
+    extractor's gate re-inlines ``text`` into a filter, and its output is
+    pinned: all-column hash sums for 0, 1 (empty tail filler), 24 and 96
+    filler sentences."""
+    key = "spark.sql.codegen.fallback"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "false")  # a codegen failure raises instead of running interpreted
+    try:
+        gate = reduce(or_, [F.col("text").contains(lit) for lit in PATTERN_GATE_LITERALS])
+        assert len(synthesize_pages(spark, 200).filter(gate).collect()) == 200
+        sums = {}
+        for n in (0, 1, 24, 96):
+            pages = synthesize_pages(spark, 200, filler_sentences=n)
+            sums[n] = int(
+                pages.select(F.sum(F.xxhash64(*pages.columns).cast("decimal(38,0)"))).first()[0]
+            )
+    finally:
+        spark.conf.set(key, old)
+    assert sums == {
+        0: -24123137186257402022,
+        1: 12893581767599816030,
+        24: 105067687823177278412,
+        96: 24029863772497293851,
+    }
 
 
 def test_find_path_equals_regex_spec():

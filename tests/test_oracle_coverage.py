@@ -3,8 +3,9 @@ latest driver CORRECTNESS file is oracle-checked here (VERDICT r2 #10 —
 the driver samples ~50 of the registered queries per round; round 2 left 5
 entries unverified in both rounds until the judge re-ran them by hand).
 
-Two guards need no Spark: the query registry is consistent, and no
-top-level package name is left unreferenced."""
+The other guards need no Spark: the query registry is consistent, no
+top-level package name is left unreferenced, and no operator module is
+imported by tests only."""
 
 from __future__ import annotations
 
@@ -153,3 +154,36 @@ def test_traced_pipeline_names_exist():
     assert len(layers) == 1 and layers[0]
     missing = [name for name in layers[0] if not hasattr(pipeline, name)]
     assert not missing, f"PIPELINE_LAYERS names missing from plans.pipeline: {missing}"
+
+
+def test_every_operator_module_has_a_non_test_importer():
+    """No Spark: every ``operators/*.py`` module is imported by the
+    package, ``tools/``, ``kgbench/``, ``bench.py`` or ``__spark_entry__.py``
+    (parsed with ``ast``; tests do not count).  An operator only its unit
+    tests import is a library nothing runs."""
+    sources = [
+        p
+        for root in ("shacl_validator_spark", "tools", "kgbench")
+        for p in _py_files(os.path.join(REPO, root))
+    ] + [os.path.join(REPO, "bench.py"), os.path.join(REPO, "__spark_entry__.py")]
+    imported: set[str] = set()
+    for path in sources:
+        # the dotted package a relative import in this file starts from
+        package = os.path.dirname(os.path.relpath(path, REPO)).replace(os.sep, ".").split(".")
+        with open(path) as f:
+            tree = ast.parse(f.read(), path)
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Import):
+                imported.update(a.name for a in node.names)
+            elif isinstance(node, ast.ImportFrom):
+                prefix = package[: len(package) - node.level + 1] if node.level else []
+                module = ".".join(prefix + ([node.module] if node.module else []))
+                imported.add(module)
+                imported.update(f"{module}.{a.name}" for a in node.names)
+    ops_dir = os.path.join(REPO, "shacl_validator_spark", "operators")
+    unimported = sorted(
+        name
+        for name in (f[: -len(".py")] for f in os.listdir(ops_dir) if f.endswith(".py"))
+        if name != "__init__" and f"shacl_validator_spark.operators.{name}" not in imported
+    )
+    assert not unimported, f"operator modules with no non-test importer: {unimported}"
