@@ -9,10 +9,13 @@ Scale notes (the plan that must survive 100 TB):
 - the constraint table is always KBs → it never becomes a join side: every
   predicate/class → constraint lookup, check facet and result-metadata
   field compiles to a literal map or when-chain evaluated map-side;
-- targeting (`sh:targetClass`) is one scan of the type sub-relation and one
-  dedup shuffle on ``(constraint_id, focusNode)``; value lookup is one scan
-  of the triples table exploded through the predicate map; the single
-  big-big join is values ⋉ targets on ``(constraint_id, focusNode)``;
+- targeting (`sh:targetClass`) is one scan of the type sub-relation with
+  NO dedup shuffle: every consumer of the target and type relations is
+  set-valued (semi-joins, ``collect_set``, the final result-identity
+  dedup), so repeated (constraint, focus) rows cost nothing but rows;
+  value lookup is one scan of the triples table exploded through the
+  predicate map; the single big-big join is values ⋉ targets on
+  ``(constraint_id, focusNode)``;
 - every join against a data-derived relation (targets, node classes,
   nested-shape offenders, lessThan minima) carries NO hint: Spark sizes it
   from plan statistics (``autoBroadcastJoinThreshold``) and AQE from
@@ -30,7 +33,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..local_df import local_df
@@ -43,6 +46,7 @@ from ..model import (
     VIOLATION_COLUMNS,
     VIOLATION_SCHEMA,
 )
+from ..session import observed_metrics
 
 XSD = "http://www.w3.org/2001/XMLSchema#"
 RDF_LANGSTRING = "http://www.w3.org/1999/02/22-rdf-syntax-ns#langString"
@@ -457,16 +461,22 @@ def _typed_with_entailment(
     carries its ancestor classes.  The edge relation is schema-sized, so
     the closure is a bounded driver BFS below SUBCLASS_EDGE_CAP and a
     log-squaring distributed closure above it; the expansion itself is one
-    broadcast join before the single types dedup shuffle — no extra
-    corpus-wide shuffle.  ``entailment="none"``: skip the subclass scan
-    entirely (callers whose producers cannot emit rdfs:subClassOf — e.g.
-    the KG pipeline's extractor vocabulary — keep the probe-free plan).
+    broadcast join — no corpus-wide shuffle.  ``entailment="none"``: skip
+    the subclass scan entirely (callers whose producers cannot emit
+    rdfs:subClassOf — e.g. the KG pipeline's extractor vocabulary — keep
+    the probe-free plan).
+
+    The pairs are NOT deduplicated: a node typed in several graphs, or
+    both as a class and as its subclass, repeats.  Every consumer is
+    set-valued (``_targets_of``, whose own consumers are; the
+    ``collect_set`` node→classes lookups), so a dedup here would only add
+    a shuffle to the bottom of the plan.
     """
     types_raw = triples.filter(F.col("predicate") == RDF_TYPE).select(
         F.col("subject"), F.col("object_value").alias("cls")
     )
     if entailment == "none":
-        return types_raw.dropDuplicates()
+        return types_raw
     edges_df = (
         triples.filter(
             (F.col("predicate") == RDFS_SUBCLASS)
@@ -478,7 +488,7 @@ def _typed_with_entailment(
     )
     head = edges_df.limit(SUBCLASS_EDGE_CAP + 1).collect()
     if not head:
-        return types_raw.dropDuplicates()
+        return types_raw
     if len(head) <= SUBCLASS_EDGE_CAP:
         up: dict[str, set[str]] = {}
         for r in head:
@@ -511,7 +521,7 @@ def _typed_with_entailment(
     extra = types_raw.join(anc_df, types_raw["cls"] == anc_df["child"]).select(
         "subject", F.col("parent").alias("cls")
     )
-    return types_raw.unionByName(extra).dropDuplicates()
+    return types_raw.unionByName(extra)
 
 
 def _targets_of(
@@ -521,7 +531,16 @@ def _targets_of(
     literal-map lookup (compile-time broadcast) — sh:targetClass over the
     type sub-relation, sh:targetSubjectsOf / targetObjectsOf over the
     predicate column, sh:targetNode as driver-side literal rows.  No join —
-    one scan each, unioned."""
+    one scan each, unioned.
+
+    The union may repeat a (constraint, focus) pair — typed twice, targeted
+    by two kinds — and is returned without a dedup shuffle: every consumer
+    either semi-joins it or emits rows that ``_eval``'s final result-
+    identity ``dropDuplicates`` collapses, and counts come from the value
+    side (``per_value``), never from how often a target repeats.  The two
+    consumers that join it against the triples — sh:closed and the
+    general-path frontier — dedup their own slice, so a node targeted k
+    times does not multiply its triples k-fold."""
     by_class: dict[str, list[int]] = {}
     by_subj_of: dict[str, list[int]] = {}
     by_obj_of: dict[str, list[int]] = {}
@@ -579,7 +598,7 @@ def _targets_of(
         targets = target_parts[0]
         for part in target_parts[1:]:
             targets = targets.unionByName(part)
-        return targets.dropDuplicates()
+        return targets
     return local_df(spark, [], "constraint_id long, focusNode string")
 
 
@@ -1272,12 +1291,13 @@ def _nested_bad_fast(
             F.col("object_value").alias("focusNode"),
         )
         mc = arts["meta_cols"]
-        agg = (
-            cand.join(per_focus, ["constraint_id", "focusNode"], "left")
-            .withColumn("n_values", F.coalesce(F.col("_n"), F.lit(0)))
-            .withColumn("min_count", mc["min_count"])
-            .withColumn("max_count", mc["max_count"])
-            .withColumn("has_value", mc["has_value"])
+        agg = cand.join(per_focus, ["constraint_id", "focusNode"], "left").withColumns(
+            {
+                "n_values": F.coalesce(F.col("_n"), F.lit(0)),
+                "min_count": mc["min_count"],
+                "max_count": mc["max_count"],
+                "has_value": mc["has_value"],
+            }
         )
         parts.append(
             agg.filter(
@@ -1356,7 +1376,8 @@ def _eval(
             sig_groups.setdefault(sig, []).append(r["constraint_id"])
     reach_cache: dict = {}
     for sig, ids in sig_groups.items():
-        frontier = targets.filter(F.col("constraint_id").isin(ids)).select(
+        # deduped here: each repeat of a target would repeat its hops
+        frontier = targets.filter(F.col("constraint_id").isin(ids)).dropDuplicates().select(
             "constraint_id",
             "focusNode",
             F.col("focusNode").alias("node"),
@@ -1422,7 +1443,7 @@ def _eval(
     # =======================================================================
     # Single-scan rule evaluation.  The value stream (every value occurrence
     # × constraint) is the only big relation; everything it needs — targets,
-    # the distinct (node, class) type set — is joined onto it (facets are
+    # the (node, class) type pairs — is joined onto it (facets are
     # literal expressions), every per-row component contributes one
     # nullable slot to a hit array, and a two-level cascaded aggregation on (constraint, focus[, value])
     # produces BOTH the distinct-value counts for the cardinality rules AND
@@ -1613,10 +1634,10 @@ def _eval(
     # facet join, no AQE broadcast job, stays inside whole-stage codegen.
     mc = arts["meta_cols"]
 
-    def _with_meta(df: DataFrame, extra: tuple = ()) -> DataFrame:
-        for f in ("path", "severity", "messages", "shape_iri", "foaf_page", *extra):
-            df = df.withColumn(f, mc[f])
-        return df
+    def _with_meta(df: DataFrame, extra: tuple = (), **cols: F.Column) -> DataFrame:
+        # one withColumns: each withColumn would re-analyse the growing plan
+        meta = ("path", "severity", "messages", "shape_iri", "foaf_page", *extra)
+        return df.withColumns({**cols, **{f: mc[f] for f in meta}})
 
     if check_cols:
         checks = F.array(*check_cols)
@@ -1685,60 +1706,66 @@ def _eval(
     # measured slower at bench scale and disk-amplifying at corpus scale.
 
     # cascade level 2: per focus node — value-node count + flags only
-    # (bounded row width)
-    per_focus = per_value.groupBy("constraint_id", "focusNode").agg(
+    # (bounded row width).  With sh:uniqueLang in the suite it also
+    # collects the lower-cased language tags of those constraints' value
+    # nodes (empty for every other constraint): per_value is distinct on
+    # term identity, so a tag repeats once per distinct value node sharing
+    # it, and the check reuses this aggregate instead of a branch of its own
+    ul_ids = [r["constraint_id"] for r in rows if r.get("unique_lang")]
+    focus_aggs = [
         F.count("*").alias("_n"),
         F.max(F.col("_hv").cast("int")).alias("_hv_found"),
         F.sum(F.col("_q").cast("int")).alias("_qn"),
-    )
+    ]
+    if ul_ids:
+        focus_aggs.append(
+            F.collect_list(
+                F.when(F.col("constraint_id").isin(ul_ids), F.lower("object_lang"))
+            ).alias("_ul")
+        )
+    per_focus = per_value.groupBy("constraint_id", "focusNode").agg(*focus_aggs)
 
     # targets-side LEFT join so zero-value focus nodes are seen (the classic
     # join-SHACL minCount bug, SURVEY.md §7.3); counting facets + metadata
     # attach literally (qvs_branch is a presence-only boolean slot — the
     # focus checks test isNotNull on it)
     agg = _with_meta(
-        targets.join(per_focus, ["constraint_id", "focusNode"], "left")
-        .withColumn("n_values", F.coalesce(F.col("_n"), F.lit(0)))
-        .withColumn("n_q", F.coalesce(F.col("_qn"), F.lit(0))),
+        targets.join(per_focus, ["constraint_id", "focusNode"], "left"),
         extra=(
             "min_count", "max_count", "q_min_count", "q_max_count",
             "has_value", "qvs_branch",
         ),
+        n_values=F.coalesce(F.col("_n"), F.lit(0)),
+        n_q=F.coalesce(F.col("_qn"), F.lit(0)),
     )
 
     # per-focus components (MinCount, MaxCount, HasValue, QualifiedMin/Max)
     # become ONE violation-struct array per agg row (from the cached
     # compilation), exploded once; array_compact + explode for the same
-    # no-HOF reason as the per-value hit stream
-    exploded = agg.select(
-        *agg.columns,
-        F.explode(F.array_compact(arts["focus_checks"])).alias("_vio"),
-    ).withColumn("object_value", F.col("_vio.v"))
+    # no-HOF reason as the per-value hit stream.  sh:uniqueLang rides the
+    # same explode: one candidate per distinct tag, kept when the tag occurs
+    # on more than one value node (one violation per duplicated tag)
+    vios = F.array_compact(arts["focus_checks"])
+    keep = None
+    if ul_ids:
+        ul_comp = _component("UniqueLang")
+        tags = F.array_distinct(F.coalesce(F.col("_ul"), F.array().cast("array<string>")))
+        vios = F.concat(
+            vios,
+            F.arrays_zip(F.array_repeat(F.lit(ul_comp), F.size(tags)), tags).cast(
+                "array<struct<comp:string,v:string>>"
+            ),
+        )
+        keep = (F.col("_vio.comp") != ul_comp) | (
+            F.size("_ul") - F.size(F.array_remove("_ul", F.col("_vio.v"))) > 1
+        )
+    exploded = agg.select("*", F.explode(vios).alias("_vio"))
+    if keep is not None:
+        exploded = exploded.filter(keep)
+    exploded = exploded.withColumn("object_value", F.col("_vio.v"))
     result = result.unionByName(
         _as_violations(exploded, F.col("_vio.comp"), F.col("_vio.v"))
     )
-
-    # sh:uniqueLang stays a separate (rarely-built) branch: one violation per
-    # (focus, duplicated language tag); per_value is distinct on term
-    # identity so the count is over distinct value nodes sharing a tag
-    ul_ids = [r["constraint_id"] for r in rows if r.get("unique_lang")]
-    if ul_ids:
-        dup_langs = (
-            per_value.filter(
-                F.col("constraint_id").isin(ul_ids) & F.col("object_lang").isNotNull()
-            )
-            .groupBy(
-                "constraint_id", "focusNode", F.lower("object_lang").alias("_lang")
-            )
-            .agg(F.count(F.lit(1)).alias("_c"))
-            .filter(F.col("_c") > 1)
-        )
-        dup_langs = _with_meta(dup_langs).withColumn(
-            "object_value", F.col("_lang")
-        )
-        result = result.unionByName(
-            _as_violations(dup_langs, _component("UniqueLang"), F.col("_lang"))
-        )
 
     # sh:equals / sh:disjoint (pair components, SHACL core §4.4): the
     # path's value SET is compared with the sibling property's value SET
@@ -1825,7 +1852,8 @@ def _eval(
     # closed shapes' target set — same shuffle shape as the value stream.
     closed_ids = [r["constraint_id"] for r in rows if r.get("closed")]
     if closed_ids:
-        ct = targets.filter(F.col("constraint_id").isin(closed_ids))
+        # deduped here: each repeat of a target would repeat its triples
+        ct = targets.filter(F.col("constraint_id").isin(closed_ids)).dropDuplicates()
         closed_vals = triples.select(
             "subject", "predicate", "object_value"
         ).join(
@@ -1949,8 +1977,11 @@ def validate_report(
     ``constraint_rows`` (shapes/suites.py ``PROFILE_RULES``).
 
     The validation plan runs exactly once: ``results`` is materialized with
-    ``localCheckpoint`` and the violation count, the Turtle/CSV sinks and the
-    analytics all read those pinned rows.  The rows stay distributed in
+    ``localCheckpoint``, and the Turtle/CSV sinks and the analytics read
+    those pinned rows.  The violation count rides the pin as an
+    ``Observation`` on the checkpointed plan, so it costs no job of its
+    own; only if the metrics do not arrive does it count the pinned rows
+    (``session.observed_metrics``).  The rows stay distributed in
     executor storage, so executor loss invalidates them; they are not
     registered in the CacheManager, so nothing has to unpersist them.
 
@@ -1965,8 +1996,14 @@ def validate_report(
     if triples.isEmpty():
         results = _sentinel(spark, SENTINEL_EMPTY_CONTENT, "Empty RDF content")
         return ValidationReport(False, results, 1)
-    results = validate(spark, triples, constraint_rows).localCheckpoint(eager=True)
-    n_viol = results.filter(F.col("resultSeverity") == SEVERITY_VIOLATION).count()
+    is_viol = F.col("resultSeverity") == SEVERITY_VIOLATION
+    obs = Observation()
+    results = (
+        validate(spark, triples, constraint_rows)
+        .observe(obs, F.count(F.when(is_viol, 1)).alias("n"))
+        .localCheckpoint(eager=True)
+    )
+    n_viol = observed_metrics(obs, lambda: {"n": results.filter(is_viol).count()})["n"]
     return ValidationReport(n_viol == 0, results, n_viol)
 
 

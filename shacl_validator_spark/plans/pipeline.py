@@ -26,7 +26,6 @@ from __future__ import annotations
 import json
 import os
 import shutil
-import threading
 import time
 from dataclasses import dataclass, field
 from datetime import datetime, timezone
@@ -46,6 +45,7 @@ from ..model import RDF_TYPE, SEVERITY_VIOLATION, TRIPLE_SCHEMA, VIOLATION_SCHEM
 from ..operators import components
 from ..operators.linking import alias_dict_df, link_mentions
 from ..operators.validate import validate
+from ..session import observed_metrics
 from ..shapes import compile_shapes, profile_shapes_ttl
 from ..sources.extract import (
     ENTITY,
@@ -523,25 +523,12 @@ def run_pipeline(
 
 def _group_counts(obs: Observation, df: DataFrame, keys: list[str]) -> dict[str, int]:
     """Per-group row counts from an observation ``merge_triples`` has
-    already triggered.  For a plan shape that dropped the CollectMetrics
-    node, ``Observation.get`` does not raise — it WAITS for a metrics row
-    that will never be published — so the read runs on a daemon thread
-    with a bounded join and falls back to counting ``df`` on timeout (the
-    abandoned reader parks harmlessly; daemon => it cannot block
-    interpreter exit)."""
-    box: dict[str, int] = {}
-
-    def _read() -> None:
-        try:
-            box.update(obs.get)
-        except Exception:  # noqa: BLE001 — metrics unavailable
-            pass
-
-    reader = threading.Thread(target=_read, daemon=True)
-    reader.start()
-    reader.join(timeout=60.0)
-    if not box:
-        box = {f"grp={r['grp']}": r["count"] for r in df.groupBy("grp").count().collect()}
+    already triggered; counts ``df`` when the metrics do not arrive
+    (``session.observed_metrics``)."""
+    box = observed_metrics(
+        obs,
+        lambda: {f"grp={r['grp']}": r["count"] for r in df.groupBy("grp").count().collect()},
+    )
     return {k: int(box.get(k, 0)) for k in keys}
 
 

@@ -491,3 +491,206 @@ def test_nested_fast_path_matches_full_eval(spark, monkeypatch):
     monkeypatch.setattr(vmod, "_nested_fast_ok", lambda sub_rows: False)
     full = canon(validate(spark, t, rows))
     assert fast == full and len(fast) > 0
+
+
+MULTI_SHAPES_TTL = """
+@prefix sh:  <http://www.w3.org/ns/shacl#> .
+@prefix rdf: <http://www.w3.org/1999/02/22-rdf-syntax-ns#> .
+@prefix ex:  <http://example.org/data#> .
+
+ex:AShape a sh:NodeShape ;
+    sh:targetClass ex:A ;
+    sh:targetNode ex:n ;
+    sh:closed true ;
+    sh:ignoredProperties ( rdf:type ) ;
+    sh:property [ sh:path ex:p ; sh:minCount 2 ] ;
+    sh:property [ sh:path ex:q ; sh:maxCount 1 ] ;
+    sh:property [ sh:path ex:r ; sh:class ex:C ] ;
+    sh:property [ sh:path ex:title ; sh:uniqueLang true ] ;
+    sh:property [ sh:path ex:flag ] ;
+    sh:property [ sh:path ( ex:r ex:s ) ; sh:minCount 1 ] ;
+    sh:sparql [
+        sh:message "flagged"@en ;
+        sh:select \"\"\"
+            SELECT $this ?value WHERE {
+                $this <http://example.org/data#flag> ?value .
+                FILTER(?value = "bad")
+            }
+        \"\"\" ;
+    ] .
+"""
+
+MULTI_DATA_TTL = """
+@prefix rdfs: <http://www.w3.org/2000/01/rdf-schema#> .
+@prefix ex:   <http://example.org/data#> .
+
+ex:B rdfs:subClassOf ex:A .
+ex:n a ex:A , ex:B ;
+    ex:p "only one" ;
+    ex:q "q1" , "q2" ;
+    ex:r ex:untyped ;
+    ex:title "one"@en , "two"@EN , "uno"@es ;
+    ex:flag "bad" ;
+    ex:extra "outside the closed shape" .
+"""
+
+
+def test_target_multiplicity_keeps_set_semantics(spark):
+    """A focus node targeted many times for one constraint — its triples
+    asserted in two named graphs, typed as ex:A and as a subclass of ex:A
+    (rdfs entailment), and hit by sh:targetClass and sh:targetNode — gives
+    the same results as the graph with each triple kept once, and no
+    result row repeats: targeting and typing are sets to every consumer,
+    including the two that join targets against the triples (sh:closed
+    and the sequence-path frontier)."""
+    rows = compile_shapes(MULTI_SHAPES_TTL)
+    once = triples_from_turtle(spark, MULTI_DATA_TTL, graph="g1")
+    twice = once.unionByName(triples_from_turtle(spark, MULTI_DATA_TTL, graph="g2"))
+
+    def key(r):
+        return (*r[:3], tuple(r.message or ()), *r[4:])
+
+    got_once = [key(r) for r in validate(spark, once, rows, entailment="rdfs").collect()]
+    got_twice = [key(r) for r in validate(spark, twice, rows, entailment="rdfs").collect()]
+    assert len(set(got_twice)) == len(got_twice)
+    assert len(set(got_once)) == len(got_once)
+    assert set(got_twice) == set(got_once)
+    comps = sorted(c.rsplit("#", 1)[-1] for _, _, _, _, _, c, *_ in got_twice)
+    assert comps == sorted(
+        f"{c}ConstraintComponent"
+        for c in (
+            "MinCount", "MinCount", "MaxCount", "Class", "UniqueLang", "Closed", "SPARQL"
+        )
+    ), comps
+    ul = [k for k in got_twice if k[5].endswith("UniqueLangConstraintComponent")]
+    assert [k[2] for k in ul] == ["en"]
+
+
+def _dcat_ap_es_nonconforming() -> str:
+    """The DCAT-AP-ES sample with one Violation of MinCount and UniqueLang
+    each and an In Warning on its dataset."""
+    from shacl_validator_spark.shapes.suites import SAMPLE_CATALOGS
+
+    ttl = (
+        SAMPLE_CATALOGS["dcat_ap_es"]
+        .replace('dct:description "Mediciones horarias de calidad del aire"@es ;\n', "")
+        .replace(
+            "<http://publications.europa.eu/resource/authority/data-theme/ENVI>",
+            "<https://example.org/not-a-theme>",
+        )
+        .replace('dct:title "Air quality"@en ;', 'dct:title "Aire"@es ;')
+    )
+    assert ttl != SAMPLE_CATALOGS["dcat_ap_es"]
+    return ttl
+
+
+# Spark jobs per warm request on the test session (local[4], 4 shuffle
+# partitions): the conforming sample, and _dcat_ap_es_nonconforming()
+SAMPLE_JOB_BUDGET = 14
+BAD_JOB_BUDGET = 18
+
+
+def test_validate_report_job_budget(spark):
+    """Spark jobs per warm catalog request (validate_report +
+    report_to_turtle + severity_summary) stay within the budget the
+    per-request plan reaches: no dedup shuffles in targeting, uniqueLang
+    on the shared per-focus aggregate, the violation count observed on the
+    pin, and a one-partition severity sort.  Counted per job group with
+    the status tracker."""
+    from shacl_validator_spark.operators.analytics import severity_summary
+    from shacl_validator_spark.shapes.profiles import compiled_profile
+    from shacl_validator_spark.shapes.suites import SAMPLE_CATALOGS
+    from shacl_validator_spark.sources.report_io import report_to_turtle
+
+    rows = compiled_profile("dcat_ap_es")
+    sc = spark.sparkContext
+
+    def request(ttl: str, group: str | None) -> tuple[int, bool]:
+        triples = triples_from_turtle(spark, ttl)
+        if group:
+            sc.setJobGroup(group, group)
+        try:
+            rep = validate_report(spark, triples, rows)
+            report_to_turtle(rep.results, rep.conforms, profile="dcat_ap_es")
+            severity_summary(rep.results).collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        jobs = len(sc.statusTracker().getJobIdsForGroup(group)) if group else 0
+        return jobs, rep.conforms
+
+    bad = _dcat_ap_es_nonconforming()
+    for ttl in (SAMPLE_CATALOGS["dcat_ap_es"], bad):  # warm: codegen, caches
+        request(ttl, None)
+    sample_jobs, sample_ok = request(SAMPLE_CATALOGS["dcat_ap_es"], "budget-sample")
+    bad_jobs, bad_ok = request(bad, "budget-bad")
+    assert sample_ok and not bad_ok
+    assert sample_jobs <= SAMPLE_JOB_BUDGET, sample_jobs
+    assert bad_jobs <= BAD_JOB_BUDGET, bad_jobs
+
+
+def test_conforming_sample_observed_count(spark):
+    """The violation count read from the pin's observed metrics: the
+    conforming sample (an empty result) reports 0, and conforms."""
+    from shacl_validator_spark.shapes.profiles import compiled_profile
+    from shacl_validator_spark.shapes.suites import SAMPLE_CATALOGS
+
+    rep = validate_report(
+        spark,
+        triples_from_turtle(spark, SAMPLE_CATALOGS["dcat_ap_es"]),
+        compiled_profile("dcat_ap_es"),
+    )
+    assert rep.conforms is True
+    assert rep.total_violations == 0
+
+
+def test_validate_report_counts_when_metrics_never_arrive(spark, monkeypatch):
+    """If Observation.get blocks (a plan that lost its CollectMetrics
+    node), validate_report gives up after the bounded wait, counts the
+    pinned rows instead and returns the same report."""
+    import threading
+
+    from pyspark.sql import Observation
+
+    from shacl_validator_spark import session
+    from shacl_validator_spark.shapes.profiles import compiled_profile
+
+    rows = compiled_profile("dcat_ap_es")
+    triples = triples_from_turtle(spark, _dcat_ap_es_nonconforming())
+    want = validate_report(spark, triples, rows)
+
+    release = threading.Event()
+    monkeypatch.setattr(Observation, "get", property(lambda self: release.wait() and {}))
+    monkeypatch.setattr(session, "OBSERVATION_WAIT_S", 0.1)
+    try:
+        got = validate_report(spark, triples, rows)
+    finally:
+        release.set()
+
+    def key(r):
+        return (*r[:3], tuple(r.message or ()), *r[4:])
+
+    assert (got.conforms, got.total_violations) == (want.conforms, want.total_violations)
+    assert want.total_violations > 0
+    assert sorted(map(key, got.results.collect())) == sorted(
+        map(key, want.results.collect())
+    )
+
+
+def test_severity_summary_sorts_in_one_partition(spark):
+    """At most one row per severity: the sort needs no range partitioning,
+    and rows come in Violation, Warning, Info order."""
+    from shacl_validator_spark.operators.analytics import severity_summary
+
+    sev = ["Info", "Warning", "Violation", "Info", "Warning", "Info"]
+    results = spark.createDataFrame(
+        [(f"n{i}", None, None, None, s, "c", "s", None) for i, s in enumerate(sev)],
+        VIOLATION_SCHEMA,
+    ).repartition(4)
+    summary = severity_summary(results)
+    assert [tuple(r) for r in summary.collect()] == [
+        ("Violation", 1), ("Warning", 2), ("Info", 3)
+    ]
+    plan = summary._jdf.queryExecution().executedPlan().toString()
+    assert "isFinalPlan=true" in plan
+    assert "rangepartitioning" not in plan.lower(), plan
