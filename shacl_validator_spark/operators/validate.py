@@ -16,6 +16,12 @@ Scale notes (the plan that must survive 100 TB):
   value lookup is one scan of the triples table exploded through the
   predicate map; the single big-big join is values ⋉ targets on
   ``(constraint_id, focusNode)``;
+- nested shapes (sh:node, logical and qualified branches) run through the
+  same evaluator one level down, targeted at the referencing constraints'
+  value nodes; that level skips the values ⋉ targets join and evaluates
+  every value row of its predicates — a superset that is harmless because
+  the nested targets hold every value node a referencing constraint can
+  read a flag for;
 - every join against a data-derived relation (targets, node classes,
   nested-shape offenders, lessThan minima) carries NO hint: Spark sizes it
   from plan statistics (``autoBroadcastJoinThreshold``) and AQE from
@@ -642,9 +648,12 @@ def validate(
     is the driver-side output of ``shapes.compile_shapes`` — kept as rows so
     path-evaluation structure (number of steps) is known at plan-build time.
     Rows with ``nested_under`` define nested node shapes; they are evaluated
-    recursively with dynamic targets (the referencing constraint's value
-    nodes) — the Spark form of the reference engine's full-SHACL-core
-    delegation (SHACLValidationService.ts:398-408).
+    recursively by the one evaluator with dynamic targets (the referencing
+    constraints' value nodes) — the Spark form of the reference engine's
+    full-SHACL-core delegation (SHACLValidationService.ts:398-408).  A
+    nested level evaluates every value row of its predicates, not only
+    those of its targets: the nodes it flags outside the targets are never
+    value nodes of a referencing constraint, so no flag read changes.
 
     Data-derived relations — ``targets`` (constraint × typed focus node),
     the node→classes lookup, nested-shape offenders — GROW WITH THE CORPUS,
@@ -731,7 +740,8 @@ def _compiled_checks(rows: list[dict], ref_flag: dict[str, str]) -> dict:
     """All input-independent check expressions for one evaluation level:
     ``check_cols`` (per-value hit slots), ``hv_chain``/``q_chain`` (the
     per-value hasValue / qualified-shape flags), ``focus_checks`` (the
-    per-focus violation-struct array) and ``has_qvs``."""
+    per-focus violation-struct array) and ``meta_cols`` (the literal
+    result-metadata lookups)."""
     lt_by_pred: dict[str, list[int]] = {}
     for r in rows:
         if r.get("less_than"):
@@ -1175,152 +1185,8 @@ def _compiled_checks(rows: list[dict], ref_flag: dict[str, str]) -> dict:
         "hv_chain": hv_chain,
         "q_chain": q_chain,
         "focus_checks": F.array(*focus_check_cols),
-        "has_qvs": _has("qvs_branch"),
         "meta_cols": meta_cols,
     }
-
-
-# Facets that force a nested shape through the FULL evaluator: pair
-# components, closed, uniqueLang (per-focus-per-lang agg), sh:sparql,
-# qualified counting, and any reference to a deeper nested shape.
-_NESTED_FAST_BLOCKERS = (
-    "equals", "disjoint", "less_than", "less_than_or_equals",
-    "closed", "unique_lang", "sparql_select", "qvs_branch",
-    "q_min_count", "q_max_count",
-)
-
-
-def _nested_fast_ok(sub_rows: list[dict]) -> bool:
-    """A nested shape qualifies for the existence-only fast pass iff every
-    definition row is a plain single-step property shape whose components
-    are per-value checks plus min/maxCount/hasValue — the shape published
-    profiles overwhelmingly use for sh:node / logical branches."""
-    for d in sub_rows:
-        if any(d.get(k) for k in _NESTED_FAST_BLOCKERS):
-            return False
-        if _branch_refs(d):
-            return False
-        steps = d.get("path_steps")
-        if not steps or not _is_plain_single(steps):
-            return False
-    return True
-
-
-def _nested_bad_fast(
-    spark: SparkSession,
-    triples: DataFrame,
-    sub_rows: list[dict],
-    nodes: DataFrame,
-    types: DataFrame,
-) -> DataFrame:
-    """Non-conforming value nodes of a simple nested shape WITHOUT the
-    full violation assembly (r5): conformance is an EXISTENCE question —
-    "does the nested pass emit any result for this node" — so the
-    per-value hit explode, metadata attach, result projection, and final
-    result-identity dedup of _eval are all dead weight here.  One
-    predicate-pushed scan + the compiled check expressions yield the
-    per-value offenders directly; one aggregation over the same scan
-    serves the counting components (distinct value-node count per focus,
-    full RDF-term identity, zero-value focus nodes seen via a left join
-    from the candidate set).  Semantics are pinned equal to the full pass
-    by tests/test_validate.py's fast-vs-full differential and the
-    unchanged oracle hashes; the superset-evaluation argument (values of
-    non-candidate focus nodes are harmless) is the same one the caller
-    already applies to nested target derivation."""
-    by_pred: dict[str, list[int]] = {}
-    for d in sub_rows:
-        for p in d["path_steps"][0]:
-            by_pred.setdefault(p, []).append(d["constraint_id"])
-    stream = triples.select(
-        F.explode(_cid_map(by_pred)[F.col("predicate")]).alias("constraint_id"),
-        F.col("subject").alias("focusNode"),
-        "object_value",
-        "object_type",
-        "object_datatype",
-        "object_lang",
-    )
-    wanted = sorted(_level_classes(sub_rows))
-    if wanted:
-        nc = (
-            types.filter(F.col("cls").isin(wanted))
-            .groupBy(F.col("subject").alias("t_node"))
-            .agg(F.collect_set("cls").alias("t_classes"))
-        )
-        stream = stream.join(nc, stream["object_value"] == nc["t_node"], "left").drop(
-            "t_node"
-        )
-    arts = _compiled_checks_cached(sub_rows, {})
-    parts: list[DataFrame] = []
-    if arts["check_cols"]:
-        parts.append(
-            stream.filter(
-                F.size(F.array_compact(F.array(*arts["check_cols"]))) > 0
-            ).select("focusNode")
-        )
-    counting = [
-        d["constraint_id"]
-        for d in sub_rows
-        if d.get("min_count") is not None
-        or d.get("max_count") is not None
-        or d.get("has_value") is not None
-    ]
-    if counting:
-        hv = arts["hv_chain"]
-        hv_col = (
-            F.coalesce(hv, F.lit(False)) if hv is not None else F.lit(False)
-        )
-        per_focus = (
-            stream.filter(F.col("constraint_id").isin(counting))
-            .groupBy("constraint_id", "focusNode")
-            .agg(
-                # distinct VALUE NODES (term identity), mirroring _eval's
-                # per_value dedup → count cascade
-                F.countDistinct(
-                    F.struct(
-                        "object_value", "object_type",
-                        "object_datatype", "object_lang",
-                    )
-                ).alias("_n"),
-                F.max(hv_col.cast("int")).alias("_hv_found"),
-            )
-        )
-        cand = nodes.select(
-            F.explode(
-                F.array(*[F.lit(c).cast("long") for c in sorted(counting)])
-            ).alias("constraint_id"),
-            F.col("object_value").alias("focusNode"),
-        )
-        mc = arts["meta_cols"]
-        agg = cand.join(per_focus, ["constraint_id", "focusNode"], "left").withColumns(
-            {
-                "n_values": F.coalesce(F.col("_n"), F.lit(0)),
-                "min_count": mc["min_count"],
-                "max_count": mc["max_count"],
-                "has_value": mc["has_value"],
-            }
-        )
-        parts.append(
-            agg.filter(
-                (
-                    F.col("min_count").isNotNull()
-                    & (F.col("n_values") < F.col("min_count"))
-                )
-                | (
-                    F.col("max_count").isNotNull()
-                    & (F.col("n_values") > F.col("max_count"))
-                )
-                | (
-                    F.col("has_value").isNotNull()
-                    & (F.coalesce(F.col("_hv_found"), F.lit(0)) == 0)
-                )
-            ).select("focusNode")
-        )
-    if not parts:
-        return local_df(spark, [], "focusNode string")
-    bad = parts[0]
-    for p in parts[1:]:
-        bad = bad.unionByName(p)
-    return bad.dropDuplicates()
 
 
 def _eval(
@@ -1465,7 +1331,13 @@ def _eval(
     # regexes once and fold the datatype-validity dispatch per constraint.
     # Result metadata (path/severity/messages/shape) joins onto the
     # violation-sized exploded stream, never the corpus-sized one.
-    values = vals.join(targets, ["constraint_id", "focusNode"], "left_semi")
+    # A nested level (depth > 0) skips the ⋉ targets join and evaluates
+    # every value row of its predicates: see the nested-pass comment below.
+    values = (
+        vals.join(targets, ["constraint_id", "focusNode"], "left_semi")
+        if depth == 0
+        else vals
+    )
 
     # sh:class (plain facet or inside logical branches) needs a type lookup
     # per value node: ONE aggregated node→classes relation serves every
@@ -1542,11 +1414,22 @@ def _eval(
 
     # --- nested node shapes (sh:node / branch node_ref) --------------------
     # For each referenced shape N: its definition rows get DYNAMIC targets —
-    # the distinct value nodes of every constraint referencing N — and run
+    # the value nodes of every constraint referencing N, a bag (every
+    # consumer of targets is set-valued or dedups its own slice) — and run
     # through this same evaluator one level down.  A value node is
     # non-conforming iff the nested pass emits ANY result for it (SHACL
     # conformance); the non-conforming set joins back as one boolean per
     # reference, exposed to branch predicates via a literal map.
+    # Both sides evaluate a harmless SUPERSET.  The nested targets (`nodes`)
+    # come from the RAW values (every value of the referencing predicates,
+    # not just those of targeted focus nodes): one pushed-down scan instead
+    # of the assembled value stream.  The nested level evaluates every value
+    # row of its predicates (no ⋉ targets join at depth > 0), so it may also
+    # flag nodes outside `nodes`; but `nodes` holds every value node of every
+    # referencing constraint, so such a flag never meets a value row whose
+    # constraint reads it.  Counting, uniqueLang, sh:closed, sh:sparql, the
+    # pair components and general paths still restrict to the nested
+    # targets through their own joins.
     ref_cids: dict[str, list[int]] = {}
     for r in rows:
         for ref in _branch_refs(r):
@@ -1562,51 +1445,30 @@ def _eval(
             if not sub_rows:
                 values = values.withColumn(flag, F.lit(False))
             else:
-                # Nested targets derive from the RAW values, not the
-                # assembled stream: conformance of a value node to shape N
-                # is independent of which focus referenced it, so skipping
-                # the targets/facets/node-class/lessThan joins evaluates a
-                # harmless superset (values of non-targeted focus nodes) on
-                # a subtree that is one pushed-down scan instead of the full
-                # value-stream assembly recomputed per reference.  When
-                # every referencing constraint has a plain single-step path,
-                # that scan prunes to just those predicates; otherwise the
-                # raw union (vals) filtered by constraint serves the
-                # general-path references.
+                # plain single-step references prune the scan to their
+                # predicates; otherwise the raw union (vals) filtered by
+                # constraint serves the general-path references
                 ref_rows = [r for r in rows if r["constraint_id"] in cids]
                 if all(_is_plain_single(r["path_steps"]) for r in ref_rows):
                     preds = sorted({p for r in ref_rows for p in r["path_steps"][0]})
-                    nodes = (
-                        triples.filter(F.col("predicate").isin(preds))
-                        .select("object_value")
-                        .dropDuplicates()
-                    )
+                    nodes = triples.filter(F.col("predicate").isin(preds))
                 else:
-                    nodes = (
-                        vals.filter(F.col("constraint_id").isin(cids))
-                        .select("object_value")
-                        .dropDuplicates()
-                    )
-                if _nested_fast_ok(sub_rows):
-                    # existence-only conformance: skip the full violation
-                    # assembly (r5 — see _nested_bad_fast)
-                    bad = _nested_bad_fast(
-                        spark, triples, sub_rows, nodes, types
-                    ).select(F.col("focusNode").alias(f"_badnode_{i}"))
-                else:
-                    sub_targets = nodes.select(
-                        F.explode(
-                            F.array(*[F.lit(d["constraint_id"]).cast("long") for d in sub_rows])
-                        ).alias("constraint_id"),
-                        F.col("object_value").alias("focusNode"),
-                    )
-                    sub_vios = _eval(
-                        spark, triples, sub_rows, defs, sub_targets, types,
-                        depth=depth + 1,
-                    )
-                    bad = sub_vios.select(
-                        F.col("focusNode").alias(f"_badnode_{i}")
-                    ).dropDuplicates()
+                    nodes = vals.filter(F.col("constraint_id").isin(cids))
+                sub_targets = nodes.select(
+                    F.explode(
+                        F.array(*[F.lit(d["constraint_id"]).cast("long") for d in sub_rows])
+                    ).alias("constraint_id"),
+                    F.col("object_value").alias("focusNode"),
+                )
+                sub_vios = _eval(
+                    spark, triples, sub_rows, defs, sub_targets, types,
+                    depth=depth + 1,
+                )
+                # deduped: the left join below would repeat a value row
+                # once per nested result of its node
+                bad = sub_vios.select(
+                    F.col("focusNode").alias(f"_badnode_{i}")
+                ).dropDuplicates()
                 values = values.join(
                     bad,
                     values["object_value"] == F.col(f"_badnode_{i}"),
@@ -1652,8 +1514,6 @@ def _eval(
             )
         )
         result = _as_violations(value_rows, F.col("_comp"), F.col("object_value"))
-    else:
-        result = local_df(spark, [], VIOLATION_SCHEMA)
 
     # cascade level 1 for the COUNTING components only: one row per distinct
     # value node (full RDF-term identity — a bare countDistinct(value) would
@@ -1763,9 +1623,9 @@ def _eval(
     if keep is not None:
         exploded = exploded.filter(keep)
     exploded = exploded.withColumn("object_value", F.col("_vio.v"))
-    result = result.unionByName(
-        _as_violations(exploded, F.col("_vio.comp"), F.col("_vio.v"))
-    )
+    focus_rows = _as_violations(exploded, F.col("_vio.comp"), F.col("_vio.v"))
+    # a level without per-value checks starts here, not at an empty relation
+    result = result.unionByName(focus_rows) if check_cols else focus_rows
 
     # sh:equals / sh:disjoint (pair components, SHACL core §4.4): the
     # path's value SET is compared with the sibling property's value SET

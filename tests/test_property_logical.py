@@ -10,10 +10,12 @@ lists mixing conforming and non-conforming shapes) checked against an
 independent pure-Python evaluator — the same differential stance as
 tests/test_property_validate.py, aimed at the round-3 surface.
 
-Branches here carry only inline facets (datatype / nodeKind / class /
-pattern / min/maxLength); ``node_ref`` nested shapes are covered by the
-golden fixtures (their recursive pass needs compiled definition rows,
-which the compiler — not this row-level generator — produces).
+Branches carry inline facets (datatype / nodeKind / class / pattern /
+min/maxLength) and optionally ``node_ref`` to one nested shape ``N``: one
+or two generated ``nested_under: "N"`` definition rows (single-step path,
+the same inline facets, optional min/maxCount and sh:uniqueLang).  The
+reference resolves ``node_ref`` recursively: a value node conforms to N
+iff N's rows give it no result.
 """
 
 from __future__ import annotations
@@ -21,7 +23,7 @@ from __future__ import annotations
 import os
 import re
 
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 from shacl_validator_spark.model import RDF_TYPE
@@ -38,6 +40,7 @@ VALUES = [
     ("17", "literal", XSD + "integer", None),
     ("x", "literal", XSD + "integer", None),
     ("hello", "literal", None, "en"),
+    ("hi", "literal", None, "EN"),
     ("plain", "literal", None, None),
     ("n0", "iri", None, None),
     ("n1", "iri", None, None),
@@ -76,8 +79,9 @@ def _lex_ok(dt: str, v: str) -> bool:
     return True
 
 
-def branch_conf(b: dict, v, ot, dt, lg, typed: dict[str, set[str]]) -> bool:
-    """Pure-Python mirror of the engine's ``_branch_conf`` column."""
+def branch_conf(b: dict, v, ot, dt, lg, typed: dict[str, set[str]], ref_conf) -> bool:
+    """Pure-Python mirror of the engine's ``_branch_conf`` column;
+    ``ref_conf(ref, node)`` decides conformance to a nested shape."""
     if b.get("datatype") is not None and not (
         ot == "literal" and _eff_dt(dt, lg) == b["datatype"] and _lex_ok(b["datatype"], v)
     ):
@@ -94,7 +98,17 @@ def branch_conf(b: dict, v, ot, dt, lg, typed: dict[str, set[str]]) -> bool:
         return False
     if b.get("max_length") is not None and (ot == "bnode" or len(v) > b["max_length"]):
         return False
+    if b.get("node_ref") is not None and not ref_conf(b["node_ref"], v):
+        return False
     return True
+
+
+def value_nodes(triples: list[tuple], focus: str, path: str) -> set[tuple]:
+    """Distinct value nodes (full RDF-term identity) of ``focus`` along a
+    single-step path."""
+    return {
+        (v, ot, dt, lg) for s, p, v, ot, dt, lg, g in triples if s == focus and p == path
+    }
 
 
 def ref_validate_logical(triples: list[tuple], constraints: list[dict]) -> set[tuple]:
@@ -103,51 +117,66 @@ def ref_validate_logical(triples: list[tuple], constraints: list[dict]) -> set[t
     for s, p, v, ot, dt, lg, g in triples:
         if p == RDF_TYPE:
             typed.setdefault(s, set()).add(v)
+    defs: dict[str, list[dict]] = {}
     for c in constraints:
+        if c.get("nested_under"):
+            defs.setdefault(c["nested_under"], []).append(c)
+
+    def gives_result(d: dict, node: str) -> bool:
+        """Whether nested definition row ``d`` reports anything for ``node``."""
+        nodes = value_nodes(triples, node, d["path"])
+        facets = {k: d.get(k) for k in _BRANCH_KEYS}
+        if any(not branch_conf(facets, *nd, typed, ref_conf) for nd in nodes):
+            return True
+        if d.get("min_count") is not None and len(nodes) < d["min_count"]:
+            return True
+        if d.get("max_count") is not None and len(nodes) > d["max_count"]:
+            return True
+        tags = [lg.lower() for _, _, _, lg in nodes if lg is not None]
+        return bool(d.get("unique_lang")) and len(tags) != len(set(tags))
+
+    def ref_conf(ref: str, node: str) -> bool:
+        return not any(gives_result(d, node) for d in defs.get(ref, []))
+
+    for c in constraints:
+        if c.get("nested_under"):
+            continue
         if c.get("target_subjects_of"):
             targets = sorted({s for s, p, *_ in triples if p == c["target_subjects_of"]})
         else:
             targets = [s for s, ts in typed.items() if c.get("target_class") in ts]
         path, sev = c["path"], c["severity"]
         for focus in targets:
-            nodes = {
-                (v, ot, dt, lg)
-                for s, p, v, ot, dt, lg, g in triples
-                if s == focus and p == path
-            }
-
-            def confs(b):
-                return {nd: branch_conf(b, *nd, typed) for nd in nodes}
-
+            nodes = value_nodes(triples, focus, path)
             for nd in nodes:
                 v = nd[0]
                 if c.get("node_branch") is not None and not branch_conf(
-                    c["node_branch"], *nd, typed
+                    c["node_branch"], *nd, typed, ref_conf
                 ):
                     out.add((focus, path, v, sev, "Node"))
                 if c.get("or_branches") is not None and not any(
-                    branch_conf(b, *nd, typed) for b in c["or_branches"]
+                    branch_conf(b, *nd, typed, ref_conf) for b in c["or_branches"]
                 ):
                     out.add((focus, path, v, sev, "Or"))
                 if c.get("and_branches") is not None and any(
-                    not branch_conf(b, *nd, typed) for b in c["and_branches"]
+                    not branch_conf(b, *nd, typed, ref_conf) for b in c["and_branches"]
                 ):
                     out.add((focus, path, v, sev, "And"))
                 if c.get("xone_branches") is not None and sum(
-                    branch_conf(b, *nd, typed) for b in c["xone_branches"]
+                    branch_conf(b, *nd, typed, ref_conf) for b in c["xone_branches"]
                 ) != 1:
                     out.add((focus, path, v, sev, "Xone"))
                 if c.get("not_branch") is not None and branch_conf(
-                    c["not_branch"], *nd, typed
+                    c["not_branch"], *nd, typed, ref_conf
                 ):
                     out.add((focus, path, v, sev, "Not"))
             if c.get("qvs_branch") is not None:
                 sibs = c.get("qvs_sibling_branches") or []
                 n_q = sum(
-                    branch_conf(c["qvs_branch"], *nd, typed)
+                    branch_conf(c["qvs_branch"], *nd, typed, ref_conf)
                     and not (
                         c.get("qvs_disjoint")
-                        and any(branch_conf(sb, *nd, typed) for sb in sibs)
+                        and any(branch_conf(sb, *nd, typed, ref_conf) for sb in sibs)
                     )
                     for nd in nodes
                 )
@@ -167,24 +196,42 @@ triple_st = st.one_of(
         st.sampled_from(CLASSES),
     ).map(lambda t: (t[0], t[1], t[2], "iri", None, None, "g1")),
     st.tuples(
-        st.sampled_from(SUBJECTS),
+        st.sampled_from(SUBJECTS + ["n0", "n1"]),
         st.sampled_from(PREDS),
         st.sampled_from(VALUES),
         st.sampled_from(["g1", "g2"]),
     ).map(lambda t: (t[0], t[1], *t[2], t[3])),
 )
 
-branch_st = st.fixed_dictionaries(
-    {},
-    optional={
-        "datatype": st.sampled_from([XSD + "integer", XSD + "string"]),
-        "node_kind": st.sampled_from(sorted(NODE_KIND_SETS)),
-        "class_iri": st.just("C1"),
-        "pattern": st.sampled_from(["^[0-9]+$", "^h"]),
-        "min_length": st.integers(1, 3),
-        "max_length": st.integers(2, 5),
-    },
+_FACETS = {
+    "datatype": st.sampled_from([XSD + "integer", XSD + "string"]),
+    "node_kind": st.sampled_from(sorted(NODE_KIND_SETS)),
+    "class_iri": st.just("C1"),
+    "pattern": st.sampled_from(["^[0-9]+$", "^h"]),
+    "min_length": st.integers(1, 3),
+    "max_length": st.integers(2, 5),
+}
+
+_facets_st = st.fixed_dictionaries({}, optional=_FACETS)
+# two thirds of the branches reference the nested shape N, half of those
+# with no inline facet that could decide the branch on its own
+branch_st = st.one_of(
+    _facets_st,
+    st.just({"node_ref": "N"}),
+    _facets_st.map(lambda b: {**b, "node_ref": "N"}),
 ).map(lambda b: {k: b.get(k) for k in _BRANCH_KEYS})
+
+# one definition row of the nested shape N: inline facets plus counting
+# and sh:uniqueLang, which the engine evaluates per nested focus node
+nested_st = st.fixed_dictionaries(
+    {"path": st.sampled_from(PREDS)},
+    optional={
+        **_FACETS,
+        "min_count": st.integers(1, 2),
+        "max_count": st.integers(0, 1),
+        "unique_lang": st.just(True),
+    },
+)
 
 logical_st = st.one_of(
     st.tuples(st.just("node_branch"), branch_st),
@@ -212,7 +259,7 @@ target_st = st.one_of(
 constraint_st = st.tuples(st.sampled_from(PREDS), target_st, logical_st)
 
 
-def _mk_constraints(raw: list[tuple]) -> list[dict]:
+def _mk_constraints(raw: list[tuple], nested: list[dict]) -> list[dict]:
     rows = []
     for i, (path, (tkind, tval), (kind, payload)) in enumerate(raw):
         row = {
@@ -236,20 +283,51 @@ def _mk_constraints(raw: list[tuple]) -> list[dict]:
         else:
             row[kind] = payload
         rows.append(row)
+    for d in nested:
+        rows.append(
+            {
+                **d,
+                "constraint_id": len(rows) + 1,
+                "shape_iri": "ex:N",
+                "nested_under": "N",
+                "path_steps": [[d["path"]]],
+                "severity": "Violation",
+            }
+        )
     return rows
 
 
+# a value node that N flags through sh:uniqueLang (n0) and one through
+# minCount (the literal "5"): both Node results hinge on the nested pass
+@example(
+    triples=[
+        ("s0", RDF_TYPE, "T", "iri", None, None, "g1"),
+        ("s0", "p0", "n0", "iri", None, None, "g1"),
+        ("s0", "p0", "5", "literal", XSD + "integer", None, "g1"),
+        ("n0", "p1", "hello", "literal", None, "en", "g1"),
+        ("n0", "p1", "hi", "literal", None, "EN", "g2"),
+    ],
+    raw_constraints=[
+        (
+            "p0",
+            ("target_class", "T"),
+            ("node_branch", {k: None for k in _BRANCH_KEYS} | {"node_ref": "N"}),
+        )
+    ],
+    nested=[{"path": "p1", "unique_lang": True}, {"path": "p1", "min_count": 1}],
+)
 @given(
-    triples=st.lists(triple_st, min_size=1, max_size=10),
+    triples=st.lists(triple_st, min_size=1, max_size=12),
     raw_constraints=st.lists(constraint_st, min_size=1, max_size=3),
+    nested=st.lists(nested_st, min_size=1, max_size=2),
 )
 @settings(
     max_examples=int(os.environ.get("PROP_EXAMPLES", "25")),
     deadline=None,
     suppress_health_check=[HealthCheck.function_scoped_fixture, HealthCheck.too_slow],
 )
-def test_logical_engine_matches_reference(spark, triples, raw_constraints):
-    constraints = _mk_constraints(raw_constraints)
+def test_logical_engine_matches_reference(spark, triples, raw_constraints, nested):
+    constraints = _mk_constraints(raw_constraints, nested)
     df = spark.createDataFrame(
         triples,
         "subject string, predicate string, object_value string, object_type string, "
