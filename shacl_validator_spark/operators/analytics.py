@@ -32,7 +32,11 @@ def severity_rank(col: Column) -> Column:
 
 def severity_summary(results: DataFrame) -> DataFrame:
     """A2: counts per severity.  At most one row per severity, so the sort
-    runs in one partition: no range-partitioning sample job, no shuffle."""
+    runs in one partition: no range-partitioning sample job, no shuffle.
+    The aggregation before it still shuffles (two jobs on a report with
+    results): ``validate_report``'s pin of the results carries no
+    partitioning, because a ``localCheckpoint`` of an adaptive plan reports
+    ``UnknownPartitioning``, even when the rows sit in one partition."""
     return (
         results.groupBy(F.col("resultSeverity").alias("severity"))
         .agg(F.count("*").alias("n"))

@@ -37,6 +37,7 @@ resultSeverity, sourceConstraintComponent, sourceShape.
 
 from __future__ import annotations
 
+from contextvars import ContextVar
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, Observation, SparkSession
@@ -53,6 +54,7 @@ from ..model import (
     VIOLATION_SCHEMA,
 )
 from ..session import observed_metrics
+from ..shapes.compiler import MAX_NESTING_DEPTH, _branch_refs, _branches
 
 XSD = "http://www.w3.org/2001/XMLSchema#"
 RDF_LANGSTRING = "http://www.w3.org/1999/02/22-rdf-syntax-ns#langString"
@@ -453,6 +455,23 @@ def _apply_reach(frontier: DataFrame, reach: DataFrame, mods: str) -> DataFrame:
     return reached.dropDuplicates(_FRONTIER_COLS)
 
 
+# validate_report's probe job collects the subclass edges together with the
+# emptiness bit; _typed_with_entailment takes them from here, for the
+# relation they were collected from, instead of collecting them again
+_PROBED_EDGES: ContextVar[tuple[DataFrame, list] | None] = ContextVar(
+    "_PROBED_EDGES", default=None
+)
+
+
+def _is_subclass_edge() -> F.Column:
+    """An asserted rdfs:subClassOf triple between two distinct nodes."""
+    return (
+        (F.col("predicate") == RDFS_SUBCLASS)
+        & (F.col("object_type") != "literal")
+        & (F.col("subject") != F.col("object_value"))
+    )
+
+
 def _typed_with_entailment(
     spark: SparkSession, triples: DataFrame, entailment: str
 ) -> DataFrame:
@@ -484,15 +503,15 @@ def _typed_with_entailment(
     if entailment == "none":
         return types_raw
     edges_df = (
-        triples.filter(
-            (F.col("predicate") == RDFS_SUBCLASS)
-            & (F.col("object_type") != "literal")
-        )
+        triples.filter(_is_subclass_edge())
         .select(F.col("subject").alias("child"), F.col("object_value").alias("parent"))
-        .filter(F.col("child") != F.col("parent"))
         .dropDuplicates()
     )
-    head = edges_df.limit(SUBCLASS_EDGE_CAP + 1).collect()
+    probed = _PROBED_EDGES.get()
+    if probed is not None and probed[0] is triples:
+        head = probed[1]
+    else:
+        head = edges_df.limit(SUBCLASS_EDGE_CAP + 1).collect()
     if not head:
         return types_raw
     if len(head) <= SUBCLASS_EDGE_CAP:
@@ -608,32 +627,12 @@ def _targets_of(
     return local_df(spark, [], "constraint_id long, focusNode string")
 
 
-def _branches(r: dict) -> list[dict]:
-    """Every branch of a constraint row's logical and qualified components
-    (sh:node, sh:not, sh:qualifiedValueShape, sh:or/and/xone members,
-    qualified siblings)."""
-    out = [r[k] for k in ("node_branch", "not_branch", "qvs_branch") if r.get(k)]
-    for key in ("or_branches", "and_branches", "xone_branches", "qvs_sibling_branches"):
-        out.extend(r.get(key) or [])
-    return out
-
-
-def _branch_refs(r: dict) -> list[str]:
-    """Nested-shape ids referenced by a constraint row's branches."""
-    return [b["node_ref"] for b in _branches(r) if b.get("node_ref")]
-
-
 def _level_classes(rows: list[dict]) -> set[str]:
     """Every class IRI a check at this evaluation level can ask about —
     plain sh:class facets plus class branches of the logical components."""
     out = {r["class_iri"] for r in rows if r.get("class_iri")}
     out.update(b["class_iri"] for r in rows for b in _branches(r) if b.get("class_iri"))
     return out
-
-
-# nesting depth cap for sh:node recursion (cyclic shape graphs terminate
-# here; beyond it unresolved references evaluate as conforming)
-MAX_NESTING_DEPTH = 5
 
 
 def validate(
@@ -659,15 +658,19 @@ def validate(
     the node→classes lookup, nested-shape offenders — GROW WITH THE CORPUS,
     so no join against them carries a broadcast hint: Spark's planner
     (``autoBroadcastJoinThreshold``) and AQE (runtime shuffle sizes) choose
-    broadcast or shuffle per join, and building the plan runs no job
-    beyond the schema-sized subclass collect of ``entailment="rdfs"``.
+    broadcast or shuffle per join.  Building the plan runs no job beyond
+    the schema-sized subclass collect of ``entailment="rdfs"``, and none
+    at all under ``validate_report``, whose probe job collected the edges.
 
     ``triples`` should be a materialized relation: parquet/Iceberg-backed,
     as the pipeline's scratch tables are, or a pinned driver-built one, as
     ``sources/rdf_io.py``'s loaders return (an Arrow ``LocalRelation``
     pinned once with ``localCheckpoint``; driver-sized, so the pin is
     cheap).  Either way each scan below reads stored rows, not a pickled
-    Python RDD or a re-run dedup.  Inside the plan the target set is
+    Python RDD or a re-run dedup.  The loaders pin ONE partition, which
+    satisfies every distribution the plan's dedups, aggregates and joins
+    require: on a parsed catalog the plan runs no shuffle at all, only
+    broadcast stages.  Inside the plan the target set is
     recomputed by its consumers as a pushed-down ``predicate == rdf:type``
     scan instead of being pinned, because a pin of a corpus-sized relation
     does not survive executor loss and measurably collapses under memory
@@ -1436,7 +1439,8 @@ def _eval(
             ref_cids.setdefault(ref, []).append(r["constraint_id"])
     # ref → the boolean flag column (on `values`) that is true when the
     # value node does NOT conform to that nested shape; refs unresolved at
-    # the depth cap are simply absent (→ conforming)
+    # the depth cap are absent (→ conforming), and compile_shapes warns
+    # about every shapes graph that reaches the cap
     ref_flag: dict[str, str] = {}
     if ref_cids and depth < MAX_NESTING_DEPTH:
         for i, (ref, cids) in enumerate(sorted(ref_cids.items())):
@@ -1494,14 +1498,30 @@ def _eval(
     # Result metadata attaches as LITERAL per-constraint lookups (r5 —
     # arts["meta_cols"], cached with the check compilation): no broadcast
     # facet join, no AQE broadcast job, stays inside whole-stage codegen.
+    # A nested level (depth > 0) is read only for WHICH focus nodes fail:
+    # it returns bare focusNode rows — no result metadata, messages or
+    # result-identity dedup; the join back dedups them once.
     mc = arts["meta_cols"]
+    result_meta = (
+        () if depth else ("path", "severity", "messages", "shape_iri", "foaf_page")
+    )
 
     def _with_meta(df: DataFrame, extra: tuple = (), **cols: F.Column) -> DataFrame:
         # one withColumns: each withColumn would re-analyse the growing plan
-        meta = ("path", "severity", "messages", "shape_iri", "foaf_page", *extra)
+        meta = (*result_meta, *extra)
+        if not (cols or meta):
+            return df
         return df.withColumns({**cols, **{f: mc[f] for f in meta}})
 
-    if check_cols:
+    def _results(df: DataFrame, component: str | F.Column, value: F.Column) -> DataFrame:
+        if depth:
+            return df.select("focusNode")
+        return _as_violations(df, component, value)
+
+    if check_cols and depth:
+        # a value row hits iff one of its check slots is non-null
+        result = values.filter(F.coalesce(*check_cols).isNotNull()).select("focusNode")
+    elif check_cols:
         checks = F.array(*check_cols)
         value_rows = _with_meta(
             values.withColumn("_hc", F.explode(F.array_compact(checks))).select(
@@ -1622,8 +1642,9 @@ def _eval(
     exploded = agg.select("*", F.explode(vios).alias("_vio"))
     if keep is not None:
         exploded = exploded.filter(keep)
-    exploded = exploded.withColumn("object_value", F.col("_vio.v"))
-    focus_rows = _as_violations(exploded, F.col("_vio.comp"), F.col("_vio.v"))
+    if not depth:
+        exploded = exploded.withColumn("object_value", F.col("_vio.v"))
+    focus_rows = _results(exploded, F.col("_vio.comp"), F.col("_vio.v"))
     # a level without per-value checks starts here, not at an empty relation
     result = result.unionByName(focus_rows) if check_cols else focus_rows
 
@@ -1692,18 +1713,14 @@ def _eval(
                 only_path.unionByName(only_sib.select(only_path.columns))
             )
             result = result.unionByName(
-                _as_violations(eq_rows, _component("Equals"), F.col("object_value"))
+                _results(eq_rows, _component("Equals"), F.col("object_value"))
             )
         if dj_ids:
             both = pv_k.filter(F.col("constraint_id").isin(dj_ids)).join(
                 sib.select(*key), key, "left_semi"
             )
             result = result.unionByName(
-                _as_violations(
-                    _with_meta(both),
-                    _component("Disjoint"),
-                    F.col("object_value"),
-                )
+                _results(_with_meta(both), _component("Disjoint"), F.col("object_value"))
             )
 
     # sh:closed (+ sh:ignoredProperties): every (focus, p, o) assertion
@@ -1726,7 +1743,7 @@ def _eval(
             .withColumn("path", F.col("predicate"))
         )
         result = result.unionByName(
-            _as_violations(cl, _component("Closed"), F.col("object_value"))
+            _results(cl, _component("Closed"), F.col("object_value"))
         )
 
     # sh:sparql SELECT constraints (SPARQLConstraintComponent): each query
@@ -1755,6 +1772,9 @@ def _eval(
             F.col("focusNode").alias("this")
         )
         res = res.join(tgt, "this", "left_semi")
+        if depth:
+            result = result.unionByName(res.select(F.col("this").alias("focusNode")))
+            continue
         value_col = (
             F.col("value").cast("string")
             if "value" in res.columns
@@ -1802,7 +1822,7 @@ def _eval(
     # set semantics on results: one sh:ValidationResult per
     # (focus, path, value, component), matching the reference engine's
     # result identity; the input to this dedup is already tiny.
-    return result.select(*VIOLATION_COLUMNS).dropDuplicates()
+    return result if depth else result.select(*VIOLATION_COLUMNS).dropDuplicates()
 
 
 def _sentinel(spark: SparkSession, component: str, text: str) -> DataFrame:
@@ -1845,24 +1865,45 @@ def validate_report(
     executor storage, so executor loss invalidates them; they are not
     registered in the CacheManager, so nothing has to unpersist them.
 
+    Before the plan is built, ONE probe job reads the emptiness bit and
+    the rdfs:subClassOf edges together (the distinct edges, plus a null
+    row for the other triples); ``_typed_with_entailment`` takes those
+    edges instead of collecting them again.
+
     ``triples`` should already be materialized (see ``validate``): the
-    ``sources/rdf_io.py`` loaders return a pinned relation, so on the
-    parse → report path the emptiness probe and every scan of the plan read
-    pinned rows.
+    ``sources/rdf_io.py`` loaders return a relation pinned as one
+    partition, so on the parse → report path the probe and every scan of
+    the plan read pinned rows and neither needs a shuffle.
     """
     if not constraint_rows:
         results = _sentinel(spark, SENTINEL_NO_SHAPES, "No SHACL shapes available")
         return ValidationReport(False, results, 1)
-    if triples.isEmpty():
+    # one probe job: the distinct subclass edges, which
+    # _typed_with_entailment would otherwise collect in a job of its own,
+    # plus one (null, null) row standing for every other triple — so the
+    # probe is empty iff the data is
+    edge = _is_subclass_edge()
+    probe = (
+        triples.select(
+            F.when(edge, F.col("subject")).alias("child"),
+            F.when(edge, F.col("object_value")).alias("parent"),
+        )
+        .dropDuplicates()
+        .limit(SUBCLASS_EDGE_CAP + 2)
+        .collect()
+    )
+    if not probe:
         results = _sentinel(spark, SENTINEL_EMPTY_CONTENT, "Empty RDF content")
         return ValidationReport(False, results, 1)
     is_viol = F.col("resultSeverity") == SEVERITY_VIOLATION
     obs = Observation()
-    results = (
-        validate(spark, triples, constraint_rows)
-        .observe(obs, F.count(F.when(is_viol, 1)).alias("n"))
-        .localCheckpoint(eager=True)
-    )
+    token = _PROBED_EDGES.set((triples, [r for r in probe if r.child is not None]))
+    try:
+        results = validate(spark, triples, constraint_rows)
+    finally:
+        _PROBED_EDGES.reset(token)
+    results = results.observe(obs, F.count(F.when(is_viol, 1)).alias("n"))
+    results = results.localCheckpoint(eager=True)
     n_viol = observed_metrics(obs, lambda: {"n": results.filter(is_viol).count()})["n"]
     return ValidationReport(n_viol == 0, results, n_viol)
 

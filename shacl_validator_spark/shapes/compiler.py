@@ -847,6 +847,64 @@ def _wire_qvs_siblings(facet_lists: list[list[dict]]) -> None:
             f["qvs_sibling_branches"] = sibs or None
 
 
+# sh:node recursion depth: the validator evaluates nested shapes this many
+# levels below the top-level constraints; a reference still unresolved at
+# the cap counts as conforming, so compile_shapes warns about every shapes
+# graph whose references reach it (a longer chain, or any cycle)
+MAX_NESTING_DEPTH = 5
+
+
+def _branches(r: dict) -> list[dict]:
+    """Every branch of a constraint row's logical and qualified components
+    (sh:node, sh:not, sh:qualifiedValueShape, sh:or/and/xone members,
+    qualified siblings)."""
+    out = [r[k] for k in ("node_branch", "not_branch", "qvs_branch") if r.get(k)]
+    for key in ("or_branches", "and_branches", "xone_branches", "qvs_sibling_branches"):
+        out.extend(r.get(key) or [])
+    return out
+
+
+def _branch_refs(r: dict) -> list[str]:
+    """Nested-shape ids referenced by a constraint row's branches."""
+    return [b["node_ref"] for b in _branches(r) if b.get("node_ref")]
+
+
+def _nesting_warning(rows: list[dict]) -> str | None:
+    """The note for a shapes graph whose nested-shape references go deeper
+    than MAX_NESTING_DEPTH or form a cycle, else None.  Walks the
+    references the way the validator resolves them: the shapes the
+    top-level rows reference are level 1, the shapes their definition rows
+    reference level 2, and so on."""
+    defs_of: dict[str, list[dict]] = {}
+    for r in rows:
+        if r.get("nested_under"):
+            defs_of.setdefault(r["nested_under"], []).append(r)
+
+    def walk(chain: list[str], level_rows: list[dict]) -> str | None:
+        for ref in sorted({x for r in level_rows for x in _branch_refs(r)}):
+            if ref not in defs_of:
+                continue
+            if ref in chain:
+                cycle = " -> ".join(chain[chain.index(ref):] + [ref])
+                return (
+                    f"sh:node references form a cycle ({cycle}): nested shapes "
+                    f"are evaluated {MAX_NESTING_DEPTH} levels deep and a "
+                    "reference left at that depth counts as conforming"
+                )
+            if len(chain) == MAX_NESTING_DEPTH:
+                return (
+                    f"sh:node chain deeper than {MAX_NESTING_DEPTH} levels "
+                    f"({' -> '.join(chain + [ref])}): shapes below level "
+                    f"{MAX_NESTING_DEPTH} are not evaluated and count as conforming"
+                )
+            note = walk(chain + [ref], defs_of[ref])
+            if note:
+                return note
+        return None
+
+    return walk([], [r for r in rows if not r.get("nested_under")])
+
+
 def compile_shapes(ttl: str, warnings: list[str] | None = None) -> list[dict]:
     """Compile a Turtle shapes graph into constraint-table rows.
 
@@ -1047,6 +1105,9 @@ def compile_shapes(ttl: str, warnings: list[str] | None = None) -> list[dict]:
         row = dict(d)
         row["constraint_id"] = cid
         rows.append(row)
+    note = _nesting_warning(rows)
+    if note:
+        warnings.append(note)
     return rows
 
 

@@ -103,6 +103,62 @@ def test_node_nested_shape(spark):
     assert bad[0].sourceConstraintComponent == SH + "NodeConstraintComponent"
 
 
+def _node_chain(depth: int) -> tuple[str, str]:
+    """Shapes and data for a chain of ``depth`` sh:node references whose
+    innermost shape fails (d:n<depth> has no ex:name)."""
+    shapes = PREFIX + "ex:Top a sh:NodeShape ; sh:targetClass ex:T ;\n"
+    for i in range(1, depth + 1):
+        shapes += f"    sh:property [ sh:path ex:next ; sh:node ex:N{i} ] .\n"
+        shapes += f"ex:N{i} a sh:NodeShape ;\n"
+    shapes += "    sh:property [ sh:path ex:name ; sh:minCount 1 ] .\n"
+    data = PREFIX + "d:n0 a ex:T .\n" + "".join(
+        f"d:n{i} ex:next d:n{i + 1} .\n" for i in range(depth)
+    )
+    return shapes, data
+
+
+def test_nesting_cap_warns(spark):
+    """A chain of sh:node references up to MAX_NESTING_DEPTH is evaluated
+    to the innermost shape and compiles without a note; one level more
+    compiles with a warning naming the chain, because the validator does
+    not evaluate past the cap."""
+    from shacl_validator_spark.shapes.compiler import MAX_NESTING_DEPTH
+
+    shapes_ttl, data = _node_chain(MAX_NESTING_DEPTH)
+    warnings: list[str] = []
+    shapes = compile_shapes(shapes_ttl, warnings)
+    assert warnings == []
+    bad = validate(spark, triples_from_turtle(spark, data), shapes).collect()
+    assert [(r.focusNode, r.sourceConstraintComponent) for r in bad] == [
+        ("http://example.org/d#n0", SH + "NodeConstraintComponent")
+    ]
+
+    warnings = []
+    compile_shapes(_node_chain(MAX_NESTING_DEPTH + 1)[0], warnings)
+    assert len(warnings) == 1
+    assert f"deeper than {MAX_NESTING_DEPTH} levels" in warnings[0]
+    assert f"s#N{MAX_NESTING_DEPTH + 1}" in warnings[0]
+
+
+def test_nesting_cycle_warns():
+    """A cycle of sh:node references is cut at the nesting cap, so it
+    compiles with a warning."""
+    warnings: list[str] = []
+    compile_shapes(
+        PREFIX
+        + """
+    ex:Top a sh:NodeShape ; sh:targetClass ex:T ;
+        sh:property [ sh:path ex:knows ; sh:node ex:P ] .
+    ex:P a sh:NodeShape ;
+        sh:property [ sh:path ex:name ; sh:minCount 1 ] ;
+        sh:property [ sh:path ex:knows ; sh:node ex:P ] .
+    """,
+        warnings,
+    )
+    assert len(warnings) == 1
+    assert "cycle (http://example.org/s#P -> http://example.org/s#P)" in warnings[0]
+
+
 # A verbatim structural fragment in the published SEMIC DCAT-AP shapes
 # style (shapes.ttl): sh:or over a datatype list on dct:issued, sh:node to
 # an Agent shape on dct:publisher — the forms the round-2 compiler skipped.

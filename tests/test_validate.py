@@ -9,6 +9,7 @@ reference guide documents as worked examples
 
 from __future__ import annotations
 
+import re
 from contextlib import contextmanager
 
 import pytest
@@ -133,8 +134,17 @@ def test_empty_shapes_sentinel(spark):
 
 
 def test_empty_data_sentinel(spark, shapes):
+    """An empty parse gets the empty-content sentinel from the one probe
+    job that also collects the subclass edges."""
+    sc = spark.sparkContext
     triples = triples_from_turtle(spark, "")
-    report = validate_report(spark, triples, shapes)
+    sc.setJobGroup("empty-probe", "empty-probe")
+    try:
+        report = validate_report(spark, triples, shapes)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(sc.statusTracker().getJobIdsForGroup("empty-probe")) == 1
     assert not report.conforms
     rows = report.results.collect()
     assert len(rows) == 1
@@ -605,17 +615,17 @@ def _dcat_ap_es_nonconforming() -> str:
 
 # Spark jobs per warm request on the test session (local[4], 4 shuffle
 # partitions): the conforming sample, and _dcat_ap_es_nonconforming()
-SAMPLE_JOB_BUDGET = 13
-BAD_JOB_BUDGET = 17
+SAMPLE_JOB_BUDGET = 9
+BAD_JOB_BUDGET = 10
 
 
 def test_validate_report_job_budget(spark):
     """Spark jobs per warm catalog request (validate_report +
     report_to_turtle + severity_summary) stay within the budget the
-    per-request plan reaches: no dedup shuffles in targeting, uniqueLang
-    on the shared per-focus aggregate, the violation count observed on the
-    pin, and a one-partition severity sort.  Counted per job group with
-    the status tracker."""
+    per-request plan reaches: triples pinned as one partition (no shuffle
+    in the validation plan), one probe job for emptiness and subclass
+    edges, the violation count observed on the pin, and a one-partition
+    severity sort.  Counted per job group with the status tracker."""
     from shacl_validator_spark.operators.analytics import severity_summary
     from shacl_validator_spark.shapes.profiles import compiled_profile
     from shacl_validator_spark.shapes.suites import SAMPLE_CATALOGS
@@ -646,6 +656,114 @@ def test_validate_report_job_budget(spark):
     assert sample_ok and not bad_ok
     assert sample_jobs <= SAMPLE_JOB_BUDGET, sample_jobs
     assert bad_jobs <= BAD_JOB_BUDGET, bad_jobs
+
+
+NESTED_QUALIFIED_SHAPES = """
+@prefix sh: <http://www.w3.org/ns/shacl#> .
+@prefix ex: <http://example.org/s#> .
+ex:PersonShape a sh:NodeShape ; sh:targetClass ex:Person ;
+    sh:property [ sh:path ex:address ; sh:node ex:AddressShape ] ;
+    sh:property [ sh:path ex:child ;
+        sh:qualifiedValueShape [ sh:class ex:Adult ] ;
+        sh:qualifiedMinCount 1 ; sh:qualifiedMaxCount 1 ] .
+ex:AddressShape a sh:NodeShape ;
+    sh:property [ sh:path ex:city ; sh:minCount 1 ] ;
+    sh:property [ sh:path ex:zip ; sh:pattern "^[0-9]{5}$" ;
+        sh:severity sh:Warning ] .
+"""
+
+NESTED_QUALIFIED_DATA = """
+@prefix ex: <http://example.org/s#> .
+@prefix d: <http://example.org/d#> .
+d:p1 a ex:Person ; ex:address d:a1 ; ex:child d:c1 .
+d:a1 ex:city "Madrid" ; ex:zip "28001" .
+d:c1 a ex:Adult .
+d:p2 a ex:Person ; ex:address d:a2 ; ex:child d:c2, d:c3 .
+d:a2 ex:zip "bad" .
+d:c2 a ex:Adult . d:c3 a ex:Adult .
+d:p3 a ex:Person ; ex:address d:a3 .
+d:a3 ex:city "Lugo" ; ex:zip "2700" .
+"""
+
+
+def _layout_cases():
+    from shacl_validator_spark.shapes.profiles import compiled_profile
+    from shacl_validator_spark.shapes.suites import SAMPLE_CATALOGS
+
+    es = compiled_profile("dcat_ap_es")
+    return {
+        "sample": (SAMPLE_CATALOGS["dcat_ap_es"], es),
+        "nonconforming": (_dcat_ap_es_nonconforming(), es),
+        "nested_qualified": (NESTED_QUALIFIED_DATA, compile_shapes(NESTED_QUALIFIED_SHAPES)),
+    }
+
+
+@pytest.mark.parametrize("case", ["sample", "nonconforming", "nested_qualified"])
+def test_report_independent_of_triples_layout(spark, case):
+    """The same driver-parsed rows pinned as one partition (the loaders'
+    layout), as the default layout (one partition per core or Arrow batch)
+    and repartitioned to 8 give the same report:
+    results, conforms, violation count, summary and Turtle text."""
+    from shacl_validator_spark.local_df import local_df
+    from shacl_validator_spark.model import TRIPLE_SCHEMA
+    from shacl_validator_spark.operators.analytics import severity_summary
+    from shacl_validator_spark.sources.report_io import report_to_turtle
+    from shacl_validator_spark.sources.turtle import _rows_from_text
+
+    ttl, rows = _layout_cases()[case]
+    parsed = local_df(spark, list(dict.fromkeys(_rows_from_text(ttl, "_:b", None))), TRIPLE_SCHEMA)
+    layouts = {
+        1: triples_from_turtle(spark, ttl),
+        spark.sparkContext.defaultParallelism: parsed.localCheckpoint(eager=True),
+        8: parsed.repartition(8).localCheckpoint(eager=True),
+    }
+
+    def key(r):
+        return (*r[:3], tuple(r.message or ()), *r[4:])
+
+    reports = []
+    for n, triples in layouts.items():
+        assert triples.rdd.getNumPartitions() == n
+        rep = validate_report(spark, triples, rows)
+        turtle = report_to_turtle(rep.results, rep.conforms)
+        reports.append(
+            (
+                sorted(map(key, rep.results.collect())),
+                rep.conforms,
+                rep.total_violations,
+                [tuple(r) for r in severity_summary(rep.results).collect()],
+                sorted(re.sub(r"_:r\d+", "_:r", line) for line in turtle.splitlines()),
+            )
+        )
+    assert len(layouts) == 3 and reports[1:] == reports[:1] * 2
+    assert reports[0][1] is (case == "sample")
+    if case == "nested_qualified":
+        comps = sorted(k[5].rsplit("#", 1)[-1] for k in reports[0][0])
+        assert comps == [
+            "NodeConstraintComponent",
+            "NodeConstraintComponent",
+            "QualifiedMaxCountConstraintComponent",
+            "QualifiedMinCountConstraintComponent",
+        ], comps
+
+
+def test_catalog_request_plan_has_no_shuffle(spark):
+    """A one-partition catalog needs no shuffle: the executed (AQE final)
+    plan of a warm non-conforming request has broadcast stages only."""
+    from shacl_validator_spark.shapes.profiles import compiled_profile
+
+    rows = compiled_profile("dcat_ap_es")
+    triples = triples_from_turtle(spark, _dcat_ap_es_nonconforming())
+    validate(spark, triples, rows).collect()  # warm
+    results = validate(spark, triples, rows)
+    assert len(results.collect()) > 0
+    plan = results._jdf.queryExecution().executedPlan().toString()
+    assert "isFinalPlan=true" in plan
+    assert "BroadcastQueryStage" in plan
+    assert "ShuffleQueryStage" not in plan, plan
+    assert not re.search(
+        r"Exchange (hashpartitioning|rangepartitioning|RoundRobin|SinglePartition)", plan
+    ), plan
 
 
 def test_conforming_sample_observed_count(spark):
