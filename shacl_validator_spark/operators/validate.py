@@ -54,7 +54,7 @@ from ..model import (
     VIOLATION_SCHEMA,
 )
 from ..session import observed_metrics
-from ..shapes.compiler import MAX_NESTING_DEPTH, _branch_refs, _branches
+from ..shapes.compiler import MAX_NESTING_DEPTH, PATH_DEPTH, _branch_refs, _branches
 
 XSD = "http://www.w3.org/2001/XMLSchema#"
 RDF_LANGSTRING = "http://www.w3.org/1999/02/22-rdf-syntax-ns#langString"
@@ -280,10 +280,6 @@ def _lexically_valid(dt: F.Column | None = None) -> F.Column:
         .when(dt == XSD + "date", F.try_to_timestamp(v, F.lit("yyyy-MM-dd")).isNotNull())
         .otherwise(F.lit(True))
     )
-
-
-# Bounded unroll of sh:zeroOrMorePath / sh:oneOrMorePath (see _closure).
-PATH_DEPTH = 4
 
 
 def _parse_alt(alt: str) -> tuple[str, str]:
@@ -1858,10 +1854,12 @@ def validate_report(
 
     The validation plan runs exactly once: ``results`` is materialized with
     ``localCheckpoint``, and the Turtle/CSV sinks and the analytics read
-    those pinned rows.  The violation count rides the pin as an
-    ``Observation`` on the checkpointed plan, so it costs no job of its
-    own; only if the metrics do not arrive does it count the pinned rows
-    (``session.observed_metrics``).  The rows stay distributed in
+    those pinned rows.  The violation and row counts ride the pin as an
+    ``Observation`` on the checkpointed plan, so they cost no job of their
+    own; only if the metrics do not arrive are the pinned rows counted
+    (``session.observed_metrics``).  An empty result (a conforming
+    catalog) is returned as an empty local relation instead of the pin,
+    so the report sinks run no job on it.  The rows stay distributed in
     executor storage, so executor loss invalidates them; they are not
     registered in the CacheManager, so nothing has to unpersist them.
 
@@ -1902,10 +1900,14 @@ def validate_report(
         results = validate(spark, triples, constraint_rows)
     finally:
         _PROBED_EDGES.reset(token)
-    results = results.observe(obs, F.count(F.when(is_viol, 1)).alias("n"))
-    results = results.localCheckpoint(eager=True)
-    n_viol = observed_metrics(obs, lambda: {"n": results.filter(is_viol).count()})["n"]
-    return ValidationReport(n_viol == 0, results, n_viol)
+    counts = (F.count(F.when(is_viol, 1)).alias("n"), F.count(F.lit(1)).alias("rows"))
+    results = results.observe(obs, *counts).localCheckpoint(eager=True)
+    seen = observed_metrics(obs, lambda: results.select(*counts).first().asDict())
+    if not seen["rows"]:
+        # a pin with one empty partition would still cost the report
+        # sinks a job each; an empty local relation costs them none
+        results = local_df(spark, [], VIOLATION_SCHEMA)
+    return ValidationReport(seen["n"] == 0, results, seen["n"])
 
 
 def validate_turtle(

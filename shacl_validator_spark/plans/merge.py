@@ -29,6 +29,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import counted, observed_count
+
 # Full RDF term identity (SURVEY.md §1.3/§2.6 U4): two rows that agree
 # lexically but differ in term kind / datatype / lang are DIFFERENT quads,
 # so the MERGE key must carry all seven columns or set semantics break.
@@ -79,10 +81,15 @@ def merge_triples(
     salt = F.pmod(F.xxhash64(F.col("graph")), 8).alias("_salt")
     clustered = keyed.repartition(F.col("partition_key"), salt)
     if not os.path.exists(table_path):
-        clustered.write.mode("overwrite").partitionBy("partition_key").parquet(table_path)
+        # the insert count is observed on the write itself; the fallback
+        # reads the fresh table back
+        written, obs = counted(clustered)
+        written.write.mode("overwrite").partitionBy("partition_key").parquet(table_path)
         # explicit schema: a zero-row batch writes no data files and schema
         # inference would fail on the empty table
-        return spark.read.schema(clustered.schema).parquet(table_path).count()
+        return observed_count(
+            obs, spark.read.schema(clustered.schema).parquet(table_path).count
+        )
 
     touched = [r.partition_key for r in keyed.select("partition_key").dropDuplicates().collect()]
     existing = (

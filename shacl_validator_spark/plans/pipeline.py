@@ -15,10 +15,13 @@ for a 1000-executor cluster:
 - linking/canonicalization operate on the distinct-surface set and return
   broadcast maps — the triple stream is never shuffled for linking;
 - input partition groups are the unit of resumable extraction: each one
-  stages its typed triples under a checkpoint manifest, then one validate
-  and one MERGE commit every staged group, so a restart re-extracts
+  stages its raw extraction under a checkpoint manifest; then, once per
+  call, linking, canonicalization and typing run over every staged group
+  and one validate and one MERGE commit them, so a restart re-extracts
   nothing already staged and the idempotent MERGE makes a replayed commit
-  exactly-once (BASELINE.json north_rule).
+  exactly-once (BASELINE.json north_rule);
+- row counts (pages and raw rows per group, typed rows, violations) are
+  observed on writes that run anyway, so no job runs only to count.
 """
 
 from __future__ import annotations
@@ -30,22 +33,15 @@ import time
 from dataclasses import dataclass, field
 from datetime import datetime, timezone
 
-from itertools import count as _it_count
-
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-
-# Observation names are registered per SparkSession — keep them unique
-# across calls, reps, and resumed runs in one process
-_OBS_IDS = _it_count()
 
 from ..local_df import local_df
 from ..model import RDF_TYPE, SEVERITY_VIOLATION, TRIPLE_SCHEMA, VIOLATION_SCHEMA
 from ..operators import components
 from ..operators.linking import alias_dict_df, link_mentions
 from ..operators.validate import validate
-from ..session import observed_metrics
+from ..session import counted, observed_count, observed_metrics
 from ..shapes import compile_shapes, profile_shapes_ttl
 from ..sources.extract import (
     ENTITY,
@@ -60,8 +56,6 @@ from ..sources.pages import alias_rows
 from .merge import MERGE_KEY, merge_triples
 
 _ENTITIES_SCHEMA = "canonical_id string, surface_forms array<string>, ent_class string"
-# a staged typed triple and the partition group that staged it
-_STAGED_SCHEMA = T.StructType(TRIPLE_SCHEMA.fields + [T.StructField("grp", T.IntegerType())])
 
 
 @dataclass
@@ -276,13 +270,17 @@ def run_pipeline(
 
     ``n_groups`` splits the input into partition groups (grouped by url
     hash), the unit of resumable extraction.  Each group that is not yet
-    done stages its typed triples to scratch and is marked ``"staged"`` in
-    the checkpoint manifest.  Then ONE ``validate()`` runs over the union
-    of the staged groups and ONE conformant-only MERGE commits them; every
-    committed group gets a lineage row and is marked ``"done"``
-    (FIXTURES.md §8).  A killed call resumes without re-extracting its
-    staged groups, and the idempotent MERGE makes a replayed commit
-    exactly-once.
+    done writes its raw extraction to scratch and is marked ``"staged"``
+    in the checkpoint manifest.  Then, once per call, mentions → linking →
+    canonicalization → typed and entity triples run over the union of the
+    staged groups and write ONE typed scratch table; ONE ``validate()``
+    reads it and ONE conformant-only MERGE commits it.  Every committed
+    group gets a lineage row and is marked ``"done"`` (FIXTURES.md §8): a
+    relation triple counts in its page's group, and an entity support
+    triple (a per-entity fact) in the call's first group.  A killed call
+    resumes without re-extracting its staged groups; it re-runs only the
+    distinct-surface-sized link/canonicalize step and the call-sized typed
+    write, and the idempotent MERGE makes a replayed commit exactly-once.
 
     What holds across calls: the rows one call MERGEs conform to the
     profile as a whole, so the table a single call builds does not depend
@@ -299,7 +297,6 @@ def run_pipeline(
     lineage_path = os.path.join(out_dir, "lineage.jsonl")
     table_path = os.path.join(out_dir, "triples")
     scratch = os.path.join(out_dir, "_scratch")
-    typed_root = os.path.join(scratch, "typed")
 
     manifest: dict[str, str] = {}
     if resume and os.path.exists(manifest_path):
@@ -321,28 +318,19 @@ def run_pipeline(
         return now
 
     pages_g = pages.withColumn("_grp", F.pmod(F.xxhash64(F.col("url")), n_groups))
-    grp_sizes = {
-        r["_grp"]: r["n"]
-        for r in pages_g.groupBy("_grp").agg(F.count("*").alias("n")).collect()
-    }
-
     todo = [g for g in range(n_groups) if manifest.get(f"grp={g}") != "done"]
     keys = [f"grp={g}" for g in todo]
+    raw_root = os.path.join(scratch, "raw")
+    # page and raw-row counts of the groups this call extracts, observed
+    # on their extraction writes; a group staged by an earlier call counts
+    # its rows instead
+    obs_pages: dict[int, Observation] = {}
+    obs_raw: dict[int, Observation] = {}
     for grp, key in zip(todo, keys):
         if manifest.get(key) == "staged":
             continue
-        batch_pages = pages_g.filter(F.col("_grp") == grp).drop("_grp")
-        # eager stage-boundary materialization: extraction runs once, the
-        # linking map and typed triples are computed once, and the
-        # multi-branch validation plan reads materialized inputs (on a real
-        # cluster these become reliable checkpoints / intermediate tables).
-        # Scratch parquet, not localCheckpoint: the columnar write of the
-        # narrow stream is cheap and constant, while caching millions of
-        # deserialized row objects in executor memory is the single
-        # worst-scaling operation measured on this pipeline (and would not
-        # survive executor loss on a real cluster).
         t0 = time.time()
-        raw_path = os.path.join(scratch, "raw", key)
+        batch_pages, obs_pages[grp] = counted(pages_g.filter(F.col("_grp") == grp).drop("_grp"))
         # text-carrying input uses the JVM-gated text kernel; html-only
         # input goes through the FUSED html→text→triples kernel (one Arrow
         # pass per page instead of extract_text materialize + re-scan —
@@ -352,47 +340,14 @@ def run_pipeline(
             if "text" in batch_pages.columns
             else extract_raw_triples_from_html
         )
-        extractor(batch_pages).write.mode("overwrite").parquet(raw_path)
-        # explicit schema: skips inference and keeps zero-row batches valid
-        raw = spark.read.schema(RAW_TRIPLE_SCHEMA).parquet(raw_path)
-        t0 = _bump("extract", t0)
-
-        # the distinct-surface set is tiny after dedup — materialize it so
-        # the exact-link/LSH/CC consumers never rescan the mention stream
-        mentions = mentions_from_raw(raw).localCheckpoint(eager=True)
-        linked = link_mentions(spark, mentions, adict)
-        surface_map = canonicalize(spark, linked, max_iter=3).localCheckpoint(eager=True)
-        t0 = _bump("link_canon", t0)
-
-        # the typed stream is ~3-5 rows/page — orders of magnitude lighter
-        # than the page text the extract stage chewed through — so its
-        # stages get proportionally fewer partitions.  One repartition+dedup
-        # shuffle on the narrow canonical stream: the surface→canonical join
-        # can collapse two surface forms on one page into identical triples,
-        # so MERGE-key uniqueness within the group is only assertable HERE.
-        #
-        # Partition count must grow with DATA, not just cores: a fixed
-        # count made the dedup hash-agg hold millions of 7-string keys per
-        # task at 10^7-page groups and fall off a spill cliff (measured
-        # 55 s → 286 s for 2x the data on a 3 g executor).  The raw row
-        # count is a parquet-footer read of the just-materialized scratch
-        # table — cheap — and caps partitions at ~1M rows each; explicit
-        # repartition(n) is exempt from AQE coalescing, so the floor keeps
-        # small inputs at the core-proportional count they had before.
-        n_raw = raw.count()
-        tail_parts = max(
-            4,
-            spark.sparkContext.defaultParallelism // 4,
-            -(-n_raw // 1_000_000),
-        )
-        typed_triples(raw, surface_map).unionByName(
-            entity_triples(surface_map)
-        ).repartition(tail_parts, *MERGE_KEY).dropDuplicates(MERGE_KEY).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(typed_root, key))
-        # mentions and the surface map are pinned, so nothing reads raw again
-        shutil.rmtree(raw_path, ignore_errors=True)
-        _bump("typed_triples", t0)
+        # Scratch parquet, not localCheckpoint: the columnar write of the
+        # narrow stream is cheap and constant, while caching millions of
+        # deserialized row objects in executor memory is the single
+        # worst-scaling operation measured on this pipeline (and would not
+        # survive executor loss on a real cluster).
+        raw_g, obs_raw[grp] = counted(extractor(batch_pages))
+        raw_g.write.mode("overwrite").parquet(os.path.join(raw_root, key))
+        _bump("extract", t0)
         manifest[key] = "staged"
         _save_manifest()
 
@@ -401,28 +356,75 @@ def run_pipeline(
         entities.write.mode("overwrite").parquet(os.path.join(out_dir, "entities"))
         return PipelineResult(0, 0, 0, 0, entities, local_df(spark, [], VIOLATION_SCHEMA))
 
+    # Linking, canonicalization and typing run ONCE per call, over the
+    # union of the staged raw groups: a surface's canonical id does not
+    # depend on the group it was seen in (each surface has one edge, to
+    # its linked id), so per-group maps would only repeat the work.
     t0 = time.time()
-    staged = (
-        spark.read.option("basePath", typed_root)
-        .schema(_STAGED_SCHEMA)
-        .parquet(*(os.path.join(typed_root, k) for k in keys))
+    # explicit schema: skips inference and keeps zero-row groups valid
+    raw = spark.read.schema(RAW_TRIPLE_SCHEMA).parquet(
+        *(os.path.join(raw_root, k) for k in keys)
     )
-    # Relation triples carry their page url as graph and pages are grouped
-    # by url hash, so only the entity support triples repeat across groups.
-    # They are distinct-surface sized: dedup them once, attributing each to
-    # the lowest group that staged it, so the union below is unique on the
-    # MERGE key (merge_triples may assume_unique) with no shuffle over the
-    # relation stream.  Scratch parquet rather than a checkpoint keeps the
-    # file-size statistics validate()'s join planning reads.
-    is_entity = F.col("graph").eqNullSafe(ENTITY_GRAPH)
-    ent_path = os.path.join(scratch, "entities")
-    staged.filter(is_entity).groupBy(*MERGE_KEY).agg(
-        F.min("grp").alias("grp")
-    ).write.mode("overwrite").parquet(ent_path)
-    ent_rows = spark.read.schema(_STAGED_SCHEMA).parquet(ent_path)
-    triples = staged.filter(~is_entity).unionByName(ent_rows)
-    # parquet-footer count (metadata read) of everything this call staged
-    n_staged = staged.count()
+    # the distinct-surface set is tiny after dedup — materialize it so
+    # the exact-link/LSH/CC consumers never rescan the mention stream
+    mentions = mentions_from_raw(raw).localCheckpoint(eager=True)
+    linked = link_mentions(spark, mentions, adict)
+    # ONE partition: the map is broadcast by contract anyway, and a
+    # single-partition pin satisfies the dropDuplicates of typed_triples
+    # and entity_triples without a shuffle
+    surface_map = canonicalize(spark, linked, max_iter=3).coalesce(1).localCheckpoint(eager=True)
+    t0 = _bump("link_canon", t0)
+
+    # the typed stream is ~3-5 rows/page — orders of magnitude lighter
+    # than the page text the extract stage chewed through — so its
+    # stages get proportionally fewer partitions.  One repartition+dedup
+    # shuffle on the narrow canonical stream: the surface→canonical join
+    # can collapse two surface forms on one page into identical triples,
+    # so MERGE-key uniqueness is only assertable HERE.
+    #
+    # Partition count must grow with DATA, not just cores: a fixed
+    # count made the dedup hash-agg hold millions of 7-string keys per
+    # task at 10^7-page groups and fall off a spill cliff (measured
+    # 55 s → 286 s for 2x the data on a 3 g executor).  The raw row
+    # count was observed on the extraction writes and caps partitions
+    # at ~1M rows each; explicit repartition(n) is exempt from AQE
+    # coalescing, so the floor keeps small inputs at the
+    # core-proportional count they had before.
+    n_raw = sum(
+        observed_count(
+            obs_raw.get(g),
+            lambda k=k: spark.read.schema(RAW_TRIPLE_SCHEMA)
+            .parquet(os.path.join(raw_root, k))
+            .count(),
+        )
+        for g, k in zip(todo, keys)
+    )
+    tail_parts = max(
+        4,
+        spark.sparkContext.defaultParallelism // 4,
+        -(-n_raw // 1_000_000),
+    )
+    typed_path = os.path.join(scratch, "typed")
+    typed, obs_typed = counted(
+        typed_triples(raw, surface_map)
+        .unionByName(entity_triples(surface_map))
+        .repartition(tail_parts, *MERGE_KEY)
+        .dropDuplicates(MERGE_KEY)
+    )
+    typed.write.mode("overwrite").parquet(typed_path)
+    # Scratch parquet rather than a checkpoint keeps the file-size
+    # statistics validate()'s join planning reads.  Lineage recovers a
+    # relation triple's group from its graph, the page url the groups are
+    # hashed on; entity support triples are per-entity facts and count in
+    # the call's first group, the one its report is filed under.
+    triples = spark.read.schema(TRIPLE_SCHEMA).parquet(typed_path)
+    n_typed = observed_count(obs_typed, triples.count)
+    triples = triples.withColumn(
+        "grp",
+        F.when(F.col("graph") == ENTITY_GRAPH, F.lit(todo[0])).otherwise(
+            F.pmod(F.xxhash64(F.col("graph")), n_groups)
+        ),
+    )
     t0 = _bump("typed_triples", t0)
 
     # AQE can only coalesce DOWN from the initial shuffle partition
@@ -434,13 +436,13 @@ def run_pipeline(
     # it SESSION-WIDE is the wrong tool — a high start doubled the
     # sf0.1 MinHash bench queries (2.9 s → 8.3 s, A/B'd) because AQE
     # coalescing is not free at small scale — so it is set HERE, once,
-    # sized from the call's staged rows (~250k clustering rows per
+    # sized from the call's typed rows (~250k clustering rows per
     # partition), and the caller's setting is restored on exit.
     init_key = "spark.sql.adaptive.coalescePartitions.initialPartitionNum"
     init_prev = spark.conf.get(init_key, None)
     spark.conf.set(
         init_key,
-        str(max(spark.sparkContext.defaultParallelism, min(4096, -(-n_staged // 250_000)))),
+        str(max(spark.sparkContext.defaultParallelism, min(4096, -(-n_typed // 250_000)))),
     )
     try:
         # violation reports are a pipeline OUTPUT (the sh:ValidationReport
@@ -451,12 +453,12 @@ def run_pipeline(
         # entailment="none": the extractor vocabulary cannot emit
         # rdfs:subClassOf, so the subclass collect job is provably useless
         # here — this keeps the validate call free of driver-side jobs
-        validate(spark, triples.drop("grp"), shapes, entailment="none").write.mode(
-            "overwrite"
-        ).parquet(report_path)
+        report, obs_viol = counted(
+            validate(spark, triples.drop("grp"), shapes, entailment="none")
+        )
+        report.write.mode("overwrite").parquet(report_path)
         violations = spark.read.schema(VIOLATION_SCHEMA).parquet(report_path)
-        # parquet-footer count — metadata read, not a scan
-        n_viol = violations.count()
+        n_viol = observed_count(obs_viol, violations.count)
         t0 = _bump("validate", t0)
 
         # lineage's per-group triples_in/triples_valid ride the MERGE's own
@@ -466,8 +468,8 @@ def run_pipeline(
         # CollectMetrics counts the rows at these plan points during
         # whatever action merge_triples runs first
         per_group = [F.count(F.when(F.col("grp") == g, True)).alias(k) for g, k in zip(todo, keys)]
-        obs_in = Observation(f"in_{next(_OBS_IDS)}")
-        obs_valid = Observation(f"valid_{next(_OBS_IDS)}")
+        obs_in = Observation()
+        obs_valid = Observation()
         observed = triples.observe(obs_in, *per_group)
         conformant = conformant_triples(observed, violations).observe(obs_valid, *per_group)
         merged = merge_triples(spark, table_path, conformant.drop("grp"), assume_unique=True)
@@ -476,16 +478,18 @@ def run_pipeline(
             spark.conf.unset(init_key)
         else:
             spark.conf.set(init_key, init_prev)
-    # n_staged == 0 implies nothing to count, and AQE's empty-relation
+    # n_typed == 0 implies nothing to count, and AQE's empty-relation
     # propagation may have dropped the CollectMetrics nodes
-    n_in = _group_counts(obs_in, triples, keys) if n_staged else dict.fromkeys(keys, 0)
-    n_valid = _group_counts(obs_valid, conformant, keys) if n_staged else dict.fromkeys(keys, 0)
+    n_in = _group_counts(obs_in, triples, keys) if n_typed else dict.fromkeys(keys, 0)
+    n_valid = _group_counts(obs_valid, conformant, keys) if n_typed else dict.fromkeys(keys, 0)
     finished_at = datetime.now(timezone.utc).isoformat()
     with open(lineage_path, "a") as f:
         for g, k in zip(todo, keys):
             row = {
                 "partition_key": k,
-                "src_url_count": int(grp_sizes.get(g, 0)),
+                "src_url_count": observed_count(
+                    obs_pages.get(g), pages_g.filter(F.col("_grp") == g).count
+                ),
                 "triples_in": n_in[k],
                 "triples_valid": n_valid[k],
                 "violations": n_viol,
@@ -496,12 +500,12 @@ def run_pipeline(
     manifest.update(dict.fromkeys(keys, "done"))
     _save_manifest()
 
+    # the entity table is the surface map grouped by canonical id: the
+    # same rows entity_triples emits, read from the one-partition pin
     ent_out = os.path.join(out_dir, "entities")
-    ent_rows.groupBy(F.col("subject").alias("canonical_id")).agg(
-        F.sort_array(
-            F.collect_set(F.when(F.col("predicate") == KG + "name", F.col("object_value")))
-        ).alias("surface_forms"),
-        F.min(F.when(F.col("predicate") == RDF_TYPE, F.col("object_value"))).alias("ent_class"),
+    surface_map.groupBy("canonical_id").agg(
+        F.sort_array(F.collect_set("surface")).alias("surface_forms"),
+        F.min("ent_class").alias("ent_class"),
     ).write.mode("overwrite").parquet(ent_out)
     entities = spark.read.schema(_ENTITIES_SCHEMA).parquet(ent_out)
     # every consumer of the scratch tables has run its action; without

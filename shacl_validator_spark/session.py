@@ -14,7 +14,8 @@ import os
 import threading
 from collections.abc import Callable
 
-from pyspark.sql import Observation, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
 
@@ -123,3 +124,18 @@ def observed_metrics(obs: Observation, fallback: Callable[[], dict]) -> dict:
     reader.start()
     reader.join(timeout=OBSERVATION_WAIT_S)
     return box or fallback()
+
+
+def counted(df: DataFrame) -> tuple[DataFrame, Observation]:
+    """``df`` with an observation of its row count: whatever action
+    consumes the rows counts them, with no job of its own."""
+    obs = Observation()
+    return df.observe(obs, F.count(F.lit(1)).alias("n")), obs
+
+
+def observed_count(obs: Observation | None, count: Callable[[], int]) -> int:
+    """The row count ``obs`` (from ``counted``) saw, or ``count()`` when
+    there is no observation or its metrics do not arrive."""
+    if obs is None:
+        return int(count())
+    return int(observed_metrics(obs, lambda: {"n": count()})["n"])

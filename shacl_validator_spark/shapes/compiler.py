@@ -411,6 +411,13 @@ def _severity_of(term: Term | None) -> str:
     return "Violation"
 
 
+# Bounded unroll of sh:zeroOrMorePath / sh:oneOrMorePath: the validator
+# follows closure chains at most this many hops deep (operators/validate.py
+# ``_closure``), so compile_shapes warns about every property shape whose
+# path has a closure step
+PATH_DEPTH = 4
+
+
 def _path_alt(g: ParsedGraph, term: Term, warnings: list[str]) -> str:
     """Resolve one non-sequence path node into an encoded alternative.
 
@@ -694,6 +701,17 @@ def _prop_constraints(
     if deact is not None and deact.value == "true":
         return []
     steps = _path_steps(g, path_t, ctx.warnings) if path_t is not None else []
+    # an encoded alternative's leading modifiers (see _path_alt)
+    if any(
+        {"*", "+"} & set(alt[: len(alt) - len(alt.lstrip("^*+?"))])
+        for alts in steps
+        for alt in alts
+    ):
+        ctx.warnings.append(
+            f"property {prop}: sh:path {render_path(steps)} follows a "
+            f"sh:zeroOrMorePath/sh:oneOrMorePath closure at most {PATH_DEPTH} "
+            f"hops deep; chains longer than {PATH_DEPTH} hops are cut"
+        )
     severity = _severity_of(g.first(prop, SH + "severity"))
     messages = [
         {"text": m.value, "lang": (m.lang.lower().split("-")[0] if m.lang else None)}

@@ -371,6 +371,39 @@ def test_zero_or_more_path(spark):
     assert bad[0].sourceConstraintComponent == SH + "HasValueConstraintComponent"
 
 
+def test_closure_cap_warns(spark):
+    """The validator follows a sh:oneOrMorePath closure at most PATH_DEPTH
+    (4) hops, so the closure constraint compiles with one warning.  Over
+    a 5-hop ex:broader chain to ex:root the focus node gets one HasValue
+    result that SHACL's unbounded closure would not give; the test pins
+    that cut result until closures are exact (ROADMAP direction 1)."""
+    from shacl_validator_spark.shapes.compiler import PATH_DEPTH
+
+    warnings: list[str] = []
+    shapes = compile_shapes(
+        PREFIX
+        + """
+    ex:S a sh:NodeShape ; sh:targetClass ex:T ;
+        sh:property [ sh:path [ sh:oneOrMorePath ex:broader ] ;
+            sh:hasValue ex:root ] .
+    """,
+        warnings,
+    )
+    assert len(warnings) == 1
+    assert "broader+" in warnings[0]
+    assert f"chains longer than {PATH_DEPTH} hops are cut" in warnings[0]
+
+    hops = 5
+    assert hops == PATH_DEPTH + 1
+    data = PREFIX + "d:n0 a ex:T .\n" + "".join(
+        f"d:n{i} ex:broader d:n{i + 1} .\n" for i in range(hops - 1)
+    ) + f"d:n{hops - 1} ex:broader ex:root .\n"
+    bad = validate(spark, triples_from_turtle(spark, data), shapes).collect()
+    assert [(r.focusNode, r.sourceConstraintComponent) for r in bad] == [
+        ("http://example.org/d#n0", SH + "HasValueConstraintComponent")
+    ]
+
+
 def test_zero_or_one_path(spark):
     """sh:zeroOrOnePath: the focus node itself is a value node (zero hop)
     alongside the one-hop neighbours — observable via maxCount 1."""

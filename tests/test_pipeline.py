@@ -5,6 +5,8 @@ from __future__ import annotations
 
 import json
 import os
+import threading
+from contextlib import contextmanager
 from datetime import datetime, timedelta
 
 import pytest
@@ -23,6 +25,10 @@ from shacl_validator_spark.sources.report_io import (
 )
 
 N = 200
+
+# Spark jobs per warm run_pipeline call on N html pages in two groups
+# (test_run_pipeline_job_budget)
+PIPELINE_JOB_BUDGET = 24
 
 
 def test_pipeline_end_to_end(spark, tmp_path):
@@ -91,6 +97,10 @@ def test_merge_is_exactly_once(spark, tmp_path):
     n2 = merge_triples(spark, table, batch)
     assert n1 == 2 and n2 == 0
     assert spark.read.parquet(table).count() == 2
+    # the first MERGE's insert count is observed on its write; when the
+    # metrics never arrive it reads the fresh table back instead
+    with _metrics_lost():
+        assert merge_triples(spark, str(tmp_path / "fresh"), batch) == 2
 
 
 def test_iceberg_merge_sql_contract():
@@ -232,9 +242,43 @@ def test_pipeline_html_only_input_matches_text_input(spark, tmp_path):
     assert a == b
 
 
+@contextmanager
+def _metrics_lost():
+    """Block ``Observation.get`` (a plan that lost its CollectMetrics
+    node) and shorten the bounded wait, so every observed count falls
+    back to counting."""
+    from pyspark.sql import Observation
+
+    from shacl_validator_spark import session
+
+    release = threading.Event()
+    with pytest.MonkeyPatch.context() as m:
+        m.setattr(Observation, "get", property(lambda self: release.wait() and {}))
+        m.setattr(session, "OBSERVATION_WAIT_S", 0.1)
+        try:
+            yield
+        finally:
+            release.set()
+
+
+# the per-call layers: each runs once per run_pipeline call, whatever
+# n_groups is and however many groups an earlier call staged
+CALLED_ONCE = dict.fromkeys(
+    (
+        "link_mentions",
+        "canonicalize",
+        "typed_triples",
+        "entity_triples",
+        "validate",
+        "merge_triples",
+    ),
+    1,
+)
+
+
 def _count_calls(monkeypatch, calls: dict) -> None:
-    """Count the pipeline's validate and merge_triples calls into ``calls``."""
-    for name in ("validate", "merge_triples"):
+    """Count the pipeline's per-call layer calls into ``calls``."""
+    for name in CALLED_ONCE:
         fn = getattr(pl, name)
 
         def wrapped(*a, __fn=fn, __name=name, **kw):
@@ -248,12 +292,10 @@ def _table(spark, out):
     return {tuple(r) for r in spark.read.parquet(f"{out}/triples").collect()}
 
 
-def test_merged_table_independent_of_n_groups(spark, tmp_path, monkeypatch):
-    """Four pages each give surface:qwvx7 one kg:name.  Together they break
-    kg:PlaceShape's sh:maxCount 3, so the node must be rejected whether the
-    pages share one partition group or sit in four.  Each call validates
-    and MERGEs once, and validating the merged table finds no Violation
-    beyond the links to the rejected node."""
+def _fix_first_pages(spark):
+    """Four pages, one in each of four url-hash groups, each naming
+    surface:qwvx7 in another case variant: together they break
+    kg:PlaceShape's sh:maxCount 3."""
     candidates = spark.range(64).select(
         F.concat(F.lit("https://ex.org/acme/"), F.col("id").cast("string")).alias("url")
     )
@@ -264,13 +306,22 @@ def test_merged_table_independent_of_n_groups(spark, tmp_path, monkeypatch):
         by_group.setdefault(r.g, r.url)
     assert sorted(by_group) == [0, 1, 2, 3]
     variants = ["Qwvx7", "QWVX7", "QwVx7", "QWvX7"]
-    fix_first = spark.createDataFrame(
+    return spark.createDataFrame(
         [
             (by_group[g], None, None, f"Acme Corp is located in {v}.", "en")
             for g, v in enumerate(variants)
         ],
         PAGES_SCHEMA,
     )
+
+
+def test_merged_table_independent_of_n_groups(spark, tmp_path, monkeypatch):
+    """Four pages each give surface:qwvx7 one kg:name.  Together they break
+    kg:PlaceShape's sh:maxCount 3, so the node must be rejected whether the
+    pages share one partition group or sit in four.  Each call validates
+    and MERGEs once, and validating the merged table finds no Violation
+    beyond the links to the rejected node."""
+    fix_first = _fix_first_pages(spark)
     shapes = compile_shapes(profile_shapes_ttl("kg_extraction"))
     for name, pages in (("fix_first", fix_first), ("synth", synthesize_pages(spark, N))):
         merged = {}
@@ -280,7 +331,7 @@ def test_merged_table_independent_of_n_groups(spark, tmp_path, monkeypatch):
             with monkeypatch.context() as m:
                 _count_calls(m, calls)
                 res = run_pipeline(spark, pages, out, n_groups=n)
-            assert calls == {"validate": 1, "merge_triples": 1}
+            assert calls == CALLED_ONCE, (n, calls)
             merged[n] = _table(spark, out)
             is_violation = F.col("resultSeverity") == SEVERITY_VIOLATION
             rejected = {r.focusNode for r in res.violations_df.filter(is_violation).collect()}
@@ -327,7 +378,7 @@ def test_resume_after_kill_before_merge(spark, tmp_path, monkeypatch):
         m.setattr(pl, "extract_raw_triples_from_html", no_extract)
         _count_calls(m, calls)
         resumed = run_pipeline(spark, pages, out, n_groups=2)
-    assert calls == {"validate": 1, "merge_triples": 1}
+    assert calls == CALLED_ONCE
 
     one = str(tmp_path / "one_shot")
     one_shot = run_pipeline(spark, pages, one, n_groups=2)
@@ -337,3 +388,104 @@ def test_resume_after_kill_before_merge(spark, tmp_path, monkeypatch):
         one_shot.triples_valid,
         one_shot.merged,
     )
+
+
+def _lineage(out):
+    """Lineage rows by partition key, without their timestamps."""
+    with open(os.path.join(out, "lineage.jsonl")) as f:
+        rows = [json.loads(line) for line in f]
+    return {
+        r["partition_key"]: {k: v for k, v in r.items() if not k.endswith("_at")}
+        for r in rows
+    }
+
+
+def test_resume_after_extraction_fails(spark, tmp_path, monkeypatch):
+    """A group's checkpoint is its raw extraction.  A call whose extractor
+    raises on group 1 leaves group 0 staged; the resumed call extracts
+    only group 1, links, canonicalizes and types once over both groups,
+    and lands the one-shot table and lineage (group 0's page count comes
+    from the count fallback, since an earlier call extracted it)."""
+    pages = synthesize_pages(spark, N)
+    out = str(tmp_path / "kg")
+    extracted: list[int] = []
+
+    def counting(fn, fail_on=None):
+        def wrapped(*a, **kw):
+            extracted.append(1)
+            if len(extracted) == fail_on:
+                raise RuntimeError("extractor failed")
+            return fn(*a, **kw)
+
+        return wrapped
+
+    with monkeypatch.context() as m:
+        m.setattr(pl, "extract_raw_triples", counting(pl.extract_raw_triples, 2))
+        m.setattr(pl, "extract_raw_triples_from_html", counting(pl.extract_raw_triples_from_html, 2))
+        with pytest.raises(RuntimeError, match="extractor failed"):
+            run_pipeline(spark, pages, out, n_groups=2)
+    with open(os.path.join(out, "checkpoint_manifest.json")) as f:
+        assert json.load(f) == {"grp=0": "staged"}
+
+    extracted.clear()
+    calls: dict[str, int] = {}
+    with monkeypatch.context() as m:
+        m.setattr(pl, "extract_raw_triples", counting(pl.extract_raw_triples))
+        m.setattr(pl, "extract_raw_triples_from_html", counting(pl.extract_raw_triples_from_html))
+        _count_calls(m, calls)
+        resumed = run_pipeline(spark, pages, out, n_groups=2)
+    assert len(extracted) == 1
+    assert calls == CALLED_ONCE
+
+    one = str(tmp_path / "one_shot")
+    one_shot = run_pipeline(spark, pages, one, n_groups=2)
+    assert _table(spark, out) == _table(spark, one)
+    assert (resumed.triples_in, resumed.triples_valid, resumed.merged) == (
+        one_shot.triples_in,
+        one_shot.triples_valid,
+        one_shot.merged,
+    )
+    assert _lineage(out) == _lineage(one)
+    assert sum(r["src_url_count"] for r in _lineage(out).values()) == N
+
+
+def test_pipeline_counts_when_metrics_never_arrive(spark, tmp_path):
+    """Every count run_pipeline observes (pages and raw rows per group,
+    typed rows, violations, per-group triples in and valid, the first
+    MERGE's inserts) falls back to counting when the metrics never
+    arrive, and the call returns the same numbers and lineage."""
+    pages = _fix_first_pages(spark).unionByName(synthesize_pages(spark, N))
+    want_out = str(tmp_path / "want")
+    want = run_pipeline(spark, pages, want_out, n_groups=2)
+    assert want.violations > 0 and want.triples_valid < want.triples_in
+    got_out = str(tmp_path / "got")
+    with _metrics_lost():
+        got = run_pipeline(spark, pages, got_out, n_groups=2)
+    for name in ("triples_in", "triples_valid", "violations", "merged"):
+        assert getattr(got, name) == getattr(want, name), name
+    assert _lineage(got_out) == _lineage(want_out)
+    assert _table(spark, got_out) == _table(spark, want_out)
+
+
+def test_run_pipeline_job_budget(spark, tmp_path):
+    """Spark jobs per warm run_pipeline call on a small html corpus in two
+    groups: one extraction write per group, then ONE mentions pin, link,
+    surface-map pin and typed write, one validate and one MERGE per call,
+    with every count observed on a write that runs anyway.  Counted per
+    job group with the status tracker."""
+    pages = synthesize_pages(spark, N).drop("text")
+    sc = spark.sparkContext
+
+    def call(i: int, group: str | None) -> int:
+        if group:
+            sc.setJobGroup(group, group)
+        try:
+            run_pipeline(spark, pages, str(tmp_path / f"kg{i}"), n_groups=2)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group)) if group else 0
+
+    call(0, None)  # warm: codegen, caches
+    jobs = call(1, "budget-pipeline")
+    assert jobs <= PIPELINE_JOB_BUDGET, jobs

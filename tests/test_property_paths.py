@@ -48,7 +48,7 @@ OBJECTS = [
     ("hello", "literal", None, "en"),
 ]
 
-PATH_DEPTH = 4  # engine constant (operators.validate.PATH_DEPTH)
+PATH_DEPTH = 4  # engine constant (shapes.compiler.PATH_DEPTH)
 
 
 def _closure_reach(edges: set[tuple[str, str]], depth: int) -> set[tuple[str, str]]:

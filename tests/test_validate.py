@@ -615,7 +615,7 @@ def _dcat_ap_es_nonconforming() -> str:
 
 # Spark jobs per warm request on the test session (local[4], 4 shuffle
 # partitions): the conforming sample, and _dcat_ap_es_nonconforming()
-SAMPLE_JOB_BUDGET = 9
+SAMPLE_JOB_BUDGET = 7
 BAD_JOB_BUDGET = 10
 
 
